@@ -48,6 +48,18 @@ class IngestCounter:
         return f"records succeeded={self.succeeded} errors={self.errors}"
 
 
+def _ingest_counters(error_condition: str | None) -> list:
+    """The ``rows_total`` / ``rows_error`` / ``rows_succeeded`` aggregates
+    both :func:`observed` and :func:`observed_stream` attach; rows
+    matching the SQL boolean ``error_condition`` count as errors."""
+    err = F.expr(error_condition) if error_condition else F.lit(False)
+    return [
+        F.count(F.lit(1)).alias("rows_total"),
+        F.sum(F.when(err, 1).otherwise(0)).alias("rows_error"),
+        F.sum(F.when(err, 0).otherwise(1)).alias("rows_succeeded"),
+    ]
+
+
 def observed(
     df: DataFrame, error_condition: str | None = None
 ) -> "tuple[DataFrame, object]":
@@ -62,15 +74,8 @@ def observed(
     """
     from pyspark.sql import Observation
 
-    err = F.expr(error_condition) if error_condition else F.lit(False)
     obs = Observation()
-    out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_total"),
-        F.sum(F.when(err, 1).otherwise(0)).alias("rows_error"),
-        F.sum(F.when(err, 0).otherwise(1)).alias("rows_succeeded"),
-    )
-    return out, obs
+    return df.observe(obs, *_ingest_counters(error_condition)), obs
 
 
 def observed_stream(
@@ -89,13 +94,7 @@ def observed_stream(
     at 100 TB arrival rates the quarantine ledger costs nothing and
     never drives a ``collect``. Use :func:`stream_metric_totals` to sum
     a finished query's ledger."""
-    err = F.expr(error_condition) if error_condition else F.lit(False)
-    return df.observe(
-        name,
-        F.count(F.lit(1)).alias("rows_total"),
-        F.sum(F.when(err, 1).otherwise(0)).alias("rows_error"),
-        F.sum(F.when(err, 0).otherwise(1)).alias("rows_succeeded"),
-    )
+    return df.observe(name, *_ingest_counters(error_condition))
 
 
 def stream_metric_totals(query, name: str = "ingest_metrics") -> dict[str, int]:

@@ -1,7 +1,7 @@
 from data_ingestor_spark.sources.readers import (  # noqa: F401
+    RECORD_FORMATS,
     detect_file_type,
     load,
-    read_json_records,
     read_jsonl_records,
-    read_xml_records,
+    read_records,
 )

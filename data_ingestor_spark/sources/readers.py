@@ -5,20 +5,28 @@ Reference parity map:
 - ``detect_file_type`` ← extension dispatch (``fileloader/fileloader.go:
   246-253``): ``.json`` / ``.xml``, else error. Extended here with the
   formats the Spark engine adds natively (parquet, csv).
-- ``read_json_records`` ← ``StreamJSONFileWithSchema`` / ``FlattenJSONToMaps``
-  (``fileloader-schema.go:71-128,241-295``): whole-document decode, records
-  under a top-level array key (hardcoded ``"Records"`` in the reference,
-  ``fileloader-schema.go:95-100`` — an option here, SURVEY §2.3(f)).
-- ``read_xml_records`` ← ``StreamXMLFileWithSchema`` / ``FlattenXMLToMaps``
-  (``fileloader-schema.go:142-229``): emits one record per ``<Record>``
-  element (row tag matched by local name, ``fileloader-schema.go:172`` —
-  an option here). Uses Spark 4's native XML data source, which is a true
-  distributed streaming scan — unlike the reference's JSON path, which
-  decodes the entire document in one call despite its "stream" naming.
-- ``load`` ← ``StreamDecodeFileWithSchema`` (``fileloader-schema.go:25-58``):
-  the single front door. The reference parses each input file twice (eager
-  for exports + streaming for DB load, ``main.go:76-103``); here one
-  DataFrame is returned and fan-out to sinks reuses it (SURVEY §2.3(h)).
+- ``read_records`` ← ``StreamDecodeFileWithSchema`` (``fileloader-schema.go:
+  25-58``): the one json/xml/csv decode, shared by batch (``spark.read``)
+  and streaming (``spark.readStream``) ingest:
+
+  - JSON ← ``StreamJSONFileWithSchema`` / ``FlattenJSONToMaps``
+    (``fileloader-schema.go:71-128,241-295``): whole-document decode,
+    records under a top-level array key (hardcoded ``"Records"`` in the
+    reference, ``fileloader-schema.go:95-100`` — an option here, SURVEY
+    §2.3(f));
+  - XML ← ``StreamXMLFileWithSchema`` / ``FlattenXMLToMaps``
+    (``fileloader-schema.go:142-229``): one record per ``<Record>`` element
+    (row tag matched by local name, ``fileloader-schema.go:172`` — an
+    option here). Uses Spark 4's native XML data source, which is a true
+    distributed streaming scan — unlike the reference's JSON path, which
+    decodes the entire document in one call despite its "stream" naming;
+  - CSV: an engine addition; a CSV row is already flat.
+- ``load`` ← the batch front door: ``read_records`` plus the columnar
+  formats. The reference parses each input file twice (eager for exports
+  + streaming for DB load, ``main.go:76-103``); here one DataFrame is
+  returned and fan-out to sinks reuses it (SURVEY §2.3(h)).
+  ``streaming.stream_load`` is the streaming front door over the same
+  ``read_records``.
 
 Scale notes: all readers return lazy DataFrames; schema is supplied (no
 inference job) when known; JSON/XML multiline documents are one-file-per-
@@ -35,6 +43,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _SUPPORTED = {"json", "xml", "parquet", "csv", "orc"}
+#: the record formats :func:`read_records` decodes, batch and streaming
+RECORD_FORMATS = ("json", "xml", "csv")
 
 
 def detect_file_type(path: str) -> str:
@@ -45,100 +55,140 @@ def detect_file_type(path: str) -> str:
     return ext
 
 
-def read_json_records(
-    spark: SparkSession,
+def _quarantined(reader, schema: T.StructType, corrupt_col: str | None):
+    """Apply the typed ``schema`` to ``reader``; with ``corrupt_col`` set,
+    append that string column and parse PERMISSIVE, so a record that
+    fails the schema lands there instead of failing the job."""
+    if corrupt_col is None:
+        return reader.schema(schema)
+    full = T.StructType(list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)])
+    return (
+        reader.option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", corrupt_col)
+        .schema(full)
+    )
+
+
+def _flat_csv_schema(schema: T.StructType) -> T.StructType:
+    """A CSV row already has the flattened shape, and the CSV source
+    rejects array columns: each array<struct> column of the record
+    schema is replaced by its element's fields, appended in the order
+    ``operators.flatten_nested`` emits them (for ``MIST_NESTED_SCHEMA``
+    this is exactly ``MIST_FLAT_SCHEMA``)."""
+    scalars, elems = [], []
+    for f in schema.fields:
+        t = f.dataType
+        if isinstance(t, T.ArrayType) and isinstance(t.elementType, T.StructType):
+            elems.extend(t.elementType.fields)
+        else:
+            scalars.append(f)
+    return T.StructType(scalars + elems)
+
+
+def read_records(
+    reader,
     path: str,
-    records_key: str = "Records",
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Read a JSON document whose records live in an array under ``records_key``.
-
-    One output row per element of the array (pre-flatten — nested arrays
-    inside each record are preserved; see ``operators.flatten``).
-
-    Totality (judge directive r9 #3): a document that cannot yield the
-    records array raises a clean ``ValueError`` naming the file and the
-    cause — never a silent zero-row result. Before this check, a
-    TRUNCATED document, a document whose top-level key is wrong, or a
-    file with invalid UTF-8 bytes all parsed to a NULL ``records_key``
-    under PERMISSIVE mode and exploded to nothing (the classic silent
-    drop). The validation is one extra pass over the document, which is
-    exactly the reference's own cost model — its loader decodes the
-    whole document eagerly before use (``fileloader-schema.go:71-128``).
-    Duplicate top-level keys are NOT an error: Jackson keeps the LAST
-    occurrence, matching the reference's ``encoding/json`` behavior
-    (both are last-wins; pinned in ``tests/test_ingest_totality.py``).
-    """
-    corrupt_col = "_corrupt_record"
-    if schema is not None:
-        doc_schema = T.StructType(
-            [
-                T.StructField(records_key, T.ArrayType(schema), True),
-                T.StructField(corrupt_col, T.StringType(), True),
-            ]
-        )
-        doc = (
-            spark.read.option("multiLine", "true")
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", corrupt_col)
-            .schema(doc_schema)
-            .json(path)
-        )
-        bad = doc.filter(F.col(records_key).isNull()).limit(1).collect()
-        if bad:
-            raw = bad[0][corrupt_col]
-            cause = (
-                f"unparseable document (corrupt prefix: {raw[:120]!r})"
-                if raw is not None
-                else f"records key {records_key!r} absent or null"
-            )
-            raise ValueError(f"malformed JSON document {path!r}: {cause}")
-        return doc.select(F.explode(F.col(records_key)).alias("_rec")).select("_rec.*")
-    doc = spark.read.option("multiLine", "true").json(path)
-    if records_key not in doc.columns:
-        raise ValueError(f"expected top-level array key {records_key!r} in {path!r}; got {doc.columns}")
-    return doc.select(F.explode(F.col(records_key)).alias("_rec")).select("_rec.*")
-
-
-def read_xml_records(
-    spark: SparkSession,
-    path: str,
-    row_tag: str = "Record",
+    fmt: str,
     schema: T.StructType | None = None,
     corrupt_col: str | None = None,
+    records_key: str = "Records",
+    row_tag: str = "Record",
+    **options: str,
 ) -> DataFrame:
-    """Read an XML file, one row per ``row_tag`` element (Spark 4 native XML).
+    """Decode json/xml/csv records from ``path`` through ``reader`` —
+    ``spark.read`` for a batch DataFrame, ``spark.readStream`` (with any
+    stream options already set) for a streaming one. One row per record,
+    pre-flatten: nested arrays inside each record are preserved (see
+    ``operators.flatten``).
 
-    XML chardata is untyped text (``fileloader-schema.go:427-433``); when
-    ``schema`` is given the values are cast into it, matching the engine
-    policy of one typed schema for both sources (SURVEY §2.3(e)).
+    ``schema`` is the typed record schema. XML chardata is untyped text
+    (``fileloader-schema.go:427-433``); its values are cast into the
+    schema, matching the engine policy of one typed schema for every
+    source (SURVEY §2.3(e)). CSV reads the flattened form of the schema
+    (:func:`_flat_csv_schema`).
 
-    Quarantine (judge directive r9 #3): with ``corrupt_col`` set (and a
-    ``schema``), record-level damage — an unclosed tag swallowing the
-    file tail, XML-illegal control characters in chardata — lands in
-    that column under PERMISSIVE mode instead of crashing the job or
-    silently vanishing; the reference's own domain is dirty feeds
-    (``fileloader-schema.go:142-229`` log-and-continue workers). The
-    returned schema then carries the extra string column, so the knob is
-    opt-in; ``pipeline.run_load_job`` uses it to count-and-exclude.
-    Stream-level damage (invalid UTF-8 BYTES) cannot be quarantined by
-    any row-level mode — the StAX charset decoder fails before records
-    exist; ``pipeline`` translates that failure to a clean error.
+    Quarantine (ingest-totality contract: quarantine or clean error,
+    never a crash or a silent drop): with ``corrupt_col`` and ``schema``
+    set, record-level damage lands in that column under PERMISSIVE mode
+    while the record's schema fields are NULL — an unclosed XML tag
+    swallowing the file tail, XML-illegal control characters in
+    chardata, a CSV cell failing its type. The returned schema then
+    carries the extra string column, so the knob is opt-in. Stream-level
+    damage (invalid UTF-8 BYTES) cannot be quarantined by any row-level
+    mode — the StAX charset decoder fails before records exist;
+    ``pipeline`` translates that failure to a clean error and
+    ``streaming.stream_with_deadletter`` routes the file aside.
+
+    JSON documents are checked per mode:
+
+    - batch validates EAGERLY: a document that cannot yield the records
+      array raises a clean ``ValueError`` naming the file and the cause.
+      Without this check a TRUNCATED document, a wrong top-level key or
+      invalid UTF-8 bytes all parsed to a NULL ``records_key`` under
+      PERMISSIVE mode and exploded to nothing (the classic silent drop).
+      The check is one extra pass over the document, which is exactly
+      the reference's own cost model — its loader decodes the whole
+      document eagerly before use (``fileloader-schema.go:71-128``).
+      Duplicate top-level keys are NOT an error: Jackson keeps the LAST
+      occurrence, matching the reference's ``encoding/json`` (both
+      last-wins; pinned in ``tests/test_ingest_totality.py``);
+    - a stream cannot (no action to attach the error to — and one poison
+      file must not kill a long-running query). With ``corrupt_col`` set,
+      a malformed document flows through as ONE row whose record fields
+      are NULL and whose ``corrupt_col`` carries the raw text — countable
+      and routable by the sink (a plain ``explode`` would erase it).
     """
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if corrupt_col is not None and schema is not None:
-        full = T.StructType(
-            list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
-        )
-        return (
-            reader.option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", corrupt_col)
-            .schema(full)
-            .load(path)
-        )
+    if fmt == "json":
+        reader = reader.option("multiLine", "true")
+        if schema is not None:
+            schema = T.StructType([T.StructField(records_key, T.ArrayType(schema), True)])
+    elif fmt == "xml":
+        reader = reader.option("rowTag", row_tag)
+    elif fmt == "csv":
+        reader = reader.option("header", "true")
+        if schema is not None:
+            schema = _flat_csv_schema(schema)
+    else:
+        raise ValueError(f"unsupported format {fmt!r}")
+    # a typed JSON document always carries a corrupt column: the batch
+    # check names the damage from it even when the caller quarantines
+    # nothing
+    doc_corrupt = (corrupt_col or "_corrupt_record") if fmt == "json" else corrupt_col
     if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
+        reader = _quarantined(reader, schema, doc_corrupt)
+    df = reader.format(fmt).options(**options).load(path)
+    if fmt != "json":
+        return df
+    if not df.isStreaming:
+        _check_documents(df, path, records_key, doc_corrupt if schema is not None else None)
+    elif corrupt_col is not None:
+        # explode_outer keeps the malformed document's row; the filter
+        # removes only the spurious null row an EMPTY-but-well-formed
+        # Records array would add
+        exploded = df.select(
+            F.explode_outer(F.col(records_key)).alias("_rec"), F.col(corrupt_col)
+        ).filter(F.col("_rec").isNotNull() | F.col(corrupt_col).isNotNull())
+        return exploded.select("_rec.*", corrupt_col)
+    return df.select(F.explode(F.col(records_key)).alias("_rec")).select("_rec.*")
+
+
+def _check_documents(doc: DataFrame, path: str, records_key: str, corrupt_col: str | None) -> None:
+    """Raise ``ValueError`` if a batch JSON document cannot yield its
+    records array (see :func:`read_records`). Without a typed schema the
+    inferred columns are the whole check."""
+    if records_key not in doc.columns:
+        raise ValueError(f"expected top-level array key {records_key!r} in {path!r}; got {doc.columns}")
+    if corrupt_col is None:
+        return
+    bad = doc.filter(F.col(records_key).isNull()).limit(1).collect()
+    if bad:
+        raw = bad[0][corrupt_col]
+        cause = (
+            f"unparseable document (corrupt prefix: {raw[:120]!r})"
+            if raw is not None
+            else f"records key {records_key!r} absent or null"
+        )
+        raise ValueError(f"malformed JSON document {path!r}: {cause}")
 
 
 def read_jsonl_records(
@@ -158,15 +208,7 @@ def read_jsonl_records(
     ingest format — line-splittable, so a single 100 GB file still
     parallelizes, unlike a multiLine JSON document (one task per file).
     """
-    full = T.StructType(
-        schema.fields + [T.StructField(corrupt_col, T.StringType(), True)]
-    )
-    return (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-    )
+    return _quarantined(spark.read, schema, corrupt_col).json(path)
 
 
 def load(
@@ -179,40 +221,14 @@ def load(
     corrupt_col: str | None = None,
     **options: str,
 ) -> DataFrame:
-    """Format-dispatched front door (parity: ``fileloader-schema.go:25-58``).
-
-    ``corrupt_col`` opts the XML path into record-level quarantine (see
-    :func:`read_xml_records`); the JSON document path validates eagerly
-    instead (whole-document parse — :func:`read_json_records`)."""
+    """Batch front door (parity: ``fileloader-schema.go:25-58``): the
+    format comes from ``fmt`` or the file extension; json/xml/csv decode
+    through :func:`read_records`. ``corrupt_col`` opts XML and CSV into
+    record-level quarantine; a JSON document is validated eagerly
+    instead, so its records never carry the column."""
     fmt = fmt or detect_file_type(path)
-    if fmt == "json":
-        return read_json_records(spark, path, records_key=records_key, schema=schema)
-    if fmt == "xml":
-        return read_xml_records(
-            spark, path, row_tag=row_tag, schema=schema, corrupt_col=corrupt_col
-        )
-    if fmt == "parquet":
-        return spark.read.options(**options).parquet(path)
-    if fmt == "orc":
-        return spark.read.options(**options).orc(path)
-    if fmt == "csv":
-        reader = spark.read.option("header", "true").options(**options)
-        if schema is not None and corrupt_col is not None:
-            # same quarantine contract as the XML path: rows whose
-            # cells fail the typed schema land whole in corrupt_col
-            # under PERMISSIVE mode instead of turning into silent
-            # all-NULL rows
-            full = T.StructType(
-                list(schema.fields)
-                + [T.StructField(corrupt_col, T.StringType(), True)]
-            )
-            return (
-                reader.option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", corrupt_col)
-                .schema(full)
-                .csv(path)
-            )
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.csv(path)
-    raise ValueError(f"unsupported format {fmt!r}")
+    if fmt in ("parquet", "orc"):
+        return spark.read.options(**options).format(fmt).load(path)
+    return read_records(
+        spark.read, path, fmt, schema, corrupt_col, records_key, row_tag, **options
+    )

@@ -1,11 +1,8 @@
 from data_ingestor_spark.streaming.ingest import (
     find_undecodable_files,
     idempotent_batch_publish,
-    stream_csv_records,
-    stream_json_records,
     stream_load,
     stream_with_deadletter,
-    stream_xml_records,
     write_stream_batches,
 )
 from data_ingestor_spark.streaming.joins import (
@@ -26,10 +23,7 @@ __all__ = [
     "idempotent_batch_publish",
     "join_streams_windowed",
     "running_user_counters",
-    "stream_csv_records",
-    "stream_json_records",
     "stream_load",
-    "stream_xml_records",
     "write_stream_batches",
     "session_windowed_counts",
     "stateful_dedup",

@@ -14,8 +14,10 @@ Spark-native shape is the Structured Streaming file source:
 - archival: ``cleanSource=archive`` + ``sourceArchiveDir`` moves fully-
   processed inputs, the O19 parity without driver file juggling.
 
-Flatten/projection semantics are the SAME functions the batch path uses
-(``operators.flatten``) — one logical plan, two execution modes.
+The scan is the SAME json/xml/csv decode the batch ``sources.load`` uses
+(``sources.read_records`` over ``spark.readStream``), and flatten/
+projection the same ``operators.flatten`` — one logical plan, two
+execution modes.
 """
 
 from __future__ import annotations
@@ -23,170 +25,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_ingestor_spark.operators.flatten import flatten_nested
+from data_ingestor_spark.sources.readers import RECORD_FORMATS, read_records
 
 
-def stream_json_records(
-    spark: SparkSession,
-    input_dir: str,
-    schema: T.StructType,
-    records_key: str = "Records",
-    max_files_per_trigger: int = 10,
-    archive_dir: str | None = None,
-    corrupt_col: str | None = None,
-) -> DataFrame:
-    """Streaming twin of ``sources.read_json_records``: watch ``input_dir``
-    for JSON documents, explode the ``records_key`` array, one row per
-    record. Returns a streaming DataFrame (pre-flatten).
-
-    Quarantine (r9 ingest-totality contract): the batch twin validates a
-    document EAGERLY and raises; a stream cannot (no action to attach
-    the error to — and one poison file must not kill a long-running
-    query). With ``corrupt_col`` set, a malformed document (truncated,
-    wrong top-level key, invalid UTF-8) flows through as ONE row whose
-    record fields are NULL and whose ``corrupt_col`` carries the raw
-    text — countable and routable by the sink, never a silent drop
-    (the default ``explode`` erases such documents entirely)."""
-    if corrupt_col is None:
-        doc_schema = T.StructType(
-            [T.StructField(records_key, T.ArrayType(schema), True)]
-        )
-    else:
-        doc_schema = T.StructType(
-            [
-                T.StructField(records_key, T.ArrayType(schema), True),
-                T.StructField(corrupt_col, T.StringType(), True),
-            ]
-        )
-    reader = (
-        spark.readStream.schema(doc_schema)
-        .option("multiLine", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-    )
-    if corrupt_col is not None:
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", corrupt_col
-        )
-    if archive_dir is not None:
-        reader = reader.option("cleanSource", "archive").option("sourceArchiveDir", archive_dir)
-    doc = reader.json(input_dir)
-    if corrupt_col is None:
-        return doc.select(F.explode(F.col(records_key)).alias("_rec")).select("_rec.*")
-    # explode_outer keeps the malformed document's row; the filter
-    # removes only the spurious null row an EMPTY-but-well-formed
-    # Records array would add
-    exploded = doc.select(
-        F.explode_outer(F.col(records_key)).alias("_rec"), F.col(corrupt_col)
-    ).filter(F.col("_rec").isNotNull() | F.col(corrupt_col).isNotNull())
-    return exploded.select("_rec.*", corrupt_col)
-
-
-def stream_xml_records(
-    spark: SparkSession,
-    input_dir: str,
-    schema: T.StructType,
-    row_tag: str = "Record",
-    max_files_per_trigger: int = 10,
-    archive_dir: str | None = None,
-    corrupt_col: str | None = None,
-) -> DataFrame:
-    """Streaming twin of ``sources.read_xml_records`` (judge directive
-    r10 #2): watch ``input_dir`` for XML feeds, one row per ``row_tag``
-    element via the Spark 4 native XML file source. The reference's
-    FLAGSHIP path streams XML — ``fileloader/fileloader-schema.go:
-    142-197`` parses ``<Record>`` elements off a live feed into the
-    worker channel (``mapreduce/mapreduce.go:54-105``) — while the
-    library's streaming wrapper was JSON-only (VERDICT r9 "What's
-    missing" #1); this closes that gap with the same quarantine +
-    archival + totality contract.
-
-    Quarantine (r9 ingest-totality contract, XML edition): with
-    ``corrupt_col`` set, record-level damage — an unclosed tag
-    swallowing the file tail, XML-illegal control characters in
-    chardata — flows through as rows whose schema fields are NULL and
-    whose ``corrupt_col`` carries the raw text, countable and routable
-    by the sink; one poison file must not kill a long-running query or
-    silently vanish. Unlike JSON documents there is no ``Records``
-    array to explode: the XML source already emits one row per
-    ``row_tag``, so no explode/filter step is needed. Stream-level
-    damage (invalid UTF-8 BYTES) fails the StAX charset decoder before
-    records exist — no row-level mode can quarantine it; the batch
-    path translates that to a clean error and a streaming operator
-    should route such files by a dead-letter move on query failure."""
-    if corrupt_col is None:
-        full = schema
-    else:
-        full = T.StructType(
-            list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
-        )
-    reader = (
-        spark.readStream.format("xml")
-        .option("rowTag", row_tag)
-        .schema(full)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-    )
-    if corrupt_col is not None:
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", corrupt_col
-        )
-    if archive_dir is not None:
-        reader = reader.option("cleanSource", "archive").option("sourceArchiveDir", archive_dir)
-    return reader.load(input_dir)
-
-
-def stream_csv_records(
-    spark: SparkSession,
-    input_dir: str,
-    schema: T.StructType,
-    header: bool = True,
-    max_files_per_trigger: int = 10,
-    archive_dir: str | None = None,
-    corrupt_col: str | None = None,
-    **options: str,
-) -> DataFrame:
-    """Streaming twin of the batch CSV path (``sources.readers.load``
-    ``fmt="csv"`` branch): watch ``input_dir`` for CSV files, one row
-    per line under the typed ``schema``. Completes the streaming ingest
-    trio (JSON ``stream_json_records:30``, XML ``stream_xml_records:85``)
-    so every batch front-door format has a live twin with the same
-    quarantine + archival + totality contract.
-
-    Quarantine (ingest-totality contract, CSV edition): with
-    ``corrupt_col`` set, a row whose cells fail the typed schema (bad
-    int cell, wrong column count) lands WHOLE in ``corrupt_col`` under
-    PERMISSIVE mode — countable and routable by the sink — instead of
-    becoming a silent all-NULL row or killing the query. Same column
-    contract as the batch reader, so a sink written against one works
-    against both.
-
-    Scale: the file-stream source lists once per trigger and fans file
-    splits across executors; CSV parsing is JVM-side (UnivocityParser
-    inside WholeStageCodegen input), no Python in the row path.
-    ``max_files_per_trigger`` bounds micro-batch size so one listing
-    burst cannot produce an executor-memory-sized batch at 100 TB
-    arrival rates."""
-    if corrupt_col is None:
-        full = schema
-    else:
-        full = T.StructType(
-            list(schema.fields) + [T.StructField(corrupt_col, T.StringType(), True)]
-        )
-    reader = (
-        spark.readStream.schema(full)
-        .option("header", "true" if header else "false")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .options(**options)
-    )
-    if corrupt_col is not None:
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", corrupt_col
-        )
-    if archive_dir is not None:
-        reader = reader.option("cleanSource", "archive").option("sourceArchiveDir", archive_dir)
-    return reader.csv(input_dir)
+#: micro-batch bound: at most this many new files per trigger
+MAX_FILES_PER_TRIGGER = 10
 
 
 def stream_load(
@@ -203,41 +49,24 @@ def stream_load(
 ) -> DataFrame:
     """Full streaming ingest plan: scan → flatten → whitelist-project —
     the reference's live path (O1/O3+O7+O9) under Structured Streaming.
-    ``fmt`` selects the source family the way the batch ``load``
-    dispatches on extension: ``"json"`` explodes the ``records_key``
-    array per document; ``"xml"`` reads one row per ``row_tag``;
-    ``"csv"`` reads one row per line (flat — the flatten step is an
-    identity pass-through when ``array_col`` is absent). With
-    ``corrupt_col`` set, quarantined records ride along for the sink to
-    count and exclude (the totality contract)."""
-    if fmt == "json":
-        raw = stream_json_records(
-            spark,
-            input_dir,
-            schema,
-            records_key=records_key,
-            archive_dir=archive_dir,
-            corrupt_col=corrupt_col,
-        )
-    elif fmt == "xml":
-        raw = stream_xml_records(
-            spark,
-            input_dir,
-            schema,
-            row_tag=row_tag,
-            archive_dir=archive_dir,
-            corrupt_col=corrupt_col,
-        )
-    elif fmt == "csv":
-        raw = stream_csv_records(
-            spark,
-            input_dir,
-            schema,
-            archive_dir=archive_dir,
-            corrupt_col=corrupt_col,
-        )
-    else:
+    Watches ``input_dir`` and decodes ``fmt`` through the same
+    ``sources.read_records`` as the batch ``load``: ``"json"`` explodes
+    the ``records_key`` array per document; ``"xml"`` reads one row per
+    ``row_tag``; ``"csv"`` reads one row per line (flat — the flatten
+    step is an identity pass-through when ``array_col`` is absent).
+    With ``corrupt_col`` set, quarantined records ride along for the
+    sink to count and exclude (the totality contract). Each trigger
+    takes at most :data:`MAX_FILES_PER_TRIGGER` files, so one listing
+    burst cannot produce an executor-memory-sized batch; with
+    ``archive_dir`` set, fully-processed inputs move there."""
+    if fmt not in RECORD_FORMATS:
         raise ValueError(f"unsupported streaming ingest format: {fmt!r}")
+    reader = spark.readStream.option("maxFilesPerTrigger", str(MAX_FILES_PER_TRIGGER))
+    if archive_dir is not None:
+        reader = reader.option("cleanSource", "archive").option("sourceArchiveDir", archive_dir)
+    raw = read_records(
+        reader, input_dir, fmt, schema, corrupt_col, records_key=records_key, row_tag=row_tag
+    )
     if corrupt_col is not None and columns is not None and corrupt_col not in columns:
         # the whitelist projection would drop the quarantine column;
         # append it so the sink can count-and-exclude (totality contract)
@@ -255,7 +84,7 @@ def find_undecodable_files(
     RECORD-level damage, but stream-level damage — invalid byte
     sequences — fails the charset decoder before records exist, so no
     row-level mode can route it and the streaming query dies
-    (``stream_xml_records`` docstring; batch twin
+    (``sources.read_records`` docstring; batch twin
     ``pipeline._raise_clean_stream_error``). This probe is the salvage
     step: binaryFile scan fans file reads across executors, an
     Arrow-batched decode try marks failures, and only the (tiny) bad
@@ -290,7 +119,7 @@ def stream_with_deadletter(
     """Run a streaming ingest to completion, routing byte-level poison
     files to ``deadletter_dir`` and restarting on failure — the
     totality contract extended to damage no row-level mode can
-    quarantine (the dead-letter move the ``stream_xml_records``
+    quarantine (the dead-letter move the ``sources.read_records``
     docstring prescribes).
 
     ``start_query() -> StreamingQuery`` (re)starts the query — it must

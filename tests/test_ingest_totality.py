@@ -24,7 +24,7 @@ import pytest
 
 from data_ingestor_spark.pipeline import run_load_job
 from data_ingestor_spark.schemas import MIST_NESTED_SCHEMA
-from data_ingestor_spark.sources.readers import read_json_records, read_xml_records
+from data_ingestor_spark.sources.readers import load, read_records
 
 
 def _write(tmp_path, name: str, data) -> str:
@@ -66,24 +66,24 @@ def test_json_truncated_document_raises_clean_error(spark, tmp_path):
     to ZERO rows — the silent drop this suite exists to forbid."""
     path = _write(tmp_path, "trunc.json", '{"Records": [{"user": "a", "fnumbers": [')
     with pytest.raises(ValueError, match="malformed JSON document"):
-        read_json_records(spark, path, schema=MIST_NESTED_SCHEMA)
+        load(spark, path, fmt="json", schema=MIST_NESTED_SCHEMA)
     # the schema-inference path already errored cleanly; keep it pinned
     with pytest.raises(ValueError, match="expected top-level array key"):
-        read_json_records(spark, path)
+        load(spark, path, fmt="json")
 
 
 def test_json_wrong_top_level_key_raises_clean_error(spark, tmp_path):
     path = _write(tmp_path, "wrongkey.json", '{"Rows": [{"user": "a"}]}')
     with pytest.raises(ValueError, match="'Records' absent or null"):
-        read_json_records(spark, path, schema=MIST_NESTED_SCHEMA)
+        load(spark, path, fmt="json", schema=MIST_NESTED_SCHEMA)
     with pytest.raises(ValueError, match="expected top-level array key"):
-        read_json_records(spark, path)
+        load(spark, path, fmt="json")
 
 
 def test_json_invalid_utf8_raises_clean_error(spark, tmp_path):
     path = _write(tmp_path, "bad_utf8.json", b'{"Records": [{"user": "\xff\xfe\x80"}]}')
     with pytest.raises(ValueError, match="malformed JSON document"):
-        read_json_records(spark, path, schema=MIST_NESTED_SCHEMA)
+        load(spark, path, fmt="json", schema=MIST_NESTED_SCHEMA)
 
 
 def test_json_duplicate_top_level_keys_last_wins(spark, tmp_path):
@@ -95,7 +95,7 @@ def test_json_duplicate_top_level_keys_last_wins(spark, tmp_path):
         "dup.json",
         '{"Records": [{"user": "first"}], "Records": [{"user": "last"}]}',
     )
-    rows = read_json_records(spark, path, schema=MIST_NESTED_SCHEMA).collect()
+    rows = load(spark, path, fmt="json", schema=MIST_NESTED_SCHEMA).collect()
     assert [r.user for r in rows] == ["last"]
 
 
@@ -104,7 +104,7 @@ def test_json_huge_single_record_loads(spark, tmp_path):
     path = _write(
         tmp_path, "huge.json", f'{{"Records": [{{"user": "{big}", "fnumbers": []}}]}}'
     )
-    rows = read_json_records(spark, path, schema=MIST_NESTED_SCHEMA).collect()
+    rows = load(spark, path, fmt="json", schema=MIST_NESTED_SCHEMA).collect()
     assert len(rows) == 1 and len(rows[0].user) == 2_000_000
 
 
@@ -117,8 +117,8 @@ def test_xml_unclosed_tag_quarantined_not_dropped(spark, tmp_path):
     without the corrupt column it must never silently vanish."""
     body = _XML_GOOD_RECORD.format(user="alice") + "  <Record><user>bob</user><dt_created>17</dt"
     path = _write(tmp_path, "unclosed.xml", _xml_doc(body))
-    df = read_xml_records(
-        spark, path, schema=MIST_NESTED_SCHEMA, corrupt_col="_corrupt_record"
+    df = load(
+        spark, path, fmt="xml", schema=MIST_NESTED_SCHEMA, corrupt_col="_corrupt_record"
     )
     rows = df.collect()
     good = [r for r in rows if r["_corrupt_record"] is None]
@@ -134,8 +134,8 @@ def test_xml_control_chars_quarantined(spark, tmp_path):
         user="carol"
     ).encode() + b"</Data>"
     path = _write(tmp_path, "ctl.xml", dirty)
-    df = read_xml_records(
-        spark, path, schema=MIST_NESTED_SCHEMA, corrupt_col="_corrupt_record"
+    df = load(
+        spark, path, fmt="xml", schema=MIST_NESTED_SCHEMA, corrupt_col="_corrupt_record"
     )
     rows = df.collect()
     good = [r.user for r in rows if r["_corrupt_record"] is None]
@@ -147,7 +147,7 @@ def test_xml_huge_single_record_loads(spark, tmp_path):
     big = "x" * 3_000_000
     body = _XML_GOOD_RECORD.format(user=big)
     path = _write(tmp_path, "huge.xml", _xml_doc(body))
-    rows = read_xml_records(spark, path, schema=MIST_NESTED_SCHEMA).collect()
+    rows = load(spark, path, fmt="xml", schema=MIST_NESTED_SCHEMA).collect()
     assert len(rows) == 1 and len(rows[0].user) == 3_000_000
 
 
@@ -406,11 +406,7 @@ def test_streaming_quarantine_ledger_matches_planted(spark, tmp_path):
     import shutil as _shutil
 
     from conftest import FIXTURES
-    from data_ingestor_spark.streaming import (
-        stream_json_records,
-        stream_xml_records,
-        write_stream_batches,
-    )
+    from data_ingestor_spark.streaming import write_stream_batches
 
     jdir = tmp_path / "json_in"
     jdir.mkdir()
@@ -435,8 +431,9 @@ def test_streaming_quarantine_ledger_matches_planted(spark, tmp_path):
         ledger["clean"] += sum(1 for r in rows if r["_corrupt_record"] is None)
 
     q1 = write_stream_batches(
-        stream_json_records(
-            spark, str(jdir), MIST_NESTED_SCHEMA, corrupt_col="_corrupt_record"
+        read_records(
+            spark.readStream, str(jdir), "json", MIST_NESTED_SCHEMA,
+            corrupt_col="_corrupt_record",
         ),
         str(tmp_path / "ckpt_json"),
         count_batch,
@@ -446,8 +443,9 @@ def test_streaming_quarantine_ledger_matches_planted(spark, tmp_path):
     assert json_ledger == {"clean": 10, "quarantined": 1}
 
     q2 = write_stream_batches(
-        stream_xml_records(
-            spark, str(xdir), MIST_NESTED_SCHEMA, corrupt_col="_corrupt_record"
+        read_records(
+            spark.readStream, str(xdir), "xml", MIST_NESTED_SCHEMA,
+            corrupt_col="_corrupt_record",
         ),
         str(tmp_path / "ckpt_xml"),
         count_batch,
@@ -460,8 +458,6 @@ def test_streaming_quarantine_ledger_matches_planted(spark, tmp_path):
     # CSV leg: one typed-cell failure planted among four clean rows
     from pyspark.sql import types as T
 
-    from data_ingestor_spark.streaming import stream_csv_records
-
     cdir = tmp_path / "csv_in"
     cdir.mkdir()
     (cdir / "good.csv").write_text("user,score\nalice,10\nbob,20\n")
@@ -473,8 +469,9 @@ def test_streaming_quarantine_ledger_matches_planted(spark, tmp_path):
         ]
     )
     q3 = write_stream_batches(
-        stream_csv_records(
-            spark, str(cdir), csv_schema, corrupt_col="_corrupt_record"
+        read_records(
+            spark.readStream, str(cdir), "csv", csv_schema,
+            corrupt_col="_corrupt_record",
         ),
         str(tmp_path / "ckpt_csv"),
         count_batch,

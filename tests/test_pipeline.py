@@ -4,7 +4,21 @@ import csv
 import os
 import shutil
 
+import pytest
+
 from conftest import FIXTURES
+
+
+def _fixture_csv(spark, path) -> None:
+    """The JSON fixture's 17 flattened rows as one headed CSV file, the
+    form the load job's own CSV export writes."""
+    from data_ingestor_spark import sinks
+    from data_ingestor_spark.operators.flatten import flatten_nested
+    from data_ingestor_spark.schemas import MIST_NESTED_SCHEMA, TEMPLATE_COLUMNS
+    from data_ingestor_spark.sources import load
+
+    records = load(spark, os.path.join(FIXTURES, "ingest-records.json"), schema=MIST_NESTED_SCHEMA)
+    sinks.export_csv(flatten_nested(records, columns=TEMPLATE_COLUMNS), str(path), single_file=True)
 
 
 def test_run_load_job_full_lifecycle(spark, tmp_path):
@@ -58,21 +72,34 @@ def test_cli_main(spark, tmp_path, capsys):
     assert spark.read.parquet(str(tmp_path / "out")).count() == 17
     assert "[MistAMS] records succeeded=17" in capsys.readouterr().out
 
+    # a CSV feed carries the flattened rows; the default nested schema
+    # must still read it
+    src_csv = tmp_path / "x.csv"
+    _fixture_csv(spark, src_csv)
+    rc = cli.main(["load", "--file", str(src_csv), "--table", str(tmp_path / "out_csv")])
+    assert rc == 0
+    assert spark.read.parquet(str(tmp_path / "out_csv")).count() == 17
+    assert "[MistAMS] records succeeded=17 errors=0" in capsys.readouterr().out
 
-def test_cli_stream_subcommand(spark, tmp_path, capsys):
+
+@pytest.mark.parametrize("fmt", ["json", "csv"])
+def test_cli_stream_subcommand(spark, tmp_path, capsys, fmt):
     """`stream` drains a watch dir through run_stream_job: same report
     shape as `load`, data/ + quarantine/ layout under --table."""
     from data_ingestor_spark import cli
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    shutil.copy(os.path.join(FIXTURES, "ingest-records.json"), in_dir / "a.json")
+    if fmt == "csv":
+        _fixture_csv(spark, in_dir / "a.csv")
+    else:
+        shutil.copy(os.path.join(FIXTURES, "ingest-records.json"), in_dir / "a.json")
     rc = cli.main(
         [
             "stream",
             "--input-dir", str(in_dir),
             "--table", str(tmp_path / "out"),
-            "--format", "json",
+            "--format", fmt,
             "--timeout", "120",
         ]
     )

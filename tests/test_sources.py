@@ -57,7 +57,7 @@ def test_multifile_json_ingest_parallelism(spark, tmp_path):
     import shutil
 
     from data_ingestor_spark.schemas import MIST_NESTED_SCHEMA
-    from data_ingestor_spark.sources import read_json_records
+    from data_ingestor_spark.sources import load
 
     from conftest import FIXTURES
     import os
@@ -66,7 +66,7 @@ def test_multifile_json_ingest_parallelism(spark, tmp_path):
         shutil.copy(
             os.path.join(FIXTURES, "ingest-records.json"), tmp_path / f"part{i}.json"
         )
-    df = read_json_records(spark, str(tmp_path), schema=MIST_NESTED_SCHEMA)
+    df = load(spark, str(tmp_path), fmt="json", schema=MIST_NESTED_SCHEMA)
     assert df.count() == 4 * 10  # 10 records per document
     assert df.rdd.getNumPartitions() >= 2  # files split across tasks
 

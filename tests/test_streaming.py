@@ -3,9 +3,11 @@
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_ingestor_spark.schemas import MIST_NESTED_SCHEMA, TEMPLATE_COLUMNS
+from data_ingestor_spark.sources import load, read_records
 from data_ingestor_spark.streaming import (
     session_windowed_counts,
     stateful_dedup,
@@ -557,16 +559,15 @@ def test_stream_json_quarantines_malformed_documents(spark, tmp_path):
     text in the corrupt column, record fields NULL) while the good
     document's records load normally; an empty-but-well-formed Records
     array adds nothing."""
-    from data_ingestor_spark.streaming import stream_json_records
-
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     shutil.copy(os.path.join(FIXTURES, "ingest-records.json"), in_dir / "good.json")
     (in_dir / "truncated.json").write_text('{"Records": [{"user": "a", ')
     (in_dir / "empty_ok.json").write_text('{"Records": []}')
 
-    recs = stream_json_records(
-        spark, str(in_dir), MIST_NESTED_SCHEMA, corrupt_col="_corrupt_record"
+    recs = read_records(
+        spark.readStream, str(in_dir), "json", MIST_NESTED_SCHEMA,
+        corrupt_col="_corrupt_record",
     )
     assert recs.isStreaming
     seen = []
@@ -584,24 +585,37 @@ def test_stream_json_quarantines_malformed_documents(spark, tmp_path):
     assert '"user": "a"' in bad[0]["_corrupt_record"]
 
 
-def test_stream_xml_ingest_matches_batch(spark, tmp_path):
-    """Streaming-XML ingest twin (judge directive r10 #2): the same
-    scan→flatten→project plan as the batch XML path, under Structured
-    Streaming — the reference's flagship live path streams XML
-    (fileloader-schema.go:142-197 into mapreduce.go:54-105)."""
-    from data_ingestor_spark.sources.readers import read_xml_records
+@pytest.mark.parametrize("fmt", ["json", "xml", "csv"])
+def test_stream_ingest_matches_batch(spark, tmp_path, fmt):
+    """Batch/stream parity in every ingest format: ``stream_load`` runs
+    the same scan→flatten→project plan as the batch ``load`` under
+    Structured Streaming, so both agree row for row on the same file —
+    the reference's flagship live path streams XML
+    (fileloader-schema.go:142-197 into mapreduce.go:54-105). The CSV
+    file is the XML fixture's flattened rows as the load job exports
+    them, read back with the NESTED record schema as both jobs do."""
     from data_ingestor_spark.operators.flatten import flatten_nested
+    from data_ingestor_spark.sinks import export_csv
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
-    shutil.copy(os.path.join(FIXTURES, "ingest-records.xml"), in_dir / "feed0.xml")
+    src = in_dir / f"feed0.{fmt}"
+    if fmt == "csv":
+        xml = load(spark, os.path.join(FIXTURES, "ingest-records.xml"), schema=MIST_NESTED_SCHEMA)
+        export_csv(flatten_nested(xml, columns=TEMPLATE_COLUMNS), str(src), single_file=True)
+    else:
+        shutil.copy(os.path.join(FIXTURES, f"ingest-records.{fmt}"), src)
+    batch = flatten_nested(
+        load(spark, str(src), fmt=fmt, schema=MIST_NESTED_SCHEMA),
+        columns=TEMPLATE_COLUMNS,
+    ).collect()
 
     flat = stream_load(
         spark,
         str(in_dir),
         MIST_NESTED_SCHEMA,
         columns=TEMPLATE_COLUMNS,
-        fmt="xml",
+        fmt=fmt,
     )
     assert flat.isStreaming
     seen = []
@@ -612,16 +626,30 @@ def test_stream_xml_ingest_matches_batch(spark, tmp_path):
     rows = [r for batch in seen for r in batch]
     assert rows and rows[0].__fields__ == TEMPLATE_COLUMNS
 
-    batch = flatten_nested(
-        read_xml_records(
-            spark,
-            os.path.join(FIXTURES, "ingest-records.xml"),
-            schema=MIST_NESTED_SCHEMA,
-        ),
-        columns=TEMPLATE_COLUMNS,
-    ).collect()
     key = lambda r: tuple(str(v) for v in r)  # noqa: E731
     assert sorted(map(key, rows)) == sorted(map(key, batch))
+
+
+def test_stream_load_caps_files_per_trigger(spark, tmp_path):
+    """stream_load bounds each micro-batch at 10 new files (the
+    channel-capacity analogue, main.go:57): 11 small files drain in
+    exactly 2 micro-batches, not 1."""
+    from pyspark.sql import types as T
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for i in range(11):
+        (in_dir / f"feed{i:02d}.csv").write_text(f"user\nu{i}\n")
+    schema = T.StructType([T.StructField("user", T.StringType(), True)])
+
+    batches = []
+    q = write_stream_batches(
+        stream_load(spark, str(in_dir), schema, fmt="csv"),
+        str(tmp_path / "ckpt"),
+        lambda df, bid: batches.append((bid, df.count())),
+    )
+    _drain(q)
+    assert batches == [(0, 10), (1, 1)]
 
 
 def test_stream_xml_quarantines_poison_file(spark, tmp_path):
@@ -631,8 +659,6 @@ def test_stream_xml_quarantines_poison_file(spark, tmp_path):
     flows through as quarantine rows (raw text in the corrupt column,
     schema fields NULL) while well-formed records from BOTH files load
     normally."""
-    from data_ingestor_spark.streaming import stream_xml_records
-
     in_dir = tmp_path / "in"
     in_dir.mkdir()
     shutil.copy(os.path.join(FIXTURES, "ingest-records.xml"), in_dir / "good.xml")
@@ -644,8 +670,9 @@ def test_stream_xml_quarantines_poison_file(spark, tmp_path):
         "</Data>\n"
     )
 
-    recs = stream_xml_records(
-        spark, str(in_dir), MIST_NESTED_SCHEMA, corrupt_col="_corrupt_record"
+    recs = read_records(
+        spark.readStream, str(in_dir), "xml", MIST_NESTED_SCHEMA,
+        corrupt_col="_corrupt_record",
     )
     assert recs.isStreaming
     seen = []
@@ -692,8 +719,6 @@ def test_stream_csv_ingest_matches_batch(spark, tmp_path):
     completing the JSON/XML/CSV streaming trio."""
     from pyspark.sql import types as T
 
-    from data_ingestor_spark.sources.readers import load as batch_load
-
     schema = T.StructType(
         [
             T.StructField("user", T.StringType(), True),
@@ -713,7 +738,7 @@ def test_stream_csv_ingest_matches_batch(spark, tmp_path):
     _drain(q)
     rows = [r for batch in seen for r in batch]
 
-    batch = batch_load(
+    batch = load(
         spark, str(in_dir / "feed0.csv"), fmt="csv", schema=schema
     ).collect()
     key = lambda r: tuple(str(v) for v in r)  # noqa: E731
@@ -729,8 +754,6 @@ def test_stream_csv_quarantines_bad_typed_cell(spark, tmp_path):
     load normally."""
     from pyspark.sql import types as T
 
-    from data_ingestor_spark.streaming import stream_csv_records
-
     schema = T.StructType(
         [
             T.StructField("user", T.StringType(), True),
@@ -744,8 +767,8 @@ def test_stream_csv_quarantines_bad_typed_cell(spark, tmp_path):
         "user,score\ncara,30\nmallory,NOT_A_NUMBER\ndan,40\n"
     )
 
-    recs = stream_csv_records(
-        spark, str(in_dir), schema, corrupt_col="_corrupt_record"
+    recs = read_records(
+        spark.readStream, str(in_dir), "csv", schema, corrupt_col="_corrupt_record"
     )
     assert recs.isStreaming
     seen = []
@@ -790,7 +813,6 @@ def test_observed_stream_quarantine_ledger_no_collect(spark, tmp_path):
     from pyspark.sql import types as T
 
     from data_ingestor_spark.metrics import observed_stream, stream_metric_totals
-    from data_ingestor_spark.streaming import stream_csv_records
 
     schema = T.StructType(
         [
@@ -804,7 +826,9 @@ def test_observed_stream_quarantine_ledger_no_collect(spark, tmp_path):
     (in_dir / "b.csv").write_text("user,score\ndan,40\neve,ALSO_BAD\n")
 
     recs = observed_stream(
-        stream_csv_records(spark, str(in_dir), schema, corrupt_col="_corrupt_record"),
+        read_records(
+            spark.readStream, str(in_dir), "csv", schema, corrupt_col="_corrupt_record"
+        ),
         name="quarantine",
         error_condition="_corrupt_record IS NOT NULL",
     )
@@ -823,7 +847,7 @@ def test_stream_with_deadletter_routes_undecodable_xml(spark, tmp_path):
     the poison file (byte-for-byte) to the dead-letter dir, restart
     from the same checkpoint, and land every clean record exactly
     once."""
-    from data_ingestor_spark.streaming import stream_with_deadletter, stream_xml_records
+    from data_ingestor_spark.streaming import stream_with_deadletter
 
     in_dir = tmp_path / "in"
     dl_dir = tmp_path / "deadletter"
@@ -837,8 +861,9 @@ def test_stream_with_deadletter_routes_undecodable_xml(spark, tmp_path):
     seen = []
 
     def start():
-        recs = stream_xml_records(
-            spark, str(in_dir), MIST_NESTED_SCHEMA, corrupt_col="_corrupt_record"
+        recs = read_records(
+            spark.readStream, str(in_dir), "xml", MIST_NESTED_SCHEMA,
+            corrupt_col="_corrupt_record",
         )
         return write_stream_batches(
             recs, str(tmp_path / "ckpt"), lambda df, bid: seen.append(df.collect())
