@@ -51,12 +51,14 @@ class IngestCounter:
 def _ingest_counters(error_condition: str | None) -> list:
     """The ``rows_total`` / ``rows_error`` / ``rows_succeeded`` aggregates
     both :func:`observed` and :func:`observed_stream` attach; rows
-    matching the SQL boolean ``error_condition`` count as errors."""
-    err = F.expr(error_condition) if error_condition else F.lit(False)
+    matching the SQL boolean ``error_condition`` count as errors, a NULL
+    condition counts as success. ``count_if`` (not ``sum``) keeps every
+    counter 0, never NULL, over zero rows."""
+    err = F.coalesce(F.expr(error_condition), F.lit(False)) if error_condition else F.lit(False)
     return [
         F.count(F.lit(1)).alias("rows_total"),
-        F.sum(F.when(err, 1).otherwise(0)).alias("rows_error"),
-        F.sum(F.when(err, 0).otherwise(1)).alias("rows_succeeded"),
+        F.count_if(err).alias("rows_error"),
+        F.count_if(~err).alias("rows_succeeded"),
     ]
 
 

@@ -8,19 +8,27 @@ counters logged (``main.go:132-138``) → input archived (``main.go:141``).
 
 Engine flow (one logical plan, SURVEY §2.3(h) fixes the double parse):
 
-    load(file) → flatten → whitelist-project     (cached once)
-      ├─ export_csv / export_excel / export_json (side outputs)
-      ├─ publish (atomic parquet dir or staged JDBC)
-      └─ archive_input + metrics report
+    load(file) → flatten → whitelist-project     (one lazy plan, no cache)
+      ├─ publish (atomic parquet dir or staged JDBC)      ┐ one Spark job
+      ├─ export_csv / export_excel / export_json          ┘ each, concurrent
+      └─ archive_input + metrics report (after every sink succeeded)
 
-Everything distributed stays distributed; only the small side exports
-materialize on the driver (as they do in the reference).
+Each requested sink is its own Spark job over the same uncached plan,
+submitted concurrently from a thread pool, so the sinks share the
+cores instead of queueing behind one another. There is deliberately no
+cache: materializing the flattened frame in memory costs more than the
+parse it saves (one re-parse per sink), and it would pin input-sized
+state on the executors. Everything distributed stays distributed; only
+the Excel export materializes on the driver (as it does in the
+reference).
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -98,35 +106,38 @@ def run_load_job(
         # (documented Spark caveat; the blessed alternatives are
         # caching the parsed frame — wrong at 100 TB — or selecting
         # every schema column). This path holds the invariant
-        # structurally: the publish/export fan-out below materializes
-        # ALL schema columns in the same action that evaluates this
-        # filter and the observe metric. Any future change that
-        # projects a subset before the publish must re-introduce a
-        # cache (or an explicit all-columns select) ahead of this
-        # filter, or quarantined rows could silently re-enter/vanish.
+        # structurally: every sink below runs its own job over the
+        # whole ``flat`` plan and materializes EVERY ``flat`` column in
+        # the same action that evaluates this filter and the observe
+        # metric. There is no cache to fall back on: a future sink that
+        # projects a subset of ``flat`` must select every column itself,
+        # or quarantined rows could silently re-enter/vanish.
         # Guarded by tests/test_ingest_totality.py quarantine counts.
         raw, obs_quarantine = observed(raw, error_condition=f"{corrupt} IS NOT NULL")
         raw = raw.filter(F.col(corrupt).isNull()).drop(corrupt)
     flat = flatten_nested(raw, array_col, columns)
     flat, obs = observed(flat, error_condition=error_condition)
-    # parse once, fan out to every sink (SURVEY §2.3(h))
-    flat = flat.cache()
-    try:
-        exports: dict[str, str] = {}
-        n = sinks.publish_parquet_atomic(flat, target_dir)
-        if csv_out:
-            sinks.export_csv(flat, csv_out, single_file=True)
-            exports["csv"] = csv_out
-        if excel_out:
-            sinks.export_excel(flat, excel_out)
-            exports["excel"] = excel_out
-        if json_out:
-            sinks.export_json(flat, json_out, array=True)
-            exports["json"] = json_out
-    except Exception as exc:  # noqa: BLE001 - translated + re-raised
-        _raise_clean_stream_error(exc, input_file)
-    finally:
-        flat.unpersist()
+    # one concurrent Spark job per sink over the same uncached plan
+    calls = [lambda: sinks.publish_parquet_atomic(flat, target_dir)]
+    exports: dict[str, str] = {}
+    for kind, out, export in (
+        ("csv", csv_out, lambda: sinks.export_csv(flat, csv_out, single_file=True)),
+        ("excel", excel_out, lambda: sinks.export_excel(flat, excel_out)),
+        ("json", json_out, lambda: sinks.export_json(flat, json_out, array=True)),
+    ):
+        if out:
+            exports[kind] = out
+            calls.append(export)
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        # one wrapper per task: each clones the caller's local properties
+        # (job group, description) and tags, so no two sink threads share
+        # one mutable property set
+        futures = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in calls]
+    # every sink has finished; the first failure in submit order wins
+    for f in futures:
+        if f.exception() is not None:
+            _raise_clean_stream_error(f.exception(), input_file)
+    n = futures[0].result()
 
     archived = sinks.archive_input(input_file, archive_dir) if archive_dir else None
     metrics = obs.get

@@ -14,7 +14,9 @@ Reference parity map:
 - :func:`export_json` ← ``ExportToJSON`` (``fileloader-schema.go:
   513-525``): a single JSON array of record objects. Distributed JSONL is
   the scale path; ``array=True`` reproduces the reference's single-array
-  file shape.
+  file shape, serialized on executors: one compact object per line, null
+  keys kept, values rendered by Spark's JSON source (the driver only
+  concatenates part files — it never holds the rows).
 - :func:`publish_jdbc_atomic` ← O12 multi-row INSERT sink
   (``dbtransposer/dbtransposer-schema.go:22-103``) + O15 all-or-nothing
   cross-worker commit (``dbtransposer/dbtransposer.go:290-364``). Spark
@@ -46,6 +48,7 @@ import os
 import re
 import shutil
 import sys
+import tempfile
 import time
 
 from pyspark.sql import DataFrame
@@ -117,19 +120,44 @@ def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
         _collapse_single_file(path, ".csv")
 
 
+def _part_order(name: str) -> tuple[int, str]:
+    """Sort key of a Spark part file: its partition number, then its name
+    (``-c000``, ``-c001`` … when a partition spans several files)."""
+    return int(name.split("-", 2)[1]), name
+
+
 def export_json(df: DataFrame, path: str, array: bool = False) -> None:
     """JSON export (O18). Default: distributed JSONL (the scale path).
-    ``array=True``: single file containing one JSON array of objects —
-    byte-shape parity with the reference (``fileloader-schema.go:519-522``)."""
+
+    ``array=True``: one file holding a single JSON array of the rows, in
+    ``df``'s row order — the reference's file shape
+    (``fileloader-schema.go:519-522``). Executors serialize: Spark's JSON
+    source writes one compact object per line (null keys kept, values
+    rendered by Spark) into a temp directory next to ``path``; the driver
+    only concatenates the part files in partition order as ``[`` + lines
+    joined by ``,\\n`` + ``]`` and ``os.replace``\\ s the result onto
+    ``path``. An empty frame gives ``[]``."""
     if not array:
         df.write.mode("overwrite").json(path)
         return
-    import json
-
-    rows = [r.asDict(recursive=True) for r in df.collect()]
-    os.makedirs(os.path.dirname(os.path.abspath(path)) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        json.dump(rows, f, indent=2, default=str)
+    parent = os.path.dirname(os.path.abspath(path))
+    os.makedirs(parent, exist_ok=True)
+    work = tempfile.mkdtemp(prefix=f".{os.path.basename(path)}.", dir=parent)
+    try:
+        parts_dir, tmp = os.path.join(work, "parts"), os.path.join(work, "array.json")
+        df.write.option("ignoreNullFields", "false").json(parts_dir)
+        parts = sorted((n for n in os.listdir(parts_dir) if n.startswith("part-")), key=_part_order)
+        with open(tmp, "wb") as out:
+            sep = b"["
+            for name in parts:
+                with open(os.path.join(parts_dir, name), "rb") as part:
+                    for line in part:
+                        out.write(sep + line.rstrip(b"\n"))
+                        sep = b",\n"
+            out.write(b"[]" if sep == b"[" else b"]")
+        os.replace(tmp, path)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def export_excel(df: DataFrame, path: str, sheet: str = "Sheet1") -> None:
@@ -392,7 +420,14 @@ def publish_parquet_atomic(df: DataFrame, final_dir: str, staging_dir: str | Non
     ``publish_versioned`` — whose per-writer staging names and version
     reservation make multi-writer publish safe — and read via its
     ``_LATEST`` pointer.
+
+    The returned count comes from an ``Observation`` on the staging
+    write: it rides the write's own job, so the publish is one Spark job
+    and never re-reads what it wrote.
     """
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     staging = staging_dir or final_dir.rstrip("/") + ".__staging__"
     final_parent = os.path.dirname(os.path.abspath(final_dir.rstrip("/"))) or "."
     staging_parent = os.path.dirname(os.path.abspath(staging.rstrip("/"))) or "."
@@ -418,8 +453,9 @@ def publish_parquet_atomic(df: DataFrame, final_dir: str, staging_dir: str | Non
         )
     if os.path.exists(staging):
         shutil.rmtree(staging)
-    df.write.mode("overwrite").parquet(staging)
-    n = df.sparkSession.read.parquet(staging).count()
+    rows = Observation()
+    df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(staging)
+    n = rows.get["n"]
     old = final_dir.rstrip("/") + ".__old__"
     if os.path.exists(old):
         shutil.rmtree(old)

@@ -26,3 +26,34 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def adversarial_sf_dir(tmp_path_factory):
+    """The adversarial mini-corpus (``scripts/adversarial_corpus.py``):
+    the sf0.001 tables plus empty / NULL / control-character / emoji
+    documents, vectors and payloads."""
+    from scripts.adversarial_corpus import build
+
+    return build(str(tmp_path_factory.mktemp("advsf")))
+
+
+def spark_jobs(spark, fn, *args, **kwargs):
+    """Run ``fn(*args, **kwargs)`` under a fresh job group and return
+    ``(result, jobs)``: the number of Spark jobs launched in that group.
+
+    Jobs are selected by group id, never by position in the status
+    store's bounded job list; the listener bus is drained first so every
+    finished job is registered."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

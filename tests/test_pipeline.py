@@ -1,12 +1,14 @@
 """End-to-end flagship load job (reference lifecycle §3.1 parity)."""
 
 import csv
+import json
 import os
 import shutil
 
 import pytest
 
-from conftest import FIXTURES
+from conftest import FIXTURES, spark_jobs
+from data_ingestor_spark.schemas import TEMPLATE_COLUMNS
 
 
 def _fixture_csv(spark, path) -> None:
@@ -43,9 +45,16 @@ def test_run_load_job_full_lifecycle(spark, tmp_path):
     assert res.rows_published == 17
     assert spark.read.parquet(str(tmp_path / "published")).count() == 17
 
-    # side exports present and consistent (parse-once fan-out, §2.3(h))
+    # side exports present and consistent (one plan fanned out, §2.3(h)):
+    # the CSV rows are the JSON rows, stringified, in the same order
     with open(tmp_path / "out.csv") as f:
-        assert len(list(csv.DictReader(f))) == 17
+        csv_rows = list(csv.DictReader(f))
+    with open(tmp_path / "out.json") as f:
+        json_rows = json.load(f)
+    assert len(json_rows) == 17
+    assert csv_rows == [
+        {k: "" if v is None else str(v) for k, v in r.items()} for r in json_rows
+    ]
     assert len(read_rows(str(tmp_path / "out.xlsx"))) == 1 + 17
 
     # error metric counted the 2 null-fnumber rows without dropping them
@@ -128,3 +137,73 @@ def test_run_load_job_xml_input(spark, tmp_path):
     # XML chardata arrives as strings but lands in the TYPED schema (§2.3(e))
     assert dict(out.dtypes)["dt_created"] == "bigint"
     assert not src.exists() and os.path.isfile(res.archived_to)
+
+
+def test_run_load_job_sinks_run_in_the_callers_job_group(spark, tmp_path):
+    """Load check + publish + CSV + JSON = 4 jobs, all in the caller's
+    job group: the sink threads inherit it, and nothing re-reads the
+    publish or builds a cache."""
+    from data_ingestor_spark.pipeline import run_load_job
+
+    src = tmp_path / "in.json"
+    shutil.copy(os.path.join(FIXTURES, "ingest-records.json"), src)
+    res, jobs = spark_jobs(
+        spark,
+        run_load_job,
+        spark,
+        str(src),
+        target_dir=str(tmp_path / "published"),
+        csv_out=str(tmp_path / "out.csv"),
+        json_out=str(tmp_path / "out.json"),
+    )
+    assert res.rows_published == 17
+    assert jobs == 4
+
+
+def test_run_load_job_failed_sink_keeps_input(spark, tmp_path):
+    """A sink that cannot be written (its parent path is a regular
+    file) fails the job after every sink has finished, and the input is
+    never archived."""
+    from data_ingestor_spark.pipeline import run_load_job
+
+    src = tmp_path / "in.json"
+    shutil.copy(os.path.join(FIXTURES, "ingest-records.json"), src)
+    (tmp_path / "blocker").write_text("a file, not a directory")
+    with pytest.raises(Exception):
+        run_load_job(
+            spark,
+            str(src),
+            target_dir=str(tmp_path / "published"),
+            csv_out=str(tmp_path / "blocker" / "out.csv"),
+            json_out=str(tmp_path / "out.json"),
+            archive_dir=str(tmp_path / "archive"),
+        )
+    assert src.is_file()
+    assert not (tmp_path / "archive").exists()
+    # the other sinks ran to completion before the failure was raised
+    assert (tmp_path / "out.json").is_file()
+
+
+def test_run_load_job_empty_document(spark, tmp_path):
+    """A well-formed document with no records publishes 0 rows with 0
+    errors, archives its input and writes empty exports (all counters
+    are 0, not NULL, over zero rows)."""
+    from data_ingestor_spark.pipeline import run_load_job
+
+    src = tmp_path / "in.json"
+    src.write_text('{"Records": []}')
+    res = run_load_job(
+        spark,
+        str(src),
+        target_dir=str(tmp_path / "published"),
+        csv_out=str(tmp_path / "out.csv"),
+        json_out=str(tmp_path / "out.json"),
+        archive_dir=str(tmp_path / "archive"),
+        error_condition="fnumber IS NULL",
+    )
+    assert (res.rows_published, res.rows_error) == (0, 0)
+    assert not src.exists() and os.path.isfile(res.archived_to)
+    with open(tmp_path / "out.csv") as f:
+        assert list(csv.reader(f)) == [TEMPLATE_COLUMNS]
+    with open(tmp_path / "out.json") as f:
+        assert json.load(f) == []

@@ -41,13 +41,36 @@ def test_export_csv_distributed(flat_df, tmp_path):
     assert os.path.isdir(out)  # partitioned directory write (the scale path)
 
 
-def test_export_json_array(flat_df, tmp_path):
-    out = str(tmp_path / "out.json")
-    sinks.export_json(flat_df, out, array=True)
+@pytest.mark.parametrize("frame", ["mist", "adversarial", "repartition3", "empty"])
+def test_export_json_array(spark, flat_df, adversarial_sf_dir, tmp_path, frame):
+    """The executor-serialized array holds exactly ``df.collect()``, in
+    its order and with every key in column order — across partitions,
+    NULLs, control characters, emoji and zero rows — and leaves no temp
+    files behind."""
+    df = {
+        "mist": lambda: flat_df,
+        "adversarial": lambda: spark.read.parquet(f"{adversarial_sf_dir}/documents.parquet"),
+        "repartition3": lambda: flat_df.repartition(3),
+        "empty": lambda: spark.createDataFrame([], flat_df.schema),
+    }[frame]()
+    out = tmp_path / "out.json"
+    sinks.export_json(df, str(out), array=True)
     with open(out) as f:
         data = json.load(f)
-    assert isinstance(data, list) and len(data) == 17
-    assert data[0].keys() == {c: None for c in flat_df.columns}.keys()
+    assert data == [r.asDict(recursive=True) for r in df.collect()]
+    assert all(list(r) == df.columns for r in data)
+    assert os.listdir(tmp_path) == ["out.json"]
+
+
+def test_publish_parquet_counts_from_the_write(spark, tmp_path):
+    """One Spark job (the staging write); the count it returns is the
+    row count a read-back of the published parquet finds."""
+    from conftest import spark_jobs
+
+    final = str(tmp_path / "tbl")
+    n, jobs = spark_jobs(spark, sinks.publish_parquet_atomic, spark.range(0, 1000, 1, 4), final)
+    assert jobs == 1
+    assert n == spark.read.parquet(final).count() == 1000
 
 
 def test_export_excel_roundtrip(flat_df, tmp_path):

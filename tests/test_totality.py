@@ -24,14 +24,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-@pytest.fixture(scope="session")
-def adversarial_sf_dir(tmp_path_factory):
-    from scripts.adversarial_corpus import build
-
-    dst = tmp_path_factory.mktemp("advsf")
-    return build(str(dst))
-
-
 def _registry_keys():
     from data_ingestor_spark.plans.queries import REGISTRY
 
