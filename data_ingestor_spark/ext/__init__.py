@@ -7,6 +7,10 @@ in the hot path, Pandas UDFs only where arrays must meet numpy.
 
 from __future__ import annotations
 
+import logging
+
+_log = logging.getLogger(__name__)
+
 
 def free_local_checkpoint(df) -> None:
     """Release the executor-storage blocks behind a checkpoint handle
@@ -31,12 +35,19 @@ def free_local_checkpoint(df) -> None:
 
     Best-effort by design: ``df`` must be the checkpoint handle itself
     (its analyzed plan is the ``LogicalRDD`` wrapping the persisted
-    RDD). Anything else — including reliable ``checkpoint()`` handles,
-    whose blocks live in the checkpoint dir, not block storage — is a
-    silent no-op, as is any py4j hiccup."""
+    RDD). Any other frame is a no-op, logged at debug level. Reliable
+    ``checkpoint()`` handles also analyze to a ``LogicalRDD``, so the
+    class check does not reject them; they are safe because their RDD
+    is read back from the checkpoint dir and was never persisted, and
+    ``unpersist`` on such an RDD does nothing. A py4j failure is logged
+    as a warning and swallowed: freeing is an optimization, never a
+    reason to fail the operator."""
     try:
         plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
+        kind = plan.getClass().getSimpleName()
+        if kind == "LogicalRDD":
             plan.rdd().unpersist(False)
-    except Exception:
-        pass
+        else:
+            _log.debug("free_local_checkpoint: %s is not a checkpoint handle; nothing freed", kind)
+    except Exception as e:  # noqa: BLE001
+        _log.warning("free_local_checkpoint: could not free checkpoint blocks: %r", e)

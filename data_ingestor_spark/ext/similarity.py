@@ -1164,7 +1164,8 @@ def q_sim_ann_hnsw(spark, sf_dir):
     1.84 to 4.96 at sf0.01 and 0.52 to 3.18 at sf0.1 — 2.7× / 6.1×,
     with the second layer worth +0.66 at sf0.1 and neutral at sf0.01,
     i.e. the hierarchy pays more as the corpus grows (50-query
-    leave-one-out, HNSW_RECALL_r13.json, scripts/hnsw_probe.py).
+    leave-one-out, HNSW_RECALL_r13.json, written by the retired
+    hnsw_probe.py: ``git show ca81ae4:scripts/hnsw_probe.py``).
     Every hop is deterministic, so the oracle replays both descents
     AND the base walk CTE-for-hop; a hash-pass pins the level
     assignment, all three graphs, and every beam. Scale: upper layers
@@ -1749,7 +1750,8 @@ def ivf_compact(base: DataFrame, tombstones: DataFrame) -> tuple[DataFrame, Data
     hash-neutral with the pre-compaction view keep searching with the
     STALE centroids (q_sim_ann_ivf_compact proves that equivalence),
     then cut over to the refreshed ones (measured recall delta:
-    ``IVF_COMPACT_r12.json``, scripts/ivf_compact_probe.py). At scale
+    ``IVF_COMPACT_r12.json``, written by the retired ivf_compact_probe.py:
+    ``git show ca81ae4:scripts/ivf_compact_probe.py``). At scale
     this is the FAISS/Milvus background job: rewrite the cell files
     without tombstoned codes and retrain the coarse codebook off the
     critical path — the anti-join is broadcast, the retrain is one

@@ -7,19 +7,22 @@ attribute a per-query ratio to CODE is to time both revisions on ONE
 boot, interleaved so co-tenant drift hits both variants equally. This
 tool does that:
 
-    python scripts/ab_bench.py --old-rev ebf4b6b \
+    python scripts/ab_bench.py --old-rev HEAD~1 \
         --keys q_tpch_q22,q_text_classifier --reps 2 \
-        --json AB_r6.json [--sf /root/testdata/sf0.1]
+        --json AB.json [--sf SF_DIR]
+
+``--old-rev`` is required: there is no sensible default revision.
 
 Method:
 - ``git archive <old-rev>`` is unpacked to a temp dir; the old
   ``data_ingestor_spark`` package is imported from there in its own
   worker process (two revisions of one package can't share a process).
 - One worker process per (variant, rep), interleaved old/new/old/new.
-  Each worker boots the same local[32] session bench.py uses, warms the
-  JVM, then times each key with a ``noop``-format write, best of 2
-  in-process runs (bench.py's steady-state discipline), and emits JSON
-  on its last stdout line.
+  Each worker builds, warms and times through ``harness`` (the
+  session bench.py uses; ``noop``-format write, best of 2 in-process
+  runs) and emits JSON on its last stdout line. ``harness`` always
+  comes from this checkout, so both variants run under one session
+  configuration and only the package differs.
 - The artifact records per-key old/new seconds (min across reps — the
   least-interfered observation), their ratio, each worker's single-
   thread md5 calibration, and the load average, so a reader can check
@@ -37,7 +40,8 @@ import os
 import subprocess
 import sys
 import tempfile
-import time
+
+from harness import bench_session, cpu_cal, time_key, warm
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -45,47 +49,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def _worker(tree: str, keys: list[str], sf_dir: str) -> None:
     """Time ``keys`` against the registry in ``tree``; print one JSON line."""
     sys.path.insert(0, tree)
-    import hashlib
-
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    t0 = time.perf_counter()
-    h = b"x" * 65536
-    for _ in range(2000):
-        h = hashlib.md5(h).digest() + h[: 65536 - 16]
-    cpu_cal_s = round(time.perf_counter() - t0, 4)
-
+    spark = bench_session("ab-bench")
+    cal = cpu_cal()
     from data_ingestor_spark.plans import queries as q
 
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").count()
-
-    out: dict[str, float] = {}
-    for name in keys:
-        spec = q.REGISTRY.get(name)
-        if spec is None:
-            continue
-        runs = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        out[name] = min(runs)
-    print(json.dumps({"queries": out, "cpu_cal_s": cpu_cal_s}))
+    warm(spark, sf_dir)
+    keys = [k for k in keys if k in q.REGISTRY]
+    out = {k: min(time_key(spark, q.REGISTRY[k].fn, sf_dir)[1]) for k in keys}
+    print(json.dumps({"queries": out, "cpu_cal_s": cal}))
     spark.stop()
 
 
@@ -121,7 +92,7 @@ def summarize(reps: list[dict]) -> dict[str, dict]:
 
 def main() -> int:
     p = argparse.ArgumentParser()
-    p.add_argument("--old-rev", default="ebf4b6b")
+    p.add_argument("--old-rev", required=True, help="git revision to A/B against")
     p.add_argument("--keys", required=True)
     p.add_argument("--reps", type=int, default=2)
     p.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -143,7 +114,8 @@ def main() -> int:
     def run_variant(tree: str) -> dict:
         cmd = [
             sys.executable, os.path.abspath(__file__),
-            "--worker-tree", tree, "--keys", args.keys, "--sf", args.sf,
+            "--worker-tree", tree, "--old-rev", args.old_rev,
+            "--keys", args.keys, "--sf", args.sf,
         ]
         r = subprocess.run(cmd, capture_output=True, text=True, check=True, cwd=tree)
         last = [ln for ln in r.stdout.strip().splitlines() if ln.startswith("{")][-1]

@@ -1,17 +1,18 @@
-"""Per-query and sub-stage profiling for the r13 optimization round.
+"""Per-key build and run timing, with optional plan dumps.
 
-Times registry keys with the bench's exact methodology (noop sink, best
-of N in one warmed session) and optionally dumps ``explain("formatted")``
-to a directory — the measure-first tooling of
-/opt/skills/guides/spark_optimization_guide.md §1 applied to this repo:
+Times registry keys with the bench's methodology (noop sink, best of N
+in one warmed session) and optionally writes each key's
+``explain("formatted")`` to a directory, so a plan change can be
+measured before and after:
 
     python scripts/opt_profile.py --keys q_agg_basic,q_tpch_q3 \
         [--sf /root/testdata/sf0.1] [--reps 2] [--plans-dir plans/r13 \
         --plan-suffix _before] [--json /tmp/prof.json]
 
-The session mirrors bench.py exactly (local[$SPARK_GRAFT_CPUS],
-shuffle.partitions=$SPARK_GRAFT_CPUS, AQE on, UTC, noop sink) so numbers
-here are directly comparable to the bench's per-key entries.
+The session, warm-up and timing loop come from ``harness`` (bench.py's
+configuration), so numbers here are directly comparable to the bench's
+per-key entries. ``build_s`` is the last rep's plan-build time, which
+includes any Spark jobs the key's builder runs eagerly.
 """
 
 from __future__ import annotations
@@ -20,9 +21,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from harness import bench_session, time_key, warm  # noqa: E402
 
 
 def main() -> None:
@@ -35,27 +37,10 @@ def main() -> None:
     ap.add_argument("--json", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("opt-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = bench_session("opt-profile")
     from data_ingestor_spark.plans import queries as q
 
-    # same JVM warmup as bench.py
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{args.sf}/region.parquet").count()
+    warm(spark, args.sf)
 
     out: dict[str, dict] = {}
     for name in args.keys.split(","):
@@ -65,16 +50,9 @@ def main() -> None:
             out[name] = {"err": "unknown key"}
             continue
         spark.sparkContext.setJobDescription(f"opt-profile:{name}")
-        runs = []
-        t_build = None
-        err = None
+        builds, runs, err = [], [], None
         try:
-            for _ in range(args.reps):
-                t0 = time.perf_counter()
-                df = spec.fn(spark, args.sf)
-                t_build = time.perf_counter() - t0
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(round(time.perf_counter() - t0, 3))
+            builds, runs = time_key(spark, spec.fn, args.sf, args.reps)
             if args.plans_dir:
                 os.makedirs(args.plans_dir, exist_ok=True)
                 plan = spec.fn(spark, args.sf)._jdf.queryExecution().explainString(
@@ -89,7 +67,7 @@ def main() -> None:
         out[name] = {
             "runs": runs,
             "best": min(runs) if runs else None,
-            "build_s": round(t_build, 3) if t_build is not None else None,
+            "build_s": builds[-1] if builds else None,
             "err": err,
         }
         print(name, out[name], flush=True)

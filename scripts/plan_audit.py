@@ -38,6 +38,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from harness import bench_session  # noqa: E402
+
 FLAG_KEYS = ("cartesian", "python_row_eval")
 
 
@@ -76,28 +78,12 @@ def audit_plan(plan: str) -> dict:
 
 
 def run_audit(sf_dir: str, out_path: str | None) -> int:
-    from pyspark.sql import SparkSession
-
     from data_ingestor_spark.plans import queries as q
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        # same driver-memory knob as bench.py: the audit's accepted
-        # eager-build cost includes output-bound materializations
-        # (q_sql_graph_triangles' 208M-triangle rollup), which need the
-        # repo-standard heap — the r13-opt LSH pair rewrite's attach
-        # joins pushed that key's eager build past the old 1g default
-        # at local[4] (passes at 2g; OOM diagnosis in
-        # OPTIMIZATION_r13.md)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # bench.py's session: the eager-build cost the audit accepts includes
+    # output-bound materializations (q_sql_graph_triangles' 208M-triangle
+    # rollup) that need its Spark driver heap (OOM diagnosis in OPTIMIZATION_r13.md)
+    spark = bench_session("plan-audit")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     rows = {}
     failed = 0

@@ -3,8 +3,8 @@
 The repo's 100 TB claims are plan-shape arguments (no cartesian
 products, banded joins instead of all-pairs, bounded fan-outs). This
 tool adds the runtime counterpart: it times EVERY registered query's
-Spark plan (``noop``-format write, best of 2, bench.py's steady-state
-discipline) at each provided scale factor and reports how the runtime
+Spark plan (``harness.time_key``: ``noop``-format write, best of 2 in
+bench.py's session) at each provided scale factor and reports how the runtime
 grows as the data grows 10x per step.
 
 Reading the numbers on local[32]:
@@ -31,9 +31,10 @@ import json
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from harness import bench_session, time_key, warm  # noqa: E402
 
 SF_DIRS = [
     "/root/testdata/sf0.001",
@@ -89,26 +90,10 @@ def main() -> int:
         del args[i : i + 2]
     only = [a for a in args if not a.startswith("-")]
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("data-ingestor-spark-scaling-probe")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = bench_session("data-ingestor-spark-scaling-probe")
     from data_ingestor_spark.plans.queries import REGISTRY
 
-    # JVM warmup (bench.py discipline)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warm(spark, SF_DIRS[0])
 
     names = only or sorted(REGISTRY)
     results: dict[str, dict] = {}
@@ -147,14 +132,7 @@ def main() -> int:
         err = None
         for sf_dir in SF_DIRS:
             try:
-                runs = []
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    spec.fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    runs.append(time.perf_counter() - t0)
-                times.append(round(min(runs), 3))
+                times.append(min(time_key(spark, spec.fn, sf_dir)[1]))
             except Exception as e:  # noqa: BLE001
                 err = f"{sf_dir}: {e}"
                 times.append(None)

@@ -10,14 +10,19 @@ paying the oracle again.
 
 Usage:
     [env overrides] python scripts/spark_hash_dump.py <sf_dir> --json=OUT key...
-    python scripts/spark_hash_dump.py --compare A.json B.json
+    python scripts/spark_hash_dump.py --compare BASE.json ODD.json \
+        [--baseline PRIOR.json]... [--twin KEY_A=KEY_B]... [--json OUT]
 
 Dump mode writes {key: {rows, cols, hash, elapsed_s, err}}
-incrementally; compare mode prints the match/mismatch summary for two
-dumps and exits non-zero on any mismatch or error.
+incrementally. Compare mode takes a dump at the default config (BASE)
+and one at an odd master/shuffle-partition config (ODD), e.g.
+``SPARK_GRAFT_CPUS=5 DIS_SHUFFLE_PARTITIONS=7``, and assembles the
+invariance artifact (see ``assemble``); it exits non-zero on any
+mismatch, error, drift or failed twin.
 """
 from __future__ import annotations
 
+import argparse
 import json
 import sys
 import time
@@ -48,20 +53,82 @@ def compare(dump_a: dict, dump_b: dict) -> dict:
     }
 
 
-def main() -> int:
-    if sys.argv[1:2] == ["--compare"]:
-        a = json.load(open(sys.argv[2]))
-        b = json.load(open(sys.argv[3]))
-        out = compare(a, b)
-        print(json.dumps(out, indent=1))
-        return 1 if out["n_mismatch"] or out["n_err"] else 0
+def assemble(base: dict, odd: dict, baselines: list[dict], twins: list[tuple[str, str]]) -> dict:
+    """Invariance artifact for a BASE and an ODD dump of one key set.
+
+    ``compare`` is the cross-config block. Each BASE key is checked for
+    drift against the first of ``baselines`` (earlier artifacts, in the
+    order given) whose ``results_base`` has it: a different hash is
+    drift, and a key no baseline has is listed in ``new_keys``. Each
+    twin ``(a, b)`` asserts that two keys promising the same output
+    have equal BASE hashes.
+    """
+    rb = base["results"]
+    drift, new_keys = [], []
+    for k in sorted(rb):
+        ref = next((b["results_base"][k] for b in baselines if k in b["results_base"]), None)
+        if ref is None:
+            new_keys.append(k)
+        elif ref["hash"] != rb[k]["hash"]:
+            drift.append(k)
+
+    def h(k: str):
+        return (rb.get(k) or {}).get("hash")
+
+    def config(d: dict) -> dict:
+        return {
+            "master": d["meta"]["master"],
+            "shuffle_partitions": int(d["meta"]["shuffle_partitions"]),
+        }
+
+    return {
+        "config_base": config(base),
+        "config_odd": config(odd),
+        "compare": compare(base, odd),
+        "new_keys": new_keys,
+        "drift": drift,
+        "twins": {f"{a}=={b}": h(a) is not None and h(a) == h(b) for a, b in twins},
+        "results_base": rb,
+        "results_odd": odd["results"],
+    }
+
+
+def run_compare(argv: list[str]) -> int:
+    ap = argparse.ArgumentParser(prog="spark_hash_dump.py --compare")
+    ap.add_argument("base")
+    ap.add_argument("odd")
+    ap.add_argument("--baseline", action="append", default=[])
+    ap.add_argument("--twin", action="append", default=[], help="KEY_A=KEY_B")
+    ap.add_argument("--json", dest="json_out")
+    args = ap.parse_args(argv)
+    twins = [tuple(t.split("=", 1)) for t in args.twin]
+    if any(len(t) != 2 for t in twins):
+        ap.error("--twin takes KEY_A=KEY_B")
+
+    def load(path: str) -> dict:
+        with open(path) as f:
+            return json.load(f)
+
+    out = assemble(load(args.base), load(args.odd), [load(p) for p in args.baseline], twins)
+    if args.json_out:
+        with open(args.json_out, "w") as f:
+            json.dump(out, f, indent=1, sort_keys=True)
+    print(json.dumps({k: v for k, v in out.items() if not k.startswith("results_")}, indent=1))
+    cmp = out["compare"]
+    bad = cmp["n_mismatch"] or cmp["n_err"] or out["drift"] or not all(out["twins"].values())
+    return 1 if bad else 0
+
+
+def main(argv: list[str]) -> int:
+    if argv[:1] == ["--compare"]:
+        return run_compare(argv[1:])
 
     sys.path.insert(0, ".")
     from scripts.check_oracle import canonical  # noqa: E402
 
     from scripts.check_oracle import parse_json_flag  # noqa: E402
 
-    json_out, args = parse_json_flag(sys.argv[1:])
+    json_out, args = parse_json_flag(argv)
     sf_dir = args[0]
     keys = args[1:]
 
@@ -106,4 +173,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -941,6 +941,14 @@ def test_finite_vectors_denormal_edges(spark):
     assert kept == ["keep_huge", "keep_tiny"]
 
 
+def _chain_clique_pairs(spark):
+    """A 10-node chain (its depth forces more than one round even with
+    pointer jumping) plus a 4-clique."""
+    chain = [(f"c{i}", f"c{i+1}") for i in range(9)]
+    clique = [(f"k{a}", f"k{b}") for a in range(4) for b in range(a + 1, 4)]
+    return spark.createDataFrame(chain + clique, "doc_a string, doc_b string")
+
+
 def test_cluster_pairs_reliable_checkpoint_survives_block_loss(spark, tmp_path, monkeypatch):
     """Durable-checkpoint e2e (judge directive r10 #6): kill the
     block-manager lineage after EVERY per-round materialization —
@@ -951,10 +959,7 @@ def test_cluster_pairs_reliable_checkpoint_survives_block_loss(spark, tmp_path, 
     same perturbation (so the vandal is not a no-op)."""
     import data_ingestor_spark.ext.dedup as dedup
 
-    # chain (depth forces >1 round even with pointer jumping) + clique
-    chain = [(f"c{i}", f"c{i+1}") for i in range(9)]
-    clique = [(f"k{a}", f"k{b}") for a in range(4) for b in range(a + 1, 4)]
-    pairs = spark.createDataFrame(chain + clique, "doc_a string, doc_b string")
+    pairs = _chain_clique_pairs(spark)
 
     expected = {
         r["doc_id"]: r["cluster_id"] for r in dedup.cluster_pairs(pairs).collect()
@@ -1001,6 +1006,59 @@ def test_cluster_pairs_reliable_checkpoint_survives_block_loss(spark, tmp_path, 
     with _pytest.raises(Exception) as ei:
         dedup.cluster_pairs(pairs).collect()
     assert "checkpoint" in str(ei.value).lower()
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_free_local_checkpoint_releases_exactly_the_handle(spark, caplog):
+    """``free_local_checkpoint`` reads Spark internals (the analyzed
+    plan's ``LogicalRDD`` class name and its RDD): if an upgrade moves
+    them, the eager checkpoint's persisted RDD must stay registered and
+    this fails. A frame that is not a checkpoint handle, even a cached
+    one, is left alone and logged at debug level; a failure is logged
+    as a warning that names the exception."""
+    import logging
+
+    from data_ingestor_spark.ext import free_local_checkpoint
+
+    before = _persistent_rdd_ids(spark)
+    ckpt = spark.range(100).selectExpr("id % 7 AS k").localCheckpoint(eager=True)
+    added = _persistent_rdd_ids(spark) - before
+    assert len(added) == 1
+
+    cached = spark.range(50).cache()
+    cached.count()
+    cached_ids = _persistent_rdd_ids(spark) - before - added
+    assert cached_ids
+    with caplog.at_level(logging.DEBUG, logger="data_ingestor_spark.ext"):
+        free_local_checkpoint(cached)
+        free_local_checkpoint(object())
+    assert _persistent_rdd_ids(spark) >= added | cached_ids
+
+    free_local_checkpoint(ckpt)
+    assert not (_persistent_rdd_ids(spark) & added)
+    cached.unpersist(True)
+
+    levels = {r.levelname: r.getMessage() for r in caplog.records}
+    assert "not a checkpoint handle" in levels.get("DEBUG", "")
+    assert "AttributeError" in levels.get("WARNING", "")
+
+
+def test_cluster_pairs_frees_superseded_rounds(spark):
+    """``cluster_pairs`` on the chain+clique pairs runs several
+    localCheckpoint rounds; all but the
+    state its result still reads are freed, so at most 2 persisted RDDs
+    remain after the result is collected (without the frees, one per
+    round remains)."""
+    import data_ingestor_spark.ext.dedup as dedup
+
+    pairs = _chain_clique_pairs(spark)
+    before = _persistent_rdd_ids(spark)
+    labels = dedup.cluster_pairs(pairs).collect()
+    assert len(labels) == 14
+    assert len(_persistent_rdd_ids(spark) - before) <= 2
 
 
 def test_sim_ann_pq_matches_numpy_mirror(spark):

@@ -250,25 +250,78 @@ def test_ivf_compact_refresh_equals_rebuild_over_survivors(spark, tmp_path):
     assert [tuple(r) for r in refreshed_search] == [tuple(r) for r in scratch]
 
 
+def _mass_delete_rows():
+    """A corpus where the centroid refresh measurably matters: cell B's
+    mass is tombstoned members sitting NEAR the query, dragging its
+    stale centroid onto the query's probe; its survivors are orthogonal.
+    The stale probe therefore lands in B (recall 0/10) while the
+    refreshed centroid moves B away and the probe recovers cell A, which
+    holds the true neighbors (recall 10/10). This is the production
+    shape: a hot shard deleted en masse leaves a stale centroid pointing
+    at vectors that no longer exist. Tombstoned ids are >= 900."""
+    dim = 8
+    q = np.zeros(dim, dtype=np.float32)
+    q[0] = 1.0
+    rng = np.random.default_rng(7)
+    rows = [(0, [float(x) for x in q], 0)]
+
+    def add(vid, v, label):
+        v = v / np.linalg.norm(v)
+        rows.append((vid, [float(x) for x in v.astype(np.float32)], label))
+
+    def noise():
+        return 0.01 * rng.normal(size=dim).astype(np.float32)
+
+    vid = 1
+    # cell A: 12 survivors at cos~0.9 to q, displaced in a COMMON
+    # direction (e3) so the cell mean stays at cos~0.9 instead of the
+    # noise averaging out back onto q — the true top-10 lives here
+    e3 = np.zeros(dim, dtype=np.float32)
+    e3[2] = 1.0
+    for _ in range(12):
+        add(vid, q * 0.9 + 0.436 * e3 + noise(), 0)
+        vid += 1
+    # cell B: 20 tombstoned members hugging q, plus 5 orthogonal survivors
+    e2 = np.zeros(dim, dtype=np.float32)
+    e2[1] = 1.0
+    for _ in range(20):
+        add(900 + vid, q * 0.99 + noise(), 1)
+        vid += 1
+    for _ in range(5):
+        add(vid, e2 + noise(), 1)
+        vid += 1
+    return rows
+
+
 def test_ivf_compact_refresh_recovers_mass_delete_recall(spark, tmp_path):
     """The IVF_COMPACT_r12.json 'refresh matters' demonstration, pinned:
     on a corpus where a hot cell's mass is tombstoned (its stale
     centroid keeps pointing at vectors that no longer exist), the stale
     probe scores 0/10 and the refreshed probe recovers 10/10 — the
     measured reason the refresh step exists."""
-    import importlib.util
-    import os
+    from pyspark.sql import functions as F
 
-    spec = importlib.util.spec_from_file_location(
-        "ivf_compact_probe",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                     "scripts", "ivf_compact_probe.py"),
+    from data_ingestor_spark.ext.similarity import (
+        ivf_cell_search,
+        ivf_compact,
+        label_centroids,
+        load_vectors,
+        topk_cosine,
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    demo = mod.synthetic_demo(spark, str(tmp_path))
-    assert demo["recall_at_10_stale_bp"] == 0
-    assert demo["recall_at_10_refreshed_bp"] == 10000
+
+    _write_vectors(spark, tmp_path, _mass_delete_rows())
+    e = load_vectors(spark, str(tmp_path))
+    base = e.filter(F.col("vec_id") != 0)
+    tomb = base.filter(F.col("vec_id") >= 900).select("vec_id")
+    qv_raw = e.filter(F.col("vec_id") == 0)
+    qv = qv_raw.select(F.col("embedding").alias("_qe"))
+    survivors, refreshed = ivf_compact(base, tomb)
+    exact10 = {r["vec_id"] for r in topk_cosine(survivors, qv_raw, k=10).collect()}
+    stale = label_centroids(base)
+    got_stale = {r["vec_id"] for r in ivf_cell_search(survivors, stale, qv).collect()}
+    got_refr = {r["vec_id"] for r in ivf_cell_search(survivors, refreshed, qv).collect()}
+    assert len(got_stale & exact10) == 0
+    assert len(got_refr & exact10) == 10
 
 
 def test_ivf_compact_drops_tombstones_physically(spark, tmp_path):

@@ -11,6 +11,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "scripts"))
 
@@ -363,6 +365,176 @@ def test_spark_hash_dump_compare_row_count_alone_mismatches():
     a = {"results": {"k": {"rows": 3, "cols": ["x"], "hash": "h", "err": None}}}
     b = {"results": {"k": {"rows": 4, "cols": ["x"], "hash": "h", "err": None}}}
     assert compare(a, b)["mismatches"] == ["k"]
+
+
+#: (artifact, the baselines its assembler read, its twins -> where the
+#: recorded verdict lives, where the recorded drift list lives)
+_INVARIANCE_ROUNDS = [
+    ("INVARIANCE_r10.json", ["INVARIANCE_r9.json"], {}, ("vs_r9_dump", "drift_keys")),
+    ("INVARIANCE_touched_r11.json", ["INVARIANCE_r10.json"], {}, ("refactored_drift_vs_r10",)),
+    (
+        "INVARIANCE_touched_r12.json",
+        ["INVARIANCE_touched_r11.json", "INVARIANCE_r10.json"],
+        {},
+        ("refactored_drift",),
+    ),
+    (
+        "INVARIANCE_touched_r13.json",
+        ["INVARIANCE_touched_r12.json", "INVARIANCE_r10.json"],
+        {"q_sql_ann_nsw=q_sim_ann_nsw": ("sql_twin_identical",)},
+        ("refactored_drift",),
+    ),
+    (
+        "INVARIANCE_touched_r13b.json",
+        ["INVARIANCE_touched_r11.json"],
+        {
+            "q_sim_ann_ivfpq_pruned=q_sim_ann_ivfpq": ("twin_identical", "ivfpq_pruned==ivfpq"),
+            "q_sql_ann_ivfpq=q_sim_ann_ivfpq": ("twin_identical", "sql_ann_ivfpq==ivfpq"),
+            "q_text_bm25_pruned=q_text_bm25": ("twin_identical", "bm25_pruned==bm25"),
+            "q_stream_bm25_maintain=q_text_bm25": (
+                "twin_identical", "stream_bm25_maintained==bm25",
+            ),
+            "q_sim_ann_ivfpq_compact=q_sim_ann_ivfpq_delete": (
+                "twin_identical", "ivfpq_compact==delete_view",
+            ),
+        },
+        ("refactored_drift",),
+    ),
+]
+
+
+def _dig(doc, path):
+    for k in path:
+        doc = doc[k]
+    return doc
+
+
+@pytest.mark.parametrize(
+    "artifact,baselines,twins,drift_path", _INVARIANCE_ROUNDS, ids=[r[0] for r in _INVARIANCE_ROUNDS]
+)
+def test_hash_dump_compare_reproduces_committed_invariance(
+    tmp_path, artifact, baselines, twins, drift_path
+):
+    """``--compare`` over a committed invariance artifact's own base and
+    odd results, with the baselines and twins its per-round assembler
+    used, gives that artifact's recorded compare block, drift list and
+    twin verdicts."""
+    from spark_hash_dump import main
+
+    art = json.loads((REPO / artifact).read_text())
+    argv = ["--compare"]
+    for side in ("base", "odd"):
+        dump = {"meta": art[f"config_{side}"], "results": art[f"results_{side}"]}
+        (tmp_path / f"{side}.json").write_text(json.dumps(dump))
+        argv.append(str(tmp_path / f"{side}.json"))
+    for b in baselines:
+        argv += ["--baseline", str(REPO / b)]
+    for t in twins:
+        argv += ["--twin", t]
+    argv += ["--json", str(tmp_path / "out.json")]
+
+    assert main(argv) == 0
+    out = json.loads((tmp_path / "out.json").read_text())
+    assert out["compare"] == art["compare"]
+    assert out["drift"] == _dig(art, drift_path) == []
+    assert out["twins"] == {t.replace("=", "=="): _dig(art, p) for t, p in twins.items()}
+    assert out["config_base"] == art["config_base"]
+    assert out["results_odd"] == art["results_odd"]
+
+
+def test_hash_dump_compare_fails_on_drift_and_twin(tmp_path):
+    """Drift is judged against the FIRST baseline that has the key; a
+    key no baseline has is new, not drift; a twin over unequal or
+    missing hashes fails; any of these exits 1."""
+    from spark_hash_dump import main
+
+    mk = lambda h: {"rows": 1, "cols": ["a"], "hash": h, "err": None}  # noqa: E731
+    meta = {"master": "local[2]", "shuffle_partitions": "2"}
+    dump = {"meta": meta, "results": {"q_a": mk("h1"), "q_b": mk("h2"), "q_c": mk("h1")}}
+    paths = {}
+    for name, doc in {
+        "base": dump,
+        "odd": dump,
+        "newer": {"results_base": {"q_a": mk("h1")}},
+        "older": {"results_base": {"q_a": mk("stale"), "q_b": mk("h9")}},
+    }.items():
+        paths[name] = str(tmp_path / f"{name}.json")
+        Path(paths[name]).write_text(json.dumps(doc))
+    argv = ["--compare", paths["base"], paths["odd"], "--json", str(tmp_path / "o.json")]
+    argv += ["--baseline", paths["newer"], "--baseline", paths["older"]]
+
+    assert main(argv + ["--twin", "q_a=q_c"]) == 1
+    out = json.loads((tmp_path / "o.json").read_text())
+    assert out["drift"] == ["q_b"] and out["new_keys"] == ["q_c"]
+    assert out["compare"]["n_match"] == 3
+    assert out["twins"] == {"q_a==q_c": True}
+
+    assert main(argv[:5] + ["--twin", "q_a=q_b", "--twin", "q_a=q_gone"]) == 1
+    out = json.loads((tmp_path / "o.json").read_text())
+    assert out["drift"] == [] and out["twins"] == {"q_a==q_b": False, "q_a==q_gone": False}
+
+
+def _builder_settings(path: Path, func: str) -> dict:
+    """The session builder calls inside ``func`` in ``path``: each
+    ``.config(key, value)``, ``.master(...)`` and ``setLogLevel(...)``,
+    with the value's source text, plus the env defaults it reads."""
+    import ast
+
+    tree = ast.parse(path.read_text())
+    fn = next(n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name == func)
+    got = {}
+    for node in ast.walk(fn):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        name, args = node.func.attr, node.args
+        if name == "config":
+            got[args[0].value] = ast.unparse(args[1])
+        elif name in ("master", "setLogLevel"):
+            got[name] = ast.unparse(args[0])
+        elif name == "get" and ast.unparse(node.func.value) == "os.environ" and len(args) == 2:
+            got[args[0].value] = ast.unparse(args[1])
+    return got
+
+
+def test_harness_session_matches_bench_builder():
+    """Until bench.py builds its session through ``harness``, the two
+    builders must set the same keys to the same values."""
+    bench = _builder_settings(REPO / "bench.py", "main")
+    harness = _builder_settings(REPO / "scripts" / "harness.py", "bench_session")
+    bench.pop("SPARK_GRAFT_SF_DIR")
+    assert bench == harness
+    assert {k for k in harness if k.startswith("spark.")} == {
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+        "spark.sql.session.timeZone",
+        "spark.driver.memory",
+        "spark.ui.enabled",
+    }
+
+
+def test_scripts_compile_and_harness_users_import():
+    """Every script byte-compiles, and every script that uses the
+    shared harness imports, so a dangling import fails here."""
+    import importlib
+    import py_compile
+
+    users = []
+    for path in sorted((REPO / "scripts").glob("*.py")):
+        py_compile.compile(str(path), doraise=True, cfile=None, optimize=-1)
+        if "from harness import" in path.read_text():
+            users.append(path.stem)
+    assert set(users) >= {"ab_bench", "opt_profile", "plan_audit", "scaling_probe"}
+    for name in users:
+        importlib.import_module(name)
+
+
+def test_ab_bench_requires_old_rev():
+    r = subprocess.run(
+        [sys.executable, str(REPO / "scripts" / "ab_bench.py"), "--keys", "q_agg_basic"],
+        capture_output=True, text=True,
+    )
+    assert r.returncode == 2 and "--old-rev" in r.stderr
 
 
 def test_ab_bench_summarize_min_over_reps_and_ratio():
