@@ -674,90 +674,90 @@ def q_text_bm25_pruned(spark, sf_dir):
     return res.orderBy(F.col("score_micro").desc(), "doc_id").limit(20)
 
 
-def merge_bm25_batch(spark, index_root: str, batch_df, batch_id: int, allowed_lag: int = 1):
-    """Replay-idempotent BM25 index maintenance — the foreachBatch body
-    of q_stream_bm25_maintain (module-level so the idempotence contract
-    is directly testable, the merge_hourly_batch discipline):
+def maintain_bm25_index(spark, in_dir: str, index_root: str):
+    """Drain the documents parquet files under ``in_dir`` (one file per
+    micro-batch) into the bucketed BM25 index under ``index_root`` and
+    return the two finished queries. Each has its own checkpoint under
+    ``index_root``, which makes it exactly-once on its own:
 
     - POSTINGS are a new SEGMENT per micro-batch: the batch's
       (doc_id, dl, term, tf, bucket) rows overwrite the deterministic
       directory ``postings/b=<batch_id>`` partitioned by term bucket —
       a Lucene segment flush; a replayed batch rewrites the same bytes,
       so the append is idempotent without any read-modify-write.
-    - The TERM DICTIONARY + corpus stats merge into ONE versioned
-      snapshot (sinks.publish_versioned): rows (kind='df', term, c1=df)
-      and (kind='stats', c1=n_docs, c2=sum_dl), with the max applied
-      batch id riding IN the snapshot rows — atomic with the data, so
-      a crash between segment write and dictionary publish replays
-      into a no-op dictionary merge over the rewritten-identical
-      segment. A batch id further behind than ``allowed_lag`` means a
-      reset checkpoint against live state and raises (the
-      merge_hourly_batch reset guard, judge r4 #5).
-
-    Returns False on a skipped replay, True when applied. Ordering:
-    segment first, dictionary last — the dictionary's applied_bid is
-    the commit point."""
+    - The TERM DICTIONARY + corpus stats are one streaming aggregate
+      whose state lives in the query checkpoint's state store: every
+      document contributes (kind='df', term, 1, 0) per distinct term
+      and (kind='stats', NULL, 1, dl), summed per (kind, term) into
+      df and (N, sum_dl). After each batch the complete state is
+      published to ``dict`` with :func:`sinks.publish_parquet_atomic`;
+      a replayed batch recomputes the same state version from the
+      previous one, and resetting the checkpoint resets the state with
+      it."""
     import os
 
-    from data_ingestor_spark.sinks import publish_versioned, read_latest
+    from data_ingestor_spark.sinks import publish_parquet_atomic
+    from data_ingestor_spark.streaming import write_stream_batches
 
-    dict_dir = os.path.join(index_root, "dict")
-    if os.path.exists(os.path.join(dict_dir, "_LATEST")):
-        prev = read_latest(spark, dict_dir)
-        applied = prev.agg(F.max("applied_bid")).collect()[0][0]
-        if applied is not None and batch_id < applied - allowed_lag:
-            raise ValueError(
-                f"merge_bm25_batch: batch_id {batch_id} is more than "
-                f"allowed_lag={allowed_lag} behind applied_bid {applied} — "
-                "reset/retargeted streaming checkpoint against an existing "
-                "index; point the query at a fresh index_root or restore "
-                "the matching checkpoint."
+    docs = _tokenize_docs(
+        spark.readStream.schema(spark.read.parquet(in_dir).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+
+    def flush_segment(batch_df, batch_id):
+        (
+            batch_df.select("doc_id", "dl", F.explode("toks").alias("term"))
+            .groupBy("doc_id", "dl", "term")
+            .agg(F.count("*").cast("double").alias("tf"))
+            .withColumn(
+                "bucket",
+                F.expr(
+                    "pmod(cast(conv(substring(md5(term), 1, 8), 16, 10) as bigint),"
+                    f" {_BM25_BUCKETS})"
+                ),
             )
-        if applied is not None and applied >= batch_id:
-            return False
-    else:
-        prev = None
-    docs = _tokenize_docs(batch_df)
-    seg = (
-        docs.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-        .withColumn(
-            "bucket",
-            F.expr(
-                "pmod(cast(conv(substring(md5(term), 1, 8), 16, 10) as bigint),"
-                f" {_BM25_BUCKETS})"
-            ),
+            .write.mode("overwrite")
+            .partitionBy("bucket")
+            .parquet(os.path.join(index_root, "postings", f"b={batch_id}"))
         )
+
+    terms = docs.select(
+        F.lit("df").alias("kind"),
+        F.explode(F.array_distinct("toks")).alias("term"),
+        F.lit(1.0).alias("c1"),
+        F.lit(0.0).alias("c2"),
     )
-    seg.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(index_root, "postings", f"b={batch_id}")
-    )
-    partial_df = (
-        seg.groupBy("term")
-        .agg(F.count("*").cast("double").alias("c1"))
-        .select("term", F.lit("df").alias("kind"), "c1", F.lit(0.0).alias("c2"))
-    )
-    partial_stats = docs.agg(
-        F.count("*").cast("double").alias("c1"), F.sum("dl").alias("c2")
-    ).select(
-        F.lit(None).cast("string").alias("term"),
+    stats = docs.select(
         F.lit("stats").alias("kind"),
-        "c1",
-        F.coalesce(F.col("c2"), F.lit(0.0)).alias("c2"),
+        F.lit(None).cast("string").alias("term"),
+        F.lit(1.0).alias("c1"),
+        F.col("dl").alias("c2"),
     )
-    partial = partial_df.unionByName(partial_stats)
-    if prev is not None:
-        merged = (
-            prev.drop("applied_bid")
-            .unionByName(partial)
-            .groupBy("kind", "term")
-            .agg(F.sum("c1").alias("c1"), F.sum("c2").alias("c2"))
-        )
-    else:
-        merged = partial
-    publish_versioned(merged.withColumn("applied_bid", F.lit(batch_id)), dict_dir)
-    return True
+    dictionary = (
+        terms.unionByName(stats)
+        .groupBy("kind", "term")
+        .agg(F.sum("c1").alias("c1"), F.sum("c2").alias("c2"))
+    )
+    queries = [
+        write_stream_batches(
+            docs, os.path.join(index_root, "_checkpoint_postings"), flush_segment
+        ),
+        write_stream_batches(
+            dictionary,
+            os.path.join(index_root, "_checkpoint_dict"),
+            lambda batch, _: publish_parquet_atomic(batch, os.path.join(index_root, "dict")),
+            output_mode="complete",
+        ),
+    ]
+    try:
+        for q in queries:
+            if not q.awaitTermination(300):
+                raise TimeoutError("maintain_bm25_index: stream did not finish in 300s")
+    finally:
+        for q in queries:
+            q.stop()
+    return queries
 
 
 @query(
@@ -774,95 +774,59 @@ def q_stream_bm25_maintain(spark, sf_dir):
     ingest maintains the bucketed BM25 index, and the query is served
     through the partition-pruned path — composing three disciplines
     the registry proves separately (q_stream_rollup_maintain's
-    foreachBatch continuous maintenance, q_text_bm25_incremental's
+    checkpointed continuous maintenance, q_text_bm25_incremental's
     index ADD identity, q_text_bm25_pruned's serving layout):
 
     - the documents table arrives as 4 micro-batches (file source,
       maxFilesPerTrigger=1 over a one-time split);
-    - each batch flushes a postings SEGMENT (partitioned by term
-      bucket) and merges df/N/sum_dl into the versioned term
-      dictionary via merge_bm25_batch (replay-idempotent: segment
-      dirs are deterministic per batch id, the dictionary's
-      applied_bid is the commit point);
+    - :func:`maintain_bm25_index` flushes a postings SEGMENT per batch
+      (partitioned by term bucket, deterministic per batch id) and
+      keeps df/N/sum_dl as a streaming aggregate in its checkpoint's
+      state store, publishing the term dictionary after every batch;
     - the final query reads ONLY the query terms' buckets across all
       segments (``PartitionFilters: [bucket IN ...]`` — segment count
       grows with ingest, probed fraction does not) plus the KB-sized
-      dictionary snapshot.
+      dictionary.
 
     The oracle computes BM25 DIRECTLY from the raw documents table, so
     a PASS proves arrival order + per-batch segment flush + dictionary
-    merge + pruned serve ≡ one-shot batch build — mergeability holding
-    because df and (N, sum_dl) are pure sums over disjoint doc sets
-    and dl sums are exact whole-number doubles below 2^53. At 100 TB:
-    each micro-batch shuffles only itself; the dictionary stays at
-    vocabulary cardinality; a background q_text_bm25_compact-style
-    segment merge bounds file counts."""
+    state update + pruned serve ≡ one-shot batch build — mergeability
+    holding because df and (N, sum_dl) are pure sums over disjoint doc
+    sets and dl sums are exact whole-number doubles below 2^53. At
+    100 TB: each micro-batch shuffles only itself; the dictionary
+    stays at vocabulary cardinality; a background
+    q_text_bm25_compact-style segment merge bounds file counts."""
     import os
     import uuid
 
-    from data_ingestor_spark.plans.registry import scratch_dir
-    from data_ingestor_spark.sinks import latest_version
+    from data_ingestor_spark.plans.registry import scratch_dir, source_split
 
-    base = os.path.basename(sf_dir.rstrip(chr(47)))
-    split_root = scratch_dir(f"q_stream_bm25_src_{base}")
-    in_dir = os.path.join(split_root, "split")
-    # marker = source path + size/mtime fingerprint, so a regenerated
-    # documents parquet at the same path rebuilds the split instead of
-    # silently reusing stale batches (the q_stream_late_drop marker
-    # discipline, ADVICE r12 #4)
-    marker = os.path.join(split_root, "_SPLIT_DONE")
-    doc_path = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    fp_parts = []
-    if os.path.isdir(doc_path):
-        for root, _dirs, files in os.walk(doc_path):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                fp_parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(doc_path):
-        st = os.stat(doc_path)
-        fp_parts.append(f"{os.path.basename(doc_path)}:{st.st_size}:{st.st_mtime_ns}")
-    src_tag = doc_path + "|" + ";".join(fp_parts)
-    if not (os.path.exists(marker) and open(marker).read() == src_tag):
-        spark.read.parquet(doc_path).repartition(4).write.mode("overwrite").parquet(
-            in_dir
-        )
-        with open(marker, "w") as fh:
-            fh.write(src_tag)
-    split_schema = spark.read.parquet(in_dir).schema
-
+    in_dir = source_split(
+        sf_dir,
+        "documents",
+        "q_stream_bm25_src",
+        lambda split: spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .repartition(4)
+        .write.parquet(split),
+    )
     index_root = os.path.join(
-        scratch_dir(f"q_stream_bm25_idx_{base}"), uuid.uuid4().hex[:8]
+        scratch_dir(f"q_stream_bm25_idx_{os.path.basename(sf_dir.rstrip(chr(47)))}"),
+        uuid.uuid4().hex[:8],
     )
-
-    def merge(batch_df, batch_id):
-        merge_bm25_batch(spark, index_root, batch_df, batch_id)
-
-    q = (
-        spark.readStream.schema(split_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-        .writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("q_stream_bm25_maintain: stream did not finish in 300s")
-    assert latest_version(os.path.join(index_root, "dict")) >= 1, (
-        "expected multiple incremental merges"
-    )
+    for q in maintain_bm25_index(spark, in_dir, index_root):
+        assert len({p["batchId"] for p in q.recentProgress}) >= 2, (
+            "expected multiple incremental merges"
+        )
     return bm25_query_maintained(spark, index_root)
 
 
 def bm25_query_maintained(spark, index_root: str, terms=None) -> DataFrame:
-    """Serve BM25 from a merge_bm25_batch-maintained index: pruned
-    postings scan (query-term buckets only, across all segments) +
-    the latest dictionary snapshot. Shared by q_stream_bm25_maintain
-    and the replay/reset property tests."""
+    """Serve BM25 from a :func:`maintain_bm25_index`-maintained index:
+    pruned postings scan (query-term buckets only, across all
+    segments) + the published term dictionary. Shared by
+    q_stream_bm25_maintain and the exactly-once tests."""
     import hashlib
     import os
-
-    from data_ingestor_spark.sinks import read_latest
 
     terms = tuple(terms or _BM25_TERMS)
     qbuckets = sorted(
@@ -878,7 +842,7 @@ def bm25_query_maintained(spark, index_root: str, terms=None) -> DataFrame:
         .filter(F.col("bucket").isin(qbuckets))
         .filter(F.col("term").isin(*terms))
     )
-    dic = read_latest(spark, os.path.join(index_root, "dict"))
+    dic = spark.read.parquet(os.path.join(index_root, "dict"))
     df_ = dic.filter(F.col("kind") == "df").select(
         "term", F.col("c1").cast("long").alias("df")
     ).filter(F.col("term").isin(*terms))

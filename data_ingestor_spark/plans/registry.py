@@ -143,6 +143,43 @@ def scratch_dir(*parts: str) -> str:
     return base
 
 
+def source_split(sf_dir: str, table: str, name: str, build: Callable[[str], None]) -> str:
+    """Scratch copy of ``table`` re-laid out for a streaming key, built
+    once per source state: returns the split directory, calling
+    ``build(split_dir)`` to (re)write it first whenever the marker does
+    not match.
+
+    The marker is the source's absolute path plus the name, size and
+    mtime of every file under ``<sf_dir>/<table>.parquet``, so neither a
+    second sf dir with the same basename nor a regenerated parquet at
+    the same path reuses a stale split. The marker is removed before a
+    rebuild and written after it, so a build that fails part-way is
+    never taken for a finished one.
+    """
+    import os
+    import shutil
+
+    src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
+    if os.path.isdir(src):
+        files = sorted(os.path.join(r, f) for r, _, fs in os.walk(src) for f in fs)
+    else:
+        files = [src] if os.path.exists(src) else []
+    stats = [(os.path.relpath(p, os.path.dirname(src)), os.stat(p)) for p in files]
+    tag = src + "|" + ";".join(f"{p}:{st.st_size}:{st.st_mtime_ns}" for p, st in stats)
+    root = scratch_dir(f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
+    split, marker = os.path.join(root, "split"), os.path.join(root, "_SPLIT_DONE")
+    if os.path.exists(marker):
+        with open(marker) as fh:
+            if fh.read() == tag:
+                return split
+        os.remove(marker)
+    shutil.rmtree(split, ignore_errors=True)
+    build(split)
+    with open(marker, "w") as fh:
+        fh.write(tag)
+    return split
+
+
 _SCRATCH_CLEANUP_REGISTERED = False
 
 

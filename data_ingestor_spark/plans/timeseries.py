@@ -19,6 +19,7 @@ from data_ingestor_spark.plans.registry import (
     normalize_event_ts,
     query,
     scratch_dir,
+    source_split,
 )
 
 
@@ -675,50 +676,30 @@ def q_stream_late_drop(spark, sf_dir):
     import time as _time
     import uuid
 
-    base = os.path.basename(sf_dir.rstrip(chr(47)))
-    split_root = scratch_dir(f"q_stream_late_src_{base}")
-    in_dir = os.path.join(split_root, "in")
-    marker = os.path.join(split_root, "_SPLIT_DONE")
-    # the marker records the source dir PLUS a cheap content
-    # fingerprint (file sizes + mtimes of the events parquet), so both
-    # a different dataset under the same basename AND a regenerated
-    # parquet at the SAME path rebuild the split instead of silently
-    # reusing stale batches (ADVICE r12 #4)
-    ev_path = os.path.join(os.path.abspath(sf_dir), "events.parquet")
-    fp_parts = []
-    if os.path.isdir(ev_path):
-        for root, _dirs, files in os.walk(ev_path):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                fp_parts.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(ev_path):
-        st = os.stat(ev_path)
-        fp_parts.append(f"{os.path.basename(ev_path)}:{st.st_size}:{st.st_mtime_ns}")
-    src_tag = os.path.abspath(sf_dir) + "|" + ";".join(fp_parts)
-    # one-time deterministic 3-way split (event_id % 3), one FILE per
-    # batch so maxFilesPerTrigger=1 makes batch composition exact
-    if not (os.path.exists(marker) and open(marker).read() == src_tag):
+    def build(split):
+        # deterministic 3-way split (event_id % 3), one FILE per batch
+        # so maxFilesPerTrigger=1 makes batch composition exact
         ev = normalize_event_ts(load_table(spark, sf_dir, "events")).select(
             "event_id", "event_type", "ts"
         )
-        shutil.rmtree(in_dir, ignore_errors=True)
-        os.makedirs(in_dir)
+        os.makedirs(split)
+        parts = split + "_parts"
         now = _time.time()
         for b in range(3):
-            part_dir = os.path.join(split_root, f"part{b}")
+            part_dir = os.path.join(parts, f"part{b}")
             ev.filter(F.col("event_id") % 3 == b).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(part_dir)
             part = [f for f in os.listdir(part_dir) if f.startswith("part-")][0]
-            dst = os.path.join(in_dir, f"b{b}.parquet")
+            dst = os.path.join(split, f"b{b}.parquet")
             shutil.copyfile(os.path.join(part_dir, part), dst)
             # mtime encodes arrival order; keep within the source's
             # maxFileAge horizon (fresh timestamps, 10s apart)
             mt = now - 30 + 10 * b
             os.utime(dst, (mt, mt))
-        with open(marker, "w") as fh:
-            fh.write(src_tag)
+        shutil.rmtree(parts)
 
+    in_dir = source_split(sf_dir, "events", "q_stream_late_src", build)
     schema = spark.read.parquet(in_dir).schema
     s = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(in_dir)
     agg = (
@@ -1324,6 +1305,13 @@ def rollup_cascade(e, key_col: str, ts_col: str, value_col: str):
         F.min(cents).alias("mn"),
         F.max(cents).alias("mx"),
     )
+    return cascade_hourly(hourly, key_col)
+
+
+def cascade_hourly(hourly, key_col: str):
+    """Hourly partials (key, h, n, s, mn, mx) → daily → weekly, with
+    the read-time mean: the merge hops of :func:`rollup_cascade`, also
+    applied to the streamed hourly state of q_stream_rollup_maintain."""
     daily = hourly.groupBy(
         key_col, F.date_trunc("day", "h").alias("d")
     ).agg(
@@ -1369,84 +1357,44 @@ def q_stream_rollup_maintain(spark, sf_dir):
     """Streaming continuous-aggregate maintenance — the INCREMENTAL
     twin of q_agg_rollup_cascade, executed by Structured Streaming:
     the events table arrives as multiple micro-batches (file source,
-    maxFilesPerTrigger=1 over a 4-way split), and foreachBatch merges
-    each batch's HOURLY partial aggregate into a versioned snapshot
-    table (sinks.publish_versioned — the atomic _LATEST-pointer
-    publish, so a reader never sees a partial state). The returned
-    result rolls the final hourly state up to weekly; the oracle
-    computes weekly DIRECTLY from raw events, so a PASS proves
-    batch-arrival order + per-batch merge + cascade re-aggregation ≡
-    one-shot recompute — the full contract of a production continuous
-    aggregate (TimescaleDB/Materialize shape) on a lake. The merge is
-    order-independent BECAUSE every carried statistic is mergeable
-    (COUNT/SUM/MIN/MAX; mean derived at read time), which is exactly
-    why the availableNow file order doesn't matter. At 100 TB: each
-    micro-batch shuffles only its own delta; the state table stays at
-    hourly-grain cardinality; vacuum_versions bounds snapshot
-    history."""
+    maxFilesPerTrigger=1 over a 4-way split) and
+    :func:`maintain_hourly_rollup` keeps the HOURLY aggregate in the
+    query's state store, republishing it after every batch. The
+    returned result rolls the final hourly state up to weekly; the
+    oracle computes weekly DIRECTLY from raw events, so a PASS proves
+    batch-arrival order + per-batch state update + cascade
+    re-aggregation ≡ one-shot recompute — the full contract of a
+    production continuous aggregate (TimescaleDB/Materialize shape) on
+    a lake. The update is order-independent BECAUSE every carried
+    statistic is mergeable (COUNT/SUM/MIN/MAX; mean derived at read
+    time), which is exactly why the availableNow file order doesn't
+    matter. At 100 TB: each micro-batch shuffles only its own delta
+    into a state store at hourly-grain cardinality."""
     import os
     import uuid
-
-    from data_ingestor_spark.sinks import latest_version, publish_versioned, read_latest
 
     prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        src = f"{sf_dir}/events.parquet"
-        base = os.path.basename(sf_dir.rstrip(chr(47)))
-        # one-time 4-way split of the source so availableNow delivers
-        # multiple micro-batches (a single file would be one batch)
-        in_dir = os.path.join(scratch_dir(f"q_stream_rollup_src_{base}"), "split")
-        if not os.path.exists(os.path.join(in_dir, "_SUCCESS")):
-            spark.read.parquet(src).repartition(4).write.mode("overwrite").parquet(in_dir)
-        split_schema = spark.read.parquet(in_dir).schema
-
-        state_dir = os.path.join(
-            scratch_dir(f"q_stream_rollup_state_{base}"), uuid.uuid4().hex[:8]
+        # 4-way split of the source so availableNow delivers multiple
+        # micro-batches (a single file would be one batch)
+        in_dir = source_split(
+            sf_dir,
+            "events",
+            "q_stream_rollup_src",
+            lambda split: spark.read.parquet(f"{sf_dir}/events.parquet")
+            .repartition(4)
+            .write.parquet(split),
         )
-        cents = F.expr("try_cast(round(value * 100) as bigint)")
-
-        def merge_batch(batch_df, batch_id):
-            merge_hourly_batch(spark, state_dir, batch_df, batch_id)
-
-        q = (
-            spark.readStream.schema(split_schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(in_dir)
-            .writeStream.foreachBatch(merge_batch)
-            .trigger(availableNow=True)
-            .start()
+        root = os.path.join(
+            scratch_dir(f"q_stream_rollup_state_{os.path.basename(sf_dir.rstrip(chr(47)))}"),
+            uuid.uuid4().hex[:8],
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q_stream_rollup_maintain: stream did not finish in 300s")
-        assert latest_version(state_dir) >= 1, "expected multiple incremental merges"
-        hourly = read_latest(spark, state_dir).drop("applied_bid")
-        daily = hourly.groupBy(
-            "event_type", F.date_trunc("day", "h").alias("d")
-        ).agg(
-            F.sum("n").alias("n"),
-            F.sum("s").alias("s"),
-            F.min("mn").alias("mn"),
-            F.max("mx").alias("mx"),
+        q = maintain_hourly_rollup(spark, in_dir, root)
+        assert len({p["batchId"] for p in q.recentProgress}) >= 2, (
+            "expected multiple incremental merges"
         )
-        weekly = daily.groupBy(
-            "event_type", F.date_trunc("week", "d").alias("w")
-        ).agg(
-            F.sum("n").alias("n"),
-            F.sum("s").alias("s"),
-            F.min("mn").alias("mn"),
-            F.max("mx").alias("mx"),
-        )
-        return weekly.select(
-            "event_type",
-            "w",
-            F.col("n").cast("bigint").alias("n"),
-            F.col("s").cast("bigint").alias("total_cents"),
-            F.expr("s div n").cast("bigint").alias("mean_cents"),
-            F.col("mn").cast("bigint").alias("min_cents"),
-            F.col("mx").cast("bigint").alias("max_cents"),
-        )
+        return cascade_hourly(spark.read.parquet(f"{root}/hourly"), "event_type")
     finally:
         if prior_nanos is None:
             spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
@@ -1454,72 +1402,49 @@ def q_stream_rollup_maintain(spark, sf_dir):
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior_nanos)
 
 
-def merge_hourly_batch(spark, state_dir, batch_df, batch_id, allowed_lag=1):
-    """Replay-idempotent continuous-aggregate merge (the foreachBatch
-    body of q_stream_rollup_maintain, module-level so the idempotence
-    contract is directly testable): merge one micro-batch's hourly
-    partial into the versioned snapshot table, exactly once under
-    foreachBatch's at-least-once contract. The max applied batch id
-    rides IN the snapshot rows — atomic with the data the way a Delta
-    txn record is — so a replayed batch (crash after publish, before
-    the streaming checkpoint committed) sees applied_bid >= its id and
-    becomes a no-op instead of double-counting. The applied-id read is
-    one scalar off the tiny state table; batch ids are monotonic under
-    Structured Streaming's sequential micro-batch execution, so a
-    legitimate replay lags the applied id by at most ``allowed_lag``
-    (the crashed-after-publish batch itself). A batch id further behind
-    than that means the streaming CHECKPOINT was reset against a live
-    state table — ids restart at 0, every restarted batch would be
-    silently skipped as "already applied", and the stream would appear
-    healthy while writing nothing — so that case raises instead of
-    no-opping (judge r4 directive #5; pytest-pinned reset scenario)."""
-    import os
+def maintain_hourly_rollup(spark, in_dir, root):
+    """Drain the events parquet files under ``in_dir`` (one file per
+    micro-batch) into the hourly continuous aggregate
+    ``<root>/hourly`` — COUNT/SUM/MIN/MAX of the value in cents per
+    (event_type, hour) — and return the finished query.
 
-    from data_ingestor_spark.sinks import publish_versioned, read_latest
+    The aggregate's state lives in the state store of the query
+    checkpoint ``<root>/_checkpoint``; after each batch the complete
+    state is published with :func:`sinks.publish_parquet_atomic`, so a
+    reader never sees a partial aggregate. Exactly-once comes from the
+    checkpoint: a batch replayed after a crash (sink ran, commit log
+    not yet written) recomputes the same state version from the
+    previous one and republishes identical rows, and a restart over a
+    finished checkpoint runs no batch at all. Resetting the checkpoint
+    resets the state with it, so the state can never run ahead of the
+    batch ids."""
+    from data_ingestor_spark.sinks import publish_parquet_atomic
+    from data_ingestor_spark.streaming import write_stream_batches
 
     cents = F.expr("try_cast(round(value * 100) as bigint)")
-    if os.path.exists(os.path.join(state_dir, "_LATEST")):
-        prev = read_latest(spark, state_dir)
-        applied = prev.agg(F.max("applied_bid")).collect()[0][0]
-        if applied is not None and batch_id < applied - allowed_lag:
-            raise ValueError(
-                f"merge_hourly_batch: batch_id {batch_id} is more than "
-                f"allowed_lag={allowed_lag} behind applied_bid {applied} — "
-                "this indicates a reset/retargeted streaming checkpoint "
-                "against an existing state table; every batch would be "
-                "silently skipped as a replay. Point the query at a fresh "
-                "state_dir or restore the matching checkpoint."
-            )
-        if applied is not None and applied >= batch_id:
-            return False
-    else:
-        prev = None
-    b = normalize_event_ts(batch_df)
-    partial = b.groupBy("event_type", F.date_trunc("hour", "ts").alias("h")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(cents).alias("s"),
-        F.min(cents).alias("mn"),
-        F.max(cents).alias("mx"),
-    )
-    if prev is not None:
-        merged = (
-            prev.drop("applied_bid")
-            .unionByName(partial)
-            .groupBy("event_type", "h")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("s").alias("s"),
-                F.min("mn").alias("mn"),
-                F.max("mx").alias("mx"),
-            )
+    hourly = (
+        spark.readStream.schema(spark.read.parquet(in_dir).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+        .transform(normalize_event_ts)
+        .groupBy("event_type", F.date_trunc("hour", "ts").alias("h"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(cents).alias("s"),
+            F.min(cents).alias("mn"),
+            F.max(cents).alias("mx"),
         )
-    else:
-        merged = partial
-    publish_versioned(
-        merged.withColumn("applied_bid", F.lit(int(batch_id)).cast("bigint")),
-        state_dir,
     )
-    return True
+    q = write_stream_batches(
+        hourly,
+        f"{root}/_checkpoint",
+        lambda batch, _: publish_parquet_atomic(batch, f"{root}/hourly"),
+        output_mode="complete",
+    )
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError("maintain_hourly_rollup: stream did not finish in 300s")
+    return q
 
 
 @query(

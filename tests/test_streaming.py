@@ -1,5 +1,6 @@
 """Structured-Streaming parity tests (reference O14/O19 + SURVEY §2.2 streaming rows)."""
 
+import glob
 import os
 import shutil
 
@@ -457,21 +458,10 @@ def test_idempotent_batch_publish_scheme_qualified_uri(spark, tmp_path):
 
 
 def test_stream_rollup_maintain_incremental_and_equal_to_batch(spark):
-    """q_stream_rollup_maintain must (a) actually run MULTIPLE
-    incremental merges (>= 2 snapshot versions — 4 split files at one
-    file per trigger), and (b) produce exactly the batch cascade's
-    weekly result."""
-    import glob
-    import os
-    import tempfile
-
-    from conftest import SF_DIR
-
+    """q_stream_rollup_maintain produces exactly the batch cascade's
+    weekly result (the key itself asserts that its query ran >= 2
+    micro-batches — 4 split files at one file per trigger)."""
     from data_ingestor_spark.plans import queries as q
-
-    scratch_root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_{os.getuid()}_{os.getpid()}"
-    )
 
     streamed = {
         (r["event_type"], r["w"]): (
@@ -486,70 +476,87 @@ def test_stream_rollup_maintain_incremental_and_equal_to_batch(spark):
         for r in q.REGISTRY["q_agg_rollup_cascade"].fn(spark, SF_DIR).collect()
     }
     assert streamed == batch
-    # at least one state table recorded >= 2 versions (incremental, not one-shot)
-    pointers = glob.glob(
-        os.path.join(scratch_root, "**", "_LATEST"), recursive=True
-    )
-    assert any(int(open(p).read().strip()) >= 1 for p in pointers)
 
 
-def test_merge_hourly_batch_replay_idempotent(spark, tmp_path):
-    """The continuous-aggregate merge must be a no-op when a batch id
-    replays (foreachBatch at-least-once → exactly-once), and must
-    apply distinct batch ids exactly once each."""
-    from data_ingestor_spark.plans.timeseries import merge_hourly_batch
-    from data_ingestor_spark.sinks import latest_version, read_latest
+def test_stream_rollup_split_follows_the_source(spark, tmp_path):
+    """Two sf dirs with the same basename, run in one process: each run
+    streams its own events, not a split left behind by the other."""
+    from data_ingestor_spark.plans import queries as q
+    from data_ingestor_spark.plans.registry import load_table
 
-    state = str(tmp_path / "state")
-    from datetime import datetime
+    events = load_table(spark, SF_DIR, "events")
+    results = []
+    for parity in (0, 1):
+        sf = str(tmp_path / f"copy{parity}" / "sf")
+        events.filter(events.event_id % 2 == parity).write.parquet(f"{sf}/events.parquet")
+        streamed = q.REGISTRY["q_stream_rollup_maintain"].fn(spark, sf).collect()
+        assert sorted(streamed) == sorted(q.REGISTRY["q_agg_rollup_cascade"].fn(spark, sf).collect())
+        results.append(sorted(streamed))
+    assert results[0] != results[1]
 
-    mk = lambda rows: spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-    )
-    b0 = mk([(1, datetime(2024, 1, 1, 10, 5), 1, "click", 1.0, "{}"),
-             (2, datetime(2024, 1, 1, 10, 35), 1, "click", 3.0, "{}")])
-    b1 = mk([(3, datetime(2024, 1, 1, 10, 45), 2, "click", 5.0, "{}")])
 
-    assert merge_hourly_batch(spark, state, b0, 0) is True
-    v_after_b0 = latest_version(state)
-    # replay of batch 0 (crash before checkpoint commit): must be a no-op
-    assert merge_hourly_batch(spark, state, b0, 0) is False
-    assert latest_version(state) == v_after_b0
-    # next batch applies
-    assert merge_hourly_batch(spark, state, b1, 1) is True
-    rows = {r["event_type"]: (r["n"], r["s"]) for r in read_latest(spark, state).collect()}
-    assert rows == {"click": (3, 900)}  # 100 + 300 + 500 cents, counted once each
-    # replay of batch 1 after more state: still a no-op
-    assert merge_hourly_batch(spark, state, b1, 1) is False
-    assert {r["n"] for r in read_latest(spark, state).collect()} == {3}
+def _maintain_cases():
+    from data_ingestor_spark.ext.text import bm25_query_maintained, maintain_bm25_index
+    from data_ingestor_spark.plans import queries as q
+    from data_ingestor_spark.plans.timeseries import cascade_hourly, maintain_hourly_rollup
 
-def test_merge_hourly_batch_checkpoint_reset_fails_loudly(spark, tmp_path):
-    """A reset streaming checkpoint restarts batch ids at 0; against an
-    existing state table every restarted batch would look like an
-    already-applied replay and be silently skipped forever. The merge
-    must raise for batch ids further behind applied_bid than the
-    allowed replay lag, and still accept legitimate lag-1 replays."""
-    import pytest as _pytest
+    return {
+        "rollup": (
+            "events",
+            lambda *a: [maintain_hourly_rollup(*a)],
+            lambda spark, root: cascade_hourly(spark.read.parquet(f"{root}/hourly"), "event_type"),
+            q.REGISTRY["q_agg_rollup_cascade"].fn,
+        ),
+        "bm25": (
+            "documents",
+            maintain_bm25_index,
+            bm25_query_maintained,
+            q.REGISTRY["q_text_bm25"].fn,
+        ),
+    }
 
-    from data_ingestor_spark.plans.timeseries import merge_hourly_batch
 
-    state = str(tmp_path / "state")
-    from datetime import datetime
+@pytest.mark.parametrize("case", ["rollup", "bm25"])
+def test_maintain_is_exactly_once_over_its_checkpoint(spark, tmp_path, case):
+    """The two checkpointed incremental states: (a) the maintained
+    result equals the batch twin; (b) a restart over the finished
+    checkpoint runs no input and leaves the output unchanged; (c) with
+    the last commit-log entry deleted (a crash after the sink ran,
+    before the commit), a restart replays exactly that batch and the
+    output is unchanged. (c) first asserts that the commit file is
+    where Structured Streaming keeps it, so a Spark that moves the
+    commit log fails here instead of passing vacuously."""
+    from data_ingestor_spark.plans.registry import load_table
 
-    mk = lambda rows: spark.createDataFrame(
-        rows, "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-    )
-    b = mk([(1, datetime(2024, 1, 1, 10, 5), 1, "click", 1.0, "{}")])
-    for bid in (0, 1, 2, 3, 4):
-        assert merge_hourly_batch(spark, state, b, bid) is True
-    # lag-1 replay (crash after publish of batch 4, checkpoint at 3): no-op
-    assert merge_hourly_batch(spark, state, b, 3) is False
-    assert merge_hourly_batch(spark, state, b, 4) is False
-    # checkpoint reset: ids restart at 0 against applied_bid=4 — loud failure
-    with _pytest.raises(ValueError, match="reset"):
-        merge_hourly_batch(spark, state, b, 0)
-    # wider allowed_lag tolerates deeper replays when explicitly configured
-    assert merge_hourly_batch(spark, state, b, 0, allowed_lag=4) is False
+    table, maintain, serve, twin = _maintain_cases()[case]
+    in_dir, root = str(tmp_path / "in"), str(tmp_path / "state")
+    load_table(spark, SF_DIR, table).repartition(4).write.parquet(in_dir)
+
+    def rows():
+        return sorted(map(tuple, serve(spark, root).collect()))
+
+    queries = maintain(spark, in_dir, root)
+    assert all(len({p["batchId"] for p in q.recentProgress}) == 4 for q in queries)
+    first = rows()
+    assert first == sorted(map(tuple, twin(spark, SF_DIR).collect())) and first  # (a)
+
+    queries = maintain(spark, in_dir, root)  # (b)
+    assert sum(p["numInputRows"] for q in queries for p in q.recentProgress) == 0
+    assert rows() == first
+
+    # (c): the last batch (id 3) crashed after its sink ran
+    commits = sorted(glob.glob(os.path.join(root, "_checkpoint*", "commits", "3")))
+    assert len(commits) == len(queries), commits
+    for commit in commits:
+        os.remove(commit)
+        crc = os.path.join(os.path.dirname(commit), ".3.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+    queries = maintain(spark, in_dir, root)
+    assert [{p["batchId"] for p in q.recentProgress if p["numInputRows"]} for q in queries] == [
+        {3}
+    ] * len(queries)
+    assert rows() == first
 
 
 def test_stream_json_quarantines_malformed_documents(spark, tmp_path):
