@@ -1,113 +1,124 @@
 """Property tests for the streaming-maintained BM25 index
-(ext/text.py merge_bm25_batch / q_stream_bm25_maintain): the
-replay-idempotence and reset-guard contracts of merge_hourly_batch
-applied to the text index, plus maintained-serve == one-shot batch
-build equality."""
+(ext/text.py maintain_bm25_index / q_stream_bm25_maintain): the
+maintained index serves exactly the one-shot batch build, and the
+checkpoint makes a replayed micro-batch — of the dictionary aggregate
+or of a postings segment — land where the clean run did."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
-
 from tests.conftest import SF_DIR
 
 
-def _split_docs(spark, n):
+def _split_docs(spark, in_dir, n):
+    """Write the documents table as ``n`` parquet files: with
+    ``maxFilesPerTrigger=1`` each becomes one micro-batch."""
     from data_ingestor_spark.plans.registry import load_table
 
     d = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    return [d.filter(d.doc_id % n == i) for i in range(n)]
+    for i in range(n):
+        d.filter(d.doc_id % n == i).coalesce(1).write.mode("append").parquet(in_dir)
 
 
-def _apply_all(spark, root, batches):
-    from data_ingestor_spark.ext.text import merge_bm25_batch
+def _maintain(spark, in_dir, root, n):
+    from data_ingestor_spark.ext.text import maintain_bm25_index
 
-    for i, b in enumerate(batches):
-        assert merge_bm25_batch(spark, root, b, i) is True
+    queries = maintain_bm25_index(spark, in_dir, root)
+    for q in queries:
+        assert {p["batchId"] for p in q.recentProgress if p["numInputRows"]} == set(range(n))
+    return queries
+
+
+def _drop_commit(root, checkpoint, batch_id):
+    """Delete ``commits/<batch_id>`` of one checkpoint: the crash
+    after that batch's sink ran and before Structured Streaming
+    committed it. Asserts the commit file is there first, so a Spark
+    that moves the commit log fails here instead of passing
+    vacuously."""
+    commit = os.path.join(root, checkpoint, "commits", str(batch_id))
+    assert os.path.isfile(commit), commit
+    os.remove(commit)
+    crc = os.path.join(root, checkpoint, "commits", f".{batch_id}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
 
 
 def test_maintained_equals_batch_build(spark, tmp_path):
-    """Sequential merges over a 3-way split serve exactly q_text_bm25's
-    top-20 — segment flush + dictionary merge + pruned serve ≡ one-shot
-    build."""
+    """Three micro-batches over a 3-way split serve exactly
+    q_text_bm25's top-20 — segment flush + dictionary aggregate +
+    pruned serve ≡ one-shot build."""
     from data_ingestor_spark.ext.text import bm25_query_maintained, q_text_bm25
 
-    root = str(tmp_path / "idx")
-    _apply_all(spark, root, _split_docs(spark, 3))
+    in_dir, root = str(tmp_path / "in"), str(tmp_path / "idx")
+    _split_docs(spark, in_dir, 3)
+    _maintain(spark, in_dir, root, 3)
     got = [tuple(r) for r in bm25_query_maintained(spark, root).collect()]
     want = [tuple(r) for r in q_text_bm25(spark, SF_DIR).collect()]
     assert got == want and len(got) == 20
 
 
 def test_replayed_batch_is_noop(spark, tmp_path):
-    """A replayed batch id (foreachBatch at-least-once) must not
-    double-count df/N/sum_dl or duplicate postings rows."""
-    from data_ingestor_spark.ext.text import bm25_query_maintained, merge_bm25_batch
-    from data_ingestor_spark.sinks import latest_version
+    """A replayed dictionary batch (foreachBatch is at-least-once) must
+    not double-count df/N/sum_dl: the checkpoint recomputes the same
+    state version from the previous one, so the published dictionary
+    and the served top-20 are unchanged, and no postings row is
+    duplicated."""
+    from data_ingestor_spark.ext.text import bm25_query_maintained, maintain_bm25_index
 
-    root = str(tmp_path / "idx")
-    batches = _split_docs(spark, 2)
-    _apply_all(spark, root, batches)
+    in_dir, root = str(tmp_path / "in"), str(tmp_path / "idx")
+    _split_docs(spark, in_dir, 2)
+    _maintain(spark, in_dir, root, 2)
+    dict_before = _rows(spark.read.parquet(os.path.join(root, "dict")))
+    n_postings = spark.read.parquet(os.path.join(root, "postings")).count()
     before = [tuple(r) for r in bm25_query_maintained(spark, root).collect()]
-    v_before = latest_version(os.path.join(root, "dict"))
-    # replay the LAST batch (the crash-after-publish case): no-op
-    assert merge_bm25_batch(spark, root, batches[1], 1) is False
-    assert latest_version(os.path.join(root, "dict")) == v_before
-    after = [tuple(r) for r in bm25_query_maintained(spark, root).collect()]
-    assert after == before
+
+    # replay the LAST batch of the dictionary (the crash-after-publish case)
+    _drop_commit(root, "_checkpoint_dict", 1)
+    postings_q, dict_q = maintain_bm25_index(spark, in_dir, root)
+    assert {p["batchId"] for p in dict_q.recentProgress if p["numInputRows"]} == {1}
+    assert sum(p["numInputRows"] for p in postings_q.recentProgress) == 0
+
+    assert _rows(spark.read.parquet(os.path.join(root, "dict"))) == dict_before
+    assert spark.read.parquet(os.path.join(root, "postings")).count() == n_postings
+    assert [tuple(r) for r in bm25_query_maintained(spark, root).collect()] == before
 
 
 def test_segment_rewrite_is_idempotent(spark, tmp_path):
-    """A crash AFTER the segment write but BEFORE the dictionary
-    publish replays into an identical segment rewrite + the dictionary
-    merge — final state equals the clean run (the commit-point
-    ordering contract)."""
-    from data_ingestor_spark.ext.text import bm25_query_maintained, merge_bm25_batch
+    """A crash in the middle of segment 1's write — some bucket files
+    gone, the postings batch not committed, the dictionary already
+    committed — replays into a full rewrite of ``postings/b=1``: the
+    segment and the served top-20 equal the clean run's."""
+    import shutil
 
-    batches = _split_docs(spark, 2)
+    from data_ingestor_spark.ext.text import bm25_query_maintained, maintain_bm25_index
+
+    in_dir = str(tmp_path / "in")
+    _split_docs(spark, in_dir, 2)
     clean = str(tmp_path / "clean")
-    _apply_all(spark, clean, batches)
+    _maintain(spark, in_dir, clean, 2)
 
     crashed = str(tmp_path / "crashed")
-    assert merge_bm25_batch(spark, crashed, batches[0], 0) is True
-    # simulate the torn batch: segment 1 written, dictionary not published
+    _maintain(spark, in_dir, crashed, 2)
     seg_dir = os.path.join(crashed, "postings", "b=1")
-    from data_ingestor_spark.ext.text import _BM25_BUCKETS, _tokenize_docs
-    from pyspark.sql import functions as F
+    buckets = sorted(d for d in os.listdir(seg_dir) if d.startswith("bucket="))
+    assert len(buckets) >= 2, buckets
+    for d in buckets[: len(buckets) // 2]:  # the torn segment write
+        shutil.rmtree(os.path.join(seg_dir, d))
+    _drop_commit(crashed, "_checkpoint_postings", 1)
 
-    docs = _tokenize_docs(batches[1])
-    (
-        docs.select("doc_id", "dl", F.explode("toks").alias("term"))
-        .groupBy("doc_id", "dl", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-        .withColumn(
-            "bucket",
-            F.expr(
-                "pmod(cast(conv(substring(md5(term), 1, 8), 16, 10) as bigint),"
-                f" {_BM25_BUCKETS})"
-            ),
-        )
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(seg_dir)
-    )
-    # replay of batch 1 sees applied_bid 0 < 1: rewrites the segment,
-    # publishes the dictionary — lands exactly where the clean run did
-    assert merge_bm25_batch(spark, crashed, batches[1], 1) is True
+    postings_q, dict_q = maintain_bm25_index(spark, in_dir, crashed)
+    assert {p["batchId"] for p in postings_q.recentProgress if p["numInputRows"]} == {1}
+    assert sum(p["numInputRows"] for p in dict_q.recentProgress) == 0
+
+    def segment(root):
+        return _rows(spark.read.parquet(os.path.join(root, "postings", "b=1")))
+
+    assert segment(crashed) == segment(clean)
     got = [tuple(r) for r in bm25_query_maintained(spark, crashed).collect()]
     want = [tuple(r) for r in bm25_query_maintained(spark, clean).collect()]
-    assert got == want
-
-
-def test_reset_checkpoint_guard_raises(spark, tmp_path):
-    """A batch id far behind applied_bid means a reset checkpoint
-    against live state: must raise, not silently skip every batch."""
-    from data_ingestor_spark.ext.text import merge_bm25_batch
-
-    root = str(tmp_path / "idx")
-    batches = _split_docs(spark, 4)
-    for i, b in enumerate(batches):
-        merge_bm25_batch(spark, root, b, i)
-    with pytest.raises(ValueError, match="reset"):
-        merge_bm25_batch(spark, root, batches[0], 0)
+    assert got == want and len(got) == 20
