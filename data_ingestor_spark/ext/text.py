@@ -697,7 +697,7 @@ def maintain_bm25_index(spark, in_dir: str, index_root: str):
     import os
 
     from data_ingestor_spark.sinks import publish_parquet_atomic
-    from data_ingestor_spark.streaming import write_stream_batches
+    from data_ingestor_spark.streaming import await_streams, write_stream_batches
 
     docs = _tokenize_docs(
         spark.readStream.schema(spark.read.parquet(in_dir).schema)
@@ -750,13 +750,7 @@ def maintain_bm25_index(spark, in_dir: str, index_root: str):
             output_mode="complete",
         ),
     ]
-    try:
-        for q in queries:
-            if not q.awaitTermination(300):
-                raise TimeoutError("maintain_bm25_index: stream did not finish in 300s")
-    finally:
-        for q in queries:
-            q.stop()
+    await_streams("maintain_bm25_index", *queries)
     return queries
 
 

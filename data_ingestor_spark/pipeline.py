@@ -254,6 +254,7 @@ def run_stream_job(
     from pyspark.sql import functions as _F
 
     from data_ingestor_spark.streaming import (
+        await_streams,
         idempotent_batch_publish,
         stream_load,
         stream_with_deadletter,
@@ -338,10 +339,7 @@ def run_stream_job(
         )
         routed, restarts = res["routed"], res["restarts"]
     else:
-        q = start()
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"stream did not finish within {timeout_s}s")
+        await_streams("run_stream_job", start(), timeout_s=timeout_s)
         routed, restarts = [], 0
 
     # exact job-end counts from the published data itself (explicit

@@ -10,6 +10,7 @@ Reference parity: O1-O5 (scans), O7/O8 (flatten), O9 (projection) —
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -159,6 +160,42 @@ def q_scan_csv(spark, sf_dir):
     )
 
 
+def _drain_stream_ingest(spark, name, stage, schema, **load_kw):
+    """The harness of the ``q_stream_ingest*`` keys: ``stage(in_dir)``
+    fills a fresh watched directory, :func:`streaming.stream_load`
+    (``schema`` and ``load_kw``) scans it under Structured Streaming,
+    a checkpointed foreachBatch appends every micro-batch to parquet
+    staging, and the staging is read back as a batch DataFrame. The
+    work dir is a fresh per-call directory under :func:`scratch_dir`,
+    so a rerun never resumes an earlier run's checkpoint."""
+    import uuid
+
+    from data_ingestor_spark.streaming import await_streams, stream_load, write_stream_batches
+
+    work = os.path.join(scratch_dir(name), uuid.uuid4().hex[:8])
+    in_dir, out_dir = os.path.join(work, "in"), os.path.join(work, "out")
+    stage(in_dir)
+    flat = stream_load(spark, in_dir, schema, **load_kw)
+    q = write_stream_batches(
+        flat,
+        os.path.join(work, "ckpt"),
+        lambda df, bid: df.write.mode("append").parquet(out_dir),
+    )
+    await_streams(name, q)
+    return spark.read.schema(flat.schema).parquet(out_dir)
+
+
+def _copy_fixture(path):
+    """``stage`` for :func:`_drain_stream_ingest`: the watched directory
+    holds one copy of the fixture file ``path``."""
+
+    def stage(in_dir):
+        os.makedirs(in_dir)
+        shutil.copy(path, in_dir)
+
+    return stage
+
+
 @query("q_stream_ingest", oracle=_JSON_ORACLE, tags=("streaming", "ingest"))
 def q_stream_ingest(spark, sf_dir):
     """Streaming twin of q_ingest_json (O14 parity): the SAME
@@ -167,27 +204,13 @@ def q_stream_ingest(spark, sf_dir):
     into a temp parquet staging dir and returned as a batch DataFrame.
     Same oracle as the batch path: streaming and batch must agree row
     for row."""
-    import shutil
-    import tempfile
-
-    from data_ingestor_spark.streaming import stream_load, write_stream_batches
-
-    work = tempfile.mkdtemp(prefix="q_stream_ingest_")
-    in_dir = os.path.join(work, "in")
-    out_dir = os.path.join(work, "out")
-    os.makedirs(in_dir)
-    shutil.copy(_JSON_FIXTURE, os.path.join(in_dir, "batch0.json"))
-
-    flat = stream_load(spark, in_dir, MIST_NESTED_SCHEMA, columns=TEMPLATE_COLUMNS)
-    q = write_stream_batches(
-        flat,
-        os.path.join(work, "ckpt"),
-        lambda df, bid: df.write.mode("append").parquet(out_dir),
+    return _drain_stream_ingest(
+        spark,
+        "q_stream_ingest",
+        _copy_fixture(_JSON_FIXTURE),
+        MIST_NESTED_SCHEMA,
+        columns=TEMPLATE_COLUMNS,
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("q_stream_ingest: stream did not finish within 300s")
-    return spark.read.schema(flat.schema).parquet(out_dir)
 
 
 @query("q_stream_ingest_xml", oracle=_XML_GOLDEN_ORACLE, tags=("streaming", "ingest"))
@@ -199,29 +222,14 @@ def q_stream_ingest_xml(spark, sf_dir):
     checkpointed foreachBatch into parquet staging and returned as a
     batch DataFrame. Same golden-literal oracle as the batch XML path:
     streaming and batch must agree row for row."""
-    import shutil
-    import tempfile
-
-    from data_ingestor_spark.streaming import stream_load, write_stream_batches
-
-    work = tempfile.mkdtemp(prefix="q_stream_ingest_xml_")
-    in_dir = os.path.join(work, "in")
-    out_dir = os.path.join(work, "out")
-    os.makedirs(in_dir)
-    shutil.copy(_XML_FIXTURE, os.path.join(in_dir, "feed0.xml"))
-
-    flat = stream_load(
-        spark, in_dir, MIST_NESTED_SCHEMA, columns=TEMPLATE_COLUMNS, fmt="xml"
+    return _drain_stream_ingest(
+        spark,
+        "q_stream_ingest_xml",
+        _copy_fixture(_XML_FIXTURE),
+        MIST_NESTED_SCHEMA,
+        columns=TEMPLATE_COLUMNS,
+        fmt="xml",
     )
-    q = write_stream_batches(
-        flat,
-        os.path.join(work, "ckpt"),
-        lambda df, bid: df.write.mode("append").parquet(out_dir),
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("q_stream_ingest_xml: stream did not finish within 300s")
-    return spark.read.schema(flat.schema).parquet(out_dir)
 
 
 @query(
@@ -243,28 +251,16 @@ def q_stream_ingest_csv(spark, sf_dir):
     streaming CSV scan is lossless AND exactly-once (every line lands
     exactly once — a dropped or doubled micro-batch changes the
     counts)."""
-    import tempfile
-
-    from data_ingestor_spark.streaming import stream_load, write_stream_batches
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
-    work = tempfile.mkdtemp(prefix="q_stream_ingest_csv_")
-    in_dir = os.path.join(work, "in")
-    out_dir = os.path.join(work, "out")
-    li.write.option("header", "true").mode("overwrite").csv(in_dir)
-
-    flat = stream_load(spark, in_dir, li.schema, fmt="csv")
-    q = write_stream_batches(
-        flat,
-        os.path.join(work, "ckpt"),
-        lambda df, bid: df.write.mode("append").parquet(out_dir),
+    back = _drain_stream_ingest(
+        spark,
+        "q_stream_ingest_csv",
+        lambda in_dir: li.write.option("header", "true").csv(in_dir),
+        li.schema,
+        fmt="csv",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("q_stream_ingest_csv: stream did not finish within 300s")
-    back = spark.read.schema(flat.schema).parquet(out_dir)
     return back.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
         F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("sum_qty"),

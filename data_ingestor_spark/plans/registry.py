@@ -68,6 +68,29 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``<sf_dir>/events.parquet`` as stored, ``ts`` not yet normalized.
+
+    Spark's parquet reader rejects a TIMESTAMP(NANOS) column unless
+    ``nanosAsLong`` is set, and then reads it as bigint. This is the one
+    place that sets the flag: only while the schema is resolved from the
+    footers, restoring the caller's value afterwards (unset stays unset).
+    The schema of the returned frame is what every events file stream is
+    given (``readStream.schema(raw_events(...).schema)``); see
+    :func:`load_table` for why scoping the flag to resolution is enough.
+    """
+    flag = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(flag, None)
+    spark.conf.set(flag, "true")
+    try:
+        return spark.read.parquet(f"{sf_dir}/events.parquet")
+    finally:
+        if prior is None:
+            spark.conf.unset(flag)
+        else:
+            spark.conf.set(flag, prior)
+
+
 #: (applicationId, sf_dir, name) -> DataFrame handle. Metadata-only
 #: memo (r13 optimization, guide §5/§7.3 driver-side work): each
 #: ``spark.read.parquet`` call re-resolves the DataSource and re-reads
@@ -87,10 +110,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table (TESTDATA.md layout).
 
     ``events.parquet`` has shipped as TIMESTAMP(NANOS) in some testdata
-    generations (which Spark's parquet reader rejects without
-    ``nanosAsLong``) and micros TIMESTAMP_NTZ in others; both layouts are
-    normalized to a session-timezone TIMESTAMP by
-    :func:`normalize_event_ts`.
+    generations and micros TIMESTAMP_NTZ in others; it is read through
+    :func:`raw_events` and both layouts are normalized to a
+    session-timezone TIMESTAMP by :func:`normalize_event_ts`. The
+    caller's ``nanosAsLong`` setting is left as it was: the flag is set
+    only while Spark resolves the schema, which is enough because on
+    Spark 4.1 the parquet reader consults it only when it converts the
+    file footer to a Spark schema — once ``ts`` is resolved as bigint,
+    both the vectorized and the row-based reader (and a file stream
+    given that schema) read the INT64 nanos without it.
+    ``tests/test_events_nanos.py`` pins this and fails if a Spark
+    upgrade starts to need the flag at execution time.
 
     The returned handle is memoized per (session, sf_dir, table) —
     see :data:`_TABLE_CACHE`; DataFrames are immutable so sharing the
@@ -104,8 +134,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key[0] not in {k[0] for k in _TABLE_CACHE}:
         _TABLE_CACHE.clear()  # at most one live session's handles
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+        df = normalize_event_ts(raw_events(spark, sf_dir))
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     _TABLE_CACHE[key] = df

@@ -18,27 +18,35 @@ from data_ingestor_spark.plans.registry import (
     load_table,
     normalize_event_ts,
     query,
+    raw_events,
     scratch_dir,
     source_split,
 )
 
 
-def _ensure_symlink(link: str, src: str) -> None:
-    """Create (or repair) a scratch symlink. The scratch key carries
-    only basename(sf_dir), so two different datasets with the same
-    basename would collide — validate the existing link's target and
-    re-point it instead of silently reusing a link to the wrong data."""
+def _events_stream(spark, sf_dir):
+    """The events table as a Structured Streaming file source, with
+    ``ts`` normalized as :func:`load_table` normalizes it. The source
+    watches one per-process, per-sf scratch dir holding a symlink to
+    ``events.parquet`` and is given :func:`raw_events`' schema. The
+    scratch key carries only basename(sf_dir), so an existing link to a
+    different dataset with the same basename is re-pointed rather than
+    reused."""
     import os
 
-    target = os.path.abspath(src)
-    if os.path.islink(link):
-        if os.readlink(link) == target:
-            return
+    in_dir = scratch_dir(f"events_stream_{os.path.basename(sf_dir.rstrip('/'))}")
+    link = os.path.join(in_dir, "events.parquet")
+    target = os.path.abspath(f"{sf_dir}/events.parquet")
+    if os.path.islink(link) and os.readlink(link) != target:
         os.remove(link)
-    os.symlink(target, link)
+    if not os.path.islink(link):
+        os.symlink(target, link)
+    raw = raw_events(spark, sf_dir).schema
+    return normalize_event_ts(spark.readStream.schema(raw).parquet(in_dir))
 
 
-# Hard cap on memory-sink materialization in the four streaming queries.
+# Hard cap on memory-sink materialization in the seven memory-sink keys,
+# all of which collect through :func:`_drain_to_memory`.
 # Collecting a streaming result to the driver is ONLY sound because the
 # oracle comparison needs both engines' outputs driver-side at test scale
 # (sf<=0.1, aggregates of a few thousand rows); a production pipeline
@@ -46,7 +54,7 @@ def _ensure_symlink(link: str, src: str) -> None:
 _MEMORY_SINK_MAX_ROWS = 2_000_000
 
 
-def _collect_memory_sink(spark, df, schema):
+def _collect_memory_sink(spark, df):
     """Materialize a memory-sink streaming result with a scale guard so
     the collect() pattern can't silently migrate into a production path."""
     rows = df.collect()
@@ -56,7 +64,36 @@ def _collect_memory_sink(spark, df, schema):
             f"{_MEMORY_SINK_MAX_ROWS}-row test-scale guard — use a durable "
             "writeStream sink (streaming/ingest.py) for production data"
         )
-    return spark.createDataFrame(rows, schema=schema)
+    return spark.createDataFrame(rows, schema=df.schema)
+
+
+def _drain_to_memory(spark, name, stream, output_mode):
+    """The registry's streaming-oracle harness: run ``stream`` to the
+    end of its input (availableNow) into a memory sink in
+    ``output_mode``, and return the sink's rows as a batch DataFrame.
+
+    The rows are collected through :func:`_collect_memory_sink` so the
+    memory-sink view can be dropped before returning: reentrant, no
+    module-global state, nothing pinned across invocations. A memory
+    sink holds every emitted row on the driver, so this shape is for
+    oracle-scale results only; production uses a durable sink."""
+    import uuid
+
+    from data_ingestor_spark.streaming import await_streams
+
+    sink = f"{name}_{uuid.uuid4().hex[:8]}"
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(sink)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        await_streams(name, q)
+        return _collect_memory_sink(spark, spark.table(sink))
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 @query(
@@ -479,54 +516,13 @@ def q_stream_window_agg(spark, sf_dir):
     materialization only — a production deployment uses watermark +
     append mode into a real sink so state stays bounded
     (streaming/windows.py tumbling_counts is that shape)."""
-    import os
-    import uuid
-
-    # the file source needs nanos-as-long for the NANOS-typed events
-    # parquet; restore the session value afterwards so a session-global
-    # config is not left mutated for unrelated queries
-    prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sink = f"stream_win_{uuid.uuid4().hex[:8]}"
-    try:
-        src = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(src).schema
-        # per-process per-sf scratch: the symlink is created once and
-        # reused across invocations in this session
-        in_dir = scratch_dir(f"q_stream_window_{os.path.basename(sf_dir.rstrip(chr(47)))}")
-        link = os.path.join(in_dir, "events.parquet")
-        _ensure_symlink(link, src)
-
-        s = normalize_event_ts(spark.readStream.schema(raw_schema).parquet(in_dir))
-        agg = (
-            s.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-            .agg(F.count("*").alias("n"), F.sum(dec("value")).cast("double").alias("total_value"))
-            .select(F.col("w.start").alias("wstart"), "event_type", "n", "total_value")
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q_stream_window_agg: stream did not finish within 300s")
-        # materialize the (small) windowed aggregate locally so the
-        # memory-sink view can be dropped immediately — reentrant, no
-        # module-global state, nothing pinned across invocations
-        result = _collect_memory_sink(spark, spark.table(sink), agg.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(sink)
-        except Exception:
-            pass
-        if prior_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior_nanos)
-    return result
+    agg = (
+        _events_stream(spark, sf_dir)
+        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+        .agg(F.count("*").alias("n"), F.sum(dec("value")).cast("double").alias("total_value"))
+        .select(F.col("w.start").alias("wstart"), "event_type", "n", "total_value")
+    )
+    return _drain_to_memory(spark, "q_stream_window_agg", agg, "complete")
 
 
 @query(
@@ -568,55 +564,18 @@ def q_stream_session_window(spark, sf_dir):
     sessions emit and their state expires
     (streaming/windows.py session_windowed_counts is that shape,
     exercised by tests/test_streaming.py)."""
-    import os
-    import uuid
-
-    prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sink = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    try:
-        src = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(src).schema
-        in_dir = scratch_dir(
-            f"q_stream_session_{os.path.basename(sf_dir.rstrip(chr(47)))}"
+    agg = (
+        _events_stream(spark, sf_dir)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            F.col("w.end").alias("session_end"),
+            "n_events",
         )
-        link = os.path.join(in_dir, "events.parquet")
-        _ensure_symlink(link, src)
-
-        s = normalize_event_ts(spark.readStream.schema(raw_schema).parquet(in_dir))
-        agg = (
-            s.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "n_events",
-            )
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "q_stream_session_window: stream did not finish within 300s"
-            )
-        result = _collect_memory_sink(spark, spark.table(sink), agg.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(sink)
-        except Exception:
-            pass
-        if prior_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior_nanos)
-    return result
+    )
+    return _drain_to_memory(spark, "q_stream_session_window", agg, "complete")
 
 
 @query(
@@ -674,7 +633,6 @@ def q_stream_late_drop(spark, sf_dir):
     import os
     import shutil
     import time as _time
-    import uuid
 
     def build(split):
         # deterministic 3-way split (event_id % 3), one FILE per batch
@@ -708,25 +666,7 @@ def q_stream_late_drop(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("wstart"), "event_type", "n")
     )
-    sink = f"late_drop_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q_stream_late_drop: stream did not finish within 300s")
-        result = _collect_memory_sink(spark, spark.table(sink), agg.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(sink)
-        except Exception:
-            pass
-    return result
+    return _drain_to_memory(spark, "q_stream_late_drop", agg, "append")
 
 
 @query(
@@ -759,53 +699,20 @@ def q_stream_static_join(spark, sf_dir):
     update/append into a durable sink. Streaming twin of the batch
     `q_join_broadcast`; the library seam is covered row-for-row by
     tests/test_streaming.py::test_enrich_with_static."""
-    import os
-    import uuid
-
-    prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sink = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    try:
-        src = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(src).schema
-        in_dir = scratch_dir(
-            f"q_stream_static_join_{os.path.basename(sf_dir.rstrip(chr(47)))}"
-        )
-        link = os.path.join(in_dir, "events.parquet")
-        _ensure_symlink(link, src)
-
-        dim = F.broadcast(
-            load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-        )
-        s = normalize_event_ts(spark.readStream.schema(raw_schema).parquet(in_dir))
-        enriched = enrich_with_static(
-            s.withColumnRenamed("user_id", "c_custkey"), dim, on="c_custkey", how="inner"
-        )
-        agg = enriched.groupBy("c_mktsegment", "event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(dec("value")).cast("double").alias("total_value"),
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q_stream_static_join: stream did not finish within 300s")
-        result = _collect_memory_sink(spark, spark.table(sink), agg.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(sink)
-        except Exception:
-            pass
-        if prior_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior_nanos)
-    return result
+    dim = F.broadcast(
+        load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    )
+    enriched = enrich_with_static(
+        _events_stream(spark, sf_dir).withColumnRenamed("user_id", "c_custkey"),
+        dim,
+        on="c_custkey",
+        how="inner",
+    )
+    agg = enriched.groupBy("c_mktsegment", "event_type").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(dec("value")).cast("double").alias("total_value"),
+    )
+    return _drain_to_memory(spark, "q_stream_static_join", agg, "complete")
 
 
 @query(
@@ -882,44 +789,12 @@ def q_stream_dedup(spark, sf_dir):
     leak nondeterminism into the hash). Production shape: add a
     watermark and dropDuplicatesWithinWatermark so state stays bounded
     (streaming/stateful.py covers that operator in pytest)."""
-    import os
-    import uuid
-
-    prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    try:
-        src = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(src).schema
-        in_dir = scratch_dir(f"q_stream_dedup_{os.path.basename(sf_dir.rstrip(chr(47)))}")
-        link = os.path.join(in_dir, "events.parquet")
-        _ensure_symlink(link, src)
-
-        s = spark.readStream.schema(raw_schema).parquet(in_dir)
-        deduped = s.select("user_id", "event_type").dropDuplicates(
-            ["user_id", "event_type"]
-        )
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q_stream_dedup: stream did not finish within 300s")
-        result = _collect_memory_sink(spark, spark.table(sink), deduped.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(sink)
-        except Exception:
-            pass
-        if prior_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior_nanos)
-    return result
+    deduped = (
+        _events_stream(spark, sf_dir)
+        .select("user_id", "event_type")
+        .dropDuplicates(["user_id", "event_type"])
+    )
+    return _drain_to_memory(spark, "q_stream_dedup", deduped, "append")
 
 
 @query(
@@ -943,58 +818,22 @@ def q_stream_stream_join(spark, sf_dir):
     the streaming state machine emits exactly the batch pair set.
     Only (l_event, r_event) ids are projected: the match set is
     deterministic even though match *order* is not."""
-    import os
-    import uuid
-
     from data_ingestor_spark.streaming.joins import join_streams_windowed
 
-    prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sink = f"stream_ssj_{uuid.uuid4().hex[:8]}"
-    try:
-        src = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(src).schema
-        in_dir = scratch_dir(f"q_stream_ssj_{os.path.basename(sf_dir.rstrip(chr(47)))}")
-        link = os.path.join(in_dir, "events.parquet")
-        _ensure_symlink(link, src)
-
-        def _events_stream():
-            return normalize_event_ts(spark.readStream.schema(raw_schema).parquet(in_dir))
-
-        left = (
-            _events_stream()
-            .filter(F.col("event_type") == "purchase")
-            .select("user_id", "ts", F.col("event_id").alias("l_event"))
-        )
-        right = (
-            _events_stream()
-            .filter(F.col("event_type") == "click")
-            .select("user_id", "ts", F.col("event_id").alias("r_event"))
-        )
-        joined = join_streams_windowed(
-            left, right, key="user_id", max_gap="10 minutes", watermark="30 minutes"
-        ).select("l_event", "r_event")
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q_stream_stream_join: stream did not finish within 300s")
-        result = _collect_memory_sink(spark, spark.table(sink), joined.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(sink)
-        except Exception:
-            pass
-        if prior_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior_nanos)
-    return result
+    left = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select("user_id", "ts", F.col("event_id").alias("l_event"))
+    )
+    right = (
+        _events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "click")
+        .select("user_id", "ts", F.col("event_id").alias("r_event"))
+    )
+    joined = join_streams_windowed(
+        left, right, key="user_id", max_gap="10 minutes", watermark="30 minutes"
+    ).select("l_event", "r_event")
+    return _drain_to_memory(spark, "q_stream_stream_join", joined, "append")
 
 
 @query(
@@ -1014,47 +853,12 @@ def q_stream_stateful(spark, sf_dir):
     so the oracle is simply the batch GROUP BY count. Only the integer
     count is surfaced (the running value sum is a batch-order FP
     accumulation, pinned by pytest instead)."""
-    import os
-    import uuid
-
     from data_ingestor_spark.streaming.stateful import running_user_counters
 
-    prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    sink = f"stream_state_{uuid.uuid4().hex[:8]}"
-    try:
-        src = f"{sf_dir}/events.parquet"
-        raw_schema = spark.read.parquet(src).schema
-        in_dir = scratch_dir(f"q_stream_state_{os.path.basename(sf_dir.rstrip(chr(47)))}")
-        link = os.path.join(in_dir, "events.parquet")
-        _ensure_symlink(link, src)
-
-        s = spark.readStream.schema(raw_schema).parquet(in_dir)
-        counters = running_user_counters(s)
-        q = (
-            counters.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("q_stream_stateful: stream did not finish within 300s")
-        emitted = spark.table(sink).groupBy("user_id").agg(
-            F.max("total_events").alias("n_events")
-        )
-        result = _collect_memory_sink(spark, emitted, emitted.schema)
-    finally:
-        try:
-            spark.catalog.dropTempView(sink)
-        except Exception:
-            pass
-        if prior_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior_nanos)
-    return result
+    emitted = _drain_to_memory(
+        spark, "q_stream_stateful", running_user_counters(_events_stream(spark, sf_dir)), "append"
+    )
+    return emitted.groupBy("user_id").agg(F.max("total_events").alias("n_events"))
 
 
 @query(
@@ -1373,33 +1177,23 @@ def q_stream_rollup_maintain(spark, sf_dir):
     import os
     import uuid
 
-    prior_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        # 4-way split of the source so availableNow delivers multiple
-        # micro-batches (a single file would be one batch)
-        in_dir = source_split(
-            sf_dir,
-            "events",
-            "q_stream_rollup_src",
-            lambda split: spark.read.parquet(f"{sf_dir}/events.parquet")
-            .repartition(4)
-            .write.parquet(split),
-        )
-        root = os.path.join(
-            scratch_dir(f"q_stream_rollup_state_{os.path.basename(sf_dir.rstrip(chr(47)))}"),
-            uuid.uuid4().hex[:8],
-        )
-        q = maintain_hourly_rollup(spark, in_dir, root)
-        assert len({p["batchId"] for p in q.recentProgress}) >= 2, (
-            "expected multiple incremental merges"
-        )
-        return cascade_hourly(spark.read.parquet(f"{root}/hourly"), "event_type")
-    finally:
-        if prior_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prior_nanos)
+    # 4-way split of the source so availableNow delivers multiple
+    # micro-batches (a single file would be one batch)
+    in_dir = source_split(
+        sf_dir,
+        "events",
+        "q_stream_rollup_src",
+        lambda split: raw_events(spark, sf_dir).repartition(4).write.parquet(split),
+    )
+    root = os.path.join(
+        scratch_dir(f"q_stream_rollup_state_{os.path.basename(sf_dir.rstrip(chr(47)))}"),
+        uuid.uuid4().hex[:8],
+    )
+    q = maintain_hourly_rollup(spark, in_dir, root)
+    assert len({p["batchId"] for p in q.recentProgress}) >= 2, (
+        "expected multiple incremental merges"
+    )
+    return cascade_hourly(spark.read.parquet(f"{root}/hourly"), "event_type")
 
 
 def maintain_hourly_rollup(spark, in_dir, root):
@@ -1419,7 +1213,7 @@ def maintain_hourly_rollup(spark, in_dir, root):
     resets the state with it, so the state can never run ahead of the
     batch ids."""
     from data_ingestor_spark.sinks import publish_parquet_atomic
-    from data_ingestor_spark.streaming import write_stream_batches
+    from data_ingestor_spark.streaming import await_streams, write_stream_batches
 
     cents = F.expr("try_cast(round(value * 100) as bigint)")
     hourly = (
@@ -1441,9 +1235,7 @@ def maintain_hourly_rollup(spark, in_dir, root):
         lambda batch, _: publish_parquet_atomic(batch, f"{root}/hourly"),
         output_mode="complete",
     )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise TimeoutError("maintain_hourly_rollup: stream did not finish in 300s")
+    await_streams("maintain_hourly_rollup", q)
     return q
 
 

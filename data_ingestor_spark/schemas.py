@@ -12,13 +12,9 @@ Reference parity:
   sheet row as the DB column whitelist. Driver-side (openpyxl), not a
   distributed op — mirrors the reference running it once at startup
   (``main.go:65``).
-- The JSON field-name mapping (``data-schema.json:2-14``): source field
-  name → DB column name.
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import types as T
 
@@ -102,17 +98,6 @@ def columns_from_excel(path: str, sheet: str = "Sheet1", line: int = 3) -> list[
     if line > len(grid):
         return []
     return [str(c).strip() for c in grid[line - 1] if c is not None and str(c).strip()]
-
-
-def column_mapping_from_json(path: str) -> dict[str, str]:
-    """Source-field → DB-column mapping (parity: ``data-schema.json:2-14``).
-
-    In the reference this file is documentation only (no Go code reads
-    it); here it is a live option for renaming source fields at ingest.
-    """
-    with open(path) as f:
-        mapping = json.load(f)
-    return {str(k): str(v) for k, v in mapping.items()}
 
 
 # --- Driver testdata tables ---------------------------------------------------

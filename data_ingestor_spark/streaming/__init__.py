@@ -1,4 +1,5 @@
 from data_ingestor_spark.streaming.ingest import (
+    await_streams,
     find_undecodable_files,
     idempotent_batch_publish,
     stream_load,
@@ -17,6 +18,7 @@ from data_ingestor_spark.streaming.windows import (
 )
 
 __all__ = [
+    "await_streams",
     "enrich_with_static",
     "find_undecodable_files",
     "stream_with_deadletter",

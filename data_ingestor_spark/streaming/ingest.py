@@ -178,6 +178,26 @@ def stream_with_deadletter(
         spark.conf.set(conf_key, old_conf)
 
 
+def await_streams(name: str, *queries, timeout_s: float = 300.0) -> None:
+    """Wait for every query in ``queries`` to terminate, then stop them
+    all — the one drain of every run-to-the-end stream in the package.
+
+    A query still running after ``timeout_s`` seconds raises
+    ``TimeoutError`` naming ``name``; a query that failed re-raises its
+    ``StreamingQueryException``. Either way, and on success, every query
+    is stopped on the way out (stopping a finished query does nothing),
+    so none outlives the call. :func:`stream_with_deadletter` keeps its
+    own loop: there a timeout must not be taken for a routable failure.
+    """
+    try:
+        for q in queries:
+            if not q.awaitTermination(timeout_s):
+                raise TimeoutError(f"{name}: stream did not finish within {timeout_s:g}s")
+    finally:
+        for q in queries:
+            q.stop()
+
+
 def write_stream_batches(
     df: DataFrame,
     checkpoint_dir: str,

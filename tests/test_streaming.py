@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from data_ingestor_spark.schemas import MIST_NESTED_SCHEMA, TEMPLATE_COLUMNS
 from data_ingestor_spark.sources import load, read_records
 from data_ingestor_spark.streaming import (
+    await_streams,
     session_windowed_counts,
     stateful_dedup,
     stream_load,
@@ -61,6 +62,30 @@ def test_stream_archival(spark, tmp_path):
     in_files = list(in_dir.glob("*.json"))
     arch_files = list(arch.rglob("*.json"))
     assert len(in_files) + len(arch_files) == 1
+
+
+def test_await_streams_stops_every_query_on_timeout_and_on_success(spark, tmp_path):
+    """A query that does not finish in time raises TimeoutError naming
+    the caller, and every query passed in is stopped, the finished one
+    and the one still running alike; on success all are stopped too."""
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    shutil.copy(os.path.join(FIXTURES, "ingest-records.json"), in_dir / "a.json")
+
+    def drained(name):
+        flat = stream_load(spark, str(in_dir), MIST_NESTED_SCHEMA, columns=TEMPLATE_COLUMNS)
+        return write_stream_batches(flat, str(tmp_path / name), lambda df, bid: None)
+
+    endless = spark.readStream.format("rate").load().writeStream.format("noop").start()
+    finished = drained("ckpt_a")
+    with pytest.raises(TimeoutError, match="^caller: stream did not finish within 0.5s$"):
+        await_streams("caller", finished, endless, timeout_s=0.5)
+    assert not finished.isActive and not endless.isActive
+
+    queries = [drained("ckpt_b"), drained("ckpt_c")]
+    await_streams("caller", *queries)
+    assert not any(q.isActive for q in queries)
+    assert all(q.lastProgress is not None for q in queries)
 
 
 def test_exactly_once_checkpoint_no_redelivery(spark, tmp_path):

@@ -571,6 +571,62 @@ def test_package_from_imports_resolve():
     assert not dangling, dangling
 
 
+def _package_sites(match) -> list[tuple[str, str]]:
+    """``(file, enclosing function)`` of every AST node in
+    ``data_ingestor_spark/`` for which ``match(node)`` holds; docstrings
+    are not scanned."""
+    import ast
+
+    sites = []
+
+    def visit(node, path, func):
+        body = getattr(node, "body", None)
+        doc = None
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)):
+            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+                doc = body[0].value
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if node is not doc and match(node):
+            sites.append((path, func))
+        for child in ast.iter_child_nodes(node):
+            if not (doc is not None and child is body[0]):
+                visit(child, path, func)
+
+    for p in sorted((REPO / "data_ingestor_spark").rglob("*.py")):
+        visit(ast.parse(p.read_text(), str(p)), str(p.relative_to(REPO)), None)
+    return sites
+
+
+def test_stream_harness_decisions_have_one_owner():
+    """The nanosAsLong flag, the memory sink and the wait-for-a-stream
+    loop each live in one place, so the per-key copies the registry's
+    stream keys used to carry cannot grow back: ``nanosAsLong`` only in
+    ``registry.raw_events`` (which restores it), ``format("memory")``
+    only in ``timeseries._drain_to_memory``, ``awaitTermination`` only
+    in ``streaming.ingest.await_streams`` and in
+    ``stream_with_deadletter``, whose timeout must not be taken for a
+    routable failure."""
+    import ast
+
+    nanos = _package_sites(
+        lambda n: isinstance(n, ast.Constant) and isinstance(n.value, str) and "nanosAsLong" in n.value
+    )
+    memory = _package_sites(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "format"
+        and any(isinstance(a, ast.Constant) and a.value == "memory" for a in n.args)
+    )
+    waits = _package_sites(lambda n: isinstance(n, ast.Attribute) and n.attr == "awaitTermination")
+    assert nanos == [("data_ingestor_spark/plans/registry.py", "raw_events")]
+    assert memory == [("data_ingestor_spark/plans/timeseries.py", "_drain_to_memory")]
+    assert sorted(waits) == [
+        ("data_ingestor_spark/streaming/ingest.py", "await_streams"),
+        ("data_ingestor_spark/streaming/ingest.py", "stream_with_deadletter"),
+    ]
+
+
 def test_ab_bench_requires_old_rev():
     r = subprocess.run(
         [sys.executable, str(REPO / "scripts" / "ab_bench.py"), "--keys", "q_agg_basic"],
