@@ -162,20 +162,22 @@ class StreamJobResult:
     CUMULATIVE totals (counted from the published parquet, the only
     replay-proof source of truth), not per-invocation deltas — a
     re-run over the same checkpoint that drains one new file reports
-    the new grand total. ``files_deadlettered``/``restarts`` are
-    per-invocation."""
+    the new grand total. ``files_deadlettered``/``files_archived``/
+    ``restarts`` are per-invocation."""
 
     rows_published: int
     rows_quarantined: int
     files_deadlettered: list[str]
     restarts: int
     target_dir: str
+    files_archived: list[str] = field(default_factory=list)
 
     def report(self) -> str:
         return (
             f"records succeeded={self.rows_published} "
             f"quarantined={self.rows_quarantined} "
             f"deadlettered_files={len(self.files_deadlettered)} "
+            f"archived_files={len(self.files_archived)} "
             f"restarts={self.restarts}"
         )
 
@@ -226,8 +228,8 @@ def run_stream_job(
     clean/corrupt split: two filters over one materialization, which
     also pins the documented Spark caveat that filtering a raw scan's
     corrupt column is only reliable when all columns materialize
-    (ADVICE r9; bounded by ``maxFilesPerTrigger``, so the cache is
-    micro-batch-sized, not input-sized).
+    (ADVICE r9; bounded by ``streaming.ingest.MAX_BYTES_PER_TRIGGER``,
+    so the cache is micro-batch-sized, not input-sized).
 
     **Enrich while loading** (``enrich_dim`` + ``enrich_on``): an
     optional stream⋈static dimension join applied to each micro-batch's
@@ -244,10 +246,18 @@ def run_stream_job(
 
     At 100 TB: every per-file/per-record step (scan, parse, flatten,
     split, enrich, parquet write) runs on executors; the driver only
-    renames batch directories and, on a poison failure, moves the
-    (tiny) routed file list. ``archive_dir`` enables
-    ``cleanSource=archive`` so processed inputs leave the watch dir
-    without driver juggling.
+    renames batch directories, moves the archived inputs at job end
+    and, on a poison failure, moves the (tiny) routed file list.
+
+    **Archive** (``archive_dir``): after the stream ends successfully,
+    every input the checkpoint's file-source log names
+    (:func:`streaming.committed_input_files`) that still sits in the
+    watch dir unchanged moves there through :func:`sinks.archive_input`,
+    as the batch job archives its input. The log covers every run over
+    the checkpoint, so a re-run also archives an earlier run's inputs;
+    dead-lettered files have already left the watch dir, and a file
+    rewritten after its batch committed stays. A failed stream archives
+    nothing.
     """
     import os as _os
 
@@ -255,6 +265,7 @@ def run_stream_job(
 
     from data_ingestor_spark.streaming import (
         await_streams,
+        committed_input_files,
         idempotent_batch_publish,
         stream_load,
         stream_with_deadletter,
@@ -322,7 +333,6 @@ def run_stream_job(
             columns=list(columns) if columns else None,
             fmt=fmt,
             row_tag=row_tag,
-            archive_dir=archive_dir,
             corrupt_col=corrupt,
         )
         out_schema = flat.schema
@@ -341,6 +351,14 @@ def run_stream_job(
     else:
         await_streams("run_stream_job", start(), timeout_s=timeout_s)
         routed, restarts = [], 0
+
+    archived = []
+    if archive_dir is not None:
+        for path, listed_ms in committed_input_files(ckpt).items():
+            # the listed modification time tells the committed file from
+            # a later one written to the same path, which the source skips
+            if _os.path.isfile(path) and _os.stat(path).st_mtime_ns // 1_000_000 == listed_ms:
+                archived.append(sinks.archive_input(path, archive_dir))
 
     # exact job-end counts from the published data itself (explicit
     # schemas: a quarantine dir whose batches were all empty has no
@@ -370,6 +388,7 @@ def run_stream_job(
         files_deadlettered=routed,
         restarts=restarts,
         target_dir=target_dir,
+        files_archived=archived,
     )
 
 

@@ -463,8 +463,9 @@ def publish_parquet_atomic(df: DataFrame, final_dir: str, staging_dir: str | Non
 def archive_input(input_path: str, destination_dir: str) -> str:
     """Copy the input file into ``destination_dir`` (created on demand),
     then delete the source (O19, ``fileloader.go:263-328``). Returns the
-    archived path. For streaming ingest the same behavior comes from the
-    file source's ``cleanSource=archive`` option (see ``streaming``)."""
+    archived path. Streaming ingest archives through here too:
+    ``pipeline.run_stream_job`` moves each input its checkpoint logged
+    as read, once the stream has ended."""
     os.makedirs(destination_dir, exist_ok=True)
     dest = os.path.join(destination_dir, os.path.basename(input_path))
     shutil.copy2(input_path, dest)

@@ -1,5 +1,6 @@
 from data_ingestor_spark.streaming.ingest import (
     await_streams,
+    committed_input_files,
     find_undecodable_files,
     idempotent_batch_publish,
     stream_load,
@@ -19,6 +20,7 @@ from data_ingestor_spark.streaming.windows import (
 
 __all__ = [
     "await_streams",
+    "committed_input_files",
     "enrich_with_static",
     "find_undecodable_files",
     "stream_with_deadletter",

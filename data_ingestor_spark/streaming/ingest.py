@@ -6,13 +6,17 @@ collector (``mapreduce/mapreduce.go:54-105``), with the input file
 archived after the job (``fileloader/fileloader.go:263-328``). The
 Spark-native shape is the Structured Streaming file source:
 
-- discovery + backpressure: ``maxFilesPerTrigger`` bounds each micro-
-  batch (the channel-capacity analogue, ``main.go:57``);
+- discovery + backpressure: ``maxBytesPerTrigger`` bounds each micro-
+  batch by input bytes (the channel-capacity analogue, ``main.go:57``),
+  so many small feeds drain in one micro-batch and pay its fixed cost
+  (WAL commit, offsets, planning, publish jobs) once;
 - exactly-once: the checkpoint WAL replaces the reference's all-or-
   nothing cross-worker transaction reduce (``dbtransposer.go:290-364``)
   — a failed batch replays, a committed batch never doubles;
-- archival: ``cleanSource=archive`` + ``sourceArchiveDir`` moves fully-
-  processed inputs, the O19 parity without driver file juggling.
+- archival: the checkpoint's file-source log names every input a
+  committed micro-batch read (:func:`committed_input_files`), and
+  ``pipeline.run_stream_job`` moves those inputs out of the watch dir
+  at job end through the batch path's ``sinks.archive_input``.
 
 The scan is the SAME json/xml/csv decode the batch ``sources.load`` uses
 (``sources.read_records`` over ``spark.readStream``), and flatten/
@@ -22,7 +26,9 @@ execution modes.
 
 from __future__ import annotations
 
+import json
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -31,8 +37,10 @@ from data_ingestor_spark.operators.flatten import flatten_nested
 from data_ingestor_spark.sources.readers import RECORD_FORMATS, read_records
 
 
-#: micro-batch bound: at most this many new files per trigger
-MAX_FILES_PER_TRIGGER = 10
+#: micro-batch bound: at most this many input bytes per trigger — one
+#: default ``spark.sql.files.maxPartitionBytes`` split. A file larger
+#: than the bound still drains, as a micro-batch of its own.
+MAX_BYTES_PER_TRIGGER = 128 * 1024 * 1024
 
 
 def stream_load(
@@ -42,7 +50,6 @@ def stream_load(
     array_col: str = "fnumbers",
     columns: list[str] | None = None,
     records_key: str = "Records",
-    archive_dir: str | None = None,
     fmt: str = "json",
     row_tag: str = "Record",
     corrupt_col: str | None = None,
@@ -56,14 +63,14 @@ def stream_load(
     step is an identity pass-through when ``array_col`` is absent).
     With ``corrupt_col`` set, quarantined records ride along for the
     sink to count and exclude (the totality contract). Each trigger
-    takes at most :data:`MAX_FILES_PER_TRIGGER` files, so one listing
-    burst cannot produce an executor-memory-sized batch; with
-    ``archive_dir`` set, fully-processed inputs move there."""
+    takes at most :data:`MAX_BYTES_PER_TRIGGER` bytes of new files, so
+    one listing burst cannot produce an executor-memory-sized batch,
+    while a burst of small feeds drains in one. Inputs stay in
+    ``input_dir``; ``pipeline.run_stream_job`` archives them at job end
+    from :func:`committed_input_files`."""
     if fmt not in RECORD_FORMATS:
         raise ValueError(f"unsupported streaming ingest format: {fmt!r}")
-    reader = spark.readStream.option("maxFilesPerTrigger", str(MAX_FILES_PER_TRIGGER))
-    if archive_dir is not None:
-        reader = reader.option("cleanSource", "archive").option("sourceArchiveDir", archive_dir)
+    reader = spark.readStream.option("maxBytesPerTrigger", str(MAX_BYTES_PER_TRIGGER))
     raw = read_records(
         reader, input_dir, fmt, schema, corrupt_col, records_key=records_key, row_tag=row_tag
     )
@@ -72,6 +79,46 @@ def stream_load(
         # append it so the sink can count-and-exclude (totality contract)
         columns = list(columns) + [corrupt_col]
     return flatten_nested(raw, array_col, columns)
+
+
+def committed_input_files(checkpoint_dir: str) -> dict[str, int]:
+    """Every input file a committed micro-batch of the file-stream query
+    checkpointed at ``checkpoint_dir`` read, as ``{local path:
+    modification time in ms}`` — the time the file source listed it at.
+
+    Reads Spark's file-source log (Spark 4.1): ``<ckpt>/sources/0/<n>``
+    per micro-batch, compacted every
+    ``spark.sql.streaming.fileSource.log.compactInterval`` batches into
+    ``<n>.compact``, which repeats every entry up to batch ``n``. Each
+    file is a ``v1`` header line, then one JSON object
+    ``{"path", "timestamp", "batchId"}`` per input. So the latest
+    compact file plus the batch files after it name every input once.
+    Entries of a batch the commit log (``<ckpt>/commits/<n>``) does not
+    hold yet are left out: that batch will replay. A query that never
+    planned a batch has no log and returns ``{}``.
+    ``tests/test_streaming.py`` pins this layout."""
+    log_dir = os.path.join(checkpoint_dir, "sources", "0")
+    commit_dir = os.path.join(checkpoint_dir, "commits")
+    if not os.path.isdir(log_dir) or not os.path.isdir(commit_dir):
+        return {}
+    last_commit = max((int(n) for n in os.listdir(commit_dir) if n.isdigit()), default=-1)
+    logs = {}  # batch id -> file name
+    for name in os.listdir(log_dir):
+        stem = name.removesuffix(".compact")
+        if stem.isdigit():
+            logs[int(stem)] = name
+    first = max((b for b, name in logs.items() if name.endswith(".compact")), default=0)
+    files: dict[str, int] = {}
+    for batch in sorted(b for b in logs if b >= first):
+        with open(os.path.join(log_dir, logs[batch]), encoding="utf-8") as fh:
+            if fh.readline().strip() != "v1":
+                raise ValueError(f"unknown file-source log version in {fh.name}")
+            for line in fh:
+                if line.strip():
+                    entry = json.loads(line)
+                    if entry["batchId"] <= last_commit:
+                        files[unquote(urlparse(entry["path"]).path)] = entry["timestamp"]
+    return files
 
 
 def find_undecodable_files(

@@ -45,25 +45,6 @@ def test_stream_ingest_flatten_counts(spark, tmp_path):
     assert rows[0].__fields__ == TEMPLATE_COLUMNS
 
 
-def test_stream_archival(spark, tmp_path):
-    """cleanSource=archive moves fully-processed inputs (O19 parity)."""
-    in_dir = tmp_path / "in"
-    arch = tmp_path / "archived"
-    in_dir.mkdir()
-    shutil.copy(os.path.join(FIXTURES, "ingest-records.json"), in_dir / "batch0.json")
-
-    flat = stream_load(
-        spark, str(in_dir), MIST_NESTED_SCHEMA, columns=TEMPLATE_COLUMNS, archive_dir=str(arch)
-    )
-    q = write_stream_batches(flat, str(tmp_path / "ckpt"), lambda df, bid: df.count())
-    _drain(q)
-    # Archival is best-effort/asynchronous per the Spark docs: the file must
-    # end up in exactly one of {source dir, archive dir}, never both/neither.
-    in_files = list(in_dir.glob("*.json"))
-    arch_files = list(arch.rglob("*.json"))
-    assert len(in_files) + len(arch_files) == 1
-
-
 def test_await_streams_stops_every_query_on_timeout_and_on_success(spark, tmp_path):
     """A query that does not finish in time raises TimeoutError naming
     the caller, and every query passed in is stopped, the finished one
@@ -662,11 +643,15 @@ def test_stream_ingest_matches_batch(spark, tmp_path, fmt):
     assert sorted(map(key, rows)) == sorted(map(key, batch))
 
 
-def test_stream_load_caps_files_per_trigger(spark, tmp_path):
-    """stream_load bounds each micro-batch at 10 new files (the
-    channel-capacity analogue, main.go:57): 11 small files drain in
-    exactly 2 micro-batches, not 1."""
+def test_stream_load_bounds_bytes_per_trigger(spark, tmp_path, monkeypatch):
+    """stream_load bounds each micro-batch by input bytes
+    (``MAX_BYTES_PER_TRIGGER``, the channel-capacity analogue,
+    main.go:57), not by a file count: 11 small files drain in exactly
+    one micro-batch, and with the bound below one file's size every
+    file still drains, as a micro-batch of its own."""
     from pyspark.sql import types as T
+
+    from data_ingestor_spark.streaming import ingest
 
     in_dir = tmp_path / "in"
     in_dir.mkdir()
@@ -674,14 +659,116 @@ def test_stream_load_caps_files_per_trigger(spark, tmp_path):
         (in_dir / f"feed{i:02d}.csv").write_text(f"user\nu{i}\n")
     schema = T.StructType([T.StructField("user", T.StringType(), True)])
 
-    batches = []
-    q = write_stream_batches(
-        stream_load(spark, str(in_dir), schema, fmt="csv"),
-        str(tmp_path / "ckpt"),
-        lambda df, bid: batches.append((bid, df.count())),
+    def drain(ckpt):
+        batches = []
+        q = write_stream_batches(
+            stream_load(spark, str(in_dir), schema, fmt="csv"),
+            str(tmp_path / ckpt),
+            lambda df, bid: batches.append((bid, df.count())),
+        )
+        _drain(q)
+        return batches
+
+    assert drain("ckpt_default") == [(0, 11)]
+    monkeypatch.setattr(ingest, "MAX_BYTES_PER_TRIGGER", 1)
+    assert drain("ckpt_one_byte") == [(b, 1) for b in range(11)]
+
+
+@pytest.mark.parametrize("fmt", ["json", "xml", "csv"])
+def test_run_stream_job_archives_every_input(spark, tmp_path, fmt):
+    """O19 parity on the live path in every ingest format: after a
+    successful drain, run_stream_job has moved every input into
+    ``archive_dir`` exactly once (the last micro-batch's files too) and
+    the watch dir is empty."""
+    from pyspark.sql import types as T
+
+    from data_ingestor_spark.pipeline import run_stream_job
+
+    in_dir = tmp_path / "in"
+    arch = tmp_path / "archived"
+    in_dir.mkdir()
+    names = [f"feed{i}.{fmt}" for i in range(3)]
+    kw = {}
+    if fmt == "csv":
+        kw = {"schema": T.StructType([T.StructField("user", T.StringType(), True)]),
+              "columns": None}
+    for name in names:
+        if fmt == "csv":
+            (in_dir / name).write_text(f"user\n{name}\n")
+        else:
+            shutil.copy(os.path.join(FIXTURES, f"ingest-records.{fmt}"), in_dir / name)
+
+    res = run_stream_job(
+        spark, str(in_dir), str(tmp_path / "out"), fmt=fmt, archive_dir=str(arch),
+        timeout_s=120, **kw,
     )
-    _drain(q)
-    assert batches == [(0, 10), (1, 1)]
+    # every input was ingested (17 json / 14 xml / 1 csv rows per file) ...
+    assert res.rows_published == 3 * {"json": 17, "xml": 14, "csv": 1}[fmt]
+    # ... and then archived exactly once, the last micro-batch's too
+    assert list(in_dir.iterdir()) == []
+    assert sorted(p.name for p in arch.rglob("*")) == names
+    assert sorted(os.path.basename(p) for p in res.files_archived) == names
+    assert "archived_files=3" in res.report()
+
+
+def test_committed_input_files_reads_the_compacted_file_source_log(spark, tmp_path, monkeypatch):
+    """Pins the Spark-internal file-source log that job-end archiving
+    reads (``<ckpt>/sources/0/<n>`` and ``<n>.compact``, a ``v1`` header
+    then JSON lines): with a compact interval of 2, five one-file
+    micro-batches leave ``.compact`` files in the log, and
+    committed_input_files still names exactly the five inputs. A Spark
+    upgrade that moves or reshapes the log fails here. Then a first
+    run_stream_job without ``archive_dir`` archives nothing, and a
+    re-run over the same checkpoint with no new files archives every
+    input from the log alone. A file written again under an ingested
+    name is skipped by the source, so it is not archived either: it
+    stays in the watch dir, where it can be seen."""
+    from pyspark.sql import types as T
+
+    from data_ingestor_spark.pipeline import run_stream_job
+    from data_ingestor_spark.streaming import committed_input_files, ingest
+
+    in_dir = tmp_path / "in dir"  # a space: log paths are URI-encoded
+    in_dir.mkdir()
+    paths = []
+    for i in range(5):
+        p = in_dir / f"feed{i}.csv"
+        p.write_text(f"user\nu{i}\n")
+        paths.append(str(p))
+    schema = T.StructType([T.StructField("user", T.StringType(), True)])
+    ckpt, arch = tmp_path / "ckpt", tmp_path / "archived"
+
+    def drain(**kw):
+        return run_stream_job(
+            spark, str(in_dir), str(tmp_path / "out"), schema=schema, columns=None,
+            fmt="csv", checkpoint_dir=str(ckpt), timeout_s=120, **kw,
+        )
+
+    key = "spark.sql.streaming.fileSource.log.compactInterval"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    monkeypatch.setattr(ingest, "MAX_BYTES_PER_TRIGGER", 1)
+    try:
+        res = drain()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert res.rows_published == 5 and res.files_archived == []
+    log = sorted(os.listdir(ckpt / "sources" / "0"))
+    assert [n for n in log if not n.startswith(".")] == ["0", "1.compact", "2", "3.compact", "4"]
+    assert sorted(committed_input_files(str(ckpt))) == paths
+
+    res2 = drain(archive_dir=str(arch))
+    assert res2.rows_published == 5  # nothing replayed, nothing new
+    assert sorted(res2.files_archived) == sorted(str(arch / os.path.basename(p)) for p in paths)
+    assert list(in_dir.iterdir()) == []
+
+    shutil.copy(arch / "feed0.csv", in_dir)  # a new modification time
+    res3 = drain(archive_dir=str(arch))
+    assert res3.rows_published == 5 and res3.files_archived == []
+    assert [p.name for p in in_dir.iterdir()] == ["feed0.csv"]
 
 
 def test_stream_xml_quarantines_poison_file(spark, tmp_path):
@@ -719,29 +806,6 @@ def test_stream_xml_quarantines_poison_file(spark, tmp_path):
     assert len(good) >= 2  # plus the clean file's records
     assert bad, "damaged remainder must be quarantined, not dropped"
     assert all(r.user is None or r.user == "broken" for r in bad)
-
-
-def test_stream_xml_archival(spark, tmp_path):
-    """cleanSource=archive moves fully-processed XML inputs (O19 parity
-    on the streaming-XML path)."""
-    in_dir = tmp_path / "in"
-    arch = tmp_path / "archived"
-    in_dir.mkdir()
-    shutil.copy(os.path.join(FIXTURES, "ingest-records.xml"), in_dir / "feed0.xml")
-
-    flat = stream_load(
-        spark,
-        str(in_dir),
-        MIST_NESTED_SCHEMA,
-        columns=TEMPLATE_COLUMNS,
-        fmt="xml",
-        archive_dir=str(arch),
-    )
-    q = write_stream_batches(flat, str(tmp_path / "ckpt"), lambda df, bid: df.count())
-    _drain(q)
-    in_files = list(in_dir.glob("*.xml"))
-    arch_files = list(arch.rglob("*.xml"))
-    assert len(in_files) + len(arch_files) == 1
 
 
 def test_stream_csv_ingest_matches_batch(spark, tmp_path):
@@ -817,25 +881,33 @@ def test_stream_csv_quarantines_bad_typed_cell(spark, tmp_path):
     assert bad[0]["score"] is None
 
 
-def test_stream_csv_archival(spark, tmp_path):
-    """cleanSource=archive moves fully-processed CSV inputs (O19 parity
-    on the streaming-CSV path)."""
+def test_committed_input_files_leaves_out_an_uncommitted_batch(spark, tmp_path, monkeypatch):
+    """A micro-batch whose sink failed is in the file-source log but not
+    in the commit log; its inputs will replay, so they are not named as
+    committed (archiving them would make the replay fail)."""
     from pyspark.sql import types as T
 
-    schema = T.StructType([T.StructField("user", T.StringType(), True)])
-    in_dir = tmp_path / "in"
-    arch = tmp_path / "archived"
-    in_dir.mkdir()
-    (in_dir / "feed0.csv").write_text("user\nalice\nbob\n")
+    from data_ingestor_spark.streaming import committed_input_files, ingest
 
-    flat = stream_load(
-        spark, str(in_dir), schema, fmt="csv", archive_dir=str(arch)
-    )
-    q = write_stream_batches(flat, str(tmp_path / "ckpt"), lambda df, bid: df.count())
-    _drain(q)
-    in_files = list(in_dir.glob("*.csv"))
-    arch_files = list(arch.rglob("*.csv"))
-    assert len(in_files) + len(arch_files) == 1
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    for i in range(2):
+        (in_dir / f"feed{i}.csv").write_text(f"user\nu{i}\n")
+    os.utime(in_dir / "feed0.csv", (1_000_000_000, 1_000_000_000))  # oldest drains first
+    schema = T.StructType([T.StructField("user", T.StringType(), True)])
+    monkeypatch.setattr(ingest, "MAX_BYTES_PER_TRIGGER", 1)
+
+    def fail_second(df, batch_id):
+        if batch_id == 1:
+            raise RuntimeError("sink down")
+
+    ckpt = tmp_path / "ckpt"
+    q = write_stream_batches(stream_load(spark, str(in_dir), schema, fmt="csv"), str(ckpt), fail_second)
+    with pytest.raises(Exception, match="sink down"):
+        q.awaitTermination(120)
+    q.stop()
+    assert sorted(n for n in os.listdir(ckpt / "sources" / "0") if not n.startswith(".")) == ["0", "1"]
+    assert list(committed_input_files(str(ckpt))) == [str(in_dir / "feed0.csv")]
 
 
 def test_observed_stream_quarantine_ledger_no_collect(spark, tmp_path):

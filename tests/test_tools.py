@@ -606,12 +606,18 @@ def test_stream_harness_decisions_have_one_owner():
     only in ``timeseries._drain_to_memory``, ``awaitTermination`` only
     in ``streaming.ingest.await_streams`` and in
     ``stream_with_deadletter``, whose timeout must not be taken for a
-    routable failure."""
+    routable failure. The ingest micro-batch bound lives only in
+    ``stream_load`` (``maxBytesPerTrigger``), and no stream archives
+    through the file source's ``cleanSource``: ``run_stream_job``
+    archives at job end, as the batch job does."""
     import ast
 
-    nanos = _package_sites(
-        lambda n: isinstance(n, ast.Constant) and isinstance(n.value, str) and "nanosAsLong" in n.value
-    )
+    def strings(word):
+        return _package_sites(
+            lambda n: isinstance(n, ast.Constant) and isinstance(n.value, str) and word in n.value
+        )
+
+    nanos = strings("nanosAsLong")
     memory = _package_sites(
         lambda n: isinstance(n, ast.Call)
         and isinstance(n.func, ast.Attribute)
@@ -625,6 +631,8 @@ def test_stream_harness_decisions_have_one_owner():
         ("data_ingestor_spark/streaming/ingest.py", "await_streams"),
         ("data_ingestor_spark/streaming/ingest.py", "stream_with_deadletter"),
     ]
+    assert strings("maxBytesPerTrigger") == [("data_ingestor_spark/streaming/ingest.py", "stream_load")]
+    assert strings("cleanSource") == []
 
 
 def test_ab_bench_requires_old_rev():
