@@ -18,10 +18,11 @@ Engine usage::
 
 For backwards compatibility, invoking with ``--file`` as the first flag
 (no subcommand) behaves as ``load``. ``--table`` is a directory for the
-atomic parquet publish (pass a JDBC URL via config to target a database
-instead); ``--model`` is accepted for flag parity — like the reference,
-it only labels logs (``fileloader-schema.go:137``: carried for logging,
-no dispatch).
+atomic parquet publish (a database target goes through the library's
+``sinks.publish_jdbc_atomic``, not the CLI); ``--config`` holds
+SparkSession settings only; ``--model`` is accepted for flag parity —
+like the reference, it only labels logs (``fileloader-schema.go:137``:
+carried for logging, no dispatch).
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ def _add_load_args(ap: argparse.ArgumentParser) -> None:
     ap.add_argument("--excel", default=None, help="optional Excel export path")
     ap.add_argument("--json", default=None, help="optional JSON export path")
     ap.add_argument("--archive-dir", default=None, help="archive the input here after load")
-    ap.add_argument("--config", default=None, help="engine config YAML (session/JDBC settings)")
+    ap.add_argument("--config", default=None, help="engine config YAML (SparkSession settings)")
 
 
 def _run_load(args: argparse.Namespace) -> int:

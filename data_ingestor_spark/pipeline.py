@@ -207,6 +207,10 @@ def run_stream_job(
     commit-by-rename), ``stream_with_deadletter`` (byte-level poison
     routing) — into the streaming twin of :func:`run_load_job`.
 
+    This is the package's one streaming-ingest drain: ``cli stream``,
+    the ``q_stream_ingest*`` registry keys (so the oracle gate checks
+    this job) and perfbench's ``ingest_stream`` all run it.
+
     Totality, tiered by where the damage lives:
 
     - **record-level** (unclosed XML tag tail, bad typed CSV cell,

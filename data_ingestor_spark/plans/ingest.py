@@ -11,11 +11,13 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_ingestor_spark.operators.flatten import flatten_nested
+from data_ingestor_spark.pipeline import run_stream_job
 from data_ingestor_spark.schemas import MIST_NESTED_SCHEMA, TEMPLATE_COLUMNS
 from data_ingestor_spark.sources import load
 from data_ingestor_spark.plans.registry import load_table, query, scratch_dir
@@ -160,33 +162,24 @@ def q_scan_csv(spark, sf_dir):
     )
 
 
-def _drain_stream_ingest(spark, name, stage, schema, **load_kw):
+def _run_stream_ingest(spark, name, stage, schema, **job_kw):
     """The harness of the ``q_stream_ingest*`` keys: ``stage(in_dir)``
-    fills a fresh watched directory, :func:`streaming.stream_load`
-    (``schema`` and ``load_kw``) scans it under Structured Streaming,
-    a checkpointed foreachBatch appends every micro-batch to parquet
-    staging, and the staging is read back as a batch DataFrame. The
-    work dir is a fresh per-call directory under :func:`scratch_dir`,
-    so a rerun never resumes an earlier run's checkpoint."""
-    import uuid
-
-    from data_ingestor_spark.streaming import await_streams, stream_load, write_stream_batches
-
+    fills a fresh watched directory, :func:`pipeline.run_stream_job`
+    (``schema`` and ``job_kw``) drains it — the job the CLI and
+    ``ingest_stream`` run — and the published ``<target>/data`` is read
+    back as a batch DataFrame without the ``batch_id`` partition
+    column. The work dir is a fresh per-call directory under
+    :func:`scratch_dir`, so a rerun never resumes an earlier run's
+    checkpoint."""
     work = os.path.join(scratch_dir(name), uuid.uuid4().hex[:8])
-    in_dir, out_dir = os.path.join(work, "in"), os.path.join(work, "out")
+    in_dir, target = os.path.join(work, "in"), os.path.join(work, "out")
     stage(in_dir)
-    flat = stream_load(spark, in_dir, schema, **load_kw)
-    q = write_stream_batches(
-        flat,
-        os.path.join(work, "ckpt"),
-        lambda df, bid: df.write.mode("append").parquet(out_dir),
-    )
-    await_streams(name, q)
-    return spark.read.schema(flat.schema).parquet(out_dir)
+    run_stream_job(spark, in_dir, target, schema=schema, **job_kw)
+    return spark.read.parquet(os.path.join(target, "data")).drop("batch_id")
 
 
 def _copy_fixture(path):
-    """``stage`` for :func:`_drain_stream_ingest`: the watched directory
+    """``stage`` for :func:`_run_stream_ingest`: the watched directory
     holds one copy of the fixture file ``path``."""
 
     def stage(in_dir):
@@ -199,17 +192,13 @@ def _copy_fixture(path):
 @query("q_stream_ingest", oracle=_JSON_ORACLE, tags=("streaming", "ingest"))
 def q_stream_ingest(spark, sf_dir):
     """Streaming twin of q_ingest_json (O14 parity): the SAME
-    scan→flatten→project plan executed by Structured Streaming — file
-    source, availableNow trigger, checkpointed foreachBatch — drained
-    into a temp parquet staging dir and returned as a batch DataFrame.
-    Same oracle as the batch path: streaming and batch must agree row
-    for row."""
-    return _drain_stream_ingest(
-        spark,
-        "q_stream_ingest",
-        _copy_fixture(_JSON_FIXTURE),
-        MIST_NESTED_SCHEMA,
-        columns=TEMPLATE_COLUMNS,
+    scan→flatten→project plan drained by ``pipeline.run_stream_job`` —
+    file source, availableNow trigger, checkpointed foreachBatch,
+    exactly-once publish with quarantine split — and the published
+    rows returned as a batch DataFrame. Same oracle as the batch path:
+    streaming and batch must agree row for row."""
+    return _run_stream_ingest(
+        spark, "q_stream_ingest", _copy_fixture(_JSON_FIXTURE), MIST_NESTED_SCHEMA
     )
 
 
@@ -217,18 +206,12 @@ def q_stream_ingest(spark, sf_dir):
 def q_stream_ingest_xml(spark, sf_dir):
     """Streaming twin of q_ingest_xml (the reference's FLAGSHIP live
     path streams XML — fileloader-schema.go:142-197 feeding
-    mapreduce.go:54-105): the same scan→flatten→project plan under
-    Structured Streaming via stream_load(fmt="xml"), drained through a
-    checkpointed foreachBatch into parquet staging and returned as a
-    batch DataFrame. Same golden-literal oracle as the batch XML path:
+    mapreduce.go:54-105): ``pipeline.run_stream_job(fmt="xml")`` drains
+    the fixture, and the published rows come back as a batch
+    DataFrame. Same golden-literal oracle as the batch XML path:
     streaming and batch must agree row for row."""
-    return _drain_stream_ingest(
-        spark,
-        "q_stream_ingest_xml",
-        _copy_fixture(_XML_FIXTURE),
-        MIST_NESTED_SCHEMA,
-        columns=TEMPLATE_COLUMNS,
-        fmt="xml",
+    return _run_stream_ingest(
+        spark, "q_stream_ingest_xml", _copy_fixture(_XML_FIXTURE), MIST_NESTED_SCHEMA, fmt="xml"
     )
 
 
@@ -245,20 +228,21 @@ def q_stream_ingest_xml(spark, sf_dir):
 def q_stream_ingest_csv(spark, sf_dir):
     """Streaming twin of q_scan_csv, completing the live-ingest trio
     (JSON q_stream_ingest, XML q_stream_ingest_xml): lineitem →
-    distributed CSV write → stream_load(fmt="csv") typed scan under
-    Structured Streaming → checkpointed foreachBatch → aggregate. The
-    oracle aggregates the parquet original, so a PASS proves the
-    streaming CSV scan is lossless AND exactly-once (every line lands
-    exactly once — a dropped or doubled micro-batch changes the
-    counts)."""
+    distributed CSV write → ``pipeline.run_stream_job(fmt="csv")``
+    (typed scan under Structured Streaming, exactly-once publish) →
+    aggregate. The oracle aggregates the parquet original, so a PASS
+    proves the streaming CSV scan is lossless AND exactly-once (every
+    line lands exactly once — a dropped or doubled micro-batch changes
+    the counts)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )
-    back = _drain_stream_ingest(
+    back = _run_stream_ingest(
         spark,
         "q_stream_ingest_csv",
         lambda in_dir: li.write.option("header", "true").csv(in_dir),
         li.schema,
+        columns=None,
         fmt="csv",
     )
     return back.groupBy("l_returnflag").agg(

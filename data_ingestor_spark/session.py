@@ -4,9 +4,11 @@ Reference parity: the reference resolves config from a YAML file with
 environment-variable overrides (``config/config.go:38-49`` — viper
 ``AutomaticEnv`` with ``.`` → ``_`` key mapping) into DB-connection and
 runtime (worker count, archive dir) settings. Here the same resolution
-order (defaults < YAML < env) feeds a plain dataclass; Spark runtime
-knobs go to the SparkSession builder instead of a hand-rolled worker
-pool (``mapreduce/mapreduce.go:30-105``).
+order (defaults < YAML < env) feeds a plain dataclass of SparkSession
+settings: Spark's task slots replace the hand-rolled worker pool
+(``mapreduce/mapreduce.go:30-105``), and the archive dir and database
+target are per-job arguments (``cli --archive-dir``;
+``sinks.publish_jdbc_atomic`` for a JDBC target).
 """
 
 from __future__ import annotations
@@ -21,24 +23,13 @@ _ENV_PREFIX = "DIS_"
 
 @dataclass
 class EngineConfig:
-    """Engine configuration (reference ``config.yaml:2-12`` keys, generalized).
-
-    ``jdbc_*`` replaces the reference's DB host/port/user/password/name
-    parts (``config/config.go:17-26``); ``worker_count`` maps to
-    ``RUNTIME.WORKER_COUNT`` (``config.yaml:11``) and becomes the default
-    parallelism hint; ``archive_dir`` maps to ``RUNTIME.FILE_DESTINATION``
-    (``config.yaml:12``).
-    """
+    """SparkSession configuration: the settings :func:`get_session`
+    reads (the reference's ``config.yaml:2-12`` keys minus the ones that
+    are per-job arguments here, see the module docstring)."""
 
     app_name: str = "data_ingestor_spark"
     master: str = "local[*]"
     shuffle_partitions: int = 32
-    worker_count: int = 2
-    archive_dir: str = "archive"
-    jdbc_url: str | None = None
-    jdbc_user: str | None = None
-    jdbc_password: str | None = None
-    jdbc_driver: str = "org.postgresql.Driver"
     extra_spark_conf: dict[str, str] = field(default_factory=dict)
 
     @classmethod

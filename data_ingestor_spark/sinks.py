@@ -46,7 +46,8 @@ import re
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 _IDENT_PART_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_$]*$")
 
@@ -87,8 +88,6 @@ def _quote_col(name: str) -> str:
 def _stringify(df: DataFrame) -> DataFrame:
     """Reference CSV/Excel semantics: every value ``%v``-stringified and
     missing values rendered ``""`` (``fileloader-schema.go:556-563``)."""
-    from pyspark.sql import functions as F
-
     return df.select(
         *[F.coalesce(F.col(c).cast("string"), F.lit("")).alias(c) for c in df.columns]
     )
@@ -301,8 +300,10 @@ def jdbc_stream_sink(
 
     ``stage_batch(batch_df, staging_table)`` materializes the batch
     into a fresh staging table: deployments pass a thin wrapper over
-    ``batch_df.write.jdbc(..., staging_table)`` (parallel, one
-    connection per partition); tests use a driver-side INSERT shim.
+    ``batch_df.write.jdbc(..., _quote_ident(staging_table))`` (parallel,
+    one connection per partition) — the QUOTED name, because the publish
+    quotes it and the database case-folds a raw one (see
+    :func:`publish_jdbc_atomic`); tests use a driver-side INSERT shim.
     Then :func:`publish_stream_batch_staged` commits staging + the
     ``batch_id`` ledger row in ONE server transaction — a replayed
     batch (restart, or full checkpoint loss) rolls back on the
@@ -358,6 +359,9 @@ def publish_jdbc_atomic(
     (the reference's live path sends 1 row per INSERT,
     ``dbtransposer-schema.go:119-142``; batched writes are strictly
     better). Any task failure aborts the job with the target untouched.
+    Spark gets the QUOTED staging name, the one phase 2 uses: a raw
+    name would be case-folded by the database (upper in Derby, lower in
+    Postgres), and phase 2 would then not find the table.
 
     Phase 2 (driver, one transaction): ``INSERT INTO target SELECT``
     + ``DROP`` staging — the O15 atomic publish.
@@ -365,7 +369,9 @@ def publish_jdbc_atomic(
     ``connect`` is a zero-arg callable returning a DBAPI connection for
     phase 2 (e.g. ``psycopg2.connect`` partial); required because the
     JVM JDBC writer cannot span a cross-statement transaction. Returns
-    the published row count.
+    the published row count, from an ``Observation`` on the staging
+    write (as :func:`publish_parquet_atomic` counts), so the staging
+    table is never read back.
     """
     staging = staging_table or f"{target_table}__staging"
     _check_ident(target_table)
@@ -379,11 +385,12 @@ def publish_jdbc_atomic(
         props["user"] = user
     if password is not None:
         props["password"] = password
-    writer.write.mode("overwrite").jdbc(url, staging, properties=props)
-
-    n = df.sparkSession.read.jdbc(url, staging, properties=props).count()
+    rows = Observation()
+    writer.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").jdbc(
+        url, _quote_ident(staging), properties=props
+    )
     publish_staged(connect, staging, target_table, df.columns)
-    return n
+    return rows.get["n"]
 
 
 def publish_parquet_atomic(df: DataFrame, final_dir: str, staging_dir: str | None = None) -> int:
@@ -418,9 +425,6 @@ def publish_parquet_atomic(df: DataFrame, final_dir: str, staging_dir: str | Non
     write: it rides the write's own job, so the publish is one Spark job
     and never re-reads what it wrote.
     """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     staging = staging_dir or final_dir.rstrip("/") + ".__staging__"
     final_parent = os.path.dirname(os.path.abspath(final_dir.rstrip("/"))) or "."
     staging_parent = os.path.dirname(os.path.abspath(staging.rstrip("/"))) or "."

@@ -134,9 +134,12 @@ def read_records(
       last-wins; pinned in ``tests/test_ingest_totality.py``);
     - a stream cannot (no action to attach the error to — and one poison
       file must not kill a long-running query). With ``corrupt_col`` set,
-      a malformed document flows through as ONE row whose record fields
-      are NULL and whose ``corrupt_col`` carries the raw text — countable
-      and routable by the sink (a plain ``explode`` would erase it).
+      a document that cannot yield the records array flows through as
+      ONE row whose record fields are NULL and whose ``corrupt_col``
+      carries the raw text of a malformed document, or the batch check's
+      cause for a well-formed one whose key is absent or null —
+      countable and routable by the sink (a plain ``explode`` would
+      erase it). An empty records array yields no row at all.
     """
     if fmt == "json":
         reader = reader.option("multiLine", "true")
@@ -162,14 +165,22 @@ def read_records(
     if not df.isStreaming:
         _check_documents(df, path, records_key, doc_corrupt if schema is not None else None)
     elif corrupt_col is not None:
-        # explode_outer keeps the malformed document's row; the filter
-        # removes only the spurious null row an EMPTY-but-well-formed
-        # Records array would add
+        # explode_outer keeps the row of a document with no records
+        # array, quarantined with its cause; the filter removes only the
+        # spurious null row an EMPTY-but-well-formed Records array adds
+        records = F.col(records_key)
+        cause = F.when(records.isNull(), F.lit(_null_records_cause(records_key)))
         exploded = df.select(
-            F.explode_outer(F.col(records_key)).alias("_rec"), F.col(corrupt_col)
+            F.explode_outer(records).alias("_rec"),
+            F.coalesce(F.col(corrupt_col), cause).alias(corrupt_col),
         ).filter(F.col("_rec").isNotNull() | F.col(corrupt_col).isNotNull())
         return exploded.select("_rec.*", corrupt_col)
     return df.select(F.explode(F.col(records_key)).alias("_rec")).select("_rec.*")
+
+
+def _null_records_cause(records_key: str) -> str:
+    """Why a well-formed JSON document yields no records array."""
+    return f"records key {records_key!r} absent or null"
 
 
 def _check_documents(doc: DataFrame, path: str, records_key: str, corrupt_col: str | None) -> None:
@@ -186,7 +197,7 @@ def _check_documents(doc: DataFrame, path: str, records_key: str, corrupt_col: s
         cause = (
             f"unparseable document (corrupt prefix: {raw[:120]!r})"
             if raw is not None
-            else f"records key {records_key!r} absent or null"
+            else _null_records_cause(records_key)
         )
         raise ValueError(f"malformed JSON document {path!r}: {cause}")
 

@@ -121,11 +121,9 @@ def committed_input_files(checkpoint_dir: str) -> dict[str, int]:
     return files
 
 
-def find_undecodable_files(
-    spark: SparkSession, input_dir: str, encoding: str = "utf-8"
-) -> list[str]:
+def find_undecodable_files(spark: SparkSession, input_dir: str) -> list[str]:
     """Distributed byte-level decodability probe: return the paths under
-    ``input_dir`` whose bytes do NOT decode as ``encoding``.
+    ``input_dir`` whose bytes do NOT decode as UTF-8.
 
     Why this exists: the PERMISSIVE corrupt-column quarantine catches
     RECORD-level damage, but stream-level damage — invalid byte
@@ -145,7 +143,7 @@ def find_undecodable_files(
             bad = []
             for path, content in zip(pdf["path"], pdf["content"]):
                 try:
-                    bytes(content).decode(encoding)
+                    bytes(content).decode("utf-8")
                 except (UnicodeDecodeError, ValueError):
                     bad.append(path)
             yield pd.DataFrame({"path": bad}, dtype="object")
@@ -154,14 +152,17 @@ def find_undecodable_files(
     return [r.path for r in scan.mapInPandas(probe, "path string").collect()]
 
 
+#: restarts :func:`stream_with_deadletter` allows, each after routing at
+#: least one poison file
+MAX_RESTARTS = 3
+
+
 def stream_with_deadletter(
     spark: SparkSession,
     input_dir: str,
     deadletter_dir: str,
     start_query,
-    max_restarts: int = 3,
     timeout_s: float = 300.0,
-    encoding: str = "utf-8",
 ) -> dict:
     """Run a streaming ingest to completion, routing byte-level poison
     files to ``deadletter_dir`` and restarting on failure — the
@@ -170,13 +171,15 @@ def stream_with_deadletter(
     docstring prescribes).
 
     ``start_query() -> StreamingQuery`` (re)starts the query — it must
-    use a fixed checkpoint dir so restarts resume exactly-once. On
-    ``StreamingQueryException`` the driver probes ``input_dir`` with
+    use a fixed checkpoint dir so restarts resume exactly-once. Each
+    start is waited on through :func:`await_streams`. On a query
+    failure the driver probes ``input_dir`` with
     :func:`find_undecodable_files`, moves each hit into
     ``deadletter_dir`` (preserved byte-for-byte for forensics — moved,
-    never deleted), and restarts. A failure with NOTHING to route is
-    re-raised unchanged: restarts are bounded and only ever follow a
-    concrete routed cause, so a genuine bug cannot loop.
+    never deleted), and restarts, at most :data:`MAX_RESTARTS` times. A
+    failure with NOTHING to route is re-raised unchanged, so a genuine
+    bug cannot loop; a ``TimeoutError`` is re-raised at once and never
+    probed, since a stream that ran out of time did not fail.
 
     ``spark.sql.files.ignoreMissingFiles`` is enabled for the retried
     batch (and restored after): the failed micro-batch's offset log may
@@ -196,18 +199,14 @@ def stream_with_deadletter(
         while True:
             q = start_query()
             try:
-                if not q.awaitTermination(timeout_s):
-                    # a timeout is NOT a routable failure: raise it
-                    # outside the except below so it never triggers a
-                    # probe/restart cycle
-                    q.stop()
-                    return_timeout = True
-                else:
-                    return {"routed": routed, "restarts": restarts}
-            except Exception as exc:
-                if restarts >= max_restarts:
+                await_streams("stream_with_deadletter", q, timeout_s=timeout_s)
+                return {"routed": routed, "restarts": restarts}
+            except TimeoutError:
+                raise
+            except Exception:
+                if restarts >= MAX_RESTARTS:
                     raise
-                bad = find_undecodable_files(spark, input_dir, encoding=encoding)
+                bad = find_undecodable_files(spark, input_dir)
                 if not bad:
                     raise  # nothing routable: not a byte-level poison failure
                 for uri in bad:
@@ -218,24 +217,19 @@ def stream_with_deadletter(
                     routed.append(uri)
                 restarts += 1
                 spark.conf.set(conf_key, "true")
-                continue
-            if return_timeout:
-                raise TimeoutError(f"stream did not finish within {timeout_s}s")
     finally:
         spark.conf.set(conf_key, old_conf)
 
 
 def await_streams(name: str, *queries, timeout_s: float = 300.0) -> None:
     """Wait for every query in ``queries`` to terminate, then stop them
-    all — the one drain of every run-to-the-end stream in the package.
+    all — the one wait on a stream in the package.
 
     A query still running after ``timeout_s`` seconds raises
     ``TimeoutError`` naming ``name``; a query that failed re-raises its
     ``StreamingQueryException``. Either way, and on success, every query
     is stopped on the way out (stopping a finished query does nothing),
-    so none outlives the call. :func:`stream_with_deadletter` keeps its
-    own loop: there a timeout must not be taken for a routable failure.
-    """
+    so none outlives the call."""
     try:
         for q in queries:
             if not q.awaitTermination(timeout_s):
@@ -249,16 +243,16 @@ def write_stream_batches(
     df: DataFrame,
     checkpoint_dir: str,
     batch_fn,
-    trigger_available_now: bool = True,
     output_mode: str | None = None,
 ):
-    """Run a streaming plan through ``foreachBatch`` with exactly-once
-    checkpointing. ``batch_fn(batch_df, batch_id)`` is the sink body —
-    e.g. ``sinks.publish_jdbc_atomic`` per micro-batch, giving the
-    reference's all-or-nothing semantics at micro-batch granularity.
-
-    ``trigger_available_now=True`` drains everything currently in the
-    source then stops — the batch-job parity mode (and what tests use).
+    """Start a streaming plan through ``foreachBatch`` with exactly-once
+    checkpointing and an ``availableNow`` trigger: the query drains
+    everything currently in the source, then stops — the batch-job
+    parity mode every caller runs, waited on through
+    :func:`await_streams`. ``batch_fn(batch_df, batch_id)`` is the sink
+    body — e.g. :func:`idempotent_batch_publish` in
+    ``pipeline.run_stream_job``, or ``sinks.jdbc_stream_sink``, giving
+    the reference's all-or-nothing semantics at micro-batch granularity.
 
     ``output_mode``: for watermarked aggregations note that ``append``
     (the default) only emits windows the watermark has closed — windows
@@ -268,9 +262,7 @@ def write_stream_batches(
     writer = df.writeStream.option("checkpointLocation", checkpoint_dir).foreachBatch(batch_fn)
     if output_mode is not None:
         writer = writer.outputMode(output_mode)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def idempotent_batch_publish(target_dir: str):

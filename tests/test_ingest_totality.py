@@ -398,6 +398,37 @@ def test_run_stream_job_csv_format_quarantine(spark, tmp_path):
     assert q.filter(q["_corrupt_record"].contains("BROKEN")).count() == 1
 
 
+def test_run_stream_job_quarantines_a_document_without_records(spark, tmp_path):
+    """A well-formed JSON document whose records key is absent or null
+    yields no records: the batch load raises for it, and the streaming
+    job quarantines it with the same cause instead of archiving it
+    unpublished. An empty records array is not damage: it yields no
+    row and quarantines nothing."""
+    from data_ingestor_spark.pipeline import run_stream_job
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "good.json").write_text('{"Records": [{"user": "a", "fnumbers": []}]}')
+    (in_dir / "wrong_key.json").write_text('{"Rekords": [{"user": "b"}]}')
+    (in_dir / "null.json").write_text('{"Records": null}')
+    (in_dir / "empty.json").write_text('{"Records": []}')
+
+    res = run_stream_job(
+        spark,
+        str(in_dir),
+        str(tmp_path / "out"),
+        archive_dir=str(tmp_path / "archive"),
+        timeout_s=120,
+    )
+    assert (res.rows_published, res.rows_quarantined, len(res.files_archived)) == (1, 2, 4)
+    q = spark.read.parquet(str(tmp_path / "out" / "quarantine"))
+    assert [r.user for r in q.collect()] == [None, None]
+    assert [r._corrupt_record for r in q.collect()] == ["records key 'Records' absent or null"] * 2
+    for name in ("wrong_key.json", "null.json"):
+        with pytest.raises(ValueError, match="'Records' absent or null"):
+            load(spark, str(tmp_path / "archive" / name), schema=MIST_NESTED_SCHEMA)
+
+
 def test_streaming_quarantine_ledger_matches_planted(spark, tmp_path):
     """Streaming twin of the sweep: JSON + XML directories each carry
     one planted poison file; the per-batch quarantine ledger (counted

@@ -73,6 +73,76 @@ def test_publish_parquet_counts_from_the_write(spark, tmp_path):
     assert n == spark.read.parquet(final).count() == 1000
 
 
+class _JvmConnection:
+    """DBAPI connection over a JVM JDBC connection (py4j), with just
+    what ``sinks.publish_staged`` and this test use: ``cursor()``
+    returns the connection, ``execute`` runs one statement, and
+    ``query`` returns every row as a tuple."""
+
+    def __init__(self, jvm, url):
+        self._conn = jvm.java.sql.DriverManager.getConnection(url)
+        self._conn.setAutoCommit(False)
+
+    def cursor(self):
+        return self
+
+    def execute(self, sql):
+        self._conn.createStatement().execute(sql)
+
+    def query(self, sql):
+        rs = self._conn.createStatement().executeQuery(sql)
+        width = rs.getMetaData().getColumnCount()
+        rows = []
+        while rs.next():
+            rows.append(tuple(rs.getObject(i + 1) for i in range(width)))
+        return rows
+
+    def commit(self):
+        self._conn.commit()
+
+    def rollback(self):
+        self._conn.rollback()
+
+    def close(self):
+        self._conn.rollback()  # DBAPI: closing discards uncommitted work
+        self._conn.close()
+
+
+def test_publish_jdbc_atomic_derby_end_to_end(spark, tmp_path):
+    """Both phases of the JDBC publish against a real database: Spark
+    stages the rows into in-memory Derby (its jars ship with pyspark),
+    and the driver-side transaction moves them into a mixed-case target
+    (the reference's ``-table SFLW_RECS``) and drops the staging table.
+    Phase 1 must create the staging table under the quoted name phase 2
+    uses, or the database case-folds it and phase 2 does not find it."""
+    import uuid
+
+    jvm = spark._jvm
+    jvm.java.lang.System.setProperty("derby.stream.error.file", str(tmp_path / "derby.log"))
+    url = f"jdbc:derby:memory:publish_{uuid.uuid4().hex};create=true"
+    setup = _JvmConnection(jvm, url)
+    setup.execute('CREATE TABLE "SFLW_RECS" ("user" VARCHAR(16), "n" BIGINT)')
+    setup.commit()
+    df = spark.createDataFrame([("alice", 1), ("bob", 2), ("carol", 3)], "user string, n bigint")
+
+    n = sinks.publish_jdbc_atomic(
+        df,
+        url,
+        "SFLW_RECS",
+        driver="org.apache.derby.iapi.jdbc.AutoloadedDriver",
+        num_partitions=2,
+        connect=lambda: _JvmConnection(jvm, url),
+    )
+    assert n == 3
+    assert sorted(setup.query('SELECT "user", "n" FROM "SFLW_RECS"')) == [
+        ("alice", 1), ("bob", 2), ("carol", 3)
+    ]
+    assert setup.query("SELECT TABLENAME FROM SYS.SYSTABLES WHERE TABLETYPE = 'T'") == [
+        ("SFLW_RECS",)
+    ]
+    setup.close()
+
+
 def test_export_excel_roundtrip(flat_df, tmp_path):
     from data_ingestor_spark.xlsx import read_rows
 

@@ -110,7 +110,6 @@ def test_tumbling_counts_batch_streaming_equivalence(spark, tmp_path):
         tumbling_counts(s_events, watermark="1 day"),
         str(tmp_path / "ckpt"),
         lambda df, bid: got.extend(df.collect()),
-        trigger_available_now=True,
         output_mode="update",
     )
     _drain(q)

@@ -604,9 +604,11 @@ def test_stream_harness_decisions_have_one_owner():
     stream keys used to carry cannot grow back: ``nanosAsLong`` only in
     ``registry.raw_events`` (which restores it), ``format("memory")``
     only in ``timeseries._drain_to_memory``, ``awaitTermination`` only
-    in ``streaming.ingest.await_streams`` and in
-    ``stream_with_deadletter``, whose timeout must not be taken for a
-    routable failure. The ingest micro-batch bound lives only in
+    in ``streaming.ingest.await_streams`` (``stream_with_deadletter``
+    waits through it too). The live-ingest keys in ``plans/ingest.py``
+    drain through ``pipeline.run_stream_job``, so no ``foreachBatch``
+    drain (``write_stream_batches`` or a direct ``foreachBatch``) may
+    come back there. The ingest micro-batch bound lives only in
     ``stream_load`` (``maxBytesPerTrigger``), and no stream archives
     through the file source's ``cleanSource``: ``run_stream_job``
     archives at job end, as the batch job does."""
@@ -627,10 +629,18 @@ def test_stream_harness_decisions_have_one_owner():
     waits = _package_sites(lambda n: isinstance(n, ast.Attribute) and n.attr == "awaitTermination")
     assert nanos == [("data_ingestor_spark/plans/registry.py", "raw_events")]
     assert memory == [("data_ingestor_spark/plans/timeseries.py", "_drain_to_memory")]
-    assert sorted(waits) == [
-        ("data_ingestor_spark/streaming/ingest.py", "await_streams"),
-        ("data_ingestor_spark/streaming/ingest.py", "stream_with_deadletter"),
+    assert waits == [("data_ingestor_spark/streaming/ingest.py", "await_streams")]
+    drain = "write_stream_batches"
+    ingest_drains = [
+        site
+        for site in _package_sites(
+            lambda n: (isinstance(n, ast.Attribute) and n.attr in ("foreachBatch", drain))
+            or (isinstance(n, ast.Name) and n.id == drain)
+            or (isinstance(n, ast.alias) and n.name == drain)
+        )
+        if site[0] == "data_ingestor_spark/plans/ingest.py"
     ]
+    assert ingest_drains == []
     assert strings("maxBytesPerTrigger") == [("data_ingestor_spark/streaming/ingest.py", "stream_load")]
     assert strings("cleanSource") == []
 
