@@ -11,6 +11,11 @@ Engine usage::
         [--csv out.csv] [--excel out.xlsx] [--json out.json] \\
         [--archive-dir archive/] [--config config.yaml]
 
+    python -m data_ingestor_spark.cli stream --input-dir feeds/ --table out_dir \\
+        [--format json|xml|csv] [--row-tag Record] [--archive-dir archive/] \\
+        [--deadletter-dir poison/] [--checkpoint-dir ckpt/] [--timeout 300] \\
+        [--config config.yaml]
+
     python -m data_ingestor_spark.cli query q_tpch_q1 \\
         [--sf-dir /root/testdata/sf0.01] [--limit 20] [--out dir_or_.csv]
 

@@ -3,49 +3,20 @@
 The reference keeps mutex-guarded success/error counters incremented per
 record by the worker pool (``util/utils.go:10-40``; incremented at
 ``mapreduce/mapreduce.go:46,49``; reported at ``main.go:136-137``). The
-Spark-native equivalents:
+Spark-native equivalents are declarative counts via ``df.observe``: no
+Python in the row path, and the metrics ride the job that runs anyway.
 
-- :class:`IngestCounter` — ``LongAccumulator``-backed counters updated
-  task-side, readable on the driver. Used by imperative sink paths
-  (``foreachPartition``-style loads).
-- :func:`observed` — declarative per-batch metrics via ``df.observe``:
-  no Python in the row path, metrics ride the existing job. Preferred
-  for DataFrame pipelines; works in Structured Streaming too (metrics
-  surface per micro-batch through ``QueryProgressEvent``).
+- :func:`observed` — a batch plan's counts, read from an ``Observation``
+  after its action (``pipeline.run_load_job``);
+- :func:`observed_stream` — per-micro-batch counts of a streaming plan,
+  surfaced through ``QueryProgressEvent`` (``pipeline.run_stream_job``);
+  :func:`stream_metric_totals` sums a finished query's ledger.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-class IngestCounter:
-    """Accumulator-backed success/error counters (parity: ``util/utils.go:
-    10-40``). Safe to update from tasks; read on the driver after actions."""
-
-    def __init__(self, spark: SparkSession):
-        sc = spark.sparkContext
-        self._succeeded = sc.accumulator(0)
-        self._errors = sc.accumulator(0)
-
-    def increment_succeeded(self, n: int = 1) -> None:
-        self._succeeded.add(n)
-
-    def increment_errors(self, n: int = 1) -> None:
-        self._errors.add(n)
-
-    @property
-    def succeeded(self) -> int:
-        return self._succeeded.value
-
-    @property
-    def errors(self) -> int:
-        return self._errors.value
-
-    def report(self) -> str:
-        """Job-end summary line (parity: ``main.go:136-137``)."""
-        return f"records succeeded={self.succeeded} errors={self.errors}"
 
 
 def _ingest_counters(error_condition: str | None) -> list:
@@ -71,8 +42,8 @@ def observed(
     (e.g. ``"user IS NULL"``); rows matching it count as errors, the rest
     as succeeded. Returns ``(df, observation)``: metrics are collected
     during whatever action runs the plan (no extra job) and read from
-    ``observation.get`` afterwards — the declarative twin of
-    :class:`IngestCounter` (reference ``main.go:136-137`` reporting).
+    ``observation.get`` afterwards (reference ``main.go:136-137``
+    reporting).
     """
     from pyspark.sql import Observation
 

@@ -25,6 +25,7 @@ reference).
 
 from __future__ import annotations
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
@@ -195,9 +196,6 @@ def run_stream_job(
     deadletter_dir: str | None = None,
     checkpoint_dir: str | None = None,
     timeout_s: float = 300.0,
-    enrich_dim=None,
-    enrich_on: str | None = None,
-    enrich_how: str = "left",
 ) -> StreamJobResult:
     """The reference's flagship LIVE lifecycle in one call: watch
     ``input_dir``, scan→flatten→project each arriving file, publish
@@ -235,23 +233,10 @@ def run_stream_job(
     (ADVICE r9; bounded by ``streaming.ingest.MAX_BYTES_PER_TRIGGER``,
     so the cache is micro-batch-sized, not input-sized).
 
-    **Enrich while loading** (``enrich_dim`` + ``enrich_on``): an
-    optional stream⋈static dimension join applied to each micro-batch's
-    CLEAN rows before publish — the one-call form of the pattern
-    ``q_stream_static_join`` proves as an operator (VERDICT r10
-    directive #6). The dim is broadcast once (no shuffle of the stream
-    side, no streaming state — safe on unbounded input); quarantined
-    rows are published UN-enriched, keeping the raw parse shape (their
-    join keys may not even have parsed). ``enrich_how`` defaults to
-    ``left`` so enrichment can never drop a clean record silently — an
-    unmatched row keeps NULL dim columns; pass ``inner`` to make the
-    dim a gate. Replays stay exactly-once: enrichment is deterministic
-    per batch, and the publish path is unchanged.
-
     At 100 TB: every per-file/per-record step (scan, parse, flatten,
-    split, enrich, parquet write) runs on executors; the driver only
-    renames batch directories, moves the archived inputs at job end
-    and, on a poison failure, moves the (tiny) routed file list.
+    split, parquet write) runs on executors; the driver only renames
+    batch directories, moves the archived inputs at job end and, on a
+    poison failure, moves the (tiny) routed file list.
 
     **Archive** (``archive_dir``): after the stream ends successfully,
     every input the checkpoint's file-source log names
@@ -263,10 +248,8 @@ def run_stream_job(
     rewritten after its batch committed stays. A failed stream archives
     nothing.
     """
-    import os as _os
-
-    from pyspark.sql import functions as _F
-
+    # looked up on the package at call time, so a caller that patches
+    # the package's names (a tracer) sees this job call them
     from data_ingestor_spark.streaming import (
         await_streams,
         committed_input_files,
@@ -276,54 +259,20 @@ def run_stream_job(
         write_stream_batches,
     )
 
-    from data_ingestor_spark.streaming.joins import enrich_with_static
-
-    if enrich_dim is not None and not enrich_on:
-        raise ValueError("enrich_dim requires enrich_on (the join key column)")
-    if enrich_on and enrich_dim is None:
-        # the inverse misuse must not be a silent no-op that publishes
-        # UN-enriched data (code-review finding)
-        raise ValueError("enrich_on requires enrich_dim (the dimension relation)")
-    if enrich_dim is None and enrich_how != "left":
-        # a non-default enrich_how with NO dim is the same misuse class
-        # as enrich_on-without-dim: the caller believes enrichment is
-        # configured, and silence would publish un-enriched data
-        # (ADVICE r11)
-        raise ValueError(
-            f"enrich_how={enrich_how!r} has no effect without enrich_dim; "
-            "pass the dimension relation (and enrich_on) to enrich"
-        )
-    if enrich_dim is not None and enrich_how not in ("left", "inner"):
-        # outer joins re-emit the dim's unmatched rows in EVERY
-        # micro-batch under a fresh batch_id — idempotent publish
-        # commits them again each time, corrupting the exactly-once
-        # counts with repeated dim-only rows (code-review finding)
-        raise ValueError(
-            f"enrich_how must be 'left' or 'inner', got {enrich_how!r}: "
-            "outer joins would republish unmatched dim rows every "
-            "micro-batch, breaking exactly-once counts"
-        )
-
     corrupt = "_corrupt_record"
-    data_dir = _os.path.join(target_dir, "data")
-    quarantine_dir = _os.path.join(target_dir, "quarantine")
-    ckpt = checkpoint_dir or _os.path.join(target_dir, "_checkpoint")
+    data_dir = os.path.join(target_dir, "data")
+    quarantine_dir = os.path.join(target_dir, "quarantine")
+    ckpt = checkpoint_dir or os.path.join(target_dir, "_checkpoint")
     publish_clean = idempotent_batch_publish(data_dir)
     publish_quarantine = idempotent_batch_publish(quarantine_dir)
-    dim_b = _F.broadcast(enrich_dim) if enrich_dim is not None else None
 
     out_schema: T.StructType | None = None
 
     def batch_fn(batch_df, batch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
-            clean = batch_df.filter(_F.col(corrupt).isNull()).drop(corrupt)
-            if dim_b is not None:
-                clean = enrich_with_static(clean, dim_b, on=enrich_on, how=enrich_how)
-            publish_clean(clean, batch_id)
-            publish_quarantine(
-                batch_df.filter(_F.col(corrupt).isNotNull()), batch_id
-            )
+            publish_clean(batch_df.filter(F.col(corrupt).isNull()).drop(corrupt), batch_id)
+            publish_quarantine(batch_df.filter(F.col(corrupt).isNotNull()), batch_id)
         finally:
             batch_df.unpersist()
 
@@ -361,26 +310,17 @@ def run_stream_job(
         for path, listed_ms in committed_input_files(ckpt).items():
             # the listed modification time tells the committed file from
             # a later one written to the same path, which the source skips
-            if _os.path.isfile(path) and _os.stat(path).st_mtime_ns // 1_000_000 == listed_ms:
+            if os.path.isfile(path) and os.stat(path).st_mtime_ns // 1_000_000 == listed_ms:
                 archived.append(sinks.archive_input(path, archive_dir))
 
     # exact job-end counts from the published data itself (explicit
     # schemas: a quarantine dir whose batches were all empty has no
     # footer to infer from)
     clean_schema = T.StructType([f for f in out_schema.fields if f.name != corrupt])
-    if dim_b is not None:
-        # the published clean schema carries the dim columns; derive it
-        # by running the SAME join over an empty batch (no data moved)
-        clean_schema = enrich_with_static(
-            spark.createDataFrame([], clean_schema),
-            dim_b,
-            on=enrich_on,
-            how=enrich_how,
-        ).schema
 
     def _count(path: str, sch: T.StructType) -> int:
         # an input with no micro-batches never created the sink dir
-        if not _os.path.isdir(path):
+        if not os.path.isdir(path):
             return 0
         return spark.read.schema(sch).parquet(path).count()
 

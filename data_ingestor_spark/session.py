@@ -19,6 +19,8 @@ from dataclasses import dataclass, field, fields
 from pyspark.sql import SparkSession
 
 _ENV_PREFIX = "DIS_"
+#: the field types an env var can set, with their conversion
+_ENV_TYPES = {"str": str, "int": int}
 
 
 @dataclass
@@ -34,23 +36,36 @@ class EngineConfig:
 
     @classmethod
     def load(cls, yaml_path: str | None = None) -> "EngineConfig":
-        """Defaults < YAML file < ``DIS_*`` env vars (viper-style override)."""
+        """Defaults < YAML file < ``DIS_*`` env vars (viper-style override).
+
+        A YAML key that names no field raises ``ValueError`` (a stale or
+        misspelled key would otherwise run silently with the default).
+        Env vars set the scalar fields only, ``int`` fields converted; a
+        ``DIS_*`` var naming the ``extra_spark_conf`` mapping raises
+        ``ValueError``: set it in the YAML file."""
         values: dict = {}
+        known = {f_.name: f_.type for f_ in fields(cls)}
         if yaml_path and os.path.exists(yaml_path):
             import yaml
 
             with open(yaml_path) as f:
                 raw = yaml.safe_load(f) or {}
             values.update({k.lower(): v for k, v in raw.items()})
-        for f_ in fields(cls):
-            env_key = _ENV_PREFIX + f_.name.upper()
-            if env_key in os.environ:
-                raw_v: object = os.environ[env_key]
-                if f_.type in ("int", int):
-                    raw_v = int(raw_v)  # type: ignore[arg-type]
-                values[f_.name] = raw_v
-        known = {f_.name for f_ in fields(cls)}
-        return cls(**{k: v for k, v in values.items() if k in known})
+            unknown = sorted(set(values) - set(known))
+            if unknown:
+                raise ValueError(
+                    f"unknown config key(s) {unknown} in {yaml_path!r}; known keys: {sorted(known)}"
+                )
+        for name, type_ in known.items():
+            env_key = _ENV_PREFIX + name.upper()
+            if env_key not in os.environ:
+                continue
+            if type_ not in _ENV_TYPES:
+                raise ValueError(
+                    f"{env_key} cannot set {name!r} ({type_}); set it in the YAML config file"
+                )
+            values[name] = _ENV_TYPES[type_](os.environ[env_key])
+        return cls(**values)
 
 
 def get_session(config: EngineConfig | None = None) -> SparkSession:

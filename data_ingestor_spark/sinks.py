@@ -154,8 +154,9 @@ def export_json(df: DataFrame, path: str, array: bool = False) -> None:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def export_excel(df: DataFrame, path: str, sheet: str = "Sheet1") -> None:
-    """Excel export (O17): header row + stringified cell grid on ``sheet``.
+def export_excel(df: DataFrame, path: str) -> None:
+    """Excel export (O17): header row + stringified cell grid on
+    ``Sheet1``, the reference's sheet.
 
     Driver-side materialization — mirrors the reference, which holds the
     full record slice in memory for this export (``fileloader-schema.go:
@@ -168,7 +169,7 @@ def export_excel(df: DataFrame, path: str, sheet: str = "Sheet1") -> None:
     for row in out.toLocalIterator():
         grid.append(list(row))
     os.makedirs(os.path.dirname(os.path.abspath(path)) or ".", exist_ok=True)
-    write_sheet(path, grid, sheet=sheet)
+    write_sheet(path, grid)
 
 
 def build_insert_select(staging: str, target: str, columns: list[str]) -> list[str]:
@@ -290,7 +291,6 @@ def jdbc_stream_sink(
     columns: list[str],
     stage_batch,
     ledger_table: str = "__stream_batches",
-    staging_prefix: str = "stream_batch",
 ):
     """Build a ``foreachBatch`` body that loads every streaming
     micro-batch into a JDBC target exactly-once — the one-call form of
@@ -299,7 +299,8 @@ def jdbc_stream_sink(
     ``mapreduce.go:54-105`` + ``dbtransposer.go:290-364``).
 
     ``stage_batch(batch_df, staging_table)`` materializes the batch
-    into a fresh staging table: deployments pass a thin wrapper over
+    into a fresh staging table, ``stream_batch_<batch_id>__staging``:
+    deployments pass a thin wrapper over
     ``batch_df.write.jdbc(..., _quote_ident(staging_table))`` (parallel,
     one connection per partition) — the QUOTED name, because the publish
     quotes it and the database case-folds a raw one (see
@@ -319,8 +320,7 @@ def jdbc_stream_sink(
     _check_ident(ledger_table)
 
     def _sink(batch_df, batch_id: int) -> None:
-        staging = f"{staging_prefix}_{int(batch_id)}__staging"
-        _check_ident(staging)
+        staging = f"stream_batch_{int(batch_id)}__staging"
         stage_batch(batch_df, staging)
         committed = publish_stream_batch_staged(
             connect, staging, target, columns, batch_id, ledger_table=ledger_table
@@ -347,18 +347,17 @@ def publish_jdbc_atomic(
     user: str | None = None,
     password: str | None = None,
     driver: str = "org.postgresql.Driver",
-    staging_table: str | None = None,
-    batchsize: int = 1000,
-    num_partitions: int | None = None,
     connect=None,
 ) -> int:
     """Load ``df`` into ``target_table`` with all-or-nothing visibility.
 
-    Phase 1 (parallel): ``df.write.jdbc`` into a fresh staging table —
-    one connection per partition, multi-row batches of ``batchsize``
-    (the reference's live path sends 1 row per INSERT,
-    ``dbtransposer-schema.go:119-142``; batched writes are strictly
-    better). Any task failure aborts the job with the target untouched.
+    Phase 1 (parallel): ``df.write.jdbc`` into the fresh staging table
+    ``<target_table>__staging`` — one connection per partition of
+    ``df`` (repartition before calling to change the parallelism),
+    multi-row batches of Spark's default 1000 rows (the reference's live
+    path sends 1 row per INSERT, ``dbtransposer-schema.go:119-142``;
+    batched writes are strictly better). Any task failure aborts the job
+    with the target untouched.
     Spark gets the QUOTED staging name, the one phase 2 uses: a raw
     name would be case-folded by the database (upper in Derby, lower in
     Postgres), and phase 2 would then not find the table.
@@ -373,35 +372,32 @@ def publish_jdbc_atomic(
     write (as :func:`publish_parquet_atomic` counts), so the staging
     table is never read back.
     """
-    staging = staging_table or f"{target_table}__staging"
-    _check_ident(target_table)
-    _check_ident(staging)
+    staging = f"{_check_ident(target_table)}__staging"
     if connect is None:
         raise ValueError("publish_jdbc_atomic requires `connect` for the atomic publish phase")
 
-    writer = df if num_partitions is None else df.repartition(num_partitions)
-    props = {"driver": driver, "batchsize": str(batchsize)}
+    props = {"driver": driver}
     if user is not None:
         props["user"] = user
     if password is not None:
         props["password"] = password
     rows = Observation()
-    writer.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").jdbc(
+    df.observe(rows, F.count(F.lit(1)).alias("n")).write.mode("overwrite").jdbc(
         url, _quote_ident(staging), properties=props
     )
     publish_staged(connect, staging, target_table, df.columns)
     return rows.get["n"]
 
 
-def publish_parquet_atomic(df: DataFrame, final_dir: str, staging_dir: str | None = None) -> int:
+def publish_parquet_atomic(df: DataFrame, final_dir: str) -> int:
     """All-or-nothing parquet publish (O15 semantics for file targets).
 
-    Writes to a staging directory first — any task failure leaves the
-    final path untouched (Spark's own output commit protocol already
-    guarantees no partial files *within* the staging write) — then
-    promotes staging → final via directory renames on the driver:
-    the file-sink equivalent of the reference's commit-every/
-    rollback-every reduce (``dbtransposer.go:290-364``).
+    Writes to the staging directory ``<final_dir>.__staging__`` first —
+    any task failure leaves the final path untouched (Spark's own output
+    commit protocol already guarantees no partial files *within* the
+    staging write) — then promotes staging → final via directory renames
+    on the driver: the file-sink equivalent of the reference's
+    commit-every/rollback-every reduce (``dbtransposer.go:290-364``).
 
     Atomicity contract (precise): readers never see a *mix* of old and
     new files, but when ``final_dir`` already exists the promotion is
@@ -410,44 +406,21 @@ def publish_parquet_atomic(df: DataFrame, final_dir: str, staging_dir: str | Non
     then fails and must retry, it cannot read partial data. POSIX has
     no portable atomic directory *swap*; deployments that need a truly
     gap-free flip should point readers at a symlink (or a metastore
-    location) and retarget that instead. Both staging and final must be
-    on the same filesystem — ``os.rename`` across devices raises
-    ``EXDEV`` — validated up front so the failure happens before any
-    data is written. Returns the published row count.
+    location) and retarget that instead. Staging sits next to
+    ``final_dir``, in the same directory, so the renames never cross a
+    filesystem. Returns the published row count.
 
     Scope: the contract is READER-vs-writer atomicity. CONCURRENT
     writers to the same ``final_dir`` are out of scope by design (the
-    default staging path is fixed, so racing publishes would clobber
-    each other's staging): serialize them, e.g. as the successive
-    micro-batches of one streaming query.
+    staging path is fixed, so racing publishes would clobber each
+    other's staging): serialize them, e.g. as the successive micro-
+    batches of one streaming query.
 
     The returned count comes from an ``Observation`` on the staging
     write: it rides the write's own job, so the publish is one Spark job
     and never re-reads what it wrote.
     """
-    staging = staging_dir or final_dir.rstrip("/") + ".__staging__"
-    final_parent = os.path.dirname(os.path.abspath(final_dir.rstrip("/"))) or "."
-    staging_parent = os.path.dirname(os.path.abspath(staging.rstrip("/"))) or "."
-
-    def _nearest_existing(path: str) -> str:
-        # The parents may not exist yet (the Spark staging write creates
-        # them); validate st_dev on the nearest existing ancestor so a
-        # brand-new nested target path is not rejected.
-        p = path
-        while not os.path.exists(p):
-            parent = os.path.dirname(p)
-            if parent == p:
-                break
-            p = parent
-        return p
-
-    if os.stat(_nearest_existing(final_parent)).st_dev != os.stat(
-        _nearest_existing(staging_parent)
-    ).st_dev:
-        raise ValueError(
-            f"staging_dir {staging!r} and final_dir {final_dir!r} are on different "
-            "filesystems; the atomic rename promotion requires the same filesystem"
-        )
+    staging = final_dir.rstrip("/") + ".__staging__"
     if os.path.exists(staging):
         shutil.rmtree(staging)
     rows = Observation()

@@ -11,9 +11,9 @@ Reference parity map:
 
   - JSON ← ``StreamJSONFileWithSchema`` / ``FlattenJSONToMaps``
     (``fileloader-schema.go:71-128,241-295``): whole-document decode,
-    records under a top-level array key (hardcoded ``"Records"`` in the
-    reference, ``fileloader-schema.go:95-100`` — an option here, SURVEY
-    §2.3(f));
+    records under the top-level array key :data:`RECORDS_KEY`
+    (``"Records"``, hardcoded in the reference too,
+    ``fileloader-schema.go:95-100``);
   - XML ← ``StreamXMLFileWithSchema`` / ``FlattenXMLToMaps``
     (``fileloader-schema.go:142-229``): one record per ``<Record>`` element
     (row tag matched by local name, ``fileloader-schema.go:172`` — an
@@ -45,6 +45,8 @@ from pyspark.sql import types as T
 _SUPPORTED = {"json", "xml", "parquet", "csv", "orc"}
 #: the record formats :func:`read_records` decodes, batch and streaming
 RECORD_FORMATS = ("json", "xml", "csv")
+#: the top-level array key a JSON document holds its records under
+RECORDS_KEY = "Records"
 
 
 def detect_file_type(path: str) -> str:
@@ -91,7 +93,6 @@ def read_records(
     fmt: str,
     schema: T.StructType | None = None,
     corrupt_col: str | None = None,
-    records_key: str = "Records",
     row_tag: str = "Record",
     **options: str,
 ) -> DataFrame:
@@ -124,7 +125,7 @@ def read_records(
     - batch validates EAGERLY: a document that cannot yield the records
       array raises a clean ``ValueError`` naming the file and the cause.
       Without this check a TRUNCATED document, a wrong top-level key or
-      invalid UTF-8 bytes all parsed to a NULL ``records_key`` under
+      invalid UTF-8 bytes all parsed to a NULL :data:`RECORDS_KEY` under
       PERMISSIVE mode and exploded to nothing (the classic silent drop).
       The check is one extra pass over the document, which is exactly
       the reference's own cost model — its loader decodes the whole
@@ -144,7 +145,7 @@ def read_records(
     if fmt == "json":
         reader = reader.option("multiLine", "true")
         if schema is not None:
-            schema = T.StructType([T.StructField(records_key, T.ArrayType(schema), True)])
+            schema = T.StructType([T.StructField(RECORDS_KEY, T.ArrayType(schema), True)])
     elif fmt == "xml":
         reader = reader.option("rowTag", row_tag)
     elif fmt == "csv":
@@ -163,63 +164,42 @@ def read_records(
     if fmt != "json":
         return df
     if not df.isStreaming:
-        _check_documents(df, path, records_key, doc_corrupt if schema is not None else None)
+        _check_documents(df, path, doc_corrupt if schema is not None else None)
     elif corrupt_col is not None:
         # explode_outer keeps the row of a document with no records
         # array, quarantined with its cause; the filter removes only the
         # spurious null row an EMPTY-but-well-formed Records array adds
-        records = F.col(records_key)
-        cause = F.when(records.isNull(), F.lit(_null_records_cause(records_key)))
+        records = F.col(RECORDS_KEY)
+        cause = F.when(records.isNull(), F.lit(_NULL_RECORDS_CAUSE))
         exploded = df.select(
             F.explode_outer(records).alias("_rec"),
             F.coalesce(F.col(corrupt_col), cause).alias(corrupt_col),
         ).filter(F.col("_rec").isNotNull() | F.col(corrupt_col).isNotNull())
         return exploded.select("_rec.*", corrupt_col)
-    return df.select(F.explode(F.col(records_key)).alias("_rec")).select("_rec.*")
+    return df.select(F.explode(F.col(RECORDS_KEY)).alias("_rec")).select("_rec.*")
 
 
-def _null_records_cause(records_key: str) -> str:
-    """Why a well-formed JSON document yields no records array."""
-    return f"records key {records_key!r} absent or null"
+#: why a well-formed JSON document yields no records array
+_NULL_RECORDS_CAUSE = f"records key {RECORDS_KEY!r} absent or null"
 
 
-def _check_documents(doc: DataFrame, path: str, records_key: str, corrupt_col: str | None) -> None:
+def _check_documents(doc: DataFrame, path: str, corrupt_col: str | None) -> None:
     """Raise ``ValueError`` if a batch JSON document cannot yield its
     records array (see :func:`read_records`). Without a typed schema the
     inferred columns are the whole check."""
-    if records_key not in doc.columns:
-        raise ValueError(f"expected top-level array key {records_key!r} in {path!r}; got {doc.columns}")
+    if RECORDS_KEY not in doc.columns:
+        raise ValueError(f"expected top-level array key {RECORDS_KEY!r} in {path!r}; got {doc.columns}")
     if corrupt_col is None:
         return
-    bad = doc.filter(F.col(records_key).isNull()).limit(1).collect()
+    bad = doc.filter(F.col(RECORDS_KEY).isNull()).limit(1).collect()
     if bad:
         raw = bad[0][corrupt_col]
         cause = (
             f"unparseable document (corrupt prefix: {raw[:120]!r})"
             if raw is not None
-            else _null_records_cause(records_key)
+            else _NULL_RECORDS_CAUSE
         )
         raise ValueError(f"malformed JSON document {path!r}: {cause}")
-
-
-def read_jsonl_records(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """Read JSON-lines records with per-record error tolerance.
-
-    The reference's workers log-and-continue on bad records
-    (``mapreduce/mapreduce.go:45-48``, error counter at ``util/utils.go``);
-    the Spark-native equivalent is PERMISSIVE mode: malformed lines land
-    in ``corrupt_col`` (all schema fields null) instead of failing the
-    job, and ``metrics.observed(df, f"{corrupt_col} IS NOT NULL")``
-    reproduces the success/error counts. JSONL is also the *scale*
-    ingest format — line-splittable, so a single 100 GB file still
-    parallelizes, unlike a multiLine JSON document (one task per file).
-    """
-    return _quarantined(spark.read, schema, corrupt_col).json(path)
 
 
 def load(
@@ -227,7 +207,6 @@ def load(
     path: str,
     fmt: str | None = None,
     row_tag: str = "Record",
-    records_key: str = "Records",
     schema: T.StructType | None = None,
     corrupt_col: str | None = None,
     **options: str,
@@ -240,6 +219,4 @@ def load(
     fmt = fmt or detect_file_type(path)
     if fmt in ("parquet", "orc"):
         return spark.read.options(**options).format(fmt).load(path)
-    return read_records(
-        spark.read, path, fmt, schema, corrupt_col, records_key, row_tag, **options
-    )
+    return read_records(spark.read, path, fmt, schema, corrupt_col, row_tag, **options)

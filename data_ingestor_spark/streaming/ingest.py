@@ -49,7 +49,6 @@ def stream_load(
     schema: T.StructType,
     array_col: str = "fnumbers",
     columns: list[str] | None = None,
-    records_key: str = "Records",
     fmt: str = "json",
     row_tag: str = "Record",
     corrupt_col: str | None = None,
@@ -58,7 +57,7 @@ def stream_load(
     the reference's live path (O1/O3+O7+O9) under Structured Streaming.
     Watches ``input_dir`` and decodes ``fmt`` through the same
     ``sources.read_records`` as the batch ``load``: ``"json"`` explodes
-    the ``records_key`` array per document; ``"xml"`` reads one row per
+    the ``Records`` array per document; ``"xml"`` reads one row per
     ``row_tag``; ``"csv"`` reads one row per line (flat — the flatten
     step is an identity pass-through when ``array_col`` is absent).
     With ``corrupt_col`` set, quarantined records ride along for the
@@ -71,9 +70,7 @@ def stream_load(
     if fmt not in RECORD_FORMATS:
         raise ValueError(f"unsupported streaming ingest format: {fmt!r}")
     reader = spark.readStream.option("maxBytesPerTrigger", str(MAX_BYTES_PER_TRIGGER))
-    raw = read_records(
-        reader, input_dir, fmt, schema, corrupt_col, records_key=records_key, row_tag=row_tag
-    )
+    raw = read_records(reader, input_dir, fmt, schema, corrupt_col, row_tag=row_tag)
     if corrupt_col is not None and columns is not None and corrupt_col not in columns:
         # the whitelist projection would drop the quarantine column;
         # append it so the sink can count-and-exclude (totality contract)

@@ -579,99 +579,3 @@ def test_run_stream_job_all_damage_tiers_end_to_end(spark, tmp_path):
     assert res2.rows_published == 16  # +1, nothing double-published
     assert res2.rows_quarantined == res.rows_quarantined
     assert res2.restarts == 0
-
-
-def test_run_stream_job_with_enrichment_e2e(spark, tmp_path):
-    """VERDICT r10 directive #6: the reference's "enrich while loading"
-    shape as ONE call — run_stream_job with a dimension join stage.
-    Clean rows publish ENRICHED (broadcast stream⋈static per
-    micro-batch); an unmatched key survives with NULL dim columns
-    (left-join default — enrichment never silently drops); quarantined
-    rows keep the RAW parse shape (no dim columns); a re-run over the
-    same checkpoint with one new file processes only that file, with
-    enrichment applied and counts still exact."""
-    from pyspark.sql import types as T
-
-    from data_ingestor_spark.pipeline import run_stream_job
-
-    schema = T.StructType(
-        [
-            T.StructField("user", T.StringType(), True),
-            T.StructField("score", T.IntegerType(), True),
-        ]
-    )
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    (in_dir / "a.csv").write_text("user,score\nalice,10\nbob,20\n")
-    (in_dir / "b.csv").write_text("user,score\ncara,30\neve,BROKEN\n")
-    dim = spark.createDataFrame(
-        [("alice", "gold"), ("bob", "silver"), ("late", "bronze")],
-        "user string, tier string",
-    )
-
-    res = run_stream_job(
-        spark,
-        str(in_dir),
-        str(tmp_path / "out"),
-        schema=schema,
-        columns=None,
-        fmt="csv",
-        timeout_s=120,
-        enrich_dim=dim,
-        enrich_on="user",
-    )
-    assert res.rows_published == 3
-    assert res.rows_quarantined == 1
-    data = spark.read.parquet(str(tmp_path / "out" / "data"))
-    tiers = {r["user"]: r["tier"] for r in data.collect()}
-    # enriched where the dim matches; NULL (not dropped) where it doesn't
-    assert tiers == {"alice": "gold", "bob": "silver", "cara": None}
-    q = spark.read.parquet(str(tmp_path / "out" / "quarantine"))
-    assert "tier" not in q.columns  # quarantine keeps the raw parse shape
-    assert q.filter(q["_corrupt_record"].contains("BROKEN")).count() == 1
-
-    # replay + one new file: only the new rows publish, enriched
-    (in_dir / "c.csv").write_text("user,score\nlate,40\n")
-    res2 = run_stream_job(
-        spark,
-        str(in_dir),
-        str(tmp_path / "out"),
-        schema=schema,
-        columns=None,
-        fmt="csv",
-        timeout_s=120,
-        enrich_dim=dim,
-        enrich_on="user",
-    )
-    assert res2.rows_published == 4
-    assert res2.rows_quarantined == 1
-    data2 = {r["user"]: r["tier"] for r in
-             spark.read.parquet(str(tmp_path / "out" / "data")).collect()}
-    assert data2["late"] == "bronze"
-
-    # every misuse is a clean error, never a silent no-op: dim without
-    # key, key without dim (would publish UN-enriched data unnoticed),
-    # and outer joins (would republish unmatched dim rows every
-    # micro-batch, corrupting exactly-once counts)
-    import pytest
-
-    with pytest.raises(ValueError, match="enrich_on"):
-        run_stream_job(spark, str(in_dir), str(tmp_path / "out2"), enrich_dim=dim)
-    with pytest.raises(ValueError, match="enrich_dim"):
-        run_stream_job(spark, str(in_dir), str(tmp_path / "out2"), enrich_on="user")
-    with pytest.raises(ValueError, match="exactly-once"):
-        run_stream_job(
-            spark,
-            str(in_dir),
-            str(tmp_path / "out2"),
-            enrich_dim=dim,
-            enrich_on="user",
-            enrich_how="full",
-        )
-    # non-default enrich_how with NO dim is the same misuse class as
-    # key-without-dim: the caller thinks enrichment is configured
-    # (ADVICE r11 — this used to be silently ignored)
-    with pytest.raises(ValueError, match="no effect without enrich_dim"):
-        run_stream_job(
-            spark, str(in_dir), str(tmp_path / "out2"), enrich_how="inner"
-        )

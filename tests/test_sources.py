@@ -1,35 +1,5 @@
-"""Source-reader tests: error-tolerant JSONL ingest (reference
-per-record error-continue parity, ``mapreduce.go:45-48``)."""
-
-from data_ingestor_spark.metrics import observed
-from data_ingestor_spark.schemas import MIST_FLAT_SCHEMA
-from data_ingestor_spark.sources import read_jsonl_records
-
-
-def test_jsonl_permissive_captures_corrupt_rows(spark, tmp_path):
-    p = tmp_path / "records.jsonl"
-    p.write_text(
-        '{"user": "alice", "dt_created": 1, "dt_submitted": 2, "location": "HQ", '
-        '"status": "P", "json_hash": "h1", "filename": "f", "fnumber": "F1", "scan_time": "t"}\n'
-        "this is not json at all\n"
-        '{"user": "bob", "dt_created": 3, "dt_submitted": 4, "location": "B1", '
-        '"status": "A", "json_hash": "h2", "filename": "f", "fnumber": "F2", "scan_time": "t"}\n'
-        '{"user": "carol", "dt_created": "NOT_A_NUMBER", "dt_submitted": 5, "location": "B2", '
-        '"status": "R", "json_hash": "h3", "filename": "f", "fnumber": "F3", "scan_time": "t"}\n'
-    )
-    df = read_jsonl_records(spark, str(p), MIST_FLAT_SCHEMA)
-    rows = df.collect()
-    # job survives: 4 lines in, 4 rows out, bad ones flagged not fatal
-    assert len(rows) == 4
-    good = [r for r in rows if r["_corrupt_record"] is None]
-    bad = [r for r in rows if r["_corrupt_record"] is not None]
-    assert {r["user"] for r in good} == {"alice", "bob"}
-    assert len(bad) == 2  # malformed line + type-mismatch line
-
-    # success/error counters (O20) from the same plan
-    counted, obs = observed(df, error_condition="_corrupt_record IS NOT NULL")
-    counted.collect()
-    assert obs.get == {"rows_total": 4, "rows_error": 2, "rows_succeeded": 2}
+"""Source-reader tests: the sample-record generator, multi-file JSON
+ingest and the custom data source."""
 
 
 def test_generate_sample_records(spark):

@@ -645,6 +645,33 @@ def test_stream_harness_decisions_have_one_owner():
     assert strings("cleanSource") == []
 
 
+def test_perfbench_tracing_patches_resolve_and_restore():
+    """Every name ``perfbench/tracing.install`` patches still exists
+    where the pipeline looks it up, and ``uninstall`` puts each original
+    back, so a change that deletes a traced name fails here rather than
+    in a traced benchmark run. The stub tracer's ``wrap`` returns the
+    function unchanged, so no SparkSession is needed."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("perfbench_tracing", REPO / "perfbench" / "tracing.py")
+    tracing = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tracing)
+
+    class StubTracer:
+        def wrap(self, name, fn):
+            return fn
+
+    saved = tracing.install(StubTracer())
+    try:
+        assert saved
+        for owner, attr, original in saved:
+            assert callable(original) and callable(getattr(owner, attr))
+    finally:
+        tracing.uninstall(saved)
+    for owner, attr, original in saved:
+        assert getattr(owner, attr) is original
+
+
 def test_ab_bench_requires_old_rev():
     r = subprocess.run(
         [sys.executable, str(REPO / "scripts" / "ab_bench.py"), "--keys", "q_agg_basic"],
