@@ -568,8 +568,6 @@ def ngram_jaccard_pairs(
     band_width: int = 100,
     min_jaccard: float = 0.55,
     out_col: str = "jaccard_bp",
-    max_block_members: int | None = None,
-    pair_sample_bp: int | None = None,
 ):
     """Blocked character-``n``-gram Jaccard pairs — the reusable core
     of :func:`q_dedup_ngram_jaccard` and the subject of the blocked
@@ -595,17 +593,8 @@ def ngram_jaccard_pairs(
         ).alias("g3"),
     )
     narrow = grams.select("doc_id", "source", "len_band")
-    # max_block_members / pair_sample_bp: the 100 TB output caps
-    # (operators.pairs docstrings) — a boilerplate-heavy block's
-    # quadratic pair output is bounded / sampled deterministically;
-    # both default off so the exact oracle key's plan is untouched
     pair_ids = salted_block_pairs(
-        narrow,
-        ["source", "len_band"],
-        "doc_id",
-        salt_buckets=8,
-        max_block_members=max_block_members,
-        pair_sample_bp=pair_sample_bp,
+        narrow, ["source", "len_band"], "doc_id", salt_buckets=8
     ).select(
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
@@ -1198,9 +1187,7 @@ def q_corpus_production(spark, sf_dir):
     stages cost run separately, minus the intermediate writes. At
     100 TB each stage is the already-audited operator (q_text_gopher /
     q_dedup_exact / q_dedup_minhash_pairs / q_split_assign
-    disciplines). The library twin :func:`corpus_production` adds the
-    optional diagnostic→recommend→cap pass (judge directive r10 #8);
-    this oracle key always runs it uncapped."""
+    disciplines)."""
     d = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text", "source")
@@ -1209,27 +1196,11 @@ def q_corpus_production(spark, sf_dir):
     return corpus_production(d)
 
 
-def corpus_production(
-    d: DataFrame, pair_budget: int | None = None, min_members: int = 8
-) -> DataFrame:
+def corpus_production(d: DataFrame) -> DataFrame:
     """The q_corpus_production pipeline as a library call over any
     ``(doc_id, text, source)`` relation — gate → exact dedup → LSH
     near-dup drop → split → per-(split, source) rollup (see the
-    registry key's docstring for the plan discipline).
-
-    ``pair_budget`` composes the 100 TB skew recipe into ONE call
-    (judge directive r10 #8): run the band-bucket size diagnostic
-    (the ``q_dedup_lsh_bucket_stats`` shape, one tiny extra job over
-    the checkpointed signature relation), feed it to
-    ``operators.pairs.recommend_pair_caps`` with this budget, and
-    apply the recommended knobs — ``max_block_members`` trims
-    pathological band buckets before the quadratic join,
-    ``pair_sample_bp`` thins candidate pairs deterministically —
-    exactly the measured PAIR_CAPS_r8 recipe, without the operator
-    hand-running diagnostic → recommend → cap as three steps. Capping
-    candidates can only UNDROP near-dups (fewer verified pairs ⇒ more
-    survivors), never lose a document. Default ``None`` leaves the
-    exact plan byte-identical (the oracle contract)."""
+    registry key's docstring for the plan discipline)."""
     words = F.split(F.col("text"), " ")
     n_words = F.size(words)
     mean_len = F.length(F.regexp_replace(F.col("text"), " ", "")).cast("double") / n_words
@@ -1248,81 +1219,19 @@ def corpus_production(
         surv1,
         extra_cols=("source", F.size(F.split(F.col("text"), " ")).alias("n_tok")),
     )
-    if pair_budget is None:
-        # fast path (the oracle key): disjoint per-band joins, verify on
-        # long token ids — the minhash_lsh_pairs r13 plan.
-        cand = _band_candidates(keyed)
-        cand = cand.withColumn("_i", _eval_once(F.size(F.array_intersect("tok64_a", "tok64_b"))))
-        jac = F.col("_i").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("_i"))
-        drops = (
-            cand.filter(jac >= NEARDUP_THRESHOLD)
-            .select(F.col("doc_b").alias("_drop"))
-            .distinct()
-        )
-        return _corpus_rollup(keyed, drops)
-    banded = keyed.select(
-        "doc_id",
-        F.explode(F.array(*[F.col(f"bk{b}") for b in range(MINHASH_BANDS)])).alias("band_key"),
-    )
-    pair_sample_bp = None
-    if pair_budget is not None:
-        from data_ingestor_spark.operators.pairs import (
-            cap_block_members,
-            recommend_pair_caps,
-        )
-
-        hist = (
-            banded.groupBy("band_key")
-            .agg(F.count(F.lit(1)).alias("bucket_size"))
-            .groupBy("bucket_size")
-            .agg(F.count(F.lit(1)).alias("n_buckets"))
-            .collect()  # tiny: one row per distinct bucket size
-        )
-        plan = recommend_pair_caps(hist, pair_budget, min_members=min_members)
-        if plan.max_block_members is not None:
-            banded = cap_block_members(
-                banded, ["band_key"], "doc_id", plan.max_block_members
-            )
-        pair_sample_bp = plan.pair_sample_bp
-    a, b = banded.alias("a"), banded.alias("b")
-    cand_join = a.join(
-        b,
-        (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-    if pair_sample_bp is not None:
-        from data_ingestor_spark.operators.pairs import _pair_sample_cond
-
-        cand_join = cand_join.filter(_pair_sample_cond("doc_id", pair_sample_bp))
-    cand_ids = cand_join.select(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    ).dropDuplicates(["doc_a", "doc_b"])
-    toks = keyed.select("doc_id", "tok64", "sz")
-    cand = cand_ids.join(
-        toks.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("tok64").alias("tok64_a"),
-            F.col("sz").alias("sz_a"),
-        ),
-        "doc_a",
-    ).join(
-        toks.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("tok64").alias("tok64_b"),
-            F.col("sz").alias("sz_b"),
-        ),
-        "doc_b",
-    )
+    # disjoint per-band joins, verify on long token ids — the
+    # minhash_lsh_pairs r13 plan.
+    cand = _band_candidates(keyed)
     cand = cand.withColumn("_i", _eval_once(F.size(F.array_intersect("tok64_a", "tok64_b"))))
     jac = F.col("_i").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("_i"))
-    drops = cand.filter(jac >= NEARDUP_THRESHOLD).select(F.col("doc_b").alias("_drop")).distinct()
-    return _corpus_rollup(keyed, drops)
-
-
-def _corpus_rollup(keyed: DataFrame, drops: DataFrame) -> DataFrame:
-    """Anti-join the near-dup drop list off the checkpointed keyed
-    relation (it carries the surv1 columns — never a second execution of
-    the gate+dedup tree), split deterministically, and roll up."""
+    drops = (
+        cand.filter(jac >= NEARDUP_THRESHOLD)
+        .select(F.col("doc_b").alias("_drop"))
+        .distinct()
+    )
+    # anti-join the drop list off the checkpointed keyed relation (it
+    # carries the surv1 columns — never a second execution of the
+    # gate+dedup tree), split deterministically, and roll up
     surv2 = keyed.select("doc_id", "source", "n_tok").join(
         drops, F.col("doc_id") == F.col("_drop"), "left_anti"
     )

@@ -24,7 +24,6 @@ Scale shapes (the reference has no graph surface; this is engine-added):
 from __future__ import annotations
 
 import itertools
-from dataclasses import dataclass
 
 from pyspark.sql import functions as F
 
@@ -291,44 +290,11 @@ def q_sql_graph_triangles(spark, sf_dir):
     return result
 
 
-def triangle_counts(pairs, max_out_neighbors: int | None = None,
-                    edge_sample_bp: int | None = None):
+def triangle_counts(pairs):
     """Per-vertex triangle membership counts over a canonical
     ``(doc_a < doc_b)`` edge list — the library twin of
     :func:`q_graph_triangles` (whose docstring derives the
-    degree-ordered compact-forward plan; the oracle key always runs
-    EXACT so correctness evidence is untouched).
-
-    100 TB escape hatches for densifying graphs (the sf0.1 near-dup
-    graph is already quasi-clique — 208.7M triangles from 733k edges —
-    and an exact enumeration must emit every one):
-
-    - ``max_out_neighbors=K``: cap each wedge source at its K
-      lowest-rank oriented out-neighbors (deterministic: ranked by
-      ``(ddeg, dst)``), bounding wedge candidates per vertex at
-      K·(K−1)/2 and the whole output stage at n·K²; closure still
-      probes the FULL edge list. Yields a deterministic LOWER BOUND
-      that is monotone non-decreasing in K and exact once K ≥ max
-      oriented out-degree.
-    - ``edge_sample_bp=p`` (basis points of edges kept): DOULION-style
-      edge sparsification with an md5-priority keep decision (no
-      ``rand()`` — reshard- and rerun-stable), counting triangles on
-      the sampled graph and scaling per-vertex counts by (10000/p)³ —
-      an unbiased estimate, returned as DOUBLE ``est_triangles``.
-      p=10000 keeps every edge and reproduces exact counts.
-    """
-    if edge_sample_bp is not None:
-        pairs = pairs.filter(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("|", F.col("doc_a"), F.col("doc_b"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 10000
-            < edge_sample_bp
-        )
+    degree-ordered compact-forward plan)."""
     sym = pairs.select(F.col("doc_a").alias("v")).unionAll(
         pairs.select(F.col("doc_b").alias("v"))
     )
@@ -349,22 +315,10 @@ def triangle_counts(pairs, max_out_neighbors: int | None = None,
         # degree joins re-execute per branch
         .localCheckpoint(eager=True)
     )
-    wedge_e = e
-    if max_out_neighbors is not None:
-        from pyspark.sql import Window as W
-
-        wedge_e = (
-            e.withColumn(
-                "nbr_rank",
-                F.row_number().over(W.partitionBy("src").orderBy("ddeg", "dst")),
-            )
-            .filter(F.col("nbr_rank") <= max_out_neighbors)
-            .drop("nbr_rank")
-        )
-    e1 = wedge_e.select(
+    e1 = e.select(
         F.col("src").alias("a"), F.col("dst").alias("b"), F.col("ddeg").alias("rb")
     )
-    e2 = wedge_e.select(
+    e2 = e.select(
         F.col("src").alias("a2"), F.col("dst").alias("c"), F.col("ddeg").alias("rc")
     )
     e3 = e.select(F.col("src").alias("b3"), F.col("dst").alias("c3"))
@@ -381,229 +335,9 @@ def triangle_counts(pairs, max_out_neighbors: int | None = None,
         .unionAll(tri.select(F.col("b").alias("v")))
         .unionAll(tri.select(F.col("c").alias("v")))
     )
-    counts = members.groupBy(F.col("v").alias("doc_id")).agg(
+    return members.groupBy(F.col("v").alias("doc_id")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_triangles")
     )
-    if edge_sample_bp is not None:
-        scale = (10000.0 / edge_sample_bp) ** 3
-        return counts.select(
-            "doc_id", (F.col("n_triangles") * F.lit(scale)).alias("est_triangles")
-        )
-    return counts
-
-
-# --- triangle cap recommendation (judge directive r10 #4) ----------------
-
-
-@dataclass(frozen=True)
-class TriangleCapPlan:
-    """Recommended output caps for :func:`triangle_counts`.
-
-    ``max_out_neighbors`` / ``edge_sample_bp`` plug straight into
-    :func:`triangle_counts`; ``None`` means leave that knob off.
-    ``total_wedges`` is the wedge-candidate mass the degree histogram
-    bounds for the uncapped compact-forward plan (the enumeration cost
-    driver — on dense near-dup graphs ~all candidates close, so it is
-    also ~the output row count); ``expected_wedges`` what the plan
-    should enumerate (an exact bound for the neighbor cap, an unbiased
-    expectation for edge sampling)."""
-
-    max_out_neighbors: int | None
-    edge_sample_bp: int | None
-    total_wedges: int
-    expected_wedges: int
-    reason: str
-
-
-def _wedge_bound(out_ubs: list[tuple[int, int]], k: int | None) -> int:
-    """Σ C(min(out_ub, k), 2) over (out_ub, n_vertices) classes."""
-    total = 0
-    for ub, n in out_ubs:
-        v = ub if k is None else min(ub, k)
-        total += n * (v * (v - 1) // 2)
-    return total
-
-
-def _out_degree_bound(degrees: list[tuple[int, int]]) -> list[tuple[int, int]]:
-    """Oriented out-degree upper bounds from a degree histogram.
-
-    The compact-forward plan orients each edge toward its higher
-    (degree, id) endpoint, so a vertex's out-neighbors all rank above
-    it: with vertices ranked ascending by degree, the vertex at rank i
-    (0-based, n total) has out-degree ≤ min(degree_i, n−1−i). On a
-    clique the bound is tight (Σ C(n−1−i, 2) = C(n, 3) wedges = the
-    triangle count) — exactly the dense regime where caps matter; on
-    sparse graphs it overestimates, which only makes the plan
-    conservative. Computed class-wise so a 100 TB degree histogram
-    (small: one row per distinct degree) never expands per-vertex.
-
-    Returns (out_ub, n_vertices) classes."""
-    n = sum(cnt for _, cnt in degrees)
-    out: dict[int, int] = {}
-    r0 = 0  # first rank of the current degree class, ascending order
-    for d, cnt in sorted(degrees):
-        # ranks [r0, r0+cnt): out_ub = min(d, n-1-i)
-        hi_rank = r0 + cnt - 1
-        # i ≤ n-1-d  ⇔  the degree term binds
-        n_deg_bound = max(0, min(hi_rank, n - 1 - d) - r0 + 1)
-        if n_deg_bound:
-            out[d] = out.get(d, 0) + n_deg_bound
-        # remaining ranks: out_ub = n-1-i, consecutive values
-        for i in range(r0 + n_deg_bound, hi_rank + 1):
-            ub = n - 1 - i
-            out[ub] = out.get(ub, 0) + 1
-        r0 += cnt
-    return sorted(out.items())
-
-
-def recommend_triangle_caps(
-    degrees,
-    max_wedges: int,
-    min_neighbors: int = 8,
-    estimate_ok: bool = True,
-    min_est_wedges: int = 10_000,
-) -> TriangleCapPlan:
-    """Choose ``max_out_neighbors`` / ``edge_sample_bp`` for
-    :func:`triangle_counts` from a vertex-degree profile (the
-    ``q_graph_degree`` output: rows carrying ``degree``, optionally
-    pre-aggregated as ``(degree, n_vertices)`` tuples) and a
-    wedge-candidate budget — the pair-cap playbook
-    (``operators/pairs.py:recommend_pair_caps``) applied to the last
-    100 TB operator that had knobs but no recipe (VERDICT r9 #4).
-
-    Encodes the tradeoff MEASURED at sf0.1 (``TRIANGLE_CAPS_r10.json``,
-    exact plan 45.5 s vs each knob on the 733k-edge / 208.7M-triangle
-    near-dup quasi-clique) rather than a guess — and the measurement
-    OVERRULED the naive pair-cap transplant:
-
-    - ``edge_sample_bp=p`` (DOULION): wedge mass scales (p/10⁴)²,
-      per-vertex counts rescaled by (10⁴/p)³ into an unbiased
-      estimate. Measured **7.6×** at bp=2500 with the total estimate
-      at **1.0013×** exact — on a triangle-DENSE graph the estimator's
-      variance is negligible, precisely the regime where a budget is
-      needed at all. So when an estimate is acceptable
-      (``estimate_ok``, the default), sampling is the primary knob.
-    - ``max_out_neighbors=K`` trims the wedge ENUMERATION (per-vertex
-      candidates bounded at C(K, 2)) for one ranking window; it
-      returns a deterministic LOWER BOUND, monotone in K, exact once
-      K ≥ the max oriented out-degree. Measured **9.4×** at the
-      budget-derived K=114 — faster than sampling, but the bound
-      covered only 4.2% of the true mass on the quasi-clique, so it
-      is the recommendation only when determinism is REQUIRED
-      (``estimate_ok=False``: a reproducible subset/bound feeding a
-      downstream gate) or when the budget is too thin to estimate
-      from (expected sampled wedges < ``min_est_wedges``).
-    - When even sampling cannot reach the budget (bp < 1 — wedge mass
-      over 10⁸× budget), the plan combines the ``min_neighbors`` floor
-      cap with sampling over the capped mass and reports the honest
-      expectation.
-
-    The oracle key ``q_graph_triangles`` always runs exact; this
-    recipe is for corpora whose ``q_graph_degree`` histogram shows the
-    quasi-clique blowup before dedup has collapsed it. Deterministic;
-    pinned in ``tests/test_pair_caps.py`` against the artifact's own
-    measured numbers."""
-    hist: dict[int, int] = {}
-    for row in degrees:
-        if isinstance(row, (tuple, list)):
-            d, n = int(row[0]), int(row[1])
-        else:
-            get = row.get if isinstance(row, dict) else row.__getitem__
-            d = int(get("degree"))
-            try:
-                n = int(get("n_vertices"))
-            except (KeyError, ValueError, TypeError):
-                n = 1  # per-vertex q_graph_degree row
-        if d >= 1 and n > 0:
-            hist[d] = hist.get(d, 0) + n
-    sizes = sorted(hist.items())
-    out_ubs = _out_degree_bound(sizes)
-    total = _wedge_bound(out_ubs, None)
-    if total <= max_wedges:
-        return TriangleCapPlan(None, None, total, total, "exact affordable: no caps")
-    max_ub = max(ub for ub, _ in out_ubs)
-
-    bp = min(10_000, _isqrt((max_wedges * 100_000_000) // total))
-    sampled = total * bp * bp // 100_000_000
-    if estimate_ok and bp >= 1 and sampled >= min_est_wedges:
-        return TriangleCapPlan(
-            None,
-            bp,
-            total,
-            sampled,
-            f"estimate regime: edge sampling bp={bp} is shuffle-free and "
-            "unbiased (TRIANGLE_CAPS_r10 measured 7.6x at bp=2500 with the "
-            "estimate at 1.0013x exact on the sf0.1 quasi-clique; wedge "
-            "mass scales by (p/10^4)^2, counts rescaled by (10^4/p)^3)",
-        )
-
-    # deterministic path (or budget too thin to estimate from):
-    # largest K whose capped wedge mass fits the budget (monotone in K)
-    lo, hi, best_k = min_neighbors, max_ub, None
-    while lo <= hi:
-        mid = (lo + hi) // 2
-        if _wedge_bound(out_ubs, mid) <= max_wedges:
-            best_k, lo = mid, mid + 1
-        else:
-            hi = mid - 1
-
-    if best_k is not None:
-        capped = _wedge_bound(out_ubs, best_k)
-        why = (
-            "determinism required"
-            if not estimate_ok
-            else f"budget too thin to estimate from (sampled wedge "
-            f"expectation {sampled} < {min_est_wedges})"
-        )
-        return TriangleCapPlan(
-            best_k,
-            None,
-            total,
-            capped,
-            f"deterministic-bound regime ({why}): max_out_neighbors {best_k} "
-            f"removes {100 - round(100 * capped / total)}% of wedge "
-            "enumeration — a lower bound, monotone in K, exact once K >= max "
-            "oriented out-degree (TRIANGLE_CAPS_r10 measured 9.4x at K=114; "
-            "NOTE the bound covered 4.2% of true mass on the quasi-clique — "
-            "prefer estimate_ok unless a reproducible subset is required)",
-        )
-
-    floor_capped = _wedge_bound(out_ubs, min_neighbors)
-    if not estimate_ok:
-        # determinism required but even the floor cap exceeds the
-        # budget: recommend the floor and report the honest overshoot
-        return TriangleCapPlan(
-            min_neighbors,
-            None,
-            total,
-            floor_capped,
-            f"deterministic floor: even max_out_neighbors={min_neighbors} "
-            f"bounds enumeration at {floor_capped} wedges (> budget "
-            f"{max_wedges}); no deterministic knob can go lower — raise the "
-            "budget or allow estimate_ok",
-        )
-    # estimate allowed but sampling alone can't reach the budget
-    # (bp < 1: wedge mass over 10^8 x budget) or the floor cap still
-    # leaves nothing to estimate from — combine the floor cap with
-    # sampling over the capped mass and report the honest expectation
-    bp = max(1, min(10_000, _isqrt((max_wedges * 100_000_000) // floor_capped)))
-    return TriangleCapPlan(
-        min_neighbors,
-        bp,
-        total,
-        floor_capped * bp * bp // 100_000_000,
-        f"mega-hub cascade: floor cap {min_neighbors} bounds hub enumeration "
-        f"({100 - round(100 * floor_capped / total)}% of wedge mass removed), "
-        f"edge sampling bp={bp} thins the remainder (capped DOULION "
-        "estimate; expectation reported honestly even when the budget is "
-        "below the sampler's granularity)",
-    )
-
-
-def _isqrt(x: int) -> int:
-    import math
-
-    return math.isqrt(max(0, x))
 
 
 @query(

@@ -738,46 +738,16 @@ def q_multimodal_phash_pairs(spark, sf_dir):
     return phash_candidate_pairs(phash_bands(d))
 
 
-def phash_candidate_pairs(
-    b: DataFrame,
-    max_band_members: int | None = None,
-    pair_sample_bp: int | None = None,
-) -> DataFrame:
+def phash_candidate_pairs(b: DataFrame) -> DataFrame:
     """Banded pHash candidate pairs + exact Hamming — the reusable core
     of :func:`q_multimodal_phash_pairs` (see its docstring for the
-    pigeonhole-completeness argument). 100 TB output caps, the triangle
-    counter's pattern (``ext/graph.py``): a boilerplate image cluster
-    puts thousands of docs in one (band, key) bucket and the bucket
-    emits members²/2 pairs, so
-
-    - ``max_band_members=K`` keeps only each bucket's K
-      lowest-md5-priority members (deterministic SUBSET of the exact
-      candidate set, monotone in K, exact once K ≥ the largest bucket
-      — completeness for radius ≤ 3 then holds again);
-    - ``pair_sample_bp=p`` keeps pair (a,b) iff md5(a|b) mod 10⁴ < p —
-      unbiased pair sample (count estimates scale by 10000/p), decided
-      per id-pair so the four bands agree before the dedup.
-
-    Both default off: the exact oracle key's plan is byte-identical."""
-    from data_ingestor_spark.operators.pairs import _md5_priority
-
+    pigeonhole-completeness argument)."""
     # one generator pass (stack) instead of a 4-way union — the banded
     # relation is built in a single projection over one scan subtree
     bands = b.select(
         "doc_id", "b0", "b1", "b2", "b3",
         F.expr("stack(4, 0, b0, 1, b1, 2, b2, 3, b3) AS (band, key)"),
     )
-    if max_band_members is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("band", "key").orderBy(
-            _md5_priority("doc_id").asc(), F.col("doc_id").asc()
-        )
-        bands = (
-            bands.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_band_members)
-            .drop("_rn")
-        )
     a = bands.alias("a")
     c = bands.alias("c")
     joined = a.join(
@@ -786,49 +756,26 @@ def phash_candidate_pairs(
         & (F.col("a.key") == F.col("c.key"))
         & (F.col("a.doc_id") < F.col("c.doc_id")),
     )
-    if pair_sample_bp is not None:
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("a.doc_id").cast("string"),
-                        F.col("c.doc_id").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        joined = joined.filter((h % 10000) < F.lit(pair_sample_bp))
     cand = joined.select(
         F.col("a.band").alias("_band"),
         F.col("a.doc_id").alias("id_a"), F.col("c.doc_id").alias("id_b"),
         *[F.col(f"a.b{i}").alias(f"a{i}") for i in range(_PHASH_BANDS)],
         *[F.col(f"c.b{i}").alias(f"c{i}") for i in range(_PHASH_BANDS)],
     )
-    if max_band_members is None:
-        # r14 (guide §2.4, the _band_candidates discipline): emit each
-        # pair EXACTLY once — at its FIRST agreeing band — instead of
-        # dedup-exchanging the whole candidate pair table. The joined
-        # row already carries every band of both sides, so "every
-        # earlier band differs" is a row-local predicate (no extra
-        # joins, unlike the MinHash twin): the per-band matches
-        # partition the "agree on >= 1 band" set and the union of
-        # survivors is the exact DISTINCT candidate set. Under a
-        # member cap this is NOT equivalent (a pair can be pruned from
-        # its first agreeing band's bucket yet survive a later one),
-        # so the capped path keeps the dropDuplicates.
-        no_earlier_match = F.lit(True)
-        for p in range(_PHASH_BANDS - 1):
-            no_earlier_match = no_earlier_match & (
-                (F.col("_band") <= p) | (F.col(f"a{p}") != F.col(f"c{p}"))
-            )
-        cand = cand.filter(no_earlier_match)
-    else:
-        cand = cand.dropDuplicates(["id_a", "id_b"])
+    # r14 (guide §2.4, the _band_candidates discipline): emit each pair
+    # EXACTLY once — at its FIRST agreeing band — instead of
+    # dedup-exchanging the whole candidate pair table. The joined row
+    # already carries every band of both sides, so "every earlier band
+    # differs" is a row-local predicate (no extra joins, unlike the
+    # MinHash twin): the per-band matches partition the "agree on >= 1
+    # band" set and the union of survivors is the exact DISTINCT
+    # candidate set.
+    no_earlier_match = F.lit(True)
+    for p in range(_PHASH_BANDS - 1):
+        no_earlier_match = no_earlier_match & (
+            (F.col("_band") <= p) | (F.col(f"a{p}") != F.col(f"c{p}"))
+        )
+    cand = cand.filter(no_earlier_match)
     ham = sum(
         F.bit_count(F.col(f"a{i}").bitwiseXOR(F.col(f"c{i}"))) for i in range(_PHASH_BANDS)
     ).cast("bigint")

@@ -21,7 +21,6 @@ Scale design:
 from __future__ import annotations
 
 import itertools
-from dataclasses import dataclass
 
 import pandas as pd
 
@@ -232,20 +231,11 @@ def q_dedup_embed_cosine(spark, sf_dir):
 
 
 def embed_cosine_pairs(
-    e: DataFrame,
-    min_cos: float = 0.35,
-    salt_buckets: int = 8,
-    max_block_members: int | None = None,
-    pair_sample_bp: int | None = None,
+    e: DataFrame, min_cos: float = 0.35, salt_buckets: int = 8
 ) -> DataFrame:
     """Label-blocked cosine near-dup pairs — the reusable core of
     :func:`q_dedup_embed_cosine` (see its docstring for the salted-join
-    scale argument). ``max_block_members`` / ``pair_sample_bp`` are the
-    100 TB output caps (``operators.pairs`` docstrings): a densifying
-    block's quadratic pair output is bounded (deterministic subset,
-    exact once the cap exceeds the largest block) or md5-pair-sampled
-    (unbiased count estimate at 10000/p scaling). Both default off, so
-    the exact oracle key's plan is byte-identical."""
+    scale argument)."""
     from data_ingestor_spark.operators.pairs import salted_block_pairs
 
     # Per-vector work (double cast + norm) happens ONCE per vector here,
@@ -263,14 +253,7 @@ def embed_cosine_pairs(
             )
         ).alias("norm"),
     )
-    pairs = salted_block_pairs(
-        prepped,
-        ["label"],
-        "vec_id",
-        salt_buckets=salt_buckets,
-        max_block_members=max_block_members,
-        pair_sample_bp=pair_sample_bp,
-    )
+    pairs = salted_block_pairs(prepped, ["label"], "vec_id", salt_buckets=salt_buckets)
     dot = F.aggregate(
         F.zip_with(F.col("a.emb_d"), F.col("b.emb_d"), lambda x, y: x * y),
         F.lit(0.0),
@@ -535,124 +518,9 @@ def knn_graph(
     Returns directed edges (src, dst); ``with_sim=True`` keeps the
     edge score column the incremental merge re-ranks against
     (:func:`knn_graph_insert`). ``planes`` widens the bucket hash for
-    larger corpora — pick it with :func:`recommend_lsh_planes`
-    (knn_graph_auto applies the rule; registered oracle keys pin the
-    default so the DuckDB twin stays static)."""
+    larger corpora (registered oracle keys pin the default so the DuckDB
+    twin stays static)."""
     return _topk_edges(_bucket_probe_scores(base, base, planes), k, with_sim)
-
-
-@dataclass(frozen=True)
-class LshPlanesPlan:
-    """Recommended hyperplane count for one kNN-graph build.
-
-    ``planes`` and ``k`` plug straight into :func:`knn_graph`;
-    ``expected_cands_per_node`` / ``expected_scored_pairs`` are the
-    candidate mass the (planes+1)/2^planes banding implies under the
-    random-bucket model; ``reason`` names the governing regime."""
-
-    planes: int
-    k: int
-    expected_cands_per_node: float
-    expected_scored_pairs: float
-    reason: str
-
-
-def recommend_lsh_planes(
-    n_vectors: int,
-    budget_pairs: int | None = None,
-    k: int = _NSW_K,
-    min_planes: int = _LSH_PLANES,
-    max_planes: int = 24,
-) -> LshPlanesPlan:
-    """Choose the hyperplane count for a kNN-graph build from the
-    corpus size and a scored-pair budget (VERDICT r12 directive #5 —
-    the :func:`recommend_pair_caps` discipline applied to the graph
-    index). Encodes the documented banding rule: a node's candidate
-    mass is (planes+1)/2^planes of the corpus (its own bucket plus the
-    Hamming-1 flips), which SHRINKS as planes grow, so the build cost
-    n²·(planes+1)/2^planes is monotone-decreasing and the smallest
-    plane count that fits the budget is optimal for recall (more
-    candidates per node = better edges). Two guard rails, measured in
-    LSH_PLANES_r13.json:
-
-    - COST: pick the smallest ``planes >= min_planes`` with
-      n·(n-1)·(planes+1)/2^planes <= budget_pairs (default budget:
-      256·n — ~256 scored candidates per node, the regime where the
-      sf0.1 build drops ~3× with recall a wash).
-    - RECALL FLOOR: never raise planes past the point where the
-      expected candidate pool per node falls under 4·k — a graph that
-      cannot fill its top-k from a real selection loses recall fast
-      (the artifact's planes=10 row). When the budget and the floor
-      conflict, the floor wins and the reason says so: an
-      over-budget-but-navigable build beats a cheap disconnected one.
-    - DEGREE COMPENSATION: when the banding tightens past the static
-      default, the recommended graph degree DOUBLES (k -> 2k). The
-      tighter candidate pool loses recall at constant degree (sf0.1:
-      3.76 -> 2.62 mean recall@10), but keeping twice the edges from
-      the smaller pool costs no extra scoring (the build is
-      candidate-enumeration-bound: 11.2 s either way vs 24.2 s at the
-      default banding) and ends BETTER than the default (5.10) — the
-      index trades 2x edge storage for a 2.2x cheaper build and a
-      recall gain.
-
-    Deterministic; regimes pinned in tests/test_nsw.py."""
-    if budget_pairs is None:
-        budget_pairs = 256 * max(n_vectors, 1)
-    mass = lambda p: (p + 1) / (1 << p)  # noqa: E731
-    floor = 4 * k
-    # highest plane count keeping the expected per-node pool >= floor
-    p_floor = min_planes
-    for p in range(min_planes, max_planes + 1):
-        if (n_vectors - 1) * mass(p) >= floor:
-            p_floor = p
-    chosen = None
-    for p in range(min_planes, p_floor + 1):
-        if n_vectors * (n_vectors - 1) * mass(p) <= budget_pairs:
-            chosen = p
-            break
-    if chosen is None:
-        chosen = p_floor
-        reason = (
-            f"recall floor governs: planes={chosen} keeps the expected "
-            f"candidate pool >= {floor} per node; budget {budget_pairs} "
-            "is still exceeded — a cheaper build would starve top-k "
-            "selection"
-        )
-    elif chosen == min_planes:
-        reason = f"corpus small enough: min planes={chosen} fits the budget"
-    else:
-        reason = (
-            f"budget governs: planes={chosen} is the smallest fitting "
-            f"{budget_pairs} scored pairs (max candidate mass, best recall "
-            "within budget)"
-        )
-    k_rec = k if chosen == min_planes else 2 * k
-    if k_rec != k:
-        reason += "; degree doubled to compensate the tighter pool"
-    return LshPlanesPlan(
-        chosen,
-        k_rec,
-        round((n_vectors - 1) * mass(chosen), 1),
-        round(n_vectors * (n_vectors - 1) * mass(chosen), 1),
-        reason,
-    )
-
-
-def knn_graph_auto(
-    base: DataFrame,
-    k: int = _NSW_K,
-    with_sim: bool = False,
-    budget_pairs: int | None = None,
-) -> DataFrame:
-    """:func:`knn_graph` with the plane count chosen by
-    :func:`recommend_lsh_planes` from the corpus row count (one
-    driver-side scalar — the same guarded one-row class as the other
-    plan-shape probes). The standalone-API build path for corpora
-    whose size is not known at authoring time; registered oracle keys
-    keep the static default planes so their DuckDB twins replay."""
-    n = base.count()
-    plan = recommend_lsh_planes(n, budget_pairs, k=k)
-    return knn_graph(base, plan.k, with_sim, planes=plan.planes)
 
 
 def knn_graph_insert(base: DataFrame, delta: DataFrame, k: int = _NSW_K) -> DataFrame:
@@ -3758,61 +3626,6 @@ def q_kmeans_train(spark, sf_dir):
     )
 
 
-#: Upper bound on centroid cells (k × dims doubles, ~8 B each → ~32 MB
-#: framed at the bound) for the one-row collect_list broadcast in
-#: :func:`kmeans_rounds`. Like _CC_BROADCAST_MAX_LABELS this is an
-#: absolute data-size bound, not a core-count tunable: below it the
-#: folded single-row broadcast is a trivial ship; above it (a
-#: 100k-centroid IVF quantizer at 64+ dims) building the row would
-#: concentrate the whole codebook in one driver/executor allocation, so
-#: the loop degrades to the exploded per-centroid path instead of an
-#: OOM. Both paths produce bit-identical assignments (pinned by
-#: tests/test_ext.py::test_kmeans_exploded_path_matches_broadcast).
-_KM_BROADCAST_MAX_CELLS = 4_000_000
-
-
-def _kmeans_rounds_exploded(vecs, cents, iters: int = 3):
-    """The pre-fold kmeans shape kept as :func:`kmeans_rounds`' large-k
-    regime: centroids broadcast as a k-row TABLE (never collected into
-    one row), assignment via crossJoin + groupBy(vec_id) min-by-struct
-    — k× the rows through an exchange, but no single allocation holds
-    the codebook. Distance expression, tie-break, float32 snap, and
-    emptied-cluster semantics are identical to the folded path."""
-    dist = F.aggregate(
-        F.zip_with(F.col("emb_d"), F.col("cent"), lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    assign = None
-    for i in range(iters):
-        scored = vecs.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "emb_d", F.col("cid"), dist.alias("dist")
-        )
-        assign = (
-            scored.groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cid")).alias("best"))
-            .select("vec_id", F.col("best.cid").alias("cid"), F.col("best.dist").alias("dist"))
-        )
-        if i + 1 < iters:
-            means = (
-                vecs.join(assign.select("vec_id", "cid"), "vec_id")
-                .select("cid", F.posexplode("emb_d").alias("pos", "x"))
-                .groupBy("cid", "pos")
-                .agg(F.avg("x").alias("m"))
-            )
-            cents = (
-                means.groupBy("cid")
-                .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-                .select(
-                    "cid",
-                    F.expr(
-                        "transform(pm, s -> cast(cast(s.m as float) as double))"
-                    ).alias("cent"),
-                )
-            )
-    return assign
-
-
 def kmeans_rounds(vecs, cents, iters: int = 3):
     """Lloyd's algorithm unrolled into one DAG over (vec_id, emb_d)
     vectors and seed (cid, cent) centroids, both array<double>: each
@@ -3827,18 +3640,8 @@ def kmeans_rounds(vecs, cents, iters: int = 3):
     Lloyd-rounds property test in
     ``tests/test_operator_properties.py``.
 
-    r14 guard (guide §5): the folded one-row broadcast below holds
-    k × dims doubles in a single allocation; a seed table past
-    :data:`_KM_BROADCAST_MAX_CELLS` routes to
-    :func:`_kmeans_rounds_exploded` (identical output) instead of
-    risking a driver OOM. The probe is one tiny aggregate over the
-    k-row seed relation, run once at plan build."""
-    kd = cents.agg(
-        F.count(F.lit(1)).alias("k"),
-        F.coalesce(F.max(F.size("cent")), F.lit(1)).alias("d"),
-    ).first()
-    if kd["k"] * max(kd["d"], 1) > _KM_BROADCAST_MAX_CELLS:
-        return _kmeans_rounds_exploded(vecs, cents, iters)
+    The build is lazy: no Spark job runs until the result is consumed.
+    The folded broadcast row holds all k × dims centroid doubles."""
     # Assignment is ONE narrow projection per round (guide §2.4): the k-row
     # centroid table folds into a single broadcast row (collect_list of
     # (cid, cent) structs) and the nearest centroid is an array argmin —

@@ -20,98 +20,19 @@ quadratic part — spreads over ``S²`` × blocks reducers.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
-def _md5_priority(col) -> F.Column:
-    """Deterministic 60-bit priority from an id (or any expression) —
-    the no-``rand()`` sampling primitive used across the engine
-    (reshard- and rerun-stable, engine-portable)."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast(
-        "bigint"
-    )
-
-
-def cap_block_members(
-    df: DataFrame, block_cols: list[str], id_col: str, max_members: int
-) -> DataFrame:
-    """Keep each block's ``max_members`` lowest-md5-priority rows.
-
-    The 100 TB escape hatch for densifying pair operators (the triangle
-    counter's ``max_out_neighbors`` pattern, ``ext/graph.py``): a block
-    of size m emits m(m−1)/2 pairs, so one pathological block (a spam
-    run, a boilerplate cluster) can emit more output than the rest of
-    the corpus combined. Capping members bounds every block's pair
-    output at K(K−1)/2 — a deterministic SUBSET of the exact pair set,
-    monotone non-decreasing in K, exact once K ≥ the largest block.
-    One row_number window per block. Operational recipe (measured,
-    ``PAIR_CAPS_r8.json``): the ranking window has its own cost, so
-    enable the cap only when a block-size diagnostic (the
-    q_dedup_lsh_bucket_stats shape) shows oversized blocks — on dense
-    blocks it cut the sf0.1 cosine pair stage 4.0×, on balanced
-    n-gram blocks it only added the window's shuffle. For uniform
-    thinning at any block shape, ``pair_sample_bp`` is the cheaper
-    knob (5× at p=2500, exactly 25% of pairs kept)."""
-    w = Window.partitionBy(*block_cols).orderBy(
-        _md5_priority(id_col).asc(), F.col(id_col).asc()
-    )
-    return (
-        df.withColumn("_bp_rn", F.row_number().over(w))
-        .filter(F.col("_bp_rn") <= max_members)
-        .drop("_bp_rn")
-    )
-
-
-def _pair_sample_cond(id_col: str, pair_sample_bp: int) -> F.Column:
-    """Deterministic unbiased pair keep-decision: md5 of the ordered id
-    pair mod 10⁴ < ``pair_sample_bp`` (p=10000 keeps every pair). Pair
-    COUNTS scale by 10000/p for an unbiased estimate; the kept pairs
-    themselves are exact (no approximation inside a pair's score)."""
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.col(f"a.{id_col}").cast("string"),
-                    F.col(f"b.{id_col}").cast("string"),
-                )
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    return (h % 10000) < F.lit(pair_sample_bp)
-
-
-def block_pairs(
-    df: DataFrame,
-    block_cols: list[str],
-    id_col: str,
-    max_block_members: int | None = None,
-    pair_sample_bp: int | None = None,
-) -> DataFrame:
+def block_pairs(df: DataFrame, block_cols: list[str], id_col: str) -> DataFrame:
     """Plain blocked self-pairs: fine when block-key cardinality ≫ cores.
 
     Output columns: ``a.*`` / ``b.*`` accessible via aliases ``a``/``b``.
-    ``max_block_members`` / ``pair_sample_bp`` are the 100 TB output
-    caps (see :func:`cap_block_members` / :func:`_pair_sample_cond`);
-    both default off, leaving the exact plan byte-identical.
     """
-    if max_block_members is not None:
-        df = cap_block_members(df, block_cols, id_col, max_block_members)
     a, b = df.alias("a"), df.alias("b")
     cond = F.lit(True)
     for c in block_cols:
         cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
-    out = a.join(b, cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-    if pair_sample_bp is not None:
-        out = out.filter(_pair_sample_cond(id_col, pair_sample_bp))
-    return out
+    return a.join(b, cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
 
 
 def salted_block_pairs(
@@ -119,8 +40,6 @@ def salted_block_pairs(
     block_cols: list[str],
     id_col: str,
     salt_buckets: int = 8,
-    max_block_members: int | None = None,
-    pair_sample_bp: int | None = None,
 ) -> DataFrame:
     """Skew-resistant blocked self-pairs (see module docstring).
 
@@ -129,13 +48,8 @@ def salted_block_pairs(
     the join key is ``block_cols + (salt_a, salt_b)`` — so each block's
     quadratic pair work lands on ``S²`` independent reducers instead of
     one. Result set is IDENTICAL to :func:`block_pairs`; only the
-    physical distribution changes. ``max_block_members`` /
-    ``pair_sample_bp`` are the 100 TB output caps (see
-    :func:`cap_block_members` / :func:`_pair_sample_cond`); both
-    default off, leaving the exact plan byte-identical.
+    physical distribution changes.
     """
-    if max_block_members is not None:
-        df = cap_block_members(df, block_cols, id_col, max_block_members)
     S = salt_buckets
     salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(S)).cast("int")
     a = (
@@ -152,148 +66,4 @@ def salted_block_pairs(
     for c in block_cols:
         cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
     out = a.join(b, cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-    if pair_sample_bp is not None:
-        # before the drop: the a./b. alias references resolve here
-        out = out.filter(_pair_sample_cond(id_col, pair_sample_bp))
     return out.drop("_sa", "_sb")
-
-
-# --- cap recommendation (judge directive r9 #5) -------------------------
-
-
-@dataclass(frozen=True)
-class PairCapPlan:
-    """Recommended pair-output caps for one blocked pair operator.
-
-    ``max_block_members`` / ``pair_sample_bp`` plug straight into
-    :func:`block_pairs` / :func:`salted_block_pairs`; ``None`` means
-    leave that knob off. ``total_pairs`` is the uncapped candidate
-    mass the histogram implies; ``expected_pairs`` what the plan should
-    emit (exact for the member cap, an unbiased expectation for
-    sampling)."""
-
-    max_block_members: int | None
-    pair_sample_bp: int | None
-    total_pairs: int
-    expected_pairs: int
-    reason: str
-
-
-def _capped_pairs(sizes: list[tuple[int, int]], k: int) -> int:
-    """Σ n_buckets · C(min(size, k), 2) — pair mass after a member cap."""
-    return sum(n * (min(s, k) * (min(s, k) - 1) // 2) for s, n in sizes)
-
-
-def recommend_pair_caps(
-    histogram,
-    max_pairs: int,
-    min_members: int = 8,
-    cap_trim_max: float = 0.2,
-) -> PairCapPlan:
-    """Choose ``max_block_members`` / ``pair_sample_bp`` from a
-    block-size histogram (the ``q_dedup_lsh_bucket_stats`` shape:
-    rows carrying ``bucket_size`` and ``n_buckets``) and a pair budget.
-
-    Encodes the tradeoff MEASURED in ``PAIR_CAPS_r8.json`` rather than
-    a guess:
-
-    - The member cap trims the quadratic JOIN itself (inputs shrink
-      before pairing) but pays a ranking-window shuffle over every
-      banded row. Measured: **4.0×** on dense blocks (10 label blocks
-      of ~200 members, cap 64 → trim ratio 0.10) and **slower** on
-      balanced blocks (cap ≥ block size → trim ratio ~1.0, the shuffle
-      bought nothing). So the cap is recommended only when it removes
-      ≥ ``1 - cap_trim_max`` of the pair mass — blocks far larger than
-      the achievable cap, the pathological-block regime it exists for.
-    - Pair sampling is a shuffle-free filter on the ordered-id md5, so
-      it wins everywhere else. Measured: **5.0×** at bp=2500 with
-      exactly the expected 25% of pairs kept, unbiased. Its limit: the
-      join still ENUMERATES every candidate, so it cannot save a
-      mega-block whose enumeration alone blows up — that is the member
-      cap's job, and when even ``min_members`` leaves the budget
-      exceeded the plan combines both knobs.
-
-    ``histogram`` accepts Rows/dicts (``bucket_size``/``n_buckets``)
-    or ``(bucket_size, n_buckets)`` tuples. Deterministic; pinned
-    against the artifact's own numbers in ``tests/test_pair_caps.py``.
-    """
-    sizes: list[tuple[int, int]] = []
-    for row in histogram:
-        if isinstance(row, (tuple, list)):
-            s, n = int(row[0]), int(row[1])
-        else:
-            get = row.get if isinstance(row, dict) else row.__getitem__
-            s, n = int(get("bucket_size")), int(get("n_buckets"))
-        if s >= 2 and n > 0:
-            sizes.append((s, n))
-    total = _capped_pairs(sizes, max(s for s, _ in sizes)) if sizes else 0
-    if total <= max_pairs:
-        return PairCapPlan(None, None, total, total, "exact affordable: no caps")
-    max_size = max(s for s, _ in sizes)
-
-    # largest K whose capped mass fits the budget (monotone in K)
-    lo, hi, best_k = min_members, max_size, None
-    while lo <= hi:
-        mid = (lo + hi) // 2
-        if _capped_pairs(sizes, mid) <= max_pairs:
-            best_k, lo = mid, mid + 1
-        else:
-            hi = mid - 1
-
-    if best_k is not None:
-        capped = _capped_pairs(sizes, best_k)
-        if capped <= cap_trim_max * total:
-            return PairCapPlan(
-                best_k,
-                None,
-                total,
-                capped,
-                f"dense-block regime: cap {best_k} removes "
-                f"{100 - round(100 * capped / total)}% of join work "
-                "(PAIR_CAPS_r8 measured 4.0x in this regime)",
-            )
-
-    floor_capped = _capped_pairs(sizes, min_members)
-    if floor_capped > max_pairs and floor_capped <= cap_trim_max * total:
-        # mega-block regime: even the floor cap exceeds the budget, but
-        # it removes the bulk of the join enumeration (which sampling
-        # alone never can — the join still enumerates every candidate);
-        # combine both knobs: cap bounds the mega-blocks, sampling
-        # thins the remainder to fit
-        bp = max(1, (max_pairs * 10000) // floor_capped)
-        return PairCapPlan(
-            min_members,
-            bp,
-            total,
-            floor_capped * bp // 10000,
-            f"mega-block regime: floor cap {min_members} removes "
-            f"{100 - round(100 * floor_capped / total)}% of enumeration "
-            f"but still exceeds the budget; sampling bp={bp} thins the rest",
-        )
-
-    bp = (max_pairs * 10000) // total
-    if bp >= 1:
-        return PairCapPlan(
-            None,
-            bp,
-            total,
-            total * bp // 10000,
-            f"balanced-block regime: sampling bp={bp} is shuffle-free "
-            "(PAIR_CAPS_r8 measured 5.0x at bp=2500; the member-cap window "
-            "was SLOWER on this shape)",
-        )
-    # budget below 1 basis point of the mass: sampling's granularity
-    # floor (bp=1 keeps ~total/10⁴ pairs). Cascade to the floor cap and
-    # sample the remainder; if the budget is below 1 bp of even the
-    # floor-capped mass it is unreachable at this min_members, and
-    # expected_pairs reports the honest bp=1 floor rather than lying.
-    bp = max(1, (max_pairs * 10000) // floor_capped)
-    return PairCapPlan(
-        min_members,
-        bp,
-        total,
-        floor_capped * bp // 10000,
-        f"sub-basis-point budget: floor cap {min_members} + sampling "
-        f"bp={bp}; budgets under 1 bp of the floor-capped mass are "
-        "below the sampler's granularity",
-    )

@@ -38,24 +38,40 @@ class EngineConfig:
     def load(cls, yaml_path: str | None = None) -> "EngineConfig":
         """Defaults < YAML file < ``DIS_*`` env vars (viper-style override).
 
-        A YAML key that names no field raises ``ValueError`` (a stale or
-        misspelled key would otherwise run silently with the default).
-        Env vars set the scalar fields only, ``int`` fields converted; a
-        ``DIS_*`` var naming the ``extra_spark_conf`` mapping raises
-        ``ValueError``: set it in the YAML file."""
+        A named YAML file that does not exist raises ``FileNotFoundError``
+        (a mistyped path would otherwise run silently on the defaults). A
+        file whose top level is not a mapping, a key that names no field,
+        or a value whose type differs from its field's default raises
+        ``ValueError`` naming the file. Env vars set the scalar fields
+        only, ``int`` fields converted; a ``DIS_*`` var naming the
+        ``extra_spark_conf`` mapping raises ``ValueError``: set it in the
+        YAML file."""
         values: dict = {}
         known = {f_.name: f_.type for f_ in fields(cls)}
-        if yaml_path and os.path.exists(yaml_path):
+        if yaml_path:
             import yaml
 
             with open(yaml_path) as f:
                 raw = yaml.safe_load(f) or {}
-            values.update({k.lower(): v for k, v in raw.items()})
+            if not isinstance(raw, dict):
+                raise ValueError(
+                    f"config file {yaml_path!r} must hold a mapping of keys, "
+                    f"not a {type(raw).__name__}"
+                )
+            values.update({str(k).lower(): v for k, v in raw.items()})
             unknown = sorted(set(values) - set(known))
             if unknown:
                 raise ValueError(
                     f"unknown config key(s) {unknown} in {yaml_path!r}; known keys: {sorted(known)}"
                 )
+            defaults = cls()
+            for name, v in values.items():
+                want = type(getattr(defaults, name))
+                if type(v) is not want:
+                    raise ValueError(
+                        f"config key {name!r} in {yaml_path!r} must be a "
+                        f"{want.__name__}, not {type(v).__name__} {v!r}"
+                    )
         for name, type_ in known.items():
             env_key = _ENV_PREFIX + name.upper()
             if env_key not in os.environ:

@@ -1,4 +1,5 @@
-"""How a timing tool builds, warms and times a Spark session.
+"""How a timing tool builds, warms and times a Spark session, and
+counts the Spark jobs a call launches.
 
 ``ab_bench``, ``opt_profile``, ``scaling_probe`` and ``plan_audit`` all
 run under the session ``bench.py`` builds: local[$SPARK_GRAFT_CPUS or
@@ -16,6 +17,7 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -36,6 +38,25 @@ def bench_session(app: str) -> SparkSession:
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def spark_jobs(spark: SparkSession, fn, *args, **kwargs):
+    """Run ``fn(*args, **kwargs)`` under a fresh job group and return
+    ``(result, jobs)``: the number of Spark jobs launched in that group.
+
+    Jobs are selected by group id, never by position in the status
+    store's bounded job list; the listener bus is drained first so every
+    finished job is registered."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def warm(spark: SparkSession, sf_dir: str) -> None:

@@ -15,22 +15,25 @@ diff of two audit files.
 Usage: python scripts/plan_audit.py [sf_dir] [out.json]
        python scripts/plan_audit.py --diff old.json new.json
 
-Compile-only (`explainString`) — no registered query's FULL plan is
-executed. Two bounded pre-job classes do run at DataFrame-construction
-time and are the audit's accepted cost: eager ``localCheckpoint`` pins
-(the dedup/LSH family materializes its signature relation once, by
-design) and one-scalar plan-shape probes (``capped_basket_items``'s
-whale-existence LIMIT 1 — runtime-adaptive plan selection, not output
-data; output VALUES are never collected at construction time). With
-those, the whole 240+ key registry audits in about a minute;
-BroadcastNestedLoopJoin is counted but NOT flagged —
-every registry occurrence is a broadcast 1-row scalar attach (audited;
-see ext/text.py, plans/relational.py docstrings), which is the
-intended plan for "attach a corpus-level aggregate to every row".
+Compile-only (`explainString`): no registered query's plan is
+executed. A builder may still launch Spark jobs while it constructs
+its DataFrame (an eager ``localCheckpoint`` pin, a one-row plan-shape
+probe, a streaming drain); each key's ``build_jobs`` records how many,
+counted by job group from the status store (``harness.spark_jobs``,
+which the tests use too), so a builder that gains or loses an eager
+job shows up in ``--diff`` apart from the plan-shape changes.
+Every table in ``sf_dir`` is read before the first key, so a table's
+one-time footer job is charged to no key. Jobs a stream runs on its
+own thread carry the stream's job group and are not counted.
+BroadcastNestedLoopJoin is counted but NOT flagged — every registry
+occurrence is a broadcast 1-row scalar attach (audited; see
+ext/text.py, plans/relational.py docstrings), which is the intended
+plan for "attach a corpus-level aggregate to every row".
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import re
@@ -38,7 +41,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from harness import bench_session  # noqa: E402
+from harness import bench_session, spark_jobs  # noqa: E402
 
 FLAG_KEYS = ("cartesian", "python_row_eval")
 
@@ -79,6 +82,7 @@ def audit_plan(plan: str) -> dict:
 
 def run_audit(sf_dir: str, out_path: str | None) -> int:
     from data_ingestor_spark.plans import queries as q
+    from data_ingestor_spark.plans.registry import load_table
 
     # bench.py's session: the eager-build cost the audit accepts includes
     # output-bound materializations (q_sql_graph_triangles' 208M-triangle
@@ -87,11 +91,13 @@ def run_audit(sf_dir: str, out_path: str | None) -> int:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     rows = {}
     failed = 0
+    for path in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        load_table(spark, sf_dir, os.path.basename(path)[: -len(".parquet")])
     for name in sorted(q.REGISTRY):
         try:
-            df = q.REGISTRY[name].fn(spark, sf_dir)
+            df, jobs = spark_jobs(spark, q.REGISTRY[name].fn, spark, sf_dir)
             plan = df._jdf.queryExecution().explainString(mode)
-            rows[name] = audit_plan(plan)
+            rows[name] = {**audit_plan(plan), "build_jobs": jobs}
         except Exception as e:  # compile failure IS a finding
             rows[name] = {"error": str(e).splitlines()[0][:200]}
             failed += 1
@@ -137,7 +143,22 @@ def run_diff(old_path: str, new_path: str) -> int:
             if a.get(f) != b.get(f)
         }
         changes[k] = delta
-    print(json.dumps({"n_changed": len(changes), "changes": changes}, indent=1, sort_keys=True))
+    # eager build jobs apart from the plan shape: a key whose builder
+    # gained or lost a job is not a key whose plan changed
+    build_jobs = {k: d.pop("build_jobs") for k, d in changes.items() if "build_jobs" in d}
+    changes = {k: d for k, d in changes.items() if d}
+    print(
+        json.dumps(
+            {
+                "n_changed": len(changes),
+                "changes": changes,
+                "n_build_jobs_changed": len(build_jobs),
+                "build_jobs_changes": build_jobs,
+            },
+            indent=1,
+            sort_keys=True,
+        )
+    )
     return 0
 
 

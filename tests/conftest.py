@@ -5,6 +5,8 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from scripts.harness import spark_jobs  # noqa: E402,F401  (tests import it from here)
+
 SF_DIR = "/root/testdata/sf0.001"
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
@@ -36,24 +38,3 @@ def adversarial_sf_dir(tmp_path_factory):
     from scripts.adversarial_corpus import build
 
     return build(str(tmp_path_factory.mktemp("advsf")))
-
-
-def spark_jobs(spark, fn, *args, **kwargs):
-    """Run ``fn(*args, **kwargs)`` under a fresh job group and return
-    ``(result, jobs)``: the number of Spark jobs launched in that group.
-
-    Jobs are selected by group id, never by position in the status
-    store's bounded job list; the listener bus is drained first so every
-    finished job is registered."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"spark-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        result = fn(*args, **kwargs)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))

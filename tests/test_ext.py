@@ -1524,31 +1524,16 @@ def test_text_bm25_incremental_equals_scratch(spark):
     assert merged == scratch
 
 
-def test_kmeans_exploded_path_matches_broadcast(spark, monkeypatch):
-    """The r14 kmeans broadcast guard must be output-invariant: forcing
-    the exploded per-centroid path (the large-k regime, chosen when
-    k × dims exceeds _KM_BROADCAST_MAX_CELLS) on a seed table that
-    would normally fold into the one-row broadcast yields byte-identical
-    (vec_id, cid, dist) assignments — including an emptied cluster
-    (cid 2 seeds on an outlier that defects round 1) disappearing from
-    later rounds on both paths."""
-    from pyspark.sql import functions as F
+def test_kmeans_train_build_launches_no_spark_job(spark):
+    """Building q_kmeans_train is lazy: the k-means rounds fold into one
+    plan and no Spark job runs until the result is consumed. The table
+    handle is read first, so its one-time footer job is not counted."""
+    from conftest import SF_DIR, spark_jobs
 
-    from data_ingestor_spark.ext import similarity
+    from data_ingestor_spark.plans import queries as q
+    from data_ingestor_spark.plans.registry import load_table
 
-    rows = [
-        (i, [float((i * 7 + j * 3) % 11), float((i * 5 + j) % 13), float(i % 4)])
-        for i in range(40)
-        for j in (0,)
-    ]
-    vecs = spark.createDataFrame(rows, "vec_id bigint, emb_d array<double>")
-    cents = vecs.filter(F.col("vec_id") % 16 == 0).select(
-        (F.col("vec_id") / 16).cast("int").alias("cid"), F.col("emb_d").alias("cent")
-    )
-    folded = {r["vec_id"]: (r["cid"], r["dist"]) for r in
-              similarity.kmeans_rounds(vecs, cents, iters=3).collect()}
-    monkeypatch.setattr(similarity, "_KM_BROADCAST_MAX_CELLS", 0)
-    exploded = {r["vec_id"]: (r["cid"], r["dist"]) for r in
-                similarity.kmeans_rounds(vecs, cents, iters=3).collect()}
-    assert exploded == folded
-    assert len(folded) == 40
+    load_table(spark, SF_DIR, "embeddings")
+    fn = q.REGISTRY["q_kmeans_train"].fn
+    _, jobs = spark_jobs(spark, fn, spark, SF_DIR)
+    assert jobs == 0

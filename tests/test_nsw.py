@@ -330,61 +330,6 @@ def test_knn_graph_insert_equals_rebuild(spark, tmp_path, seed, n, dim, split):
     assert merged == scratch
 
 
-def test_recommend_lsh_planes_regimes():
-    """The three recommender regimes, pinned (LSH_PLANES_r13.json):
-    small corpus -> static minimum; growing corpus -> smallest plane
-    count fitting the budget (per-node candidate mass stays in the
-    150-260 band instead of growing linearly); absurd budget -> the
-    recall floor wins over the budget and says so."""
-    from data_ingestor_spark.ext.similarity import (
-        _LSH_PLANES,
-        _NSW_K,
-        recommend_lsh_planes,
-    )
-
-    small = recommend_lsh_planes(500)
-    assert small.planes == _LSH_PLANES and "small enough" in small.reason
-
-    grown = [recommend_lsh_planes(n) for n in (2_000, 20_000, 200_000, 2_000_000)]
-    assert [p.planes for p in grown] == sorted(p.planes for p in grown)
-    assert all(p.planes > _LSH_PLANES for p in grown)
-    for p in grown:
-        # the banding rule holds: mass per node stays roughly constant
-        assert 100 <= p.expected_cands_per_node <= 260
-        assert "budget governs" in p.reason
-
-    floor = recommend_lsh_planes(2_000, budget_pairs=10)
-    assert "recall floor" in floor.reason
-    # never banded past the point where top-k selection starves
-    assert floor.expected_cands_per_node >= 4 * _NSW_K
-
-
-def test_knn_graph_auto_matches_explicit(spark, tmp_path):
-    """knn_graph_auto == knn_graph at the recommended plane count —
-    the auto path only chooses the knob, never changes the build."""
-    from pyspark.sql import functions as F
-
-    from data_ingestor_spark.ext.similarity import (
-        knn_graph,
-        knn_graph_auto,
-        load_vectors,
-        recommend_lsh_planes,
-    )
-
-    rng = np.random.default_rng(111)
-    rows = [(0, [float(x) for x in rng.normal(size=8).astype(np.float32)], 0)]
-    for i in range(1, 41):
-        rows.append((i, [float(x) for x in rng.normal(size=8).astype(np.float32)], int(i % 3)))
-    spark.createDataFrame(
-        rows, "vec_id bigint, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
-    base = load_vectors(spark, str(tmp_path)).filter(F.col("vec_id") != 0)
-    plan = recommend_lsh_planes(base.count())
-    auto = sorted(map(tuple, knn_graph_auto(base).collect()))
-    explicit = sorted(map(tuple, knn_graph(base, planes=plan.planes).collect()))
-    assert auto == explicit
-
-
 @pytest.mark.parametrize(
     "seed,n,dim,tomb",
     [

@@ -642,10 +642,10 @@ def test_retention_matrix_matches_python_reference(spark, pairs):
     assert got == _ref_retention(pairs)
 
 
-# ----------------------------------------- capped / sampled triangle modes
+# ------------------------------------------------ library triangle counts
 
 
-def _lib_triangles(spark, edges, **kw):
+def _lib_triangles(spark, edges):
     import data_ingestor_spark.ext.graph as G
 
     schema = StructType(
@@ -653,9 +653,8 @@ def _lib_triangles(spark, edges, **kw):
     )
     canon = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
     df = spark.createDataFrame(canon, schema)
-    out = G.triangle_counts(df.localCheckpoint(eager=True), **kw)
-    col = "est_triangles" if "edge_sample_bp" in kw else "n_triangles"
-    return sorted((r["doc_id"], r[col]) for r in out.collect())
+    out = G.triangle_counts(df.localCheckpoint(eager=True))
+    return sorted((r["doc_id"], r["n_triangles"]) for r in out.collect())
 
 
 def test_triangle_counts_library_exact_matches_bruteforce(spark):
@@ -663,50 +662,6 @@ def test_triangle_counts_library_exact_matches_bruteforce(spark):
     bowtie = [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3)]
     for g in (k4, bowtie):
         assert _lib_triangles(spark, g) == _ref_triangles(g)
-
-
-def test_triangle_counts_cap_is_monotone_lower_bound(spark):
-    """max_out_neighbors=K must be a lower bound on exact counts,
-    monotone non-decreasing in K, and exact once K covers the max
-    oriented out-degree — on a graph dense enough for the cap to bite
-    (K5 plus a pendant chain)."""
-    k5 = [(a, b) for a in range(5) for b in range(a + 1, 5)]
-    g = k5 + [(4, 5), (5, 6)]
-    exact = dict(_ref_triangles(g))
-    prev = {}
-    for k in (1, 2, 3, 10):
-        capped = dict(_lib_triangles(spark, g, max_out_neighbors=k))
-        for v, n in capped.items():
-            assert n <= exact[v]
-            assert n >= prev.get(v, 0)
-        prev = capped
-    assert prev == exact  # K=10 >= max out-degree -> exact
-
-
-def test_triangle_counts_sample_full_rate_is_exact_and_deterministic(spark):
-    """edge_sample_bp=10000 keeps every edge: the DOULION estimate must
-    equal the exact counts with scale 1.0, twice in a row (md5-priority
-    sampling is rerun-stable by construction)."""
-    bowtie = [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3)]
-    exact = [(v, float(n)) for v, n in _ref_triangles(bowtie)]
-    once = _lib_triangles(spark, bowtie, edge_sample_bp=10000)
-    again = _lib_triangles(spark, bowtie, edge_sample_bp=10000)
-    assert once == exact
-    assert once == again
-
-
-def test_triangle_counts_sample_drops_edges_deterministically(spark):
-    """A partial rate on a K8 must (a) run, (b) be rerun-stable, and
-    (c) scale counts by exactly (10000/bp)^3 relative to the sampled
-    subgraph's own exact enumeration."""
-    k8 = [(a, b) for a in range(8) for b in range(a + 1, 8)]
-    bp = 6000
-    est = dict(_lib_triangles(spark, k8, edge_sample_bp=bp))
-    est2 = dict(_lib_triangles(spark, k8, edge_sample_bp=bp))
-    assert est == est2
-    scale = (10000.0 / bp) ** 3
-    for v, x in est.items():
-        assert x >= 0 and abs(x / scale - round(x / scale)) < 1e-9
 
 
 # ------------------------------------------- sweep-line concurrency timeline
@@ -3629,68 +3584,3 @@ def test_mix_resample_matches_hashlib_reference(spark, docs):
         )
         expected[s] = (len(ids), rate, kept)
     assert got == expected
-
-
-# ------------------------------------------------- pair-cap recommendation
-
-
-@given(
-    hist=st.lists(
-        st.tuples(st.integers(2, 5000), st.integers(1, 200)),
-        min_size=1,
-        max_size=12,
-    ),
-    budget=st.integers(1, 10_000_000),
-)
-@settings(**{**_SETTINGS, "max_examples": 60})
-def test_recommend_pair_caps_invariants(hist, budget):
-    """Pure-function contract of recommend_pair_caps over random
-    histograms and budgets: (a) whatever it recommends EXPECTS to fit
-    the budget (member cap exactly; sampling in expectation, which the
-    floor-division estimate makes ≤ budget too); (b) a no-cap answer
-    happens only when the exact mass already fits; (c) a member cap is
-    never below the recall floor; (d) deterministic."""
-    from data_ingestor_spark.operators.pairs import recommend_pair_caps
-
-    plan = recommend_pair_caps(hist, budget)
-    again = recommend_pair_caps(hist, budget)
-    assert plan == again  # frozen dataclass equality = determinism
-
-    total = sum(n * s * (s - 1) // 2 for s, n in hist)
-    assert plan.total_pairs == total
-    if plan.max_block_members is None and plan.pair_sample_bp is None:
-        assert total <= budget
-        assert plan.expected_pairs == total
-    else:
-        if plan.pair_sample_bp == 1:
-            # the sampler's granularity floor: bp=1 keeps ~mass/10^4
-            # pairs, the closest reachable point to a sub-basis-point
-            # budget (documented in recommend_pair_caps)
-            assert plan.expected_pairs <= max(budget, total // 10_000, 1)
-        else:
-            assert plan.expected_pairs <= max(budget, 1)
-        if plan.max_block_members is not None:
-            assert plan.max_block_members >= 8  # min_members floor
-        if plan.pair_sample_bp is not None:
-            assert 1 <= plan.pair_sample_bp <= 10_000
-
-
-@given(
-    hist=st.lists(
-        st.tuples(st.integers(2, 2000), st.integers(1, 50)),
-        min_size=1,
-        max_size=8,
-    ),
-    budget_lo=st.integers(1, 100_000),
-    budget_hi_delta=st.integers(0, 1_000_000),
-)
-@settings(**{**_SETTINGS, "max_examples": 40})
-def test_recommend_pair_caps_monotone_in_budget(hist, budget_lo, budget_hi_delta):
-    """A bigger budget never expects FEWER pairs — the recommendation
-    relaxes monotonically (more members kept or a higher sampling
-    rate), so tightening a budget is always safe operationally."""
-    from data_ingestor_spark.operators.pairs import recommend_pair_caps
-
-    lo = recommend_pair_caps(hist, budget_lo)
-    hi = recommend_pair_caps(hist, budget_lo + budget_hi_delta)
-    assert hi.expected_pairs >= lo.expected_pairs

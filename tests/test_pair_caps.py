@@ -1,16 +1,6 @@
-"""Output caps for the quadratic-pair operators (judge directive r8 #5,
-the triangle counter's escape-hatch pattern applied to
-q_multimodal_phash_pairs / q_dedup_ngram_jaccard / q_dedup_embed_cosine).
-
-Contract proven here, against exact enumeration on small inputs:
-
-- ``max_block_members=K``: a deterministic SUBSET of the exact pair
-  set, monotone non-decreasing in K, EXACT once K ≥ the largest block.
-- ``pair_sample_bp=p``: p=10000 reproduces the exact set; p<10000 is a
-  deterministic subset decided per id-pair (stable across reruns).
-- defaults (both None) leave the exact result unchanged — oracle keys
-  are untouched.
-"""
+"""Blocked self-pair generation: the salted join (``salted_block_pairs``)
+emits exactly the pair set of the plain equality join (``block_pairs``)
+on a skewed block layout."""
 
 from __future__ import annotations
 
@@ -20,10 +10,6 @@ import sys
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _pairs_set(df, a="doc_a", b="doc_b"):
-    return {(r[a], r[b]) for r in df.collect()}
 
 
 @pytest.fixture(scope="module")
@@ -49,434 +35,3 @@ def test_salted_caps_default_off_matches_exact(spark, blocks_df):
     exact = ids(block_pairs(blocks_df, ["source"], "doc_id"))
     assert len(exact) == 12 * 11 // 2 + 3
     assert ids(salted_block_pairs(blocks_df, ["source"], "doc_id")) == exact
-    assert (
-        ids(
-            salted_block_pairs(
-                blocks_df,
-                ["source"],
-                "doc_id",
-                max_block_members=None,
-                pair_sample_bp=None,
-            )
-        )
-        == exact
-    )
-
-
-def test_max_block_members_subset_monotone_exact_at_cap(spark, blocks_df):
-    from data_ingestor_spark.operators.pairs import block_pairs, salted_block_pairs
-
-    def ids(df):
-        return {
-            (r["a_id"], r["b_id"])
-            for r in df.select(
-                df["a.doc_id"].alias("a_id"), df["b.doc_id"].alias("b_id")
-            ).collect()
-        }
-
-    exact = ids(block_pairs(blocks_df, ["source"], "doc_id"))
-    prev: set = set()
-    for k in (2, 4, 8, 12):
-        capped = ids(
-            salted_block_pairs(
-                blocks_df, ["source"], "doc_id", max_block_members=k
-            )
-        )
-        assert capped <= exact  # always a subset of the exact pair set
-        assert prev <= capped  # monotone non-decreasing in K
-        # per-block bound: at most K(K-1)/2 pairs from the big block
-        big = {p for p in capped if p[0] < 100}
-        assert len(big) <= k * (k - 1) // 2
-        prev = capped
-    assert prev == exact  # K >= largest block reproduces the exact set
-
-
-def test_pair_sample_bp_unbiased_subset_and_deterministic(spark, blocks_df):
-    from data_ingestor_spark.operators.pairs import block_pairs, salted_block_pairs
-
-    def ids(df):
-        return {
-            (r["a_id"], r["b_id"])
-            for r in df.select(
-                df["a.doc_id"].alias("a_id"), df["b.doc_id"].alias("b_id")
-            ).collect()
-        }
-
-    exact = ids(block_pairs(blocks_df, ["source"], "doc_id"))
-    full = ids(salted_block_pairs(blocks_df, ["source"], "doc_id", pair_sample_bp=10000))
-    assert full == exact  # p=10000 keeps every pair
-    s1 = ids(salted_block_pairs(blocks_df, ["source"], "doc_id", pair_sample_bp=4000))
-    s2 = ids(salted_block_pairs(blocks_df, ["source"], "doc_id", pair_sample_bp=4000))
-    assert s1 == s2  # md5 decision: stable across reruns
-    assert s1 < exact  # proper subset at p<10000 on this input
-    sml = ids(salted_block_pairs(blocks_df, ["source"], "doc_id", pair_sample_bp=1000))
-    assert sml <= s1  # keep-decision is a threshold: monotone in p
-
-
-@pytest.fixture(scope="module")
-def docs_df(spark):
-    # near-identical texts inside one (source, len-band) block
-    base = "the quick brown fox jumps over the lazy dog " * 3
-    rows = [(i, base + f"tail{i % 2}", "web") for i in range(8)]
-    rows += [(100, "completely different text about spark engines", "web")]
-    return spark.createDataFrame(rows, "doc_id bigint, text string, source string")
-
-
-def test_ngram_jaccard_caps_vs_exact(spark, docs_df):
-    from data_ingestor_spark.ext.dedup import ngram_jaccard_pairs
-
-    exact = _pairs_set(ngram_jaccard_pairs(docs_df, out_col="j"))
-    assert exact  # the near-identical docs do pair up
-    assert _pairs_set(ngram_jaccard_pairs(docs_df, out_col="j", pair_sample_bp=10000)) == exact
-    capped = _pairs_set(ngram_jaccard_pairs(docs_df, out_col="j", max_block_members=4))
-    assert capped <= exact
-    assert _pairs_set(ngram_jaccard_pairs(docs_df, out_col="j", max_block_members=64)) == exact
-    sampled = _pairs_set(ngram_jaccard_pairs(docs_df, out_col="j", pair_sample_bp=3000))
-    assert sampled <= exact
-
-
-@pytest.fixture(scope="module")
-def vecs_df(spark):
-    # two labels; label 0 is a dense near-dup cluster
-    rows = [(i, [1.0, 0.0, float(i) * 1e-4, 0.5], 0) for i in range(10)]
-    rows += [(100 + i, [0.0, 1.0, 0.0, float(i)], 1) for i in range(4)]
-    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>, label int")
-
-
-def test_embed_cosine_caps_vs_exact(spark, vecs_df):
-    from data_ingestor_spark.ext.similarity import embed_cosine_pairs
-
-    def ids(df):
-        return {(r["vec_a"], r["vec_b"]) for r in df.collect()}
-
-    exact = ids(embed_cosine_pairs(vecs_df, min_cos=0.9))
-    dense = {p for p in exact if p[1] < 100}
-    assert len(dense) == 10 * 9 // 2  # the dense cluster is all-pairs
-    assert ids(embed_cosine_pairs(vecs_df, min_cos=0.9, pair_sample_bp=10000)) == exact
-    capped = ids(embed_cosine_pairs(vecs_df, min_cos=0.9, max_block_members=4))
-    assert capped <= exact
-    # the dense block is bounded at K(K-1)/2
-    assert len({p for p in capped if p[1] < 100}) <= 4 * 3 // 2
-    assert ids(embed_cosine_pairs(vecs_df, min_cos=0.9, max_block_members=100)) == exact
-
-
-def test_phash_pair_caps_vs_exact(spark):
-    from data_ingestor_spark.ext.multimodal import phash_bands, phash_candidate_pairs
-
-    # 6 near-identical long docs (same bands) + 2 distinct ones
-    base = "".join(chr(65 + (i * 7) % 26) for i in range(300))
-    rows = [(i, base) for i in range(6)]
-    rows += [(10, "z" * 300), (11, base[::-1])]
-    d = spark.createDataFrame(rows, "doc_id bigint, text string")
-    b = phash_bands(d)
-
-    def ids(df):
-        return {(r["id_a"], r["id_b"]) for r in df.collect()}
-
-    exact = ids(phash_candidate_pairs(b))
-    assert {(a, c) for a in range(6) for c in range(6) if a < c} <= exact
-    assert ids(phash_candidate_pairs(b, pair_sample_bp=10000)) == exact
-    capped = ids(phash_candidate_pairs(b, max_band_members=3))
-    assert capped <= exact
-    # identical-band bucket of 6 docs is bounded at 3*2/2 pairs
-    assert len({p for p in capped if p[0] < 6 and p[1] < 6}) <= 3
-    assert ids(phash_candidate_pairs(b, max_band_members=100)) == exact
-    sampled = ids(phash_candidate_pairs(b, pair_sample_bp=2500))
-    assert sampled <= exact
-
-
-# --- cap recommendation (judge directive r9 #5) -------------------------
-
-
-def test_recommend_caps_affordable_recommends_nothing():
-    from data_ingestor_spark.operators.pairs import recommend_pair_caps
-
-    plan = recommend_pair_caps([(12, 500)], max_pairs=50_000)
-    assert plan.max_block_members is None and plan.pair_sample_bp is None
-    assert plan.total_pairs == plan.expected_pairs == 500 * 66
-
-
-def test_recommend_caps_dense_regime_matches_pair_caps_artifact():
-    """PAIR_CAPS_r8's embed_cosine shape — ~10 label blocks of ~200
-    members, where the member cap measured 4.0× — must yield a member
-    cap, no sampling, and an exact expected-pair count."""
-    from data_ingestor_spark.operators.pairs import recommend_pair_caps
-
-    plan = recommend_pair_caps([(200, 10)], max_pairs=25_000)
-    assert plan.max_block_members == 71  # largest K with 10·C(K,2) ≤ 25000
-    assert plan.pair_sample_bp is None
-    assert plan.total_pairs == 10 * (200 * 199 // 2)
-    assert plan.expected_pairs == 10 * (71 * 70 // 2) == 24_850
-    assert "dense-block" in plan.reason
-
-
-def test_recommend_caps_balanced_regime_matches_pair_caps_artifact():
-    """PAIR_CAPS_r8's ngram shape — many blocks none exceeding the cap,
-    where the member-cap window measured SLOWER and bp=2500 sampling
-    measured 5.0× at exactly the expected 25% kept — must yield pure
-    sampling with bp = budget share in basis points."""
-    from data_ingestor_spark.operators.pairs import recommend_pair_caps
-
-    # 500 balanced blocks; budget = 25% of the pair mass → bp 2500,
-    # the artifact's own measured operating point
-    plan = recommend_pair_caps([(12, 500)], max_pairs=(500 * 66) // 4)
-    assert plan.max_block_members is None
-    assert plan.pair_sample_bp == 2500
-    assert "balanced-block" in plan.reason
-
-
-def test_recommend_caps_mega_block_prefers_member_cap():
-    """One 100k-member block: sampling cannot bound the quadratic
-    enumeration, only the member cap can — and here it fits the budget
-    alone."""
-    from data_ingestor_spark.operators.pairs import recommend_pair_caps
-
-    plan = recommend_pair_caps([(100_000, 1), (10, 1_000)], max_pairs=1_000_000)
-    assert plan.max_block_members == 1382
-    assert plan.pair_sample_bp is None
-    assert plan.expected_pairs <= 1_000_000
-
-
-def test_recommend_caps_combines_knobs_when_floor_cap_exceeds_budget():
-    """Budget below what even the floor cap yields on dense blocks:
-    the plan caps at the floor AND samples the remainder."""
-    from data_ingestor_spark.operators.pairs import recommend_pair_caps
-
-    plan = recommend_pair_caps([(200, 10)], max_pairs=200, min_members=8)
-    assert plan.max_block_members == 8
-    assert plan.pair_sample_bp == (200 * 10_000) // (10 * 28)
-    assert plan.expected_pairs <= 200
-    assert "mega-block" in plan.reason
-
-
-def test_recommend_caps_accepts_bucket_stats_rows(spark):
-    """End-to-end with the real diagnostic: feed q_dedup_lsh_bucket_stats
-    rows straight into the recommender, then run block_pairs under the
-    recommended knobs and verify the emitted pair count honors the
-    budget (exact for a member cap; within sampling tolerance for bp)."""
-    from data_ingestor_spark.operators.pairs import block_pairs, recommend_pair_caps
-    from data_ingestor_spark.plans.queries import REGISTRY
-
-    hist = REGISTRY["q_dedup_lsh_bucket_stats"].fn(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
-    total = sum(r["candidate_pairs"] for r in hist)
-    assert total > 0
-    budget = max(1, total // 3)
-    plan = recommend_pair_caps(hist, max_pairs=budget)
-    assert plan.total_pairs == total
-
-    # drive the knobs through a real blocked pair stage on a synthetic
-    # frame shaped like the histogram's worst block
-    worst = max(r["bucket_size"] for r in hist)
-    df = spark.createDataFrame(
-        [(i, "b0") for i in range(worst)], "id bigint, block string"
-    )
-    pairs = block_pairs(
-        df,
-        ["block"],
-        "id",
-        max_block_members=plan.max_block_members,
-        pair_sample_bp=plan.pair_sample_bp,
-    )
-    n = pairs.count()
-    exact_worst = worst * (worst - 1) // 2
-    if plan.max_block_members is not None and plan.pair_sample_bp is None:
-        k = min(plan.max_block_members, worst)
-        assert n == k * (k - 1) // 2
-    else:
-        assert n <= exact_worst
-
-
-# --- triangle cap recommendation (judge directive r10 #4) ----------------
-
-
-def test_triangle_wedge_bound_exact_on_clique():
-    """The out-degree bound is TIGHT on a clique: Σ C(n−1−i, 2) =
-    C(n, 3) — exactly the dense regime where caps matter."""
-    from data_ingestor_spark.ext.graph import _out_degree_bound, _wedge_bound
-
-    for n in (3, 5, 12, 40):
-        ubs = _out_degree_bound([(n - 1, n)])
-        assert _wedge_bound(ubs, None) == n * (n - 1) * (n - 2) // 6
-
-
-def test_recommend_triangle_caps_affordable_recommends_nothing():
-    from data_ingestor_spark.ext.graph import recommend_triangle_caps
-
-    plan = recommend_triangle_caps([(4, 5)], max_wedges=100)
-    assert plan.max_out_neighbors is None and plan.edge_sample_bp is None
-    assert plan.total_wedges == plan.expected_wedges == 10
-
-
-def test_recommend_triangle_caps_quasi_clique_prefers_sampling():
-    """The sf0.1 near-dup shape (TRIANGLE_CAPS_r10: quasi-clique) under
-    a 10M-wedge budget: the MEASUREMENT overruled the naive pair-cap
-    transplant — DOULION sampling ran 7.6x with the estimate at 1.0013x
-    exact, while the K=114 cap ran 9.4x but covered only 4.2% of the
-    true mass. Default (estimate acceptable) must therefore sample;
-    estimate_ok=False must yield the deterministic neighbor cap."""
-    from data_ingestor_spark.ext.graph import recommend_triangle_caps
-
-    est = recommend_triangle_caps([(511, 2866)], max_wedges=10_000_000)
-    assert est.max_out_neighbors is None
-    assert est.edge_sample_bp == 1743  # isqrt(budget/total x 10^8)
-    assert est.expected_wedges <= 10_000_000
-    assert "estimate regime" in est.reason
-
-    det = recommend_triangle_caps(
-        [(511, 2866)], max_wedges=10_000_000, estimate_ok=False
-    )
-    assert det.max_out_neighbors == 84  # largest K with bound <= 10M
-    assert det.edge_sample_bp is None
-    assert det.expected_wedges <= 10_000_000
-    assert "deterministic-bound" in det.reason and "9.4x" in det.reason
-
-
-def test_recommend_triangle_caps_thin_budget_falls_back_to_cap():
-    """A budget too thin to estimate from (expected sampled wedges
-    below the floor) must fall back to the deterministic cap even when
-    estimates are allowed."""
-    from data_ingestor_spark.ext.graph import recommend_triangle_caps
-
-    plan = recommend_triangle_caps([(199, 200)], max_wedges=8_000)
-    assert plan.max_out_neighbors == 9  # (200-K)C(K,2)+C(K,3) <= 8000
-    assert plan.edge_sample_bp is None
-    assert "too thin to estimate" in plan.reason
-
-
-def test_recommend_triangle_caps_deterministic_floor_reports_overshoot():
-    """Determinism required but even the floor cap exceeds the budget:
-    the plan recommends the floor and reports the overshoot honestly
-    instead of lying about the expectation."""
-    from data_ingestor_spark.ext.graph import recommend_triangle_caps
-
-    plan = recommend_triangle_caps(
-        [(10_000, 20_000)], max_wedges=50_000, estimate_ok=False
-    )
-    assert plan.max_out_neighbors == 8
-    assert plan.edge_sample_bp is None
-    # honest: the floor-capped bound, far over budget (20_000 x C(8,2)
-    # minus the top-rank tail where out_ub < 8)
-    assert plan.expected_wedges == 559_832 > 50_000
-    assert "deterministic floor" in plan.reason
-
-
-def test_recommend_triangle_caps_mega_hub_cascade_combines_knobs():
-    """Wedge mass so far over budget that sampling alone cannot reach
-    it (bp < 1): the floor cap bounds hub enumeration and sampling
-    thins the capped remainder."""
-    from data_ingestor_spark.ext.graph import recommend_triangle_caps
-
-    plan = recommend_triangle_caps([(10_000, 20_000)], max_wedges=1_000)
-    assert plan.max_out_neighbors == 8
-    assert plan.edge_sample_bp == 422
-    assert plan.expected_wedges <= 1_000
-    assert "mega-hub cascade" in plan.reason
-
-
-def test_recommend_triangle_caps_accepts_degree_rows():
-    """q_graph_degree's own output shape (per-vertex degree rows) feeds
-    the recommender directly."""
-    from data_ingestor_spark.ext.graph import recommend_triangle_caps
-
-    rows = [{"doc_id": f"d{i}", "degree": 4} for i in range(5)]
-    plan = recommend_triangle_caps(rows, max_wedges=2)
-    assert plan.total_wedges == 10
-    assert (plan.max_out_neighbors, plan.edge_sample_bp) != (None, None)
-
-
-def test_triangle_counts_under_recommended_caps(spark):
-    """E2E: recommended caps honor their contracts on a real graph —
-    the neighbor cap yields a deterministic lower bound, monotone in K,
-    exact once K ≥ max oriented out-degree; sampling at bp=10000 keeps
-    everything and reproduces exact counts."""
-    from data_ingestor_spark.ext.graph import (
-        recommend_triangle_caps,
-        triangle_counts,
-    )
-
-    # K5 clique + a pendant chain
-    edges = [(a, b) for a in range(5) for b in range(a + 1, 5)] + [(5, 6), (6, 7)]
-    df = spark.createDataFrame(
-        [(f"d{a}", f"d{b}") for a, b in edges], "doc_a string, doc_b string"
-    )
-    exact = {r.doc_id: r.n_triangles for r in triangle_counts(df).collect()}
-    assert sum(exact.values()) == 3 * 10  # C(5,3) triangles, 3 corners each
-
-    deg: dict[str, int] = {}
-    for a, b in edges:
-        deg[f"d{a}"] = deg.get(f"d{a}", 0) + 1
-        deg[f"d{b}"] = deg.get(f"d{b}", 0) + 1
-    hist: dict[int, int] = {}
-    for d in deg.values():
-        hist[d] = hist.get(d, 0) + 1
-    plan = recommend_triangle_caps(sorted(hist.items()), max_wedges=4)
-    assert plan.max_out_neighbors is not None
-
-    prev_mass = -1
-    for k in sorted({plan.max_out_neighbors, 3, 10}):
-        capped = {
-            r.doc_id: r.n_triangles
-            for r in triangle_counts(df, max_out_neighbors=k).collect()
-        }
-        mass = sum(capped.values())
-        assert all(capped[v] <= exact[v] for v in capped)  # lower bound
-        assert mass >= prev_mass  # monotone in K
-        prev_mass = mass
-    assert prev_mass == sum(exact.values())  # exact at K ≥ max out-degree
-
-    full = {
-        r.doc_id: r.est_triangles
-        for r in triangle_counts(df, edge_sample_bp=10_000).collect()
-    }
-    assert {v: int(c) for v, c in full.items()} == exact
-
-
-def test_corpus_production_budgeted_pass_on_skewed_corpus(spark):
-    """The composed diagnostic→recommend→cap pass (judge directive r10
-    #8): one boilerplate template echoed across sources creates the
-    pathological band buckets; ``corpus_production(pair_budget=...)``
-    must run the whole recipe in one call. Contracts: a generous budget
-    reproduces the uncapped output exactly (recommender returns
-    no-caps), a tight budget still returns the full rollup schema and
-    can only UNDROP near-dups (capped survivors ≥ uncapped survivors),
-    and the default stays byte-identical to the registry key's plan."""
-    import random
-
-    from data_ingestor_spark.ext.dedup import corpus_production
-
-    rng = random.Random(7)
-    words = [f"w{i}" for i in range(400)]
-
-    def doc(seed_words, n=60):
-        return " ".join(seed_words[i % len(seed_words)] for i in range(n))
-
-    template = [f"boiler{i}" for i in range(55)]
-    rows = []
-    for i in range(120):
-        # near-identical boilerplate family: one shared template with a
-        # tiny unique tail — a dense LSH block by construction
-        rows.append((f"b{i:03d}", doc(template) + f" tail{i % 3}", "spam"))
-    for i in range(80):
-        uniq = rng.sample(words, 55)
-        rows.append((f"u{i:03d}", doc(uniq), "organic"))
-    docs = spark.createDataFrame(rows, "doc_id string, text string, source string")
-
-    uncapped = corpus_production(docs).collect()
-    base = {(r["split"], r["source"]): (r["n_docs"], r["total_tokens"]) for r in uncapped}
-
-    generous = corpus_production(docs, pair_budget=10_000_000).collect()
-    assert {
-        (r["split"], r["source"]): (r["n_docs"], r["total_tokens"]) for r in generous
-    } == base
-
-    tight = corpus_production(docs, pair_budget=200).collect()
-    assert tight and set(tight[0].asDict()) == {
-        "split",
-        "source",
-        "n_docs",
-        "total_tokens",
-    }
-    n_docs = lambda rs: sum(r["n_docs"] for r in rs)  # noqa: E731
-    assert n_docs(tight) >= n_docs(uncapped)  # capping only UNDROPS

@@ -1315,14 +1315,6 @@ def test_dedup_lines_incremental_anti_join_shape(spark, registry):
     assert "LeftAnti" in plan
 
 
-def _budgeted_corpus_production(spark, sf_dir):
-    from data_ingestor_spark.ext.dedup import corpus_production
-    from data_ingestor_spark.plans.registry import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    return corpus_production(docs, pair_budget=10_000_000)
-
-
 #: one case per ``_eval_once`` site in ext/dedup.py (plus the SQL twin's
 #: inline CASE) -> the number of barriers its optimized plan carries.
 #: q_dedup_lsh_recall reads its truth relation twice (count and
@@ -1332,8 +1324,7 @@ _EVAL_ONCE_SITES = {
     "q_sql_minhash_pairs": 1,  # SQL CASE WHEN spark_partition_id() >= 0
     "q_dedup_ngram_jaccard": 1,  # ngram_jaccard_pairs
     "q_dedup_incremental": 1,  # incremental_admission
-    "q_corpus_production": 1,  # corpus_production, fast path
-    "corpus_production_pair_budget": 1,  # corpus_production, capped path
+    "q_corpus_production": 1,  # corpus_production
     "q_dedup_lsh_recall": 2,
     "q_dedup_containment": 1,  # containment_pairs
     "q_dedup_containment_recall": 1,
@@ -1348,8 +1339,7 @@ def test_lsh_verify_intersect_evaluated_once(spark, registry, key):
     Guards the _eval_once push-down barrier (ext/dedup.py): if a future
     Spark folds the spark_partition_id() condition the way Spark 4
     folds rand() comparisons, this fails before any benchmark does."""
-    fn = _budgeted_corpus_production if key not in registry else registry[key].fn
-    plan = _formatted_plan(fn(spark, SF_DIR))
+    plan = _formatted_plan(registry[key].fn(spark, SF_DIR))
     n = plan.count("array_intersect")
     assert n == plan.count("CASE WHEN (SPARK_PARTITION_ID() >= 0)") == _EVAL_ONCE_SITES[key], (
         f"{key}: expected {_EVAL_ONCE_SITES[key]} barriered array_intersect in plan, found {n}"

@@ -85,34 +85,3 @@ def test_result_invariant_to_shuffle_partitioning(spark, key):
         f"{key}: {len(diffs)} rows differ under resharding; first: "
         f"default={diffs[0][0]!r} resharded={diffs[0][1]!r}"
     )
-
-
-@pytest.mark.parametrize("kw", [{"max_out_neighbors": 2}, {"edge_sample_bp": 6000}])
-def test_triangle_library_modes_invariant_to_shuffle_partitioning(spark, kw):
-    """The capped and sampled triangle modes introduce two surfaces the
-    exact registry key doesn't exercise — a per-source row_number
-    neighbor ranking and an md5-priority edge-keep decision — and both
-    must be functions of the data alone: same counts at 8 and at 3
-    shuffle partitions on a dense-enough graph (K6 + pendant chain)
-    for the cap and the sample to both bite."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from data_ingestor_spark.ext.graph import triangle_counts
-
-    edges = [(a, b) for a in range(6) for b in range(a + 1, 6)] + [(5, 6), (6, 7)]
-    schema = StructType(
-        [StructField("doc_a", LongType()), StructField("doc_b", LongType())]
-    )
-    df = spark.createDataFrame(edges, schema).localCheckpoint(eager=True)
-    conf = spark.conf
-    base_parts = conf.get("spark.sql.shuffle.partitions")
-    base_coalesce = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-    baseline = _rows(triangle_counts(df, **kw))
-    try:
-        conf.set("spark.sql.shuffle.partitions", "3")
-        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        resharded = _rows(triangle_counts(df, **kw))
-    finally:
-        conf.set("spark.sql.shuffle.partitions", base_parts)
-        conf.set("spark.sql.adaptive.coalescePartitions.enabled", base_coalesce)
-    assert baseline and baseline == resharded

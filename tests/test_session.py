@@ -55,3 +55,39 @@ def test_engine_config_env_cannot_set_the_conf_mapping(clean_env):
     clean_env.setenv("DIS_EXTRA_SPARK_CONF", "spark.a=1")
     with pytest.raises(ValueError, match="DIS_EXTRA_SPARK_CONF.*YAML"):
         EngineConfig.load()
+
+
+def test_engine_config_missing_file_raises(clean_env, tmp_path):
+    """A mistyped ``--config`` path must fail, not run on the defaults."""
+    missing = tmp_path / "confg.yaml"
+    with pytest.raises(FileNotFoundError, match="confg.yaml"):
+        EngineConfig.load(str(missing))
+
+
+@pytest.mark.parametrize(
+    "text", ["- app_name\n- tests\n", "local[2]\n"], ids=["list", "scalar"]
+)
+def test_engine_config_rejects_non_mapping_file(clean_env, tmp_path, text):
+    cfg = tmp_path / "config.yaml"
+    cfg.write_text(text)
+    with pytest.raises(ValueError, match="config.yaml.*mapping"):
+        EngineConfig.load(str(cfg))
+
+
+@pytest.mark.parametrize(
+    "text,key",
+    [
+        ('shuffle_partitions: "8"\n', "shuffle_partitions"),
+        ("shuffle_partitions: true\n", "shuffle_partitions"),
+        ("app_name: 7\n", "app_name"),
+        ("extra_spark_conf: spark.a=1\n", "extra_spark_conf"),
+    ],
+    ids=["quoted_int", "bool_for_int", "int_for_str", "str_for_mapping"],
+)
+def test_engine_config_rejects_mistyped_values(clean_env, tmp_path, text, key):
+    """A value of the wrong type must not load: ``"8"`` would reach
+    Spark as a string where an int is declared."""
+    cfg = tmp_path / "config.yaml"
+    cfg.write_text(text)
+    with pytest.raises(ValueError, match=f"{key}.*config.yaml"):
+        EngineConfig.load(str(cfg))
