@@ -21,6 +21,7 @@ Scale design:
 from __future__ import annotations
 
 import itertools
+import os
 
 import pandas as pd
 
@@ -283,11 +284,11 @@ def _plane_component(p: int, j_expr: str) -> str:
     )
 
 
-def _lsh_bucket_sql(vec_col: str, planes: int = _LSH_PLANES) -> str:
+def _lsh_bucket_sql(vec_col: str) -> str:
     """The LSH bucket id as a Spark-SQL expression string — shared by
     the Column builder below and the SQL front-door texts."""
     bits = []
-    for p in range(planes):
+    for p in range(_LSH_PLANES):
         dot = (
             f"aggregate(zip_with({vec_col}, sequence(0, size({vec_col}) - 1),"
             f" (v, j) -> cast(v as double) * {_plane_component(p, 'j')}),"
@@ -311,11 +312,11 @@ def _cosine_sql(a: str, b: str) -> str:
     return f"{dot} / (sqrt({na}) * sqrt({nb}))"
 
 
-def lsh_bucket(vec_col: str, planes: int = _LSH_PLANES) -> Column:
-    """Random-hyperplane LSH bucket id (2^planes buckets) for an
+def lsh_bucket(vec_col: str) -> Column:
+    """Random-hyperplane LSH bucket id (2^_LSH_PLANES buckets) for an
     array<float> column.
     Narrow map: one expression, no shuffle, no Python."""
-    return F.expr(_lsh_bucket_sql(vec_col, planes))
+    return F.expr(_lsh_bucket_sql(vec_col))
 
 
 def _plane_component_duck(p: int, j_expr: str) -> str:
@@ -462,23 +463,21 @@ _NSW_BEAM = 4
 _NSW_ROUNDS = 3
 
 
-def _bucket_probe_scores(
-    src_nodes: DataFrame, dst_nodes: DataFrame, planes: int = _LSH_PLANES
-) -> DataFrame:
+def _bucket_probe_scores(src_nodes: DataFrame, dst_nodes: DataFrame) -> DataFrame:
     """Directed candidate edges for the graph builds: every (src, dst)
     pair with src from ``src_nodes``, dst from ``dst_nodes``, whose LSH
     buckets differ by Hamming ≤ 1 (the multiprobe flip set), scored by
     exact cosine — the banded candidate relation both the from-scratch
     kNN graph and the incremental merge rank over."""
-    src_b = src_nodes.withColumn("bucket", lsh_bucket("embedding", planes))
-    dst_b = dst_nodes.withColumn("bucket", lsh_bucket("embedding", planes))
+    src_b = src_nodes.withColumn("bucket", lsh_bucket("embedding"))
+    dst_b = dst_nodes.withColumn("bucket", lsh_bucket("embedding"))
     probes = src_b.select(
         F.col("vec_id").alias("src"),
         F.col("embedding").alias("_se"),
         F.explode(
             F.array(
                 F.col("bucket"),
-                *[F.expr(f"bucket ^ {1 << p}") for p in range(planes)],
+                *[F.expr(f"bucket ^ {1 << p}") for p in range(_LSH_PLANES)],
             )
         ).alias("_pb"),
     )
@@ -501,12 +500,7 @@ def _topk_edges(scored: DataFrame, k: int, with_sim: bool) -> DataFrame:
     return ranked.select("src", "dst", "_sim") if with_sim else ranked.select("src", "dst")
 
 
-def knn_graph(
-    base: DataFrame,
-    k: int = _NSW_K,
-    with_sim: bool = False,
-    planes: int = _LSH_PLANES,
-) -> DataFrame:
+def knn_graph(base: DataFrame, k: int = _NSW_K, with_sim: bool = False) -> DataFrame:
     """Approximate kNN graph — the navigable-small-world INDEX BUILD:
     edge candidates are pairs whose LSH buckets differ by Hamming ≤ 1
     (the multiprobe flip set, giving CROSS-bucket edges so the graph is
@@ -517,10 +511,8 @@ def knn_graph(
     the per-node top-k is a rank window on the candidate relation.
     Returns directed edges (src, dst); ``with_sim=True`` keeps the
     edge score column the incremental merge re-ranks against
-    (:func:`knn_graph_insert`). ``planes`` widens the bucket hash for
-    larger corpora (registered oracle keys pin the default so the DuckDB
-    twin stays static)."""
-    return _topk_edges(_bucket_probe_scores(base, base, planes), k, with_sim)
+    (:func:`knn_graph_insert`)."""
+    return _topk_edges(_bucket_probe_scores(base, base), k, with_sim)
 
 
 def knn_graph_insert(base: DataFrame, delta: DataFrame, k: int = _NSW_K) -> DataFrame:
@@ -929,6 +921,33 @@ def _hnsw_oracle_ctes() -> str:
     return ctes
 
 
+def _recall_select(name: str) -> str:
+    """The recall@10 row over CTEs ``exact10`` and ``{name}10``: the
+    oracle twin of :func:`_recall_row`."""
+    return f"""
+    SELECT (SELECT COUNT(*) FROM exact10) AS n_exact,
+           (SELECT COUNT(*) FROM exact10 e JOIN {name}10 n ON e.vec_id = n.vec_id) AS hits_{name},
+           CAST((SELECT COUNT(*) FROM exact10 e JOIN {name}10 n ON e.vec_id = n.vec_id) AS BIGINT)
+               * 10000 // NULLIF((SELECT COUNT(*) FROM exact10), 0) AS recall_{name}_bp
+    """
+
+
+def _recall_row(e: DataFrame, approx10: DataFrame, name: str) -> DataFrame:
+    """One hash-checkable recall@10 row for an ANN top-10 ``approx10``
+    (a vec_id column) against the exact cosine top-10 of ``e``'s
+    non-query vectors: ``n_exact``, ``hits_{name}`` and the exact
+    basis-point ``recall_{name}_bp``."""
+    q_vec = e.filter(F.col("vec_id") == 0)
+    exact10 = topk_cosine(e.filter(F.col("vec_id") != 0), q_vec, k=10).select("vec_id")
+    n_exact = exact10.agg(F.count(F.lit(1)).alias("n_exact"))
+    hits = exact10.join(approx10, "vec_id").agg(F.count(F.lit(1)).alias(f"hits_{name}"))
+    return n_exact.crossJoin(hits).select(
+        "n_exact",
+        f"hits_{name}",
+        F.expr(f"hits_{name} * 10000 div nullif(n_exact, 0)").alias(f"recall_{name}_bp"),
+    )
+
+
 @query(
     "q_sim_ann_nsw",
     oracle=_nsw_oracle_ctes()
@@ -971,12 +990,8 @@ def q_sim_ann_nsw(spark, sf_dir):
         ORDER BY a.cos_sim DESC, a.vec_id LIMIT 10
     ), exact10 AS (
         SELECT vec_id FROM allsims ORDER BY cos_sim DESC, vec_id LIMIT 10
-    )
-    SELECT (SELECT COUNT(*) FROM exact10) AS n_exact,
-           (SELECT COUNT(*) FROM exact10 e JOIN nsw10 n ON e.vec_id = n.vec_id) AS hits_nsw,
-           CAST((SELECT COUNT(*) FROM exact10 e JOIN nsw10 n ON e.vec_id = n.vec_id) AS BIGINT)
-               * 10000 // NULLIF((SELECT COUNT(*) FROM exact10), 0) AS recall_nsw_bp
-    """,
+    )"""
+    + _recall_select("nsw"),
     tags=("similarity", "ann", "nsw", "graph", "eval", "recall"),
 )
 def q_sim_ann_nsw_recall(spark, sf_dir):
@@ -992,16 +1007,8 @@ def q_sim_ann_nsw_recall(spark, sf_dir):
     e = load_vectors(spark, sf_dir)
     base = e.filter(F.col("vec_id") != 0)
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    q_vec = e.filter(F.col("vec_id") == 0)
-    exact10 = topk_cosine(base, q_vec, k=10).select("vec_id")
     nsw10 = nsw_search(base, knn_graph(base), qv).select("vec_id")
-    n_exact = exact10.agg(F.count(F.lit(1)).alias("n_exact"))
-    hn = exact10.join(nsw10, "vec_id").agg(F.count(F.lit(1)).alias("hits_nsw"))
-    return n_exact.crossJoin(hn).select(
-        "n_exact",
-        "hits_nsw",
-        F.expr("hits_nsw * 10000 div nullif(n_exact, 0)").alias("recall_nsw_bp"),
-    )
+    return _recall_row(e, nsw10, "nsw")
 
 
 @query(
@@ -1056,12 +1063,8 @@ def q_sim_ann_hnsw(spark, sf_dir):
         ORDER BY a.cos_sim DESC, a.vec_id LIMIT 10
     ), exact10 AS (
         SELECT vec_id FROM allsims ORDER BY cos_sim DESC, vec_id LIMIT 10
-    )
-    SELECT (SELECT COUNT(*) FROM exact10) AS n_exact,
-           (SELECT COUNT(*) FROM exact10 e JOIN hnsw10 n ON e.vec_id = n.vec_id) AS hits_hnsw,
-           CAST((SELECT COUNT(*) FROM exact10 e JOIN hnsw10 n ON e.vec_id = n.vec_id) AS BIGINT)
-               * 10000 // NULLIF((SELECT COUNT(*) FROM exact10), 0) AS recall_hnsw_bp
-    """,
+    )"""
+    + _recall_select("hnsw"),
     tags=("similarity", "ann", "nsw", "hnsw", "graph", "eval", "recall"),
 )
 def q_sim_ann_hnsw_recall(spark, sf_dir):
@@ -1075,18 +1078,8 @@ def q_sim_ann_hnsw_recall(spark, sf_dir):
     e = load_vectors(spark, sf_dir)
     base = e.filter(F.col("vec_id") != 0)
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    q_vec = e.filter(F.col("vec_id") == 0)
-    exact10 = topk_cosine(base, q_vec, k=10).select("vec_id")
-    h10 = nsw_search(
-        base, knn_graph(base), qv, entry=hnsw_entry(base, qv)
-    ).select("vec_id")
-    n_exact = exact10.agg(F.count(F.lit(1)).alias("n_exact"))
-    hn = exact10.join(h10, "vec_id").agg(F.count(F.lit(1)).alias("hits_hnsw"))
-    return n_exact.crossJoin(hn).select(
-        "n_exact",
-        "hits_hnsw",
-        F.expr("hits_hnsw * 10000 div nullif(n_exact, 0)").alias("recall_hnsw_bp"),
-    )
+    h10 = nsw_search(base, knn_graph(base), qv, entry=hnsw_entry(base, qv)).select("vec_id")
+    return _recall_row(e, h10, "hnsw")
 
 
 @query(
@@ -1370,11 +1363,16 @@ def label_centroids(vectors: DataFrame, label_col: str = "label") -> DataFrame:
     )
 
 
-#: single-probe IVF oracle (label-centroid cells, query to best cell,
-#: exact rerank within it) — shared by q_sim_ann_ivf and its
-#: partition-pruned physical-layout twin q_sim_ann_ivf_pruned
-_IVF_SINGLE_PROBE_ORACLE = """
-    WITH cents AS (
+def _cents_ctes(src: str) -> str:
+    """Opens every IVF, PQ and IVF-PQ oracle: ``q`` (the vec_id-0 query
+    vector) and ``cents`` (one float32 centroid per label, the
+    element-wise mean over the ``src`` rows — the DuckDB twin of
+    :func:`label_centroids`; the REAL cast absorbs the engines'
+    different AVG association)."""
+    return f"""
+    WITH q AS (
+        SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
+    ), cents AS (
         SELECT label,
                list(CAST(m AS REAL) ORDER BY pos) AS cent
         FROM (
@@ -1382,14 +1380,19 @@ _IVF_SINGLE_PROBE_ORACLE = """
             FROM (
                 SELECT label, generate_subscripts(embedding, 1) AS pos,
                        CAST(unnest(embedding) AS DOUBLE) AS x
-                FROM embeddings WHERE vec_id <> 0
+                FROM {src}
             )
             GROUP BY label, pos
         )
         GROUP BY label
-    ), q AS (
-        SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
-    ), zc AS (
+    )"""
+
+
+def _probe_ctes(probes: int) -> str:
+    """``best(qlabel)``: the ``probes`` cells whose centroid is nearest
+    the query by cosine, ties to the smaller label — the oracle twin of
+    :func:`best_cells`."""
+    return f""", zc AS (
         SELECT label,
                CAST(unnest(cent) AS DOUBLE) AS cx,
                CAST(unnest(qe) AS DOUBLE) AS qy
@@ -1398,11 +1401,69 @@ _IVF_SINGLE_PROBE_ORACLE = """
         SELECT label, SUM(cx*qy) / (SQRT(SUM(cx*cx)) * SQRT(SUM(qy*qy))) AS sim
         FROM zc GROUP BY label
     ), best AS (
-        SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT 1
-    ), cand AS (
-        SELECT e.vec_id, e.label, e.embedding, q.qe
-        FROM embeddings e, best, q
-        WHERE e.label = best.qlabel AND e.vec_id <> 0
+        SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT {probes}
+    )"""
+
+
+def _ivf_head(probes: int, cents_where: str = "vec_id <> 0") -> str:
+    """Oracle head of a built IVF index: centroids trained on the
+    ``cents_where`` rows, the ``probes`` nearest cells, and
+    ``cells(vec_id, label, cell, embedding)`` — every non-query vector
+    in its label's cell."""
+    return (
+        _cents_ctes(f"embeddings WHERE {cents_where}")
+        + _probe_ctes(probes)
+        + """, cells AS (
+        SELECT vec_id, label, label AS cell, embedding FROM embeddings WHERE vec_id <> 0
+    )"""
+    )
+
+
+def _ivf_insert_head(survivor_and: str) -> str:
+    """Oracle head of an IVF index after an arriving batch: centroids
+    trained on the base segment only (STALE, pre-insert), the delta
+    batch (vec_id % 5 = 2) assigned to its nearest stale centroid (ties
+    to the smaller cell — the twin of :func:`ivf_assign_to_cells`), the
+    single nearest cell probed, and ``cells`` = the base members
+    restricted by ``survivor_and`` (``"AND vec_id % 7 <> 3"`` for the
+    mixed insert+delete view, whose centroids stay trained on the full
+    base) plus the assigned delta."""
+    base = "embeddings WHERE vec_id <> 0 AND vec_id % 5 <> 2"
+    return (
+        _cents_ctes(base)
+        + _probe_ctes(1)
+        + f""", delta AS (
+        SELECT * FROM embeddings WHERE vec_id <> 0 AND vec_id % 5 = 2
+    ), dz AS (
+        SELECT d.vec_id, c.label AS cell,
+               CAST(unnest(d.embedding) AS DOUBLE) AS dx,
+               CAST(unnest(c.cent) AS DOUBLE) AS cx
+        FROM delta d, cents c
+    ), dsim AS (
+        SELECT vec_id, cell, SUM(dx*cx) / (SQRT(SUM(dx*dx)) * SQRT(SUM(cx*cx))) AS sim
+        FROM dz GROUP BY vec_id, cell
+    ), dassign AS (
+        SELECT vec_id, cell FROM (
+            SELECT vec_id, cell,
+                   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
+            FROM dsim
+        ) WHERE rn = 1
+    ), cells AS (
+        SELECT vec_id, label, label AS cell, embedding FROM {base} {survivor_and}
+        UNION ALL
+        SELECT d.vec_id, d.label, a.cell, d.embedding
+        FROM delta d JOIN dassign a ON d.vec_id = a.vec_id
+    )"""
+    )
+
+
+def _rerank_tail(score: str) -> str:
+    """Closes an IVF oracle: exact cosine top-10 over the probed cells'
+    ``cells`` rows that pass ``score`` (``TRUE``, or the tombstone
+    views' survivors)."""
+    return f""", cand AS (
+        SELECT m.vec_id, m.label, m.embedding, q.qe
+        FROM cells m, best, q WHERE m.cell = best.qlabel AND {score}
     ), z AS (
         SELECT vec_id, label,
                CAST(unnest(embedding) AS DOUBLE) AS x,
@@ -1414,6 +1475,12 @@ _IVF_SINGLE_PROBE_ORACLE = """
     )
     SELECT vec_id, label, cos_sim FROM c ORDER BY cos_sim DESC, vec_id LIMIT 10
     """
+
+
+#: single-probe IVF oracle (label-centroid cells, query to best cell,
+#: exact rerank within it) — shared by q_sim_ann_ivf and its
+#: partition-pruned physical-layout twin q_sim_ann_ivf_pruned
+_IVF_SINGLE_PROBE_ORACLE = _ivf_head(1) + _rerank_tail("TRUE")
 
 
 @query(
@@ -1435,14 +1502,9 @@ def q_sim_ann_ivf(spark, sf_dir):
     bit-reproducible double math. Recall vs the exact q_sim_topk
     baseline remains approximate by design."""
     e = load_vectors(spark, sf_dir)
-    cents = label_centroids(e.filter(F.col("vec_id") != 0))
+    base = e.filter(F.col("vec_id") != 0)
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    best = best_cells(cents, qv)
-    cand = e.filter(F.col("vec_id") != 0).join(
-        F.broadcast(best.crossJoin(qv)), F.col("label") == F.col("_qlabel")
-    )
-    scored = cand.select("vec_id", "label", cosine("embedding", "_qe").alias("cos_sim"))
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(10)
+    return ivf_cell_search(base, label_centroids(base), qv)
 
 
 @query(
@@ -1470,8 +1532,6 @@ def q_sim_ann_ivf_pruned(spark, sf_dir):
     of the probed cell. At 100 TB this is the difference between
     scanning 1/n_cells of the index and scanning all of it — the
     scale argument the family's docstrings make, now measured."""
-    import os
-
     e = load_vectors(spark, sf_dir)
     base = e.filter(F.col("vec_id") != 0)
     out = os.path.join(
@@ -1486,57 +1546,6 @@ def q_sim_ann_ivf_pruned(spark, sf_dir):
         "vec_id", "label", cosine("embedding", "_qe").alias("cos_sim")
     )
     return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(10)
-
-
-def _ivf_tombstone_oracle(cents_where: str) -> str:
-    """Tombstone-family oracle template: probe + exact rerank over the
-    surviving (vec_id % 7 <> 3) members, with the coarse centroids
-    trained over ``cents_where`` rows. ``vec_id <> 0`` = STALE (full
-    pre-delete base — the delete view and the hash-neutral compaction);
-    adding ``AND vec_id % 7 <> 3`` = REFRESHED (one deterministic
-    retrain over survivors — the compaction's refresh step)."""
-    return f"""
-    WITH cents AS (
-        SELECT label,
-               list(CAST(m AS REAL) ORDER BY pos) AS cent
-        FROM (
-            SELECT label, pos, AVG(x) AS m
-            FROM (
-                SELECT label, generate_subscripts(embedding, 1) AS pos,
-                       CAST(unnest(embedding) AS DOUBLE) AS x
-                FROM embeddings WHERE {cents_where}
-            )
-            GROUP BY label, pos
-        )
-        GROUP BY label
-    ), q AS (
-        SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
-    ), zc AS (
-        SELECT label,
-               CAST(unnest(cent) AS DOUBLE) AS cx,
-               CAST(unnest(qe) AS DOUBLE) AS qy
-        FROM cents, q
-    ), csim AS (
-        SELECT label, SUM(cx*qy) / (SQRT(SUM(cx*cx)) * SQRT(SUM(qy*qy))) AS sim
-        FROM zc GROUP BY label
-    ), best AS (
-        SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT 1
-    ), cand AS (
-        SELECT e.vec_id, e.label, e.embedding, q.qe
-        FROM embeddings e, best, q
-        WHERE e.label = best.qlabel AND e.vec_id <> 0
-          AND e.vec_id % 7 <> 3
-    ), z AS (
-        SELECT vec_id, label,
-               CAST(unnest(embedding) AS DOUBLE) AS x,
-               CAST(unnest(qe) AS DOUBLE) AS y
-        FROM cand
-    ), c AS (
-        SELECT vec_id, label, SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))) AS cos_sim
-        FROM z GROUP BY vec_id, label
-    )
-    SELECT vec_id, label, cos_sim FROM c ORDER BY cos_sim DESC, vec_id LIMIT 10
-    """
 
 
 def best_cells(cents: DataFrame, qv: DataFrame, n: int = 1) -> DataFrame:
@@ -1557,27 +1566,30 @@ def best_cells(cents: DataFrame, qv: DataFrame, n: int = 1) -> DataFrame:
     )
 
 
-def ivf_cell_search(members: DataFrame, cents: DataFrame, qv: DataFrame, k: int = 10) -> DataFrame:
-    """Single-probe IVF search: assign the (one-row, broadcast) query
-    to its best cell by centroid cosine (ties by smaller label), then
-    exact-cosine top-k over that cell's ``members`` only — the shared
-    probe+rerank core of the delete/compact/refresh family. At scale
+def ivf_cell_search(
+    members: DataFrame, cents: DataFrame, qv: DataFrame, probes: int = 1
+) -> DataFrame:
+    """IVF search: assign the (one-row, broadcast) query to its
+    ``probes`` best cells by centroid cosine (ties by smaller label),
+    then exact-cosine top-10 over those cells' ``members`` only — the
+    shared probe+rerank core of the single-probe, multi-probe and
+    delete/compact/refresh keys. At scale
     the members relation is partitioned by cell, so the probe is a
     partition-pruned scan of 1/n_cells of the index (proven, not
     asserted: q_sim_ann_ivf_pruned routes this search over a
     cell-partitioned parquet layout and IVF_PRUNE_r13.json records the
     pruned file count from the physical plan)."""
-    best = best_cells(cents, qv)
+    best = best_cells(cents, qv, n=probes)
     cand = members.join(
         F.broadcast(best.crossJoin(qv)), F.col("label") == F.col("_qlabel")
     )
     scored = cand.select("vec_id", "label", cosine("embedding", "_qe").alias("cos_sim"))
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(k)
+    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(10)
 
 
 @query(
     "q_sim_ann_ivf_delete",
-    oracle=_ivf_tombstone_oracle("vec_id <> 0"),
+    oracle=_ivf_head(1) + _rerank_tail("vec_id % 7 <> 3"),
     tags=("similarity", "ann", "ivf", "delete"),
 )
 def q_sim_ann_ivf_delete(spark, sf_dir):
@@ -1604,7 +1616,7 @@ def q_sim_ann_ivf_delete(spark, sf_dir):
     cents = label_centroids(base)  # stale by contract: full base
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
     members = base.join(tomb, "vec_id", "left_anti")
-    return ivf_cell_search(members, cents, qv, k=10)
+    return ivf_cell_search(members, cents, qv)
 
 
 def ivf_compact(base: DataFrame, tombstones: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1632,7 +1644,7 @@ def ivf_compact(base: DataFrame, tombstones: DataFrame) -> tuple[DataFrame, Data
 
 @query(
     "q_sim_ann_ivf_compact",
-    oracle=_ivf_tombstone_oracle("vec_id <> 0"),
+    oracle=_ivf_head(1) + _rerank_tail("vec_id % 7 <> 3"),
     tags=("similarity", "ann", "ivf", "compact"),
 )
 def q_sim_ann_ivf_compact(spark, sf_dir):
@@ -1653,12 +1665,12 @@ def q_sim_ann_ivf_compact(spark, sf_dir):
     stale = label_centroids(base)  # centroids from BEFORE the compaction
     survivors, _refreshed = ivf_compact(base, tomb)
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    return ivf_cell_search(survivors, stale, qv, k=10)
+    return ivf_cell_search(survivors, stale, qv)
 
 
 @query(
     "q_sim_ann_ivf_compact_refresh",
-    oracle=_ivf_tombstone_oracle("vec_id <> 0 AND vec_id % 7 <> 3"),
+    oracle=_ivf_head(1, "vec_id <> 0 AND vec_id % 7 <> 3") + _rerank_tail("vec_id % 7 <> 3"),
     tags=("similarity", "ann", "ivf", "compact", "refresh"),
 )
 def q_sim_ann_ivf_compact_refresh(spark, sf_dir):
@@ -1678,7 +1690,7 @@ def q_sim_ann_ivf_compact_refresh(spark, sf_dir):
     tomb = base.filter(F.col("vec_id") % 7 == 3).select("vec_id")
     survivors, refreshed = ivf_compact(base, tomb)
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    return ivf_cell_search(survivors, refreshed, qv, k=10)
+    return ivf_cell_search(survivors, refreshed, qv)
 
 
 def ivf_assign_to_cells(delta: DataFrame, cents: DataFrame) -> DataFrame:
@@ -1717,7 +1729,6 @@ def ivf_search_with_inserts(
     base: DataFrame,
     delta: DataFrame,
     qv: DataFrame,
-    k: int = 10,
     cents: DataFrame | None = None,
 ) -> DataFrame:
     """IVF probe over a maintained index UNION an arriving batch: the
@@ -1747,84 +1758,12 @@ def ivf_search_with_inserts(
     )
     cand = cand_base.unionByName(cand_delta)
     scored = cand.select("vec_id", "label", cosine("embedding", "_qe").alias("cos_sim"))
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(k)
-
-
-def _ivf_insert_oracle(survivor_and: str = "") -> str:
-    """Insert-family oracle template: centroids trained on the base
-    segment only (STALE — pre-insert), the delta batch assigned to its
-    nearest stale centroid, probed search over base∪delta.
-    ``survivor_and`` optionally restricts the base-side candidates
-    (e.g. ``"AND b.vec_id % 7 <> 3"`` for the mixed insert+delete
-    view, where tombstoned base members are gone but centroids remain
-    trained on the original full base)."""
-    return f"""
-    WITH base AS (
-        SELECT * FROM embeddings WHERE vec_id <> 0 AND vec_id % 5 <> 2
-    ), delta AS (
-        SELECT * FROM embeddings WHERE vec_id <> 0 AND vec_id % 5 = 2
-    ), cents AS (
-        SELECT label,
-               list(CAST(m AS REAL) ORDER BY pos) AS cent
-        FROM (
-            SELECT label, pos, AVG(x) AS m
-            FROM (
-                SELECT label, generate_subscripts(embedding, 1) AS pos,
-                       CAST(unnest(embedding) AS DOUBLE) AS x
-                FROM base
-            )
-            GROUP BY label, pos
-        )
-        GROUP BY label
-    ), q AS (
-        SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
-    ), zc AS (
-        SELECT label,
-               CAST(unnest(cent) AS DOUBLE) AS cx,
-               CAST(unnest(qe) AS DOUBLE) AS qy
-        FROM cents, q
-    ), csim AS (
-        SELECT label, SUM(cx*qy) / (SQRT(SUM(cx*cx)) * SQRT(SUM(qy*qy))) AS sim
-        FROM zc GROUP BY label
-    ), best AS (
-        SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT 1
-    ), dz AS (
-        SELECT d.vec_id, c.label AS cell,
-               CAST(unnest(d.embedding) AS DOUBLE) AS dx,
-               CAST(unnest(c.cent) AS DOUBLE) AS cx
-        FROM delta d, cents c
-    ), dsim AS (
-        SELECT vec_id, cell, SUM(dx*cx) / (SQRT(SUM(dx*dx)) * SQRT(SUM(cx*cx))) AS sim
-        FROM dz GROUP BY vec_id, cell
-    ), dassign AS (
-        SELECT vec_id, cell FROM (
-            SELECT vec_id, cell,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-            FROM dsim
-        ) WHERE rn = 1
-    ), cand AS (
-        SELECT b.vec_id, b.label, b.embedding, q.qe
-        FROM base b, best, q WHERE b.label = best.qlabel {survivor_and}
-        UNION ALL
-        SELECT d.vec_id, d.label, d.embedding, q.qe
-        FROM delta d, dassign a, best, q
-        WHERE d.vec_id = a.vec_id AND a.cell = best.qlabel
-    ), z AS (
-        SELECT vec_id, label,
-               CAST(unnest(embedding) AS DOUBLE) AS x,
-               CAST(unnest(qe) AS DOUBLE) AS y
-        FROM cand
-    ), c AS (
-        SELECT vec_id, label, SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))) AS cos_sim
-        FROM z GROUP BY vec_id, label
-    )
-    SELECT vec_id, label, cos_sim FROM c ORDER BY cos_sim DESC, vec_id LIMIT 10
-    """
+    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(10)
 
 
 @query(
     "q_sim_ann_ivf_insert",
-    oracle=_ivf_insert_oracle(),
+    oracle=_ivf_insert_head("") + _rerank_tail("TRUE"),
     tags=("similarity", "ann", "ivf", "insert"),
 )
 def q_sim_ann_ivf_insert(spark, sf_dir):
@@ -1851,12 +1790,12 @@ def q_sim_ann_ivf_insert(spark, sf_dir):
     base = e.filter((F.col("vec_id") != 0) & (F.col("vec_id") % 5 != 2))
     delta = e.filter((F.col("vec_id") != 0) & (F.col("vec_id") % 5 == 2))
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    return ivf_search_with_inserts(base, delta, qv, k=10)
+    return ivf_search_with_inserts(base, delta, qv)
 
 
 @query(
     "q_sim_ann_ivf_mixed",
-    oracle=_ivf_insert_oracle("AND b.vec_id % 7 <> 3"),
+    oracle=_ivf_insert_head("AND vec_id % 7 <> 3") + _rerank_tail("TRUE"),
     tags=("similarity", "ann", "ivf", "insert", "delete", "mixed"),
 )
 def q_sim_ann_ivf_mixed(spark, sf_dir):
@@ -1883,7 +1822,7 @@ def q_sim_ann_ivf_mixed(spark, sf_dir):
     cents = label_centroids(base)  # stale: trained on the pre-delete base
     members = base.join(tomb, "vec_id", "left_anti")
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    return ivf_search_with_inserts(members, delta, qv, k=10, cents=cents)
+    return ivf_search_with_inserts(members, delta, qv, cents=cents)
 
 
 #: multi-probe width: clusters probed per query. 2 recovers most of the
@@ -1894,47 +1833,7 @@ _IVF_PROBES = 2
 
 @query(
     "q_sim_ann_ivf_multiprobe",
-    oracle=f"""
-    WITH cents AS (
-        SELECT label,
-               list(CAST(m AS REAL) ORDER BY pos) AS cent
-        FROM (
-            SELECT label, pos, AVG(x) AS m
-            FROM (
-                SELECT label, generate_subscripts(embedding, 1) AS pos,
-                       CAST(unnest(embedding) AS DOUBLE) AS x
-                FROM embeddings WHERE vec_id <> 0
-            )
-            GROUP BY label, pos
-        )
-        GROUP BY label
-    ), q AS (
-        SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
-    ), zc AS (
-        SELECT label,
-               CAST(unnest(cent) AS DOUBLE) AS cx,
-               CAST(unnest(qe) AS DOUBLE) AS qy
-        FROM cents, q
-    ), csim AS (
-        SELECT label, SUM(cx*qy) / (SQRT(SUM(cx*cx)) * SQRT(SUM(qy*qy))) AS sim
-        FROM zc GROUP BY label
-    ), best AS (
-        SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT {_IVF_PROBES}
-    ), cand AS (
-        SELECT e.vec_id, e.label, e.embedding, q.qe
-        FROM embeddings e JOIN best ON e.label = best.qlabel CROSS JOIN q
-        WHERE e.vec_id <> 0
-    ), z AS (
-        SELECT vec_id, label,
-               CAST(unnest(embedding) AS DOUBLE) AS x,
-               CAST(unnest(qe) AS DOUBLE) AS y
-        FROM cand
-    ), c AS (
-        SELECT vec_id, label, SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))) AS cos_sim
-        FROM z GROUP BY vec_id, label
-    )
-    SELECT vec_id, label, cos_sim FROM c ORDER BY cos_sim DESC, vec_id LIMIT 10
-    """,
+    oracle=_ivf_head(_IVF_PROBES) + _rerank_tail("TRUE"),
     tags=("similarity", "ann", "ivf", "multiprobe"),
 )
 def q_sim_ann_ivf_multiprobe(spark, sf_dir):
@@ -1952,14 +1851,9 @@ def q_sim_ann_ivf_multiprobe(spark, sf_dir):
     with real k-means cells the same plan probes its way back to high
     recall by raising n_probe."""
     e = load_vectors(spark, sf_dir)
-    cents = label_centroids(e.filter(F.col("vec_id") != 0))
+    base = e.filter(F.col("vec_id") != 0)
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    best = best_cells(cents, qv, n=_IVF_PROBES)
-    cand = e.filter(F.col("vec_id") != 0).join(
-        F.broadcast(best.crossJoin(qv)), F.col("label") == F.col("_qlabel")
-    )
-    scored = cand.select("vec_id", "label", cosine("embedding", "_qe").alias("cos_sim"))
-    return scored.orderBy(F.col("cos_sim").desc(), "vec_id").limit(10)
+    return ivf_cell_search(base, label_centroids(base), qv, probes=_IVF_PROBES)
 
 
 @query(
@@ -2077,25 +1971,38 @@ def _pq_d2i(a_slice: str, b_slice: str) -> str:
     )
 
 
+def _adc_top10(ctes: str) -> str:
+    """Closes a PQ or IVF-PQ oracle: the 10 rows of ``ad`` with the
+    smallest integer ADC distance (ties to the smaller vec_id)."""
+    return ctes + """
+    SELECT vec_id, label, adist_micro FROM ad ORDER BY adist_micro, vec_id LIMIT 10
+    """
+
+
+def _adc_recall_oracle(ctes: str, name: str) -> str:
+    """Closes a PQ or IVF-PQ oracle as a recall@10 row: the ADC top-10
+    of ``ad`` against the exact brute-force cosine top-10."""
+    return ctes + f""", {name}10 AS (
+        SELECT vec_id FROM ad ORDER BY adist_micro, vec_id LIMIT 10
+    ), zx AS (
+        SELECT e.vec_id,
+               CAST(unnest(e.embedding) AS DOUBLE) AS x,
+               CAST(unnest(q.qe) AS DOUBLE) AS y
+        FROM embeddings e, q
+        WHERE e.vec_id <> 0
+    ), cs AS (
+        SELECT vec_id, SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))) AS cos_sim
+        FROM zx GROUP BY vec_id
+    ), exact10 AS (
+        SELECT vec_id FROM cs ORDER BY cos_sim DESC, vec_id LIMIT 10
+    )""" + _recall_select(name)
+
+
 #: The PQ encode+ADC oracle pipeline, shared by q_sim_ann_pq (top-10 by
 #: asymmetric distance) and q_sim_ann_pq_recall (recall@10 vs exact).
 #: Ends at `ad(vec_id, label, adist_micro)` — one row per non-query
 #: vector with its integer micro-unit ADC distance.
-_PQ_ORACLE_CTES = f"""
-    WITH cents AS (
-        SELECT label,
-               list(CAST(m AS REAL) ORDER BY pos) AS cent
-        FROM (
-            SELECT label, pos, AVG(x) AS m
-            FROM (
-                SELECT label, generate_subscripts(embedding, 1) AS pos,
-                       CAST(unnest(embedding) AS DOUBLE) AS x
-                FROM embeddings WHERE vec_id <> 0
-            )
-            GROUP BY label, pos
-        )
-        GROUP BY label
-    ), w AS (
+_PQ_ORACLE_CTES = _cents_ctes("embeddings WHERE vec_id <> 0") + f""", w AS (
         SELECT MAX(len(embedding)) // {_PQ_M} AS ws FROM embeddings
     ), zc AS (
         SELECT label AS clabel, generate_subscripts(cent, 1) AS pos,
@@ -2107,7 +2014,7 @@ _PQ_ORACLE_CTES = f"""
         FROM embeddings WHERE vec_id <> 0
     ), zq AS (
         SELECT generate_subscripts(qe, 1) AS pos, CAST(unnest(qe) AS DOUBLE) AS y
-        FROM (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
+        FROM q
     ), dv AS (
         SELECT z.vec_id, z.label, zc.clabel, (z.pos - 1) // w.ws AS s,
                CAST(ROUND(SUM((z.x - zc.c) * (z.x - zc.c)) * 1000000.0) AS BIGINT) AS d2i
@@ -2134,10 +2041,7 @@ _PQ_ORACLE_CTES = f"""
 
 @query(
     "q_sim_ann_pq",
-    oracle=_PQ_ORACLE_CTES
-    + """
-    SELECT vec_id, label, adist_micro FROM ad ORDER BY adist_micro, vec_id LIMIT 10
-    """,
+    oracle=_adc_top10(_PQ_ORACLE_CTES),
     tags=("similarity", "ann", "pq", "quantize"),
 )
 def q_sim_ann_pq(spark, sf_dir):
@@ -2215,28 +2119,7 @@ def pq_adc_scores(e: DataFrame) -> DataFrame:
 
 @query(
     "q_sim_ann_pq_recall",
-    oracle=_PQ_ORACLE_CTES
-    + """
-    , pq10 AS (
-        SELECT vec_id FROM ad ORDER BY adist_micro, vec_id LIMIT 10
-    ), zx AS (
-        SELECT e.vec_id,
-               CAST(unnest(e.embedding) AS DOUBLE) AS x,
-               CAST(unnest(q.qe) AS DOUBLE) AS y
-        FROM embeddings e,
-             (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0) q
-        WHERE e.vec_id <> 0
-    ), cs AS (
-        SELECT vec_id, SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))) AS cos_sim
-        FROM zx GROUP BY vec_id
-    ), exact10 AS (
-        SELECT vec_id FROM cs ORDER BY cos_sim DESC, vec_id LIMIT 10
-    )
-    SELECT (SELECT COUNT(*) FROM exact10) AS n_exact,
-           (SELECT COUNT(*) FROM exact10 e JOIN pq10 p ON e.vec_id = p.vec_id) AS hits_pq,
-           CAST((SELECT COUNT(*) FROM exact10 e JOIN pq10 p ON e.vec_id = p.vec_id) AS BIGINT)
-               * 10000 // NULLIF((SELECT COUNT(*) FROM exact10), 0) AS recall_pq_bp
-    """,
+    oracle=_adc_recall_oracle(_PQ_ORACLE_CTES, "pq"),
     tags=("similarity", "ann", "pq", "eval", "recall"),
 )
 def q_sim_ann_pq_recall(spark, sf_dir):
@@ -2256,104 +2139,81 @@ def q_sim_ann_pq_recall(spark, sf_dir):
     sampled query set at scale); the intersection joins two 10-row
     relations."""
     e = load_vectors(spark, sf_dir)
-    q_vec = e.filter(F.col("vec_id") == 0)
-    exact10 = topk_cosine(e.filter(F.col("vec_id") != 0), q_vec, k=10).select("vec_id")
     pq10 = pq_adc_scores(e).orderBy("adist_micro", "vec_id").limit(10).select("vec_id")
-    n_exact = exact10.agg(F.count(F.lit(1)).alias("n_exact"))
-    hp = exact10.join(pq10, "vec_id").agg(F.count(F.lit(1)).alias("hits_pq"))
-    return n_exact.crossJoin(hp).select(
-        "n_exact",
-        "hits_pq",
-        F.expr("hits_pq * 10000 div nullif(n_exact, 0)").alias("recall_pq_bp"),
-    )
+    return _recall_row(e, pq10, "pq")
 
 
 #: IVF-PQ residual-codebook size: entries per subspace. 8 keeps the
 #: demo codebook tiny; production FAISS uses 256 (one byte per code).
 _IVFPQ_K = 8
 
-#: The IVF-PQ oracle pipeline shared by q_sim_ann_ivfpq (top-10 by
-#: asymmetric distance within the probed cell) and
-#: q_sim_ann_ivfpq_recall (recall@10 vs exact over the WHOLE corpus).
-#: Ends at `ad(vec_id, label, adist_micro)` — one row per vector of the
-#: probed cell with its integer micro-unit residual-ADC distance.
-_IVFPQ_ORACLE_CTES = f"""
-    WITH cents AS (
-        SELECT label,
-               list(CAST(m AS REAL) ORDER BY pos) AS cent
-        FROM (
-            SELECT label, pos, AVG(x) AS m
-            FROM (
-                SELECT label, generate_subscripts(embedding, 1) AS pos,
-                       CAST(unnest(embedding) AS DOUBLE) AS x
-                FROM embeddings WHERE vec_id <> 0
-            )
-            GROUP BY label, pos
-        )
-        GROUP BY label
-    ), q AS (
-        SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
-    ), zcq AS (
-        SELECT label,
-               CAST(unnest(cent) AS DOUBLE) AS cx,
-               CAST(unnest(qe) AS DOUBLE) AS qy
-        FROM cents, q
-    ), csim AS (
-        SELECT label, SUM(cx*qy) / (SQRT(SUM(cx*cx)) * SQRT(SUM(qy*qy))) AS sim
-        FROM zcq GROUP BY label
-    ), best AS (
-        SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT 1
-    ), w AS (
+
+def _ivfpq_ctes(train: str, score: str) -> str:
+    """The IVF-PQ train/encode/ADC oracle pipeline over an IVF head's
+    ``cents``, ``best`` and ``cells``: residuals of every ``cells`` row
+    vs its cell's centroid, the global residual codebook ``cbm`` (per
+    md5-bucket, per-position means over the ``train`` rows — one
+    Lloyd step, the twin of :func:`_ivfpq_codebook`), the per-subspace
+    codes of the ``score`` rows, the query residual's distance table
+    ``qd`` keyed by probed cell (so one form serves single- and
+    multi-probe), and ``ad(vec_id, label, adist_micro)``: each probed
+    cell's scored rows by integer micro-unit residual-ADC distance."""
+    return f""", w AS (
         SELECT MAX(len(embedding)) // {_PQ_M} AS ws FROM embeddings
     ), cpos AS (
         SELECT label, generate_subscripts(cent, 1) AS pos,
                CAST(unnest(cent) AS DOUBLE) AS c
         FROM cents
     ), resid AS (
-        SELECT zr.vec_id, zr.label, zr.pos, zr.x - cp.c AS r,
-               CAST(('0x' || substr(md5(CAST(zr.vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS bkt
+        SELECT zr.vec_id, zr.label, zr.cell, zr.pos, zr.x - cp.c AS r,
+               CAST(('0x' || substr(md5(CAST(zr.vec_id AS VARCHAR)), 1, 8)) AS BIGINT)
+                   % {_IVFPQ_K} AS bkt
         FROM (
-            SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
+            SELECT vec_id, label, cell, generate_subscripts(embedding, 1) AS pos,
                    CAST(unnest(embedding) AS DOUBLE) AS x
-            FROM embeddings WHERE vec_id <> 0
+            FROM cells
         ) zr
-        JOIN cpos cp ON zr.label = cp.label AND zr.pos = cp.pos
+        JOIN cpos cp ON zr.cell = cp.label AND zr.pos = cp.pos
     ), cbm AS (
         SELECT bkt, pos, CAST(AVG(r) AS REAL) AS m
-        FROM resid GROUP BY bkt, pos
+        FROM resid WHERE {train} GROUP BY bkt, pos
     ), dv AS (
-        SELECT resid.vec_id, resid.label, cbm.bkt AS cb_bkt,
+        SELECT resid.vec_id, resid.label, resid.cell, cbm.bkt AS cb_bkt,
                (resid.pos - 1) // w.ws AS s,
                CAST(ROUND(SUM((resid.r - CAST(cbm.m AS DOUBLE))
                             * (resid.r - CAST(cbm.m AS DOUBLE))) * 1000000.0) AS BIGINT) AS d2i
         FROM resid JOIN cbm ON resid.pos = cbm.pos CROSS JOIN w
-        GROUP BY 1, 2, 3, 4
+        WHERE {score}
+        GROUP BY 1, 2, 3, 4, 5
     ), codes AS (
-        SELECT vec_id, label, s, cb_bkt AS code FROM (
-            SELECT vec_id, label, s, cb_bkt,
+        SELECT vec_id, label, cell, s, cb_bkt AS code FROM (
+            SELECT vec_id, label, cell, s, cb_bkt,
                    ROW_NUMBER() OVER (PARTITION BY vec_id, s ORDER BY d2i, cb_bkt) AS rn
             FROM dv
         ) WHERE rn = 1
     ), qr AS (
-        SELECT cp.pos, zq.y - cp.c AS rq
+        SELECT cp.label AS qlabel, cp.pos, zq.y - cp.c AS rq
         FROM (SELECT generate_subscripts(qe, 1) AS pos,
                      CAST(unnest(qe) AS DOUBLE) AS y FROM q) zq
         JOIN cpos cp ON cp.pos = zq.pos
         JOIN best ON cp.label = best.qlabel
     ), qd AS (
-        SELECT cbm.bkt, (qr.pos - 1) // w.ws AS s,
+        SELECT qr.qlabel, cbm.bkt, (qr.pos - 1) // w.ws AS s,
                CAST(ROUND(SUM((qr.rq - CAST(cbm.m AS DOUBLE))
                             * (qr.rq - CAST(cbm.m AS DOUBLE))) * 1000000.0) AS BIGINT) AS qd2i
         FROM qr JOIN cbm ON qr.pos = cbm.pos CROSS JOIN w
-        GROUP BY 1, 2
+        GROUP BY 1, 2, 3
     ), ad AS (
         SELECT c.vec_id, c.label, CAST(SUM(q2.qd2i) AS BIGINT) AS adist_micro
         FROM codes c
-        JOIN best ON c.label = best.qlabel
-        JOIN qd q2 ON c.s = q2.s AND c.code = q2.bkt
+        JOIN qd q2 ON c.cell = q2.qlabel AND c.s = q2.s AND c.code = q2.bkt
         GROUP BY 1, 2
-    )
-"""
+    )"""
+
+
+#: The single-probe IVF-PQ oracle pipeline shared by q_sim_ann_ivfpq,
+#: its pruned-serving and SQL twins and q_sim_ann_ivfpq_recall.
+_IVFPQ_ORACLE_CTES = _ivf_head(1) + _ivfpq_ctes("TRUE", "TRUE")
 
 
 def ivfpq_adc_scores(e: DataFrame) -> DataFrame:
@@ -2368,15 +2228,15 @@ def ivfpq_adc_scores(e: DataFrame) -> DataFrame:
     r10: this used to be ~70 duplicated lines with a hardcoded
     ``div 4`` subspace width that would silently misalign if _PQ_M ever
     changed) — one implementation, one scoring contract."""
-    return ivfpq_adc_scores_multiprobe(e, probes=1, m=_PQ_M)
+    return ivfpq_adc_scores_multiprobe(e, probes=1)
 
 
 def _ivfpq_probe_cells(cents: DataFrame, qv: DataFrame, probes: int) -> DataFrame:
     """Probed cells: nearest centroids by cosine (tie -> smallest
     label), carrying the query RESIDUAL vs each cell's centroid — one
     tiny broadcast relation, exactly q_sim_ann_ivf's probe plus one
-    zip_with. Shared by :func:`_ivfpq_adc_scores_impl` and the
-    partition-pruned serving key q_sim_ann_ivfpq_pruned (the best_cells
+    zip_with. Shared by the fused search (:func:`_adc_search`) and the
+    pruned serving path (:func:`_ivfpq_serve_pruned`) (the best_cells
     extraction discipline, VERDICT r12 directive #6)."""
     return (
         F.broadcast(cents)
@@ -2398,15 +2258,12 @@ def _ivfpq_probe_cells(cents: DataFrame, qv: DataFrame, probes: int) -> DataFram
     )
 
 
-def _ivfpq_residuals(base: DataFrame, cents: DataFrame) -> DataFrame:
-    """Residuals: x - cell_centroid, exact doubles (float minus float
-    in double is exact); codebook-training bucket is a deterministic
-    md5 map of vec_id (one Lloyd assignment step, engine-portable —
-    the q_sample_hash discipline), NOT rand(). Shared by the fused
-    search and the pruned serving layout's encode pass."""
-    return base.join(F.broadcast(cents), "label").select(
-        "vec_id",
-        "label",
+def _resid_bkt() -> list[Column]:
+    """Residual ``r`` = embedding - cent, exact doubles (float minus
+    float in double is exact), and the codebook-training bucket ``bkt``,
+    a deterministic md5 map of vec_id (one Lloyd assignment step,
+    engine-portable — the q_sample_hash discipline), NOT rand()."""
+    return [
         F.expr(
             "zip_with(embedding, cent, (x, c) -> cast(x as double) - cast(c as double))"
         ).alias("r"),
@@ -2414,7 +2271,13 @@ def _ivfpq_residuals(base: DataFrame, cents: DataFrame) -> DataFrame:
             "pmod(cast(conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10)"
             f" as bigint), {_IVFPQ_K})"
         ).alias("bkt"),
-    )
+    ]
+
+
+def _ivfpq_residuals(base: DataFrame, cents: DataFrame) -> DataFrame:
+    """Each ``base`` vector's residual vs its own label cell's
+    centroid (:func:`_resid_bkt`)."""
+    return base.join(F.broadcast(cents), "label").select("vec_id", "label", *_resid_bkt())
 
 
 def _ivfpq_codebook(resid: DataFrame) -> DataFrame:
@@ -2442,25 +2305,90 @@ def _ivfpq_codebook(resid: DataFrame) -> DataFrame:
     )
 
 
-def _ivfpq_adc_scores_impl(e: DataFrame, probes: int, m: int) -> DataFrame:
+def _ivfpq_parts(e: DataFrame):
+    """The built IVF-PQ index over ``e``'s non-query vectors: cell
+    centroids (float32 ``cent``), the query-vector relation, every
+    vector's residual (which trains the codebook), and the residuals of
+    the survivors of the tombstone batch (vec_id % 7 == 3, the
+    q_sim_ann_ivf_delete split, removed by a broadcast anti-join)."""
     base = e.filter(F.col("vec_id") != 0)
     cents = label_centroids(base).select(
         "label", F.col("centroid").cast("array<float>").alias("cent")
     )
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    best = _ivfpq_probe_cells(cents, qv, probes)
     resid = _ivfpq_residuals(base, cents)
-    cb = _ivfpq_codebook(resid)
-    cand = resid.join(
-        F.broadcast(best), F.col("label") == F.col("_qlabel")
-    ).crossJoin(F.broadcast(cb))
+    tomb = F.broadcast(base.filter(F.col("vec_id") % 7 == 3).select("vec_id"))
+    survivors = resid.join(tomb, "vec_id", "left_anti")
+    return cents, qv, resid, survivors
 
-    return cand.withColumn("_ws", F.expr(_ws_guard_expr(m))).select(
-        "vec_id", "label", F.expr(_adc_sum_expr(m)).alias("adist_micro")
+
+def _adc_search(
+    resid: DataFrame,
+    cents: DataFrame,
+    qv: DataFrame,
+    cb: DataFrame,
+    probes: int = 1,
+    cell: str = "label",
+) -> DataFrame:
+    """The fused IVFADC search: the ``resid`` rows whose ``cell``
+    column names one of the ``probes`` cells nearest the query, each
+    joined with that cell's query residual and the folded codebook
+    ``cb`` and scored by :func:`_adc_sum_expr` — one row (vec_id,
+    label, adist_micro) per probed row."""
+    best = _ivfpq_probe_cells(cents, qv, probes)
+    cand = resid.join(
+        F.broadcast(best), F.col(cell) == F.col("_qlabel")
+    ).crossJoin(F.broadcast(cb))
+    return cand.withColumn("_ws", F.expr(_ws_guard_expr())).select(
+        "vec_id", "label", F.expr(_adc_sum_expr()).alias("adist_micro")
     )
 
 
-def _ws_guard_expr(m: int, col: str = "r") -> str:
+def _ivfpq_serve_pruned(
+    sf_dir: str, layout: str, rows: DataFrame, cents: DataFrame, qv: DataFrame, cb: DataFrame
+) -> DataFrame:
+    """The IVFADC serving protocol over stored codes: encode the
+    ``rows`` residuals with codebook ``cb`` (:func:`_pq_codes_expr`)
+    and write them to a cell-partitioned parquet ``layout``; resolve
+    the probe cell and its m x k ADC table on the driver (one row);
+    then score the probed cell's codes under a partition-filtered scan
+    by table lookup (:func:`_pq_lookup_expr`) and keep the top 10."""
+    codes = (
+        rows.crossJoin(F.broadcast(cb))
+        .withColumn("_ws", F.expr(_ws_guard_expr()))
+        .select("vec_id", "label", F.expr(_pq_codes_expr()).alias("codes"))
+    )
+    out = os.path.join(scratch_dir(f"{layout}_{os.path.basename(sf_dir.rstrip(chr(47)))}"), "codes")
+    codes.write.mode("overwrite").partitionBy("label").parquet(out)
+    qtab_row = (
+        _ivfpq_probe_cells(cents, qv, probes=1)
+        .crossJoin(F.broadcast(cb))
+        .withColumn("_ws", F.expr(_ws_guard_expr(col="_rq")))
+        .select("_qlabel", F.expr(_pq_qtab_expr()).alias("_qtab"))
+        .collect()[0]  # one-row driver scalar: probe cell + m x k table
+    )
+    qtab_lit = (
+        "array("
+        + ", ".join(
+            "array("
+            + ", ".join(
+                "cast(null as bigint)" if v is None else f"{v}L" for v in sub
+            )
+            + ")"
+            for sub in qtab_row["_qtab"]
+        )
+        + ")"
+    )
+    members = rows.sparkSession.read.parquet(out).filter(
+        F.col("label") == F.lit(qtab_row["_qlabel"])
+    )
+    scored = members.withColumn("_qtab", F.expr(qtab_lit)).select(
+        "vec_id", "label", F.expr(_pq_lookup_expr()).alias("adist_micro")
+    )
+    return scored.orderBy("adist_micro", "vec_id").limit(10)
+
+
+def _ws_guard_expr(col: str = "r") -> str:
     """Subspace width over column ``col`` (default the data residual
     ``r``; the pruned serving key passes the query residual ``_rq``),
     with the standard PQ requirement enforced in-plan: dim % m != 0
@@ -2471,23 +2399,23 @@ def _ws_guard_expr(m: int, col: str = "r") -> str:
     the projected form restores the plain-width plan's cost with the
     guard kept)."""
     return (
-        f"(CASE WHEN size({col}) % {m} = 0 THEN size({col}) div {m} "
+        f"(CASE WHEN size({col}) % {_PQ_M} = 0 THEN size({col}) div {_PQ_M} "
         f"ELSE cast(raise_error('PQ requires m to divide the vector "
-        f"dimension: dim=' || size({col}) || ', m={m}') as int) END)"
+        f"dimension: dim=' || size({col}) || ', m={_PQ_M}') as int) END)"
     )
 
 
-def _adc_sum_expr(m: int) -> str:
+def _adc_sum_expr() -> str:
     """The IVFADC scoring expression over columns ``r`` (data
     residual), ``_rq`` (query residual), ``cbs`` (folded codebook) and
     ``_ws`` (the guarded subspace width, :func:`_ws_guard_expr`):
     per-subspace encode-and-lookup summed to one integer micro-unit
     asymmetric distance. Shared by the DataFrame build
-    (:func:`_ivfpq_adc_scores_impl`) and the SQL front door
+    (:func:`_adc_search`) and the SQL front door
     (q_sql_ann_ivfpq) — one scoring contract, two entry points."""
     ws = "_ws"
     terms = []
-    for s in range(m):
+    for s in range(_PQ_M):
         d = _pq_d2i(f"slice(r, {s} * {ws} + 1, {ws})", f"slice(e.rc, {s} * {ws} + 1, {ws})")
         qd = _pq_d2i(f"slice(_rq, {s} * {ws} + 1, {ws})", f"slice(e.rc, {s} * {ws} + 1, {ws})")
         # per-subspace encode: argmin over the 8 codebook entries
@@ -2504,7 +2432,7 @@ def _adc_sum_expr(m: int) -> str:
     return " + ".join(f"({t})" for t in terms)
 
 
-def _pq_codes_expr(m: int) -> str:
+def _pq_codes_expr() -> str:
     """The ENCODE half of :func:`_adc_sum_expr`'s fused encode+lookup,
     emitted as the ``array<bigint>`` of per-subspace codes a serving
     layout STORES per vector (m small integers — the whole point of
@@ -2515,7 +2443,7 @@ def _pq_codes_expr(m: int) -> str:
     Operates over columns ``r``/``cbs``/``_ws``."""
     ws = "_ws"
     codes = []
-    for s in range(m):
+    for s in range(_PQ_M):
         d = _pq_d2i(f"slice(r, {s} * {ws} + 1, {ws})", f"slice(e.rc, {s} * {ws} + 1, {ws})")
         codes.append(
             "aggregate(cbs,"
@@ -2525,7 +2453,7 @@ def _pq_codes_expr(m: int) -> str:
     return "array(" + ", ".join(codes) + ")"
 
 
-def _pq_qtab_expr(m: int, k: int) -> str:
+def _pq_qtab_expr() -> str:
     """The query-side ADC distance table over ``_rq``/``cbs``/``_ws``:
     element [s+1][b+1] is the query residual's integer micro-unit
     distance to codebook entry ``b`` in subspace ``s`` (null where
@@ -2535,32 +2463,29 @@ def _pq_qtab_expr(m: int, k: int) -> str:
     scanned segment instead of the float codebook."""
     ws = "_ws"
     subs = []
-    for s in range(m):
+    for s in range(_PQ_M):
         qd = _pq_d2i(f"slice(_rq, {s} * {ws} + 1, {ws})", f"slice(e.rc, {s} * {ws} + 1, {ws})")
         subs.append(
-            f"transform(sequence(0, {k - 1}), b -> "
+            f"transform(sequence(0, {_IVFPQ_K - 1}), b -> "
             f"aggregate(cbs, cast(null as bigint), (acc, e) -> IF(e.b = b, {qd}, acc)))"
         )
     return "array(" + ", ".join(subs) + ")"
 
 
-def _pq_lookup_expr(m: int) -> str:
+def _pq_lookup_expr() -> str:
     """ADC by pure table lookup over stored ``codes`` and the
     broadcast/literal ``_qtab``: sum the m table entries the codes
     select — the integer inner loop of IVFADC serving (Jégou et al.
     2011 §IV.B), no float math, no codebook in sight."""
     return " + ".join(
         f"element_at(element_at(_qtab, {s + 1}), cast(element_at(codes, {s + 1}) as int) + 1)"
-        for s in range(m)
+        for s in range(_PQ_M)
     )
 
 
 @query(
     "q_sim_ann_ivfpq",
-    oracle=_IVFPQ_ORACLE_CTES
-    + """
-    SELECT vec_id, label, adist_micro FROM ad ORDER BY adist_micro, vec_id LIMIT 10
-    """,
+    oracle=_adc_top10(_IVFPQ_ORACLE_CTES),
     tags=("similarity", "ann", "ivf", "pq", "quantize"),
 )
 def q_sim_ann_ivfpq(spark, sf_dir):
@@ -2604,10 +2529,7 @@ def q_sim_ann_ivfpq(spark, sf_dir):
 
 @query(
     "q_sim_ann_ivfpq_pruned",
-    oracle=_IVFPQ_ORACLE_CTES
-    + """
-    SELECT vec_id, label, adist_micro FROM ad ORDER BY adist_micro, vec_id LIMIT 10
-    """,
+    oracle=_adc_top10(_IVFPQ_ORACLE_CTES),
     tags=("similarity", "ann", "ivf", "pq", "quantize", "pruning"),
 )
 def q_sim_ann_ivfpq_pruned(spark, sf_dir):
@@ -2640,267 +2562,14 @@ def q_sim_ann_ivfpq_pruned(spark, sf_dir):
     bit-for-bit. At 100 TB this is the difference between scanning
     m-byte codes of 1/n_cells of the corpus and re-deriving residual
     float math over all of it."""
-    import os
-
-    m = _PQ_M
     e = load_vectors(spark, sf_dir)
-    base = e.filter(F.col("vec_id") != 0)
-    cents = label_centroids(base).select(
-        "label", F.col("centroid").cast("array<float>").alias("cent")
+    cents, qv, resid, _survivors = _ivfpq_parts(e)
+    return _ivfpq_serve_pruned(
+        sf_dir, "q_ivfpq_cells", resid, cents, qv, _ivfpq_codebook(resid)
     )
-    qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    resid = _ivfpq_residuals(base, cents)
-    cb = _ivfpq_codebook(resid)
-    codes = (
-        resid.crossJoin(F.broadcast(cb))
-        .withColumn("_ws", F.expr(_ws_guard_expr(m)))
-        .select("vec_id", "label", F.expr(_pq_codes_expr(m)).alias("codes"))
-    )
-    out = os.path.join(
-        scratch_dir(f"q_ivfpq_cells_{os.path.basename(sf_dir.rstrip(chr(47)))}"), "codes"
-    )
-    codes.write.mode("overwrite").partitionBy("label").parquet(out)
-    qtab_row = (
-        _ivfpq_probe_cells(cents, qv, probes=1)
-        .crossJoin(F.broadcast(cb))
-        .withColumn("_ws", F.expr(_ws_guard_expr(m, col="_rq")))
-        .select("_qlabel", F.expr(_pq_qtab_expr(m, _IVFPQ_K)).alias("_qtab"))
-        .collect()[0]  # one-row driver scalar: probe cell + m x k table
-    )
-    qtab_lit = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                "cast(null as bigint)" if v is None else f"{v}L" for v in sub
-            )
-            + ")"
-            for sub in qtab_row["_qtab"]
-        )
-        + ")"
-    )
-    members = spark.read.parquet(out).filter(
-        F.col("label") == F.lit(qtab_row["_qlabel"])
-    )
-    scored = members.withColumn("_qtab", F.expr(qtab_lit)).select(
-        "vec_id", "label", F.expr(_pq_lookup_expr(m)).alias("adist_micro")
-    )
-    return scored.orderBy("adist_micro", "vec_id").limit(10)
 
 
-#: Insert-oracle for the COMPRESSED family: stale coarse centroids AND
-#: stale residual codebook (both trained on the base segment only —
-#: what FAISS serves between retrains), the delta batch assigned to its
-#: nearest stale centroid at ingest, encoded against the stale
-#: codebook with its residual taken vs the ASSIGNED cell's centroid,
-#: probed ADC search over base∪delta codes. The CTE pipeline is
-#: _IVFPQ_ORACLE_CTES with the train/score distinction made explicit
-#: (resid_b trains cbm; resid_s = resid_b ∪ resid_d feeds dv/codes)
-#: plus q_sim_ann_ivf_insert's dassign CTEs verbatim.
-_IVFPQ_INSERT_ORACLE = f"""
-    WITH base AS (
-        SELECT * FROM embeddings WHERE vec_id <> 0 AND vec_id % 5 <> 2
-    ), delta AS (
-        SELECT * FROM embeddings WHERE vec_id <> 0 AND vec_id % 5 = 2
-    ), cents AS (
-        SELECT label,
-               list(CAST(m AS REAL) ORDER BY pos) AS cent
-        FROM (
-            SELECT label, pos, AVG(x) AS m
-            FROM (
-                SELECT label, generate_subscripts(embedding, 1) AS pos,
-                       CAST(unnest(embedding) AS DOUBLE) AS x
-                FROM base
-            )
-            GROUP BY label, pos
-        )
-        GROUP BY label
-    ), q AS (
-        SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
-    ), zc AS (
-        SELECT label,
-               CAST(unnest(cent) AS DOUBLE) AS cx,
-               CAST(unnest(qe) AS DOUBLE) AS qy
-        FROM cents, q
-    ), csim AS (
-        SELECT label, SUM(cx*qy) / (SQRT(SUM(cx*cx)) * SQRT(SUM(qy*qy))) AS sim
-        FROM zc GROUP BY label
-    ), best AS (
-        SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT 1
-    ), dz AS (
-        SELECT d.vec_id, c.label AS cell,
-               CAST(unnest(d.embedding) AS DOUBLE) AS dx,
-               CAST(unnest(c.cent) AS DOUBLE) AS cx
-        FROM delta d, cents c
-    ), dsim AS (
-        SELECT vec_id, cell, SUM(dx*cx) / (SQRT(SUM(dx*dx)) * SQRT(SUM(cx*cx))) AS sim
-        FROM dz GROUP BY vec_id, cell
-    ), dassign AS (
-        SELECT vec_id, cell FROM (
-            SELECT vec_id, cell,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cell) AS rn
-            FROM dsim
-        ) WHERE rn = 1
-    ), w AS (
-        SELECT MAX(len(embedding)) // {_PQ_M} AS ws FROM embeddings
-    ), cpos AS (
-        SELECT label, generate_subscripts(cent, 1) AS pos,
-               CAST(unnest(cent) AS DOUBLE) AS c
-        FROM cents
-    ), resid_b AS (
-        SELECT zb.vec_id, zb.label, zb.label AS cell, zb.pos, zb.x - cp.c AS r,
-               CAST(('0x' || substr(md5(CAST(zb.vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS bkt
-        FROM (
-            SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
-                   CAST(unnest(embedding) AS DOUBLE) AS x
-            FROM base
-        ) zb
-        JOIN cpos cp ON zb.label = cp.label AND zb.pos = cp.pos
-    ), cbm AS (
-        SELECT bkt, pos, CAST(AVG(r) AS REAL) AS m
-        FROM resid_b GROUP BY bkt, pos
-    ), resid_d AS (
-        SELECT zd.vec_id, zd.label, zd.cell, zd.pos, zd.x - cp.c AS r,
-               CAST(('0x' || substr(md5(CAST(zd.vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS bkt
-        FROM (
-            SELECT d.vec_id, d.label, a.cell,
-                   generate_subscripts(d.embedding, 1) AS pos,
-                   CAST(unnest(d.embedding) AS DOUBLE) AS x
-            FROM delta d JOIN dassign a ON d.vec_id = a.vec_id
-        ) zd
-        JOIN cpos cp ON zd.cell = cp.label AND zd.pos = cp.pos
-    ), resid_s AS (
-        SELECT * FROM resid_b UNION ALL SELECT * FROM resid_d
-    ), dv AS (
-        SELECT rs.vec_id, rs.label, rs.cell, cbm.bkt AS cb_bkt,
-               (rs.pos - 1) // w.ws AS s,
-               CAST(ROUND(SUM((rs.r - CAST(cbm.m AS DOUBLE))
-                            * (rs.r - CAST(cbm.m AS DOUBLE))) * 1000000.0) AS BIGINT) AS d2i
-        FROM resid_s rs JOIN cbm ON rs.pos = cbm.pos CROSS JOIN w
-        GROUP BY 1, 2, 3, 4, 5
-    ), codes AS (
-        SELECT vec_id, label, cell, s, cb_bkt AS code FROM (
-            SELECT vec_id, label, cell, s, cb_bkt,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id, s ORDER BY d2i, cb_bkt) AS rn
-            FROM dv
-        ) WHERE rn = 1
-    ), qr AS (
-        SELECT cp.pos, zq.y - cp.c AS rq
-        FROM (SELECT generate_subscripts(qe, 1) AS pos,
-                     CAST(unnest(qe) AS DOUBLE) AS y FROM q) zq
-        JOIN cpos cp ON cp.pos = zq.pos
-        JOIN best ON cp.label = best.qlabel
-    ), qd AS (
-        SELECT cbm.bkt, (qr.pos - 1) // w.ws AS s,
-               CAST(ROUND(SUM((qr.rq - CAST(cbm.m AS DOUBLE))
-                            * (qr.rq - CAST(cbm.m AS DOUBLE))) * 1000000.0) AS BIGINT) AS qd2i
-        FROM qr JOIN cbm ON qr.pos = cbm.pos CROSS JOIN w
-        GROUP BY 1, 2
-    ), ad AS (
-        SELECT c.vec_id, c.label, CAST(SUM(q2.qd2i) AS BIGINT) AS adist_micro
-        FROM codes c
-        JOIN best ON c.cell = best.qlabel
-        JOIN qd q2 ON c.s = q2.s AND c.code = q2.bkt
-        GROUP BY 1, 2
-    )
-    SELECT vec_id, label, adist_micro FROM ad ORDER BY adist_micro, vec_id LIMIT 10
-    """
-
-
-def _ivfpq_tombstone_oracle(cbm_where: str = "1 = 1") -> str:
-    """Tombstone-family oracle template for the COMPRESSED index:
-    coarse centroids AND residual codebook trained per ``cbm_where``
-    over the residual rows (``1 = 1`` = STALE, the full pre-delete
-    base — the delete view and the hash-neutral compaction;
-    ``vec_id % 7 <> 3`` = REFRESHED codebook retrained over survivors
-    — the compaction's refresh step), scoring restricted to the
-    surviving (vec_id % 7 <> 3) members. The _ivf_tombstone_oracle
-    contract with the PQ train/score split made explicit."""
-    return f"""
-    WITH cents AS (
-        SELECT label,
-               list(CAST(m AS REAL) ORDER BY pos) AS cent
-        FROM (
-            SELECT label, pos, AVG(x) AS m
-            FROM (
-                SELECT label, generate_subscripts(embedding, 1) AS pos,
-                       CAST(unnest(embedding) AS DOUBLE) AS x
-                FROM embeddings WHERE vec_id <> 0
-            )
-            GROUP BY label, pos
-        )
-        GROUP BY label
-    ), q AS (
-        SELECT embedding AS qe FROM embeddings WHERE vec_id = 0
-    ), zc AS (
-        SELECT label,
-               CAST(unnest(cent) AS DOUBLE) AS cx,
-               CAST(unnest(qe) AS DOUBLE) AS qy
-        FROM cents, q
-    ), csim AS (
-        SELECT label, SUM(cx*qy) / (SQRT(SUM(cx*cx)) * SQRT(SUM(qy*qy))) AS sim
-        FROM zc GROUP BY label
-    ), best AS (
-        SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT 1
-    ), w AS (
-        SELECT MAX(len(embedding)) // {_PQ_M} AS ws FROM embeddings
-    ), cpos AS (
-        SELECT label, generate_subscripts(cent, 1) AS pos,
-               CAST(unnest(cent) AS DOUBLE) AS c
-        FROM cents
-    ), resid_b AS (
-        SELECT zb.vec_id, zb.label, zb.pos, zb.x - cp.c AS r,
-               CAST(('0x' || substr(md5(CAST(zb.vec_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS bkt
-        FROM (
-            SELECT vec_id, label, generate_subscripts(embedding, 1) AS pos,
-                   CAST(unnest(embedding) AS DOUBLE) AS x
-            FROM embeddings WHERE vec_id <> 0
-        ) zb
-        JOIN cpos cp ON zb.label = cp.label AND zb.pos = cp.pos
-    ), cbm AS (
-        SELECT bkt, pos, CAST(AVG(r) AS REAL) AS m
-        FROM resid_b WHERE {cbm_where} GROUP BY bkt, pos
-    ), resid_s AS (
-        SELECT * FROM resid_b WHERE vec_id % 7 <> 3
-    ), dv AS (
-        SELECT rs.vec_id, rs.label, cbm.bkt AS cb_bkt,
-               (rs.pos - 1) // w.ws AS s,
-               CAST(ROUND(SUM((rs.r - CAST(cbm.m AS DOUBLE))
-                            * (rs.r - CAST(cbm.m AS DOUBLE))) * 1000000.0) AS BIGINT) AS d2i
-        FROM resid_s rs JOIN cbm ON rs.pos = cbm.pos CROSS JOIN w
-        GROUP BY 1, 2, 3, 4
-    ), codes AS (
-        SELECT vec_id, label, s, cb_bkt AS code FROM (
-            SELECT vec_id, label, s, cb_bkt,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id, s ORDER BY d2i, cb_bkt) AS rn
-            FROM dv
-        ) WHERE rn = 1
-    ), qr AS (
-        SELECT cp.pos, zq.y - cp.c AS rq
-        FROM (SELECT generate_subscripts(qe, 1) AS pos,
-                     CAST(unnest(qe) AS DOUBLE) AS y FROM q) zq
-        JOIN cpos cp ON cp.pos = zq.pos
-        JOIN best ON cp.label = best.qlabel
-    ), qd AS (
-        SELECT cbm.bkt, (qr.pos - 1) // w.ws AS s,
-               CAST(ROUND(SUM((qr.rq - CAST(cbm.m AS DOUBLE))
-                            * (qr.rq - CAST(cbm.m AS DOUBLE))) * 1000000.0) AS BIGINT) AS qd2i
-        FROM qr JOIN cbm ON qr.pos = cbm.pos CROSS JOIN w
-        GROUP BY 1, 2
-    ), ad AS (
-        SELECT c.vec_id, c.label, CAST(SUM(q2.qd2i) AS BIGINT) AS adist_micro
-        FROM codes c
-        JOIN best ON c.label = best.qlabel
-        JOIN qd q2 ON c.s = q2.s AND c.code = q2.bkt
-        GROUP BY 1, 2
-    )
-    SELECT vec_id, label, adist_micro FROM ad ORDER BY adist_micro, vec_id LIMIT 10
-    """
-
-
-def ivfpq_search_with_inserts(
-    base: DataFrame, delta: DataFrame, qv: DataFrame, m: int = _PQ_M
-) -> DataFrame:
+def ivfpq_search_with_inserts(base: DataFrame, delta: DataFrame, qv: DataFrame) -> DataFrame:
     """IVFADC search over an index with an arriving batch merged in —
     the compressed family's ADD quadrant (see q_sim_ann_ivfpq_insert
     for semantics): stale coarse centroids AND stale residual codebook
@@ -2909,7 +2578,7 @@ def ivfpq_search_with_inserts(
     residual taken vs the ASSIGNED cell, encoded with the stale
     codebook; fused encode+ADC over base∪delta rows of the probed
     cell. Subject of the empty-delta and duplicate-in-delta property
-    tests in ``tests/test_pruned_serving.py``."""
+    tests in ``tests/test_retrieval_properties.py``."""
     rawcents = label_centroids(base)
     cents = rawcents.select(
         "label", F.col("centroid").cast("array<float>").alias("cent")
@@ -2923,35 +2592,18 @@ def ivfpq_search_with_inserts(
             F.broadcast(cents.withColumnRenamed("label", "_acell")),
             "_acell",
         )
-        .select(
-            "vec_id",
-            "label",
-            F.col("_acell").alias("cell"),
-            F.expr(
-                "zip_with(embedding, cent, (x, c) -> cast(x as double) - cast(c as double))"
-            ).alias("r"),
-            F.expr(
-                "pmod(cast(conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10)"
-                f" as bigint), {_IVFPQ_K})"
-            ).alias("bkt"),
-        )
+        .select("vec_id", "label", F.col("_acell").alias("cell"), *_resid_bkt())
     )
     resid_s = resid_b.select("vec_id", "label", "cell", "r", "bkt").unionByName(
         resid_d
     )
-    best = _ivfpq_probe_cells(cents, qv, probes=1)
-    cand = resid_s.join(
-        F.broadcast(best), F.col("cell") == F.col("_qlabel")
-    ).crossJoin(F.broadcast(cb))
-    scored = cand.withColumn("_ws", F.expr(_ws_guard_expr(m))).select(
-        "vec_id", "label", F.expr(_adc_sum_expr(m)).alias("adist_micro")
-    )
+    scored = _adc_search(resid_s, cents, qv, cb, cell="cell")
     return scored.orderBy("adist_micro", "vec_id").limit(10)
 
 
 @query(
     "q_sim_ann_ivfpq_insert",
-    oracle=_IVFPQ_INSERT_ORACLE,
+    oracle=_adc_top10(_ivf_insert_head("") + _ivfpq_ctes("vec_id % 5 <> 2", "TRUE")),
     tags=("similarity", "ann", "ivf", "pq", "quantize", "insert"),
 )
 def q_sim_ann_ivfpq_insert(spark, sf_dir):
@@ -2985,27 +2637,9 @@ def q_sim_ann_ivfpq_insert(spark, sf_dir):
     return ivfpq_search_with_inserts(base, delta, qv)
 
 
-def _ivfpq_stale_parts(e: DataFrame):
-    """The stale index artifacts + survivor residuals shared by the
-    compressed family's tombstone keys (delete view / compaction /
-    refresh): full-base coarse centroids, full-base residuals (which
-    train the stale codebook), the broadcastable tombstone set
-    (vec_id % 7 == 3, the q_sim_ann_ivf_delete split), and the
-    query-vector relation."""
-    base = e.filter(F.col("vec_id") != 0)
-    cents = label_centroids(base).select(
-        "label", F.col("centroid").cast("array<float>").alias("cent")
-    )
-    qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
-    resid = _ivfpq_residuals(base, cents)
-    tomb = F.broadcast(base.filter(F.col("vec_id") % 7 == 3).select("vec_id"))
-    survivors = resid.join(tomb, "vec_id", "left_anti")
-    return cents, qv, resid, survivors
-
-
 @query(
     "q_sim_ann_ivfpq_delete",
-    oracle=_ivfpq_tombstone_oracle(),
+    oracle=_adc_top10(_ivf_head(1) + _ivfpq_ctes("TRUE", "vec_id % 7 <> 3")),
     tags=("similarity", "ann", "ivf", "pq", "quantize", "delete"),
 )
 def q_sim_ann_ivfpq_delete(spark, sf_dir):
@@ -3022,21 +2656,14 @@ def q_sim_ann_ivfpq_delete(spark, sf_dir):
     between compactions (q_sim_ann_ivf_delete for the compressed
     index)."""
     e = load_vectors(spark, sf_dir)
-    cents, qv, _resid, survivors = _ivfpq_stale_parts(e)
-    cb = _ivfpq_codebook(_resid)
-    best = _ivfpq_probe_cells(cents, qv, probes=1)
-    cand = survivors.join(
-        F.broadcast(best), F.col("label") == F.col("_qlabel")
-    ).crossJoin(F.broadcast(cb))
-    scored = cand.withColumn("_ws", F.expr(_ws_guard_expr(_PQ_M))).select(
-        "vec_id", "label", F.expr(_adc_sum_expr(_PQ_M)).alias("adist_micro")
-    )
+    cents, qv, resid, survivors = _ivfpq_parts(e)
+    scored = _adc_search(survivors, cents, qv, _ivfpq_codebook(resid))
     return scored.orderBy("adist_micro", "vec_id").limit(10)
 
 
 @query(
     "q_sim_ann_ivfpq_compact",
-    oracle=_ivfpq_tombstone_oracle(),
+    oracle=_adc_top10(_ivf_head(1) + _ivfpq_ctes("TRUE", "vec_id % 7 <> 3")),
     tags=("similarity", "ann", "ivf", "pq", "quantize", "compact", "pruning"),
 )
 def q_sim_ann_ivfpq_compact(spark, sf_dir):
@@ -3056,53 +2683,16 @@ def q_sim_ann_ivfpq_compact(spark, sf_dir):
     contracts composed). At 100 TB this is the background segment
     merge a vector store runs to keep tombstone ratios bounded; the
     downstream search plans lose their anti-join."""
-    import os
-
-    m = _PQ_M
     e = load_vectors(spark, sf_dir)
-    cents, qv, _resid, survivors = _ivfpq_stale_parts(e)
-    cb = _ivfpq_codebook(_resid)
-    codes = (
-        survivors.crossJoin(F.broadcast(cb))
-        .withColumn("_ws", F.expr(_ws_guard_expr(m)))
-        .select("vec_id", "label", F.expr(_pq_codes_expr(m)).alias("codes"))
+    cents, qv, resid, survivors = _ivfpq_parts(e)
+    return _ivfpq_serve_pruned(
+        sf_dir, "q_ivfpq_compact", survivors, cents, qv, _ivfpq_codebook(resid)
     )
-    out = os.path.join(
-        scratch_dir(f"q_ivfpq_compact_{os.path.basename(sf_dir.rstrip(chr(47)))}"),
-        "codes",
-    )
-    codes.write.mode("overwrite").partitionBy("label").parquet(out)
-    qtab_row = (
-        _ivfpq_probe_cells(cents, qv, probes=1)
-        .crossJoin(F.broadcast(cb))
-        .withColumn("_ws", F.expr(_ws_guard_expr(m, col="_rq")))
-        .select("_qlabel", F.expr(_pq_qtab_expr(m, _IVFPQ_K)).alias("_qtab"))
-        .collect()[0]  # one-row driver scalar: probe cell + m x k table
-    )
-    qtab_lit = (
-        "array("
-        + ", ".join(
-            "array("
-            + ", ".join(
-                "cast(null as bigint)" if v is None else f"{v}L" for v in sub
-            )
-            + ")"
-            for sub in qtab_row["_qtab"]
-        )
-        + ")"
-    )
-    members = spark.read.parquet(out).filter(
-        F.col("label") == F.lit(qtab_row["_qlabel"])
-    )
-    scored = members.withColumn("_qtab", F.expr(qtab_lit)).select(
-        "vec_id", "label", F.expr(_pq_lookup_expr(m)).alias("adist_micro")
-    )
-    return scored.orderBy("adist_micro", "vec_id").limit(10)
 
 
 @query(
     "q_sim_ann_ivfpq_compact_refresh",
-    oracle=_ivfpq_tombstone_oracle("vec_id % 7 <> 3"),
+    oracle=_adc_top10(_ivf_head(1) + _ivfpq_ctes("vec_id % 7 <> 3", "vec_id % 7 <> 3")),
     tags=("similarity", "ann", "ivf", "pq", "quantize", "compact", "refresh"),
 )
 def q_sim_ann_ivfpq_compact_refresh(spark, sf_dir):
@@ -3120,16 +2710,9 @@ def q_sim_ann_ivfpq_compact_refresh(spark, sf_dir):
     survivors (8 x d means), the re-encode a narrow map — both the
     background compaction's cost, never the query path's."""
     e = load_vectors(spark, sf_dir)
-    cents, qv, _resid, survivors = _ivfpq_stale_parts(e)
+    cents, qv, _resid, survivors = _ivfpq_parts(e)
     cb = _ivfpq_codebook(survivors)  # REFRESHED: retrained over survivors
-    best = _ivfpq_probe_cells(cents, qv, probes=1)
-    cand = survivors.join(
-        F.broadcast(best), F.col("label") == F.col("_qlabel")
-    ).crossJoin(F.broadcast(cb))
-    scored = cand.withColumn("_ws", F.expr(_ws_guard_expr(_PQ_M))).select(
-        "vec_id", "label", F.expr(_adc_sum_expr(_PQ_M)).alias("adist_micro")
-    )
-    return scored.orderBy("adist_micro", "vec_id").limit(10)
+    return _adc_search(survivors, cents, qv, cb).orderBy("adist_micro", "vec_id").limit(10)
 
 
 #: IVF-PQ probes: cells scanned per query in the multiprobe variant.
@@ -3139,9 +2722,7 @@ def q_sim_ann_ivfpq_compact_refresh(spark, sf_dir):
 _IVFPQ_PROBES = 3
 
 
-def ivfpq_adc_scores_multiprobe(
-    e: DataFrame, probes: int = _IVFPQ_PROBES, m: int = _PQ_M
-) -> DataFrame:
+def ivfpq_adc_scores_multiprobe(e: DataFrame, probes: int = _IVFPQ_PROBES) -> DataFrame:
     """Multi-probe IVFADC: same coarse cells, residual codebook, and
     integer ADC as :func:`ivfpq_adc_scores` (which IS this function at
     probes=1), but the query probes its ``probes`` nearest cells and
@@ -3152,63 +2733,17 @@ def ivfpq_adc_scores_multiprobe(
     commensurable (all are micro-unit L2 on the shared codebook), so
     the merged top-k is one ordering — the standard IVF nprobe merge.
 
-    ``m`` must divide the vector dimension (the standard PQ
-    requirement) — enforced IN-PLAN: a non-dividing ``m`` raises at
-    execution time instead of silently excluding the trailing
+    _PQ_M must divide the vector dimension (the standard PQ
+    requirement) — enforced IN-PLAN: a non-dividing dimension raises
+    at execution time instead of silently excluding the trailing
     ``dim % m`` components from every distance (ADVICE r10)."""
-    return _ivfpq_adc_scores_impl(e, probes=probes, m=m)
+    cents, qv, resid, _survivors = _ivfpq_parts(e)
+    return _adc_search(resid, cents, qv, _ivfpq_codebook(resid), probes)
 
 
 @query(
     "q_sim_ann_ivfpq_multiprobe",
-    oracle=_IVFPQ_ORACLE_CTES.replace(
-        "SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT 1",
-        # single source of truth for the probe count (ADVICE r10: a
-        # hardcoded LIMIT 3 here would drift silently if _IVFPQ_PROBES
-        # changed, caught only at sweep time)
-        f"SELECT label AS qlabel FROM csim ORDER BY sim DESC, label LIMIT {_IVFPQ_PROBES}",
-    ).replace(
-        """, qr AS (
-        SELECT cp.pos, zq.y - cp.c AS rq
-        FROM (SELECT generate_subscripts(qe, 1) AS pos,
-                     CAST(unnest(qe) AS DOUBLE) AS y FROM q) zq
-        JOIN cpos cp ON cp.pos = zq.pos
-        JOIN best ON cp.label = best.qlabel
-    ), qd AS (
-        SELECT cbm.bkt, (qr.pos - 1) // w.ws AS s,
-               CAST(ROUND(SUM((qr.rq - CAST(cbm.m AS DOUBLE))
-                            * (qr.rq - CAST(cbm.m AS DOUBLE))) * 1000000.0) AS BIGINT) AS qd2i
-        FROM qr JOIN cbm ON qr.pos = cbm.pos CROSS JOIN w
-        GROUP BY 1, 2
-    ), ad AS (
-        SELECT c.vec_id, c.label, CAST(SUM(q2.qd2i) AS BIGINT) AS adist_micro
-        FROM codes c
-        JOIN best ON c.label = best.qlabel
-        JOIN qd q2 ON c.s = q2.s AND c.code = q2.bkt
-        GROUP BY 1, 2
-    )""",
-        """, qr AS (
-        SELECT cp.label AS qlabel, cp.pos, zq.y - cp.c AS rq
-        FROM (SELECT generate_subscripts(qe, 1) AS pos,
-                     CAST(unnest(qe) AS DOUBLE) AS y FROM q) zq
-        JOIN cpos cp ON cp.pos = zq.pos
-        JOIN best ON cp.label = best.qlabel
-    ), qd AS (
-        SELECT qr.qlabel, cbm.bkt, (qr.pos - 1) // w.ws AS s,
-               CAST(ROUND(SUM((qr.rq - CAST(cbm.m AS DOUBLE))
-                            * (qr.rq - CAST(cbm.m AS DOUBLE))) * 1000000.0) AS BIGINT) AS qd2i
-        FROM qr JOIN cbm ON qr.pos = cbm.pos CROSS JOIN w
-        GROUP BY 1, 2, 3
-    ), ad AS (
-        SELECT c.vec_id, c.label, CAST(SUM(q2.qd2i) AS BIGINT) AS adist_micro
-        FROM codes c
-        JOIN qd q2 ON c.s = q2.s AND c.code = q2.bkt AND q2.qlabel = c.label
-        GROUP BY 1, 2
-    )""",
-    )
-    + """
-    SELECT vec_id, label, adist_micro FROM ad ORDER BY adist_micro, vec_id LIMIT 10
-    """,
+    oracle=_adc_top10(_ivf_head(_IVFPQ_PROBES) + _ivfpq_ctes("TRUE", "TRUE")),
     tags=("similarity", "ann", "ivf", "pq", "multiprobe"),
 )
 def q_sim_ann_ivfpq_multiprobe(spark, sf_dir):
@@ -3220,9 +2755,10 @@ def q_sim_ann_ivfpq_multiprobe(spark, sf_dir):
     scanned (here 3/10), everything else — code table, codebook, encode
     — is unchanged and shared with the single-probe key; the only new
     state is the per-cell query-residual table (nprobe x m x k
-    integers, still one broadcast row). The oracle is the single-probe
-    oracle with LIMIT 3 on the probe and the query-distance table keyed
-    by (cell, subspace, entry) — the diff IS the algorithm diff.
+    integers, still one broadcast row). The oracle is built from the
+    single-probe key's blocks with the probe block at _IVFPQ_PROBES:
+    the pipeline's query-distance table is keyed by probed cell in
+    both, so the probe count is the whole algorithm diff.
     Measured effect (IVFPQ_PROBES_r10.json): at sf0.01 recall@10
     rises 1/10 -> 3/10 going nprobe 1 -> 3 (cell-miss recovered), then
     plateaus — the remaining loss is reconstruction error, which the
@@ -3242,10 +2778,7 @@ def q_sim_ann_ivfpq_multiprobe(spark, sf_dir):
 
 @query(
     "q_sql_ann_ivfpq",
-    oracle=_IVFPQ_ORACLE_CTES
-    + """
-    SELECT vec_id, label, adist_micro FROM ad ORDER BY adist_micro, vec_id LIMIT 10
-    """,
+    oracle=_adc_top10(_IVFPQ_ORACLE_CTES),
     tags=("sql", "similarity", "ann", "ivf", "pq", "quantize"),
 )
 def q_sql_ann_ivfpq(spark, sf_dir):
@@ -3257,7 +2790,7 @@ def q_sql_ann_ivfpq(spark, sf_dir):
     per-subspace encode+ADC sum — as ONE spark.sql() text over a
     registered embeddings view. The ADC scoring expression is
     LITERALLY shared with the DataFrame build (:func:`_adc_sum_expr`),
-    and every CTE mirrors :func:`_ivfpq_adc_scores_impl` construct for
+    and every CTE mirrors :func:`ivfpq_adc_scores_multiprobe` construct for
     construct (LATERAL VIEW posexplode for the centroid/codebook
     rollups, array_sort(collect_list(named_struct)) for the canonical
     folds), so the two entry points share one determinism argument and
@@ -3315,10 +2848,10 @@ def q_sql_ann_ivfpq(spark, sf_dir):
             FROM cbrow
         ), cand AS (
             SELECT resid.vec_id, resid.label, resid.r, best._rq, cb.cbs,
-                   {_ws_guard_expr(_PQ_M)} AS _ws
+                   {_ws_guard_expr()} AS _ws
             FROM resid JOIN best ON resid.label = best._qlabel CROSS JOIN cb
         )
-        SELECT vec_id, label, {_adc_sum_expr(_PQ_M)} AS adist_micro
+        SELECT vec_id, label, {_adc_sum_expr()} AS adist_micro
         FROM cand ORDER BY adist_micro, vec_id LIMIT 10
         """
     )
@@ -3326,27 +2859,7 @@ def q_sql_ann_ivfpq(spark, sf_dir):
 
 @query(
     "q_sim_ann_ivfpq_recall",
-    oracle=_IVFPQ_ORACLE_CTES
-    + """
-    , ivfpq10 AS (
-        SELECT vec_id FROM ad ORDER BY adist_micro, vec_id LIMIT 10
-    ), zx AS (
-        SELECT e.vec_id,
-               CAST(unnest(e.embedding) AS DOUBLE) AS x,
-               CAST(unnest(q.qe) AS DOUBLE) AS y
-        FROM embeddings e, q
-        WHERE e.vec_id <> 0
-    ), cs AS (
-        SELECT vec_id, SUM(x*y) / (SQRT(SUM(x*x)) * SQRT(SUM(y*y))) AS cos_sim
-        FROM zx GROUP BY vec_id
-    ), exact10 AS (
-        SELECT vec_id FROM cs ORDER BY cos_sim DESC, vec_id LIMIT 10
-    )
-    SELECT (SELECT COUNT(*) FROM exact10) AS n_exact,
-           (SELECT COUNT(*) FROM exact10 e JOIN ivfpq10 p ON e.vec_id = p.vec_id) AS hits_ivfpq,
-           CAST((SELECT COUNT(*) FROM exact10 e JOIN ivfpq10 p ON e.vec_id = p.vec_id) AS BIGINT)
-               * 10000 // NULLIF((SELECT COUNT(*) FROM exact10), 0) AS recall_ivfpq_bp
-    """,
+    oracle=_adc_recall_oracle(_IVFPQ_ORACLE_CTES, "ivfpq"),
     tags=("similarity", "ann", "ivf", "pq", "eval", "recall"),
 )
 def q_sim_ann_ivfpq_recall(spark, sf_dir):
@@ -3364,18 +2877,8 @@ def q_sim_ann_ivfpq_recall(spark, sf_dir):
     exact side is one brute-force scan (sampled query set at scale);
     the intersection joins two 10-row relations."""
     e = load_vectors(spark, sf_dir)
-    q_vec = e.filter(F.col("vec_id") == 0)
-    exact10 = topk_cosine(e.filter(F.col("vec_id") != 0), q_vec, k=10).select("vec_id")
-    ivfpq10 = (
-        ivfpq_adc_scores(e).orderBy("adist_micro", "vec_id").limit(10).select("vec_id")
-    )
-    n_exact = exact10.agg(F.count(F.lit(1)).alias("n_exact"))
-    hp = exact10.join(ivfpq10, "vec_id").agg(F.count(F.lit(1)).alias("hits_ivfpq"))
-    return n_exact.crossJoin(hp).select(
-        "n_exact",
-        "hits_ivfpq",
-        F.expr("hits_ivfpq * 10000 div nullif(n_exact, 0)").alias("recall_ivfpq_bp"),
-    )
+    ivfpq10 = ivfpq_adc_scores(e).orderBy("adist_micro", "vec_id").limit(10).select("vec_id")
+    return _recall_row(e, ivfpq10, "ivfpq")
 
 
 @query(

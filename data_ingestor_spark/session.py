@@ -43,9 +43,10 @@ class EngineConfig:
         file whose top level is not a mapping, a key that names no field,
         or a value whose type differs from its field's default raises
         ``ValueError`` naming the file. Env vars set the scalar fields
-        only, ``int`` fields converted; a ``DIS_*`` var naming the
-        ``extra_spark_conf`` mapping raises ``ValueError``: set it in the
-        YAML file."""
+        only, ``int`` fields converted (a value that does not convert
+        raises ``ValueError`` naming the var and the field); a ``DIS_*``
+        var naming the ``extra_spark_conf`` mapping raises ``ValueError``:
+        set it in the YAML file."""
         values: dict = {}
         known = {f_.name: f_.type for f_ in fields(cls)}
         if yaml_path:
@@ -80,7 +81,11 @@ class EngineConfig:
                 raise ValueError(
                     f"{env_key} cannot set {name!r} ({type_}); set it in the YAML config file"
                 )
-            values[name] = _ENV_TYPES[type_](os.environ[env_key])
+            text = os.environ[env_key]
+            try:
+                values[name] = _ENV_TYPES[type_](text)
+            except ValueError:
+                raise ValueError(f"{env_key}={text!r} cannot set {name!r}: not a {type_}") from None
         return cls(**values)
 
 

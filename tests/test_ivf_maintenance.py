@@ -130,7 +130,7 @@ def test_ivf_insert_search_matches_mirror(
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_qe"))
     got = [
         (r["vec_id"], r["label"])
-        for r in ivf_search_with_inserts(base, delta, qv, k=10).collect()
+        for r in ivf_search_with_inserts(base, delta, qv).collect()
     ]
     assert got == expected
 
@@ -183,7 +183,7 @@ def test_ivf_mixed_view_matches_mirror(spark, tmp_path, seed, n, n_labels, tomb_
     got = [
         (r["vec_id"], r["label"])
         for r in ivf_search_with_inserts(
-            members, delta, qv, k=10, cents=label_centroids(base)
+            members, delta, qv, cents=label_centroids(base)
         ).collect()
     ]
     assert got == expected

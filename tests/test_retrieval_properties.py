@@ -247,31 +247,34 @@ def test_sim_ann_ivfpq_single_cell_degenerates_to_flat_residual_pq(spark, tmp_pa
 
 
 def test_sim_ann_ivfpq_rejects_non_dividing_m(spark, tmp_path):
-    """ADVICE r10: m must divide the vector dimension — a non-dividing
-    m raises in-plan instead of silently dropping the trailing dim % m
-    components from every distance."""
+    """ADVICE r10: m (_PQ_M = 4) must divide the vector dimension — a
+    non-dividing dimension raises in-plan instead of silently dropping
+    the trailing dim % m components from every distance."""
     import numpy as np
     import pytest
     from py4j.protocol import Py4JJavaError
 
     from data_ingestor_spark.ext.similarity import (
+        _PQ_M,
         ivfpq_adc_scores_multiprobe,
         load_vectors,
     )
 
-    rng = np.random.default_rng(7)
-    rows = [
-        (i, [float(x) for x in rng.normal(size=6).astype(np.float32)], i % 2)
-        for i in range(8)
-    ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>, label int")
-    df.write.mode("overwrite").parquet(str(tmp_path / "embeddings.parquet"))
+    def vectors(dim):
+        rng = np.random.default_rng(7)
+        rows = [
+            (i, [float(x) for x in rng.normal(size=dim).astype(np.float32)], i % 2)
+            for i in range(8)
+        ]
+        df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>, label int")
+        df.write.mode("overwrite").parquet(str(tmp_path / f"d{dim}" / "embeddings.parquet"))
+        return load_vectors(spark, str(tmp_path / f"d{dim}"))
 
-    e = load_vectors(spark, str(tmp_path))
+    assert _PQ_M == 4
     with pytest.raises((Py4JJavaError, Exception), match="PQ requires m to divide"):
-        ivfpq_adc_scores_multiprobe(e, probes=1, m=4).collect()
-    # dividing m still works on the same 6-dim vectors
-    assert ivfpq_adc_scores_multiprobe(e, probes=1, m=3).count() > 0
+        ivfpq_adc_scores_multiprobe(vectors(6), probes=1).collect()
+    # a dimension m divides scores
+    assert ivfpq_adc_scores_multiprobe(vectors(8), probes=1).count() > 0
 
 
 def test_ivfpq_insert_empty_delta_equals_plain(spark, tmp_path):

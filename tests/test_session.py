@@ -57,6 +57,14 @@ def test_engine_config_env_cannot_set_the_conf_mapping(clean_env):
         EngineConfig.load()
 
 
+def test_engine_config_env_int_names_var_and_field(clean_env):
+    """A ``DIS_*`` int that does not parse names the variable and the
+    field it was meant to set, not only the bad literal."""
+    clean_env.setenv("DIS_SHUFFLE_PARTITIONS", "abc")
+    with pytest.raises(ValueError, match=r"DIS_SHUFFLE_PARTITIONS='abc'.*'shuffle_partitions'"):
+        EngineConfig.load()
+
+
 def test_engine_config_missing_file_raises(clean_env, tmp_path):
     """A mistyped ``--config`` path must fail, not run on the defaults."""
     missing = tmp_path / "confg.yaml"

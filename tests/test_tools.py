@@ -253,19 +253,14 @@ def test_round_site_inventory_frozen():
         # site + two oracle sites) — a sum of squared float differences
         # is never an integer-ratio double, and both engines round the
         # identical left-to-right accumulation
-        # +4 r10 continuation: q_sim_ann_ivfpq's oracle rounds residual
-        # SUM((r-m)^2)*1e6 to BIGINT micro-units at its dv and qd CTEs,
-        # and q_sim_ann_ivfpq_multiprobe's oracle-template .replace args
-        # restate the qd site (old + new text, 2 more source lines) —
-        # the same never-integer-ratio shape as the three PQ sites, both
-        # engines rounding the identical left-to-right accumulation
-        # +2 late-r13: q_sim_ann_ivfpq_insert's oracle rounds residual
-        # SUM((r-m)^2)*1e6 at its dv and qd CTEs — the identical
-        # micro-unit shape as the shared IVFPQ oracle it restates with
-        # the train/score split made explicit; +2 more for
-        # _ivfpq_tombstone_oracle's dv and qd CTEs (same shape, the
-        # delete/compact/refresh template)
-        "data_ingestor_spark/ext/similarity.py": 16,
+        # +2 r10 continuation: the one IVF-PQ oracle pipeline
+        # (_ivfpq_ctes, which every IVF-PQ key's oracle is built from)
+        # rounds residual SUM((r-m)^2)*1e6 to BIGINT micro-units at its
+        # dv and qd CTEs — the same never-integer-ratio shape as the
+        # three PQ sites, both engines rounding the identical
+        # left-to-right accumulation; the rest are 3 centroid-ROUND(6)
+        # lines (oracle, prose, Spark) and q_kmeans_train's 2 dist rounds
+        "data_ingestor_spark/ext/similarity.py": 10,
         # log-based tfidf/logprob + prose; +2 r10 continuation:
         # q_text_bm25 rounds the per-term ln-based score to BIGINT
         # micro-units before the per-doc sum — an ln product is never
@@ -643,6 +638,49 @@ def test_stream_harness_decisions_have_one_owner():
     assert ingest_drains == []
     assert strings("maxBytesPerTrigger") == [("data_ingestor_spark/streaming/ingest.py", "stream_load")]
     assert strings("cleanSource") == []
+
+
+def test_similarity_oracles_are_built_without_str_replace():
+    """Every ``@query`` oracle in ``ext/similarity.py`` is assembled from
+    CTE-block builders, never by ``str.replace`` on another oracle's
+    text: a ``.replace`` whose source text drifts silently does nothing,
+    and only a full oracle sweep would notice. The check follows the
+    module-level functions and constants an oracle expression names,
+    so a ``.replace`` hidden in a builder is caught too."""
+    import ast
+
+    tree = ast.parse((REPO / "data_ingestor_spark/ext/similarity.py").read_text())
+    defs = {}
+    for node in tree.body:
+        if isinstance(node, ast.FunctionDef):
+            defs[node.name] = node
+        elif isinstance(node, ast.Assign):
+            for t in node.targets:
+                if isinstance(t, ast.Name):
+                    defs[t.id] = node.value
+
+    def uses_replace(expr):
+        seen, todo = set(), [expr]
+        while todo:
+            for n in ast.walk(todo.pop()):
+                if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == "replace":
+                    return True
+                if isinstance(n, ast.Name) and n.id in defs and n.id not in seen:
+                    seen.add(n.id)
+                    todo.append(defs[n.id])
+        return False
+
+    oracles = {
+        fn.name: kw.value
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for dec in fn.decorator_list
+        if isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "query"
+        for kw in dec.keywords
+        if kw.arg == "oracle"
+    }
+    assert len(oracles) > 30
+    assert [name for name, expr in oracles.items() if uses_replace(expr)] == []
 
 
 def test_perfbench_tracing_patches_resolve_and_restore():
