@@ -1573,12 +1573,12 @@ def ivf_cell_search(
     ``probes`` best cells by centroid cosine (ties by smaller label),
     then exact-cosine top-10 over those cells' ``members`` only — the
     shared probe+rerank core of the single-probe, multi-probe and
-    delete/compact/refresh keys. At scale
-    the members relation is partitioned by cell, so the probe is a
-    partition-pruned scan of 1/n_cells of the index (proven, not
-    asserted: q_sim_ann_ivf_pruned routes this search over a
-    cell-partitioned parquet layout and IVF_PRUNE_r13.json records the
-    pruned file count from the physical plan)."""
+    delete/compact/refresh keys. At scale the members relation is
+    partitioned by cell, so the probe is a partition-pruned scan of
+    1/n_cells of the index (proven, not asserted: q_sim_ann_ivf_pruned
+    runs the same single-cell probe and rerank over a cell-partitioned
+    parquet layout and IVF_PRUNE_r13.json records the pruned file count
+    from the physical plan)."""
     best = best_cells(cents, qv, n=probes)
     cand = members.join(
         F.broadcast(best.crossJoin(qv)), F.col("label") == F.col("_qlabel")
